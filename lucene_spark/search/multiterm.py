@@ -286,75 +286,103 @@ def expand_terms(reader, q: ast.MultiTermQuery, max_terms: int = 100_000) -> lis
     return [r["term"] for r in rows]
 
 
+# constant-score kernels decode docIDs only, so neither the term strings
+# nor the tf byte buffers are read
+DOC_COLS = ["first_doc", "last_doc", "count", "doc_gaps"]
+
+
+def _first_k_docs(rows, k: int, dele) -> np.ndarray:
+    """The k smallest docIDs of one segment's posting blocks (``rows``:
+    dict of numpy columns with GLOBAL ``first_doc``/``last_doc``), with the
+    GLOBAL ``dele`` docIDs masked. Decodes leading blocks only until the k
+    smallest are provably complete."""
+    order = np.argsort(rows["first_doc"], kind="stable")
+    firsts = rows["first_doc"][order].astype(np.int64)
+    lasts = rows["last_doc"][order].astype(np.int64)
+    counts = rows["count"][order].astype(np.int64)
+    gaps = rows["doc_gaps"][order]
+    # batched vectorized decode (VERDICT r3 wrong-#3): ~256 blocks per
+    # decode_doc_ids_batch call — one varint pass + one cumsum, no
+    # per-block Python decode loop on broad wildcard/prefix expansions
+    BATCH = 256
+    parts, seen = [np.zeros(0, np.int64)], 0
+    for b0 in range(0, order.size, BATCH):
+        hi = min(b0 + BATCH, order.size)
+        d, _st = decode_doc_ids_batch(
+            firsts[b0:hi], lasts[b0:hi], counts[b0:hi],
+            list(gaps[b0:hi]),
+        )
+        if dele is not None and dele.size:
+            d = d[~np.isin(d, dele)]
+        parts.append(d)
+        seen += d.size
+        # sound early exit: blocks are ordered by first_doc only, so an
+        # undecoded block may still hold docIDs smaller than anything
+        # seen — stop ONLY when the k-th smallest docID collected so far
+        # is <= the next undecoded block's first_doc (every remaining
+        # block starts at or after it and so cannot displace the top-k)
+        if seen >= k and hi < order.size:
+            uniq = np.unique(np.concatenate(parts))
+            if uniq.size >= k and uniq[k - 1] <= firsts[hi]:
+                parts = [uniq[:k]]
+                break
+            parts, seen = [uniq], uniq.size
+    return np.unique(np.concatenate(parts))[:k]
+
+
 def constant_score_topk(reader, postings, k: int, boost: float,
                         deleted_loader=None):
     """First k matching docIDs (docID asc) with score == boost.
 
-    ``postings``: posting-block rows of the matched terms (either from a
-    driver term list via ``reader.postings`` or — the 10^12-scale path — the
-    semi-join ``reader.postings_semijoin(matched_terms_df(...))`` that never
-    materializes the term set anywhere). Per segment: decode leading blocks
-    until the k smallest docIDs are provably complete; driver merges.
+    ``postings``: the matched terms as ``{field: terms}`` when the
+    expansion resolved on the driver — one
+    :class:`~lucene_spark.search.executor.SegmentExecutor` run — or, the
+    10^12-scale path, the semi-join posting-block DataFrame
+    ``reader.postings_semijoin(matched_terms_df(...))`` that never
+    materializes the term set anywhere (:func:`_constant_score_topk_df`).
+    Per segment: decode leading blocks until the k smallest docIDs are
+    provably complete; driver merges.
     """
     from lucene_spark.search.searcher import ScoreDoc
+    from lucene_spark.session import no_aqe
 
     if postings is None:
         return []
-    # NOTE: no "term"/"tfs" — constant-score kernels decode docIDs only,
-    # so the tf byte buffers and term strings never enter the shuffle
-    cols = ["first_doc", "last_doc", "count", "doc_gaps", "doc_offset"]
+    if isinstance(postings, dict):
+        def kernel(seg, rows):
+            dele = seg.deleted if deleted_loader else None
+            return pd.DataFrame({"doc_id": _first_k_docs(rows, k, dele)})
+
+        df = reader.segment_executor().run(postings, DOC_COLS, kernel,
+                                           "doc_id long")
+    else:
+        df = _constant_score_topk_df(postings, k, deleted_loader)
+    with no_aqe(reader.spark):
+        out = df.collect()
+    docs = sorted(int(r["doc_id"]) for r in out)[:k]
+    b = float(F32(boost))  # float32 score contract (goldens mirror this)
+    return [ScoreDoc(d, b) for d in docs]
+
+
+def _constant_score_topk_df(postings, k: int, deleted_loader=None):
+    """Per-segment first-k docIDs over a posting-block DataFrame (the
+    semi-join fallback past the driver expansion cap)."""
+    cols = DOC_COLS + ["doc_offset"]
 
     def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = {c: pdf[c].to_numpy() for c in cols}
         off = np.int64(rows["doc_offset"][0])
+        rows["first_doc"] = rows["first_doc"].astype(np.int64) + off
+        rows["last_doc"] = rows["last_doc"].astype(np.int64) + off
         dele = (deleted_loader(pdf["seg"].iloc[0]) + off
                 if deleted_loader else None)
-        order = np.argsort(rows["first_doc"], kind="stable")
-        firsts = rows["first_doc"][order].astype(np.int64) + off
-        lasts = rows["last_doc"][order].astype(np.int64) + off
-        counts = rows["count"][order].astype(np.int64)
-        gaps = rows["doc_gaps"][order]
-        # batched vectorized decode (VERDICT r3 wrong-#3): ~256 blocks per
-        # decode_doc_ids_batch call — one varint pass + one cumsum, no
-        # per-block Python decode loop on broad wildcard/prefix expansions
-        BATCH = 256
-        parts, seen = [np.zeros(0, np.int64)], 0
-        for b0 in range(0, order.size, BATCH):
-            hi = min(b0 + BATCH, order.size)
-            d, _st = decode_doc_ids_batch(
-                firsts[b0:hi], lasts[b0:hi], counts[b0:hi],
-                list(gaps[b0:hi]),
-            )
-            if dele is not None and dele.size:
-                d = d[~np.isin(d, dele)]
-            parts.append(d)
-            seen += d.size
-            # sound early exit: blocks are ordered by first_doc only, so an
-            # undecoded block may still hold docIDs smaller than anything
-            # seen — stop ONLY when the k-th smallest docID collected so far
-            # is <= the next undecoded block's first_doc (every remaining
-            # block starts at or after it and so cannot displace the top-k)
-            if seen >= k and hi < order.size:
-                uniq = np.unique(np.concatenate(parts))
-                if uniq.size >= k and uniq[k - 1] <= firsts[hi]:
-                    parts = [uniq[:k]]
-                    break
-                parts, seen = [uniq], uniq.size
-        docs = np.unique(np.concatenate(parts))[:k]
-        return pd.DataFrame({"doc_id": docs})
+        return pd.DataFrame({"doc_id": _first_k_docs(rows, k, dele)})
 
-    from lucene_spark.session import no_aqe
-
-    with no_aqe(reader.spark):
-        out = (
-            postings.select("seg", *cols)
-            .groupBy("seg")
-            .applyInPandas(run_segment, "doc_id long")
-            .collect()
-        )
-    docs = sorted(int(r["doc_id"]) for r in out)[:k]
-    b = float(F32(boost))  # float32 score contract (goldens mirror this)
-    return [ScoreDoc(d, b) for d in docs]
+    return (
+        postings.select("seg", *cols)
+        .groupBy("seg")
+        .applyInPandas(run_segment, "doc_id long")
+    )
 
 
 def matching_docs_df(reader, postings, deleted_loader=None):

@@ -264,6 +264,15 @@ class IndexReader:
                     & F.col("term").isin(list(set(terms))))
         )
 
+    def segment_executor(self):
+        """The reader's :class:`~lucene_spark.search.executor.SegmentExecutor`
+        (built on first use from the postings listing resolved at open)."""
+        if not hasattr(self, "_segment_executor"):
+            from lucene_spark.search.executor import SegmentExecutor
+
+            self._segment_executor = SegmentExecutor(self)
+        return self._segment_executor
+
     def postings_semijoin(self, terms_df, field: str = "text"):
         """Posting-block rows whose term appears in ``terms_df`` (a DataFrame
         with a ``term`` column) — the expansion path that never collects the

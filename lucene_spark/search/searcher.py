@@ -123,6 +123,47 @@ def keyword_const_score(similarity, boost: float, field_stats: dict | None,
     return F32(scorer.score(np.array([KW_TF]), np.array([KW_NORM_CODE]))[0])
 
 
+# postings columns the flat-boolean WAND kernel reads
+FLAT_COLS = ["field", "term", "first_doc", "last_doc", "count", "doc_gaps",
+             "tfs", "norms", "max_tf", "impact_tfs", "impact_norms"]
+
+
+def _flat_topk_kernel(items, k: int, prune: bool, sep: str):
+    """Executor kernel: each query's per-segment ``segment_topk`` over the
+    segment's rows; ``items`` = [(qid, (specs, msm)), ...]."""
+
+    def kernel(seg, rows):
+        rows = dict(rows)
+        rows["term"] = (pd.Series(rows["field"], dtype=object) + sep
+                        + pd.Series(rows["term"], dtype=object)
+                        ).to_numpy(dtype=object)
+        qi, dd, ss = [], [], []
+        for qid, (specs, msm) in items:
+            d, s = segment_topk(rows, specs, k, msm, prune=prune,
+                                deleted=seg.deleted)
+            qi.append(np.full(d.size, qid, np.int64))
+            dd.append(d)
+            ss.append(s)
+        return pd.DataFrame({
+            "qid": np.concatenate(qi),
+            "doc_id": np.concatenate(dd),
+            "score": np.concatenate(ss).astype(np.float32),
+        })
+
+    return kernel
+
+
+def _topk_hits(rows, k: int) -> list[ScoreDoc]:
+    """TopDocs.merge over collected (doc_id, score) rows: the exact global
+    tie-break (score DESC, doc_id ASC), first k."""
+    if not rows:
+        return []
+    d = np.array([r["doc_id"] for r in rows], dtype=np.int64)
+    s = np.array([r["score"] for r in rows], dtype=np.float32)
+    order = np.lexsort((d, -s.astype(np.float64)))[:k]
+    return [ScoreDoc(int(d[i]), float(s[i])) for i in order]
+
+
 class IndexSearcher:
     #: total leaf clauses allowed per query tree — Lucene's
     #: ``IndexSearcher.maxClauseCount`` (``core/search/IndexSearcher.java:81``,
@@ -543,7 +584,7 @@ class IndexSearcher:
             from lucene_spark.search.multiterm import constant_score_topk
 
             return constant_score_topk(self.reader,
-                                       self._multiterm_postings(query), k,
+                                       self._multiterm_source(query), k,
                                        query.boost,
                                        deleted_loader=self.reader.deleted_loader())
         if isinstance(query, ast.SynonymQuery):
@@ -561,52 +602,20 @@ class IndexSearcher:
         wc = self._weighted_clauses(query)
         if wc is None:
             return []
-        specs, msm = wc
         if mode == "auto":
-            mode = self._pick_mode(specs, k)
-        prune = mode == "wand"
-
-        postings = self._postings_for_specs(specs)
-        cols = ["field", "term", "first_doc", "last_doc", "count", "doc_gaps",
-                "tfs", "norms", "max_tf", "impact_tfs", "impact_norms",
-                "doc_offset"]
-        sep = self.FIELD_SEP
-        dload = self.reader.deleted_loader()
-
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = {c: pdf[c].to_numpy() for c in cols}
-            rows["term"] = (pdf["field"] + sep + pdf["term"]).to_numpy(dtype=object)
-            # globalize docIDs: local block bounds + the segment's docBase
-            off = np.int64(rows["doc_offset"][0])
-            rows["first_doc"] = rows["first_doc"].astype(np.int64) + off
-            rows["last_doc"] = rows["last_doc"].astype(np.int64) + off
-            dele = dload(pdf["seg"].iloc[0]) + off if dload else None
-            d, s = segment_topk(rows, specs, k, msm, prune=prune,
-                                deleted=dele)
-            return pd.DataFrame({"doc_id": d, "score": s.astype(np.float32)})
-
-        out = self._collect(
-            postings.select("seg", *cols)
-            .groupBy("seg")
-            .applyInPandas(run_segment, "doc_id long, score float")
-        )
-        # TopDocs.merge: exact global tie-break (score DESC, doc_id ASC)
-        if not out:
-            return []
-        d = np.array([r["doc_id"] for r in out], dtype=np.int64)
-        s = np.array([r["score"] for r in out], dtype=np.float32)
-        order = np.lexsort((d, -s.astype(np.float64)))[:k]
-        return [ScoreDoc(int(d[i]), float(s[i])) for i in order]
+            mode = self._pick_mode(wc[0], k)
+        return _topk_hits(self._collect(
+            self._flat_topk_df([(0, wc)], k, prune=mode == "wand")), k)
 
     def msearch(self, queries, k: int = 10, mode: str = "wand"):
-        """Batched multi-query top-k: N queries, ONE postings scan, ONE
+        """Batched multi-query top-k: N queries, ONE postings read, ONE
         Spark job (the ``MultiSearcher`` / msearch serving pattern,
         re-expressed Spark-first: at serving scale per-query latency is
         dominated by the per-job scheduling floor, which a batch pays once).
 
-        The scan pushes the UNION of every query's ``In(field, term)`` set
-        into parquet; the per-segment kernel then runs each query's WAND
-        top-k over the shared decoded rows. Term and flat-boolean queries
+        The in-task read takes the UNION of every query's (field, term)
+        set; the per-segment kernel then runs each query's WAND top-k over
+        the shared decoded rows. Term and flat-boolean queries
         batch; any other shape (phrase, multiterm, constant-score, …) falls
         back to its regular ``search()`` path and still fills its slot.
         Returns ``[[ScoreDoc, ...], ...]`` aligned with ``queries``.
@@ -634,66 +643,38 @@ class IndexSearcher:
                 batched[i] = wc
         if not batched:
             return results
-        items = sorted(batched.items())
-        all_specs = [c for _qid, (specs, _m) in items for c in specs]
-        postings = self._postings_for_specs(all_specs)
-        cols = ["field", "term", "first_doc", "last_doc", "count", "doc_gaps",
-                "tfs", "norms", "max_tf", "impact_tfs", "impact_norms",
-                "doc_offset"]
-        sep = self.FIELD_SEP
-        dload = self.reader.deleted_loader()
-        prune = mode == "wand"
-
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = {c: pdf[c].to_numpy() for c in cols}
-            rows["term"] = (pdf["field"] + sep + pdf["term"]).to_numpy(
-                dtype=object)
-            off = np.int64(rows["doc_offset"][0])
-            rows["first_doc"] = rows["first_doc"].astype(np.int64) + off
-            rows["last_doc"] = rows["last_doc"].astype(np.int64) + off
-            dele = dload(pdf["seg"].iloc[0]) + off if dload else None
-            qi, dd, ss = [], [], []
-            for qid, (specs, msm) in items:
-                d, s = segment_topk(rows, specs, k, msm, prune=prune,
-                                    deleted=dele)
-                qi.append(np.full(d.size, qid, np.int64))
-                dd.append(d)
-                ss.append(s)
-            return pd.DataFrame({
-                "qid": np.concatenate(qi),
-                "doc_id": np.concatenate(dd),
-                "score": np.concatenate(ss).astype(np.float32),
-            })
-
-        out = self._collect(
-            postings.select("seg", *cols)
-            .groupBy("seg")
-            .applyInPandas(run_segment, "qid long, doc_id long, score float")
-        )
-        per_q: dict[int, list] = {qid: [] for qid, _ in items}
+        out = self._collect(self._flat_topk_df(sorted(batched.items()), k,
+                                               prune=mode == "wand"))
+        per_q: dict[int, list] = {qid: [] for qid in batched}
         for r in out:
-            per_q[int(r["qid"])].append((int(r["doc_id"]), float(r["score"])))
-        for qid, pairs in per_q.items():
-            if not pairs:
-                results[qid] = []
-                continue
-            d = np.array([p[0] for p in pairs], dtype=np.int64)
-            s = np.array([p[1] for p in pairs], dtype=np.float32)
-            order = np.lexsort((d, -s.astype(np.float64)))[:k]
-            results[qid] = [ScoreDoc(int(d[i]), float(s[i])) for i in order]
+            per_q[int(r["qid"])].append(r)
+        for qid, rows in per_q.items():
+            results[qid] = _topk_hits(rows, k)
         return results
 
-    # hybrid multiterm execution (restores the round-1 term pushdown): small
-    # expansions resolve on the driver (zero jobs against the resident dict)
-    # and push In(term, …) into the postings scan — row-group min/max pruning
-    # reads only the matched terms' blocks. Only past this cap does execution
-    # fall back to the semi-join that scans the whole field's postings.
+    def _flat_topk_df(self, items, k: int, prune: bool):
+        """(qid, doc_id, score) per-segment top-k rows of the flat term
+        booleans ``items`` = [(qid, (specs, msm)), ...] — ONE executor run
+        whose in-task read covers the union of every query's terms, the
+        kernel shared by :meth:`search` (one item) and :meth:`msearch`."""
+        specs = [c for _qid, (sp, _msm) in items for c in sp]
+        return self.reader.segment_executor().run(
+            self._spec_field_terms(specs), FLAT_COLS,
+            _flat_topk_kernel(items, k, prune, self.FIELD_SEP),
+            "qid long, doc_id long, score float")
+
+    # hybrid multiterm execution: small expansions resolve on the driver
+    # (zero jobs against the resident dict) and reach the postings read as a
+    # literal term set — row-group min/max pruning reads only the matched
+    # terms' blocks. Only past this cap does execution fall back to the
+    # semi-join that scans the whole field's postings.
     MULTITERM_EXPAND_CAP = 1024
 
-    def _multiterm_postings(self, q: ast.MultiTermQuery):
-        """Posting-block rows for a MultiTermQuery — pushdown when the
-        expansion is small, semi-join past MULTITERM_EXPAND_CAP. Returns
-        None when the expansion is provably empty."""
+    def _multiterm_source(self, q: ast.MultiTermQuery):
+        """The postings source of a MultiTermQuery: ``{field: terms}`` when
+        the expansion resolves on the driver (small expansions), the
+        semi-join postings DataFrame past MULTITERM_EXPAND_CAP, None when
+        the expansion is provably empty."""
         from lucene_spark.search.multiterm import (
             TooManyClauses,
             expand_terms_hybrid,
@@ -707,16 +688,27 @@ class IndexSearcher:
             return self.reader.postings_semijoin(
                 matched_terms_df(self.reader, q), q.field
             )
-        if not terms:
-            return None
-        return self.reader.postings(terms, field=q.field)
+        return {q.field: terms} if terms else None
 
-    def _postings_for_specs(self, specs):
+    def _multiterm_postings(self, q: ast.MultiTermQuery):
+        """Posting-block rows for a MultiTermQuery — pushdown when the
+        expansion is small, semi-join past MULTITERM_EXPAND_CAP. Returns
+        None when the expansion is provably empty."""
+        src = self._multiterm_source(q)
+        if isinstance(src, dict):
+            ((field, terms),) = src.items()
+            return self.reader.postings(terms, field=field)
+        return src
+
+    def _spec_field_terms(self, specs) -> dict[str, list[str]]:
         field_terms: dict[str, list[str]] = {}
         for c in specs:
             f, t = c.term.split(self.FIELD_SEP, 1)
             field_terms.setdefault(f, []).append(t)
-        return self.reader.postings_multi(field_terms)
+        return field_terms
+
+    def _postings_for_specs(self, specs):
+        return self.reader.postings_multi(self._spec_field_terms(specs))
 
     def _mixed_clauses(self, q: ast.BooleanQuery, match_only: bool = False):
         """Resolve a mixed boolean (terms + phrases + multiterm expansions +
@@ -1159,20 +1151,14 @@ class IndexSearcher:
         df = self._mixed_segment_df(q, k)
         if df is None:
             return []
-        out = self._collect(df)
-        if not out:
-            return []
-        d = np.array([r["doc_id"] for r in out], dtype=np.int64)
-        s = np.array([r["score"] for r in out], dtype=np.float32)
-        order = np.lexsort((d, -s.astype(np.float64)))[:k]
-        return [ScoreDoc(int(d[i]), float(s[i])) for i in order]
+        return _topk_hits(self._collect(df), k)
 
     def _phrase_plan(self, q):
         """Shared setup for phrase-shaped queries: stats-check the terms and
-        return (postings, scorer, kernel) — None when a required term (or an
-        entire slot) is corpus-absent. PhraseQuery scores as one pseudo-term
-        with summed idf (PhraseWeight); MultiPhraseQuery sums idf over ALL
-        present terms of all slots (MultiPhraseQuery.java:226-245)."""
+        return ({field: terms}, scorer, kernel) — None when a required term
+        (or an entire slot) is corpus-absent. PhraseQuery scores as one
+        pseudo-term with summed idf (PhraseWeight); MultiPhraseQuery sums idf
+        over ALL present terms of all slots (MultiPhraseQuery.java:226-245)."""
         if isinstance(q, ast.PhraseQuery):
             from lucene_spark.search.phrase import segment_phrase_postings
 
@@ -1185,7 +1171,7 @@ class IndexSearcher:
             )
             slop = int(q.slop)
             return (
-                self.reader.postings(terms, field=q.field), scorer,
+                {q.field: terms}, scorer,
                 lambda rows: segment_phrase_postings(rows, terms, slop),
             )
         from lucene_spark.search.phrase import segment_multiphrase_postings
@@ -1206,7 +1192,7 @@ class IndexSearcher:
         fetch = sorted({t for slot in present_slots for t in slot})
         slop = int(q.slop)
         return (
-            self.reader.postings(fetch, field=q.field), scorer,
+            {q.field: fetch}, scorer,
             lambda rows: segment_multiphrase_postings(
                 rows, present_slots, slop),
         )
@@ -1226,27 +1212,24 @@ class IndexSearcher:
             return []
         return self._run_phrase_kernel(*plan, k=k)
 
-    def _phrase_scored_df(self, postings, scorer, kernel, k=None):
+    def _phrase_scored_df(self, field_terms, scorer, kernel, k=None,
+                          segments=None):
         """Distributed (doc_id, score float) DataFrame for a phrase-shaped
-        query: per-segment positions kernel + similarity scoring. ``k``
-        truncates per segment (the top-k path); ``None`` keeps every
-        matching doc (the exhaustive score_df substrate — stays
-        distributed, nothing collected here)."""
+        query: per-segment positions kernel + similarity scoring, one
+        executor run over ``field_terms``. ``k`` truncates per segment (the
+        top-k path); ``None`` keeps every matching doc (the exhaustive
+        score_df substrate — stays distributed, nothing collected here).
+        ``segments`` restricts the run to those segment ids."""
         if not self.reader.manifest.get("positions", False):
             raise ValueError("index was built without positions; "
                              "rebuild with IndexBuilder(..., positions=True)")
         cols = ["term", "first_doc", "last_doc", "count", "doc_gaps", "tfs",
-                "norms", "positions", "doc_offset"]
-        dload = self.reader.deleted_loader()
+                "norms", "positions"]
 
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = {c: pdf[c].to_numpy() for c in cols}
-            off = np.int64(rows["doc_offset"][0])
-            rows["first_doc"] = rows["first_doc"].astype(np.int64) + off
-            rows["last_doc"] = rows["last_doc"].astype(np.int64) + off
+        def run_segment(seg, rows):
             d, f, nm = kernel(rows)
-            if d.size and dload:
-                m = ~np.isin(d, dload(pdf["seg"].iloc[0]) + off)
+            if d.size and seg.deleted is not None:
+                m = ~np.isin(d, seg.deleted)
                 d, f, nm = d[m], f[m], nm[m]
             if d.size == 0:
                 return pd.DataFrame({"doc_id": [], "score": []}).astype(
@@ -1257,23 +1240,15 @@ class IndexSearcher:
             order = np.lexsort((d, -s.astype(np.float64)))[:k]
             return pd.DataFrame({"doc_id": d[order], "score": s[order]})
 
-        return (
-            postings.select("seg", *cols)
-            .groupBy("seg")
-            .applyInPandas(run_segment, "doc_id long, score float")
-        )
+        return self.reader.segment_executor().run(
+            field_terms, cols, run_segment, "doc_id long, score float",
+            segments=segments)
 
-    def _run_phrase_kernel(self, postings, scorer, kernel, k: int):
+    def _run_phrase_kernel(self, field_terms, scorer, kernel, k: int):
         """Top-k driver merge over :meth:`_phrase_scored_df` (k rows per
         segment collected, never the full match set)."""
-        out = self._collect(
-            self._phrase_scored_df(postings, scorer, kernel, k=k))
-        if not out:
-            return []
-        d = np.array([r["doc_id"] for r in out], dtype=np.int64)
-        s = np.array([r["score"] for r in out], dtype=np.float32)
-        order = np.lexsort((d, -s.astype(np.float64)))[:k]
-        return [ScoreDoc(int(d[i]), float(s[i])) for i in order]
+        return _topk_hits(self._collect(
+            self._phrase_scored_df(field_terms, scorer, kernel, k=k)), k)
 
     def _span_match_df(self, q):
         """(doc_id) DataFrame of span matches (SpanNear / SpanFirst /
@@ -2508,10 +2483,13 @@ class IndexSearcher:
         ``seg=N`` directory key)."""
         from pyspark.sql import functions as F
 
+        return postings.where(F.col("seg").isin(self._segs_for_docs(doc_ids)))
+
+    def _segs_for_docs(self, doc_ids) -> list[int]:
+        """Segment ids whose docID range intersects ``doc_ids``."""
         ids = np.asarray(sorted(int(x) for x in doc_ids), dtype=np.int64)
-        segs = [s for s, (lo, hi) in self._segment_doc_bounds().items()
+        return [s for s, (lo, hi) in self._segment_doc_bounds().items()
                 if ((ids >= lo) & (ids < hi)).any()]
-        return postings.where(F.col("seg").isin(segs))
 
     def score_df(self, query, doc_ids=None):
         """Exhaustive (doc_id, score) DataFrame of ALL matching docs.
@@ -2549,9 +2527,9 @@ class IndexSearcher:
             if plan is None:
                 return self.spark.createDataFrame(
                     [], "doc_id long, score float")
-            if doc_ids is not None:
-                plan = (self._prune_segs(plan[0], doc_ids),) + plan[1:]
-            return self._phrase_scored_df(*plan)
+            segs = (self._segs_for_docs(doc_ids)
+                    if doc_ids is not None else None)
+            return self._phrase_scored_df(*plan, segments=segs)
         if isinstance(nq, (ast.SynonymQuery, ast.DisjunctionMaxQuery)):
             from lucene_spark.search.multiterm import (
                 dismax_scored_df,
@@ -3304,17 +3282,16 @@ class IndexSearcher:
 
         q = ast.normalize(query)
         if isinstance(q, ast.TermQuery):
-            postings = self.reader.postings([q.term], field=q.field)
+            postings = {q.field: [q.term]}
         elif isinstance(q, ast.MultiTermQuery):
-            postings = self._multiterm_postings(q)
+            postings = self._multiterm_source(q)
         elif (isinstance(q, ast.BooleanQuery)
               and all(occ == ast.SHOULD and isinstance(sub, ast.TermQuery)
                       for occ, sub in q.clauses)
               and q.min_should_match <= 1):
-            ft: dict[str, list] = {}
+            postings = {}
             for _occ, sub in q.clauses:
-                ft.setdefault(sub.field, []).append(sub.term)
-            postings = self.reader.postings_multi(ft)
+                postings.setdefault(sub.field, []).append(sub.term)
         else:
             return None  # no union-postings form → exhaustive path
         hits = constant_score_topk(

@@ -78,3 +78,49 @@ def test_decode_blocks_batch_roundtrip():
         np.testing.assert_array_equal(d[s:s + r["count"]], d1)
         np.testing.assert_array_equal(tf[s:s + r["count"]], t1)
         np.testing.assert_array_equal(nm[s:s + r["count"]], n1)
+
+
+# serving paths routed through the exchange-free SegmentExecutor: no
+# per-segment regrouping (Exchange hashpartitioning(seg)) may creep back in
+def _migrated_functions():
+    from lucene_spark.search import multiterm, searcher
+
+    S = searcher.IndexSearcher
+    return [S.search, S.msearch, S._flat_topk_df, S._phrase_scored_df,
+            S._run_phrase_kernel, S._search_sorted_early,
+            searcher._flat_topk_kernel, multiterm.constant_score_topk]
+
+
+def test_migrated_serving_paths_have_no_seg_exchange():
+    import inspect
+
+    for fn in _migrated_functions():
+        src = inspect.getsource(fn)
+        assert 'groupBy("seg")' not in src and "applyInPandas" not in src, (
+            f"{fn.__qualname__} regroups by segment; route it through "
+            "reader.segment_executor()")
+
+
+def test_traced_search_runs_one_stage(spark, index_dir):
+    from lucene_spark.corpus import VOCAB
+    from lucene_spark.search.searcher import IndexSearcher
+
+    s = IndexSearcher(spark, index_dir)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    queries = {"flat": f"{VOCAB[0]} {VOCAB[3]}",
+               "phrase": f'"{VOCAB[0]} {VOCAB[3]}"',
+               "prefix": f"{VOCAB[11][:3]}*"}
+    for shape, q in queries.items():
+        s.search(q, 10)  # warm: term dictionary resident on the driver
+        group = f"one-stage-{shape}"
+        sc.setJobGroup(group, shape)
+        try:
+            assert s.search(q, 10)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = [st for j in jobs for st in tracker.getJobInfo(j).stageIds]
+        tasks = sum(tracker.getStageInfo(st).numTasks for st in stages)
+        assert len(jobs) == 1 and len(stages) == 1, (shape, jobs, stages)
+        assert tasks <= sc.defaultParallelism, (shape, tasks)

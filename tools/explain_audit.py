@@ -28,6 +28,35 @@ def capture(df) -> str:
     return buf.getvalue()
 
 
+def reads_only_overlapping(searcher, run, field_terms) -> bool:
+    """Run ``run()`` and check the executor's per-task counters of that
+    run: the row groups read are exactly the ones whose field and
+    [min(term), max(term)] footer statistics can hold a term of
+    ``field_terms`` — the in-task equivalent of the scan's pushed-down
+    ``In(term, ...)`` plus row-group pruning."""
+    import pyarrow.parquet as pq
+    from pyarrow import fs
+
+    ex = searcher.reader.segment_executor()
+    run()
+    read = {tuple(x) for t in ex.task_stats() for x in t["read"]}
+    want = set()
+    for seg, uris in ex.files.items():
+        for fi, uri in enumerate(uris):
+            filesystem, path = fs.FileSystem.from_uri(uri)
+            md = pq.ParquetFile(path, filesystem=filesystem).metadata
+            names = [md.schema.column(i).name for i in range(md.num_columns)]
+            fc, tc = names.index("field"), names.index("term")
+            for rg in range(md.num_row_groups):
+                fst = md.row_group(rg).column(fc).statistics
+                tst = md.row_group(rg).column(tc).statistics
+                if any(fst.min <= f <= fst.max
+                       and any(tst.min <= t <= tst.max for t in ts)
+                       for f, ts in field_terms.items()):
+                    want.add((seg, fi, rg))
+    return bool(read) and read == want
+
+
 def main(sf_dir: str):
     import __spark_entry__ as e
     from lucene_spark.session import get_spark
@@ -292,6 +321,29 @@ def main(sf_dir: str):
                      "TakeOrdered-style k-merge, no shuffle joins",
                      capture(hnsw_topk(spark, emb_df, hnsw_d))))
 
+    # the serving path (search / msearch / phrase / driver-expanded prefix)
+    # runs through the SegmentExecutor: one Range -> MapInPandas stage, the
+    # postings read happens inside the tasks (pyarrow row-group pruning), so
+    # the pushdown properties are checked on its per-task counters below
+    items = [(i, wc) for i, wc in enumerate(
+        srch._weighted_clauses(_ast.normalize(e._parse(q)))
+        for q in getattr(e, "MSEARCH_QS", ())) if wc]
+    sections.append(("serving top-k plan via the SegmentExecutor (expect "
+                     "Range -> MapInPandas, NO Exchange, NO Scan parquet)",
+                     capture(srch._flat_topk_df(items, 20, True))))
+    vocab = srch.reader.sorted_terms("text") or []
+    serving_reads = [
+        reads_only_overlapping(srch, lambda: srch.search("table value", 10),
+                               {"text": ["table", "value"]}),
+        reads_only_overlapping(srch, lambda: srch.search(pq, 10),
+                               {"text": [t for t in vocab
+                                         if t.startswith("v")]}),
+        reads_only_overlapping(
+            srch,
+            lambda: srch.msearch([e._parse(q) for q in e.MSEARCH_QS], 20),
+            srch._spec_field_terms(mspecs)),
+    ]
+
     import re
 
     checks = []
@@ -441,6 +493,22 @@ def main(sf_dir: str):
                    "FlatMapCoGroupsInPandas" in sections[29][1]
                    and "SortMergeJoin" not in sections[29][1]
                    and "BroadcastHashJoin" not in sections[29][1]))
+
+    checks.append(("serving top-k is one stage: Range -> MapInPandas, no "
+                   "exchange, no Spark postings scan",
+                   "MapInPandas" in sections[30][1]
+                   and "Range" in sections[30][1]
+                   and "Exchange" not in sections[30][1]
+                   and "Scan parquet" not in sections[30][1]))
+    checks.append(("serving term top-k reads only the query terms' row "
+                   "groups (executor counters vs parquet footers)",
+                   serving_reads[0]))
+    checks.append(("serving prefix top-k reads only the expanded terms' row "
+                   "groups (executor counters vs parquet footers)",
+                   serving_reads[1]))
+    checks.append(("msearch reads only the row groups of the term UNION "
+                   "in one executor run (counters vs parquet footers)",
+                   serving_reads[2]))
 
     out = ["# BENCH/PLANS.md — physical-plan audit (auto-generated)\n"]
     out.append("## Checks\n")
