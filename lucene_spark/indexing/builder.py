@@ -27,8 +27,16 @@ Execution shape (designed for 10^12 turns / 1000 executors, tested on local[32])
    own doc-range slice of every hot term's posting list, so a billion-doc term
    costs each task at most its per-segment share. The term-keyed shuffles that
    remain (term_stats) move pre-aggregated counts only.
-3. **Stats**: ``term_stats`` / ``field_stats`` via plain Spark aggregation over
-   the postings metadata columns (column-pruned scan, whole-stage codegen).
+3. **Stats**: ``term_stats`` is ONE Spark aggregation of the postings
+   metadata columns (column-pruned scan with a schema declared from a
+   footer, whole-stage codegen, AQE on) and ONE sorted write, ~500k terms
+   per file. While the footers' postings row total — an upper bound on
+   distinct terms — is under 500k, that is one file with no ``count()`` job
+   and no range exchange. ``field_stats`` comes from the dictionary just written (one
+   tiny per-field Σdf/Σttf aggregation; the text docCount is Σ ``rows_in``,
+   which the build already holds) and is written on the driver, as is
+   ``build_manifest`` (``tableio.write_table``). A 4-segment build runs 9
+   Spark jobs: plan 3, invert 2, term_stats 2, field_stats 2.
 
 Checkpoint/resume: ``build_manifest`` records per-segment
 ``(fingerprint, rows_in, doc_offset, terms, blocks, wall_ms, status)``.
@@ -50,6 +58,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from lucene_spark.analysis import get_analyzer
+from lucene_spark.indexing import tableio
 from lucene_spark.indexing.blocks import (POSTINGS_FORMAT, codec_id,
                                            encode_segment_blocks)
 from lucene_spark.indexing.partitioning import (
@@ -102,6 +111,9 @@ METRICS_SCHEMA = (
     "terms long, blocks long, wall_ms long, status string"
 )
 
+# dictionary terms per term_stats file
+TERMS_PER_FILE = 500_000
+
 
 def _to_signed64(x: int) -> int:
     x &= (1 << 64) - 1
@@ -130,6 +142,31 @@ def rows_fingerprint(conv_id, turn_idx, text, extra_cols=()) -> int:
     h = pd.util.hash_pandas_object(s, index=False).to_numpy(dtype=np.uint64)
     acc = int(np.bitwise_xor.reduce(h)) if h.size else 0
     return _to_signed64(acc)
+
+
+def _term_stats_agg(postings):
+    """df/ttf/max_tf per (field, term) over posting-block rows."""
+    from pyspark.sql import functions as F
+
+    return postings.groupBy("field", "term").agg(
+        F.sum("count").cast("long").alias("df"),
+        F.sum("ttf").cast("long").alias("ttf"),
+        F.max("max_tf").cast("int").alias("max_tf"),
+    )
+
+
+def segment_skew(metrics_rows: list[dict]) -> dict:
+    """Build skew summary of per-segment metric rows: wall time and rows,
+    max and median, and how many segments a resume reused."""
+    wall = [int(r["wall_ms"]) for r in metrics_rows] or [0]
+    rows = [int(r["rows_in"]) for r in metrics_rows] or [0]
+    return {
+        "wall_ms_max": max(wall),
+        "wall_ms_median": float(np.median(wall)),
+        "rows_max": max(rows),
+        "rows_median": float(np.median(rows)),
+        "reused": sum(r["status"] == "reused" for r in metrics_rows),
+    }
 
 
 def _atomic_write_parquet(table: pa.Table, path: str, row_group_size: int = 4096):
@@ -387,7 +424,6 @@ class IndexBuilder:
         """
         from pyspark.sql import functions as F
 
-        spark = self.spark
         phase_t: dict[str, float] = {}
         t0 = time.time()
         manifest = self._load_manifest() if resume else None
@@ -431,7 +467,8 @@ class IndexBuilder:
                 .collect()
             )
             seg_fp = {r["segment"]: (r["fp"] or 0) for r in fp_rows}
-            prev = spark.read.parquet(f"{self.index_dir}/build_manifest").collect()
+            prev = tableio.read_table(
+                f"{self.index_dir}/build_manifest").to_pylist()
             for r in prev:
                 s = r["segment"]
                 if (
@@ -480,20 +517,9 @@ class IndexBuilder:
             offsets[r["segment"]] = acc
             acc += r["rows_in"]
 
-        if metrics_rows:
-            mpdf = pd.DataFrame(metrics_rows)
-            mpdf["doc_offset"] = mpdf["segment"].map(offsets)
-            mdf = spark.createDataFrame(
-                mpdf[["segment", "fingerprint", "rows_in", "doc_offset",
-                      "terms", "blocks", "wall_ms", "status"]]
-            )
-        else:
-            mdf = spark.createDataFrame(
-                [], METRICS_SCHEMA + ", doc_offset long"
-            )
-        mdf.coalesce(1).write.mode("overwrite").parquet(
-            f"{self.index_dir}/build_manifest"
-        )
+        tableio.write_table(
+            [{**r, "doc_offset": offsets[r["segment"]]} for r in metrics_rows],
+            tableio.BUILD_MANIFEST_SCHEMA, f"{self.index_dir}/build_manifest")
 
         t0 = time.time()
         dropped = self._drop_stale_segments(set(offsets))
@@ -512,7 +538,7 @@ class IndexBuilder:
             # untouched (open readers keep their point-in-time view); any
             # other state (new segments, or stats living in an append/compact
             # generation dir) gets a full recompute into the default dirs
-            self._write_stats()
+            self._write_stats(acc)
         phase_t["stats"] = time.time() - t0
         # build identity: a gen-0 stats rewrite reuses the 'term_stats' dir
         # name, so the reader's shared dictionary cache needs a fresh key
@@ -567,6 +593,7 @@ class IndexBuilder:
             "built": sum(1 for r in metrics_rows if r["status"] == "ok"),
             "reused": len(done),
             "phase_sec": {k: round(v, 3) for k, v in phase_t.items()},
+            "segments": segment_skew(metrics_rows),
         }
 
     def _gc_stats_generations(self, keep: set):
@@ -646,12 +673,14 @@ class IndexBuilder:
         return {"term_stats": sd.get("term_stats", "term_stats"),
                 "field_stats": sd.get("field_stats", "field_stats")}
 
-    def _merge_stats(self, new_segs: list, suffix: str) -> dict:
+    def _merge_stats(self, new_segs: list, suffix: str,
+                     doc_count: int) -> dict:
         """Incremental stats maintenance for appends: aggregate ONLY the new
         segments' postings (partition-pruned scan over ``seg=N`` dirs) and
-        merge with the CURRENT stats generation — df/ttf/sum are sums and
-        max_tf a max, so the merge is exact. O(new data + dictionary) per
-        micro-batch instead of an O(whole index) rewrite.
+        merge with the CURRENT stats generation — df/ttf are sums and max_tf
+        a max, so the merge is exact. O(new data + dictionary) per
+        micro-batch instead of an O(whole index) rewrite. ``doc_count``:
+        the index's doc count once the new segments are in.
 
         Writes ``term_stats{suffix}`` / ``field_stats{suffix}`` WITHOUT
         touching the live generation; the caller publishes the returned dir
@@ -662,150 +691,113 @@ class IndexBuilder:
         """
         from pyspark.sql import functions as F
 
-        spark = self.spark
         cur = self._stats_dirs()
         out = {"term_stats": f"term_stats{suffix}",
                "field_stats": f"field_stats{suffix}"}
-        segs = [int(s) for s in new_segs]
-        delta = (
-            spark.read.parquet(f"{self.index_dir}/postings")
-            .filter(F.col("seg").isin(segs))
-            .groupBy("field", "term")
-            .agg(
-                F.sum("count").cast("long").alias("df"),
-                F.sum("ttf").cast("long").alias("ttf"),
-                F.max("max_tf").cast("int").alias("max_tf"),
-            )
-            .persist()
-        )
-        old = spark.read.parquet(f"{self.index_dir}/{cur['term_stats']}")
+        segs = {int(s) for s in new_segs}
+        files = [f for f in tableio.parquet_files(f"{self.index_dir}/postings")
+                 if tableio.segment_of(f) in segs]
+        old_path = f"{self.index_dir}/{cur['term_stats']}"
+        delta = _term_stats_agg(
+            tableio.read_df(self.spark, f"{self.index_dir}/postings", "seg")
+            .filter(F.col("seg").isin(sorted(segs))))
         merged = (
-            old.unionByName(delta)
+            tableio.read_df(self.spark, old_path).unionByName(delta)
             .groupBy("field", "term")
             .agg(
                 F.sum("df").cast("long").alias("df"),
                 F.sum("ttf").cast("long").alias("ttf"),
                 F.max("max_tf").cast("int").alias("max_tf"),
             )
-            .persist()
         )
-        n_terms = merged.count()
-        (
-            merged.repartitionByRange(max(1, n_terms // 500_000), "field", "term")
-            .sortWithinPartitions("field", "term")
-            .write.mode("overwrite")
-            .parquet(f"{self.index_dir}/{out['term_stats']}")
-        )
-        # field_stats: additive deltas from the new docs / new dictionary rows
-        old_fs = spark.read.parquet(
-            f"{self.index_dir}/{cur['field_stats']}").filter(
-            F.col("field") == FIELD).collect()[0]
-        nd = (
-            spark.read.parquet(f"{self.index_dir}/docs")
-            .filter(F.col("seg").isin(segs))
-            .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                 F.sum("dl").cast("long").alias("ttf"))
-            .collect()[0]
-        )
-        ddf = delta.filter(F.col("field") == FIELD).agg(
-            F.sum("df").cast("long").alias("sum_df")
-        ).collect()[0]
-        main_row = spark.createDataFrame(
-            [(FIELD,
-              int(old_fs["doc_count"]) + int(nd["n"] or 0),
-              int(old_fs["sum_ttf"]) + int(nd["ttf"] or 0),
-              int(old_fs["sum_df"]) + int(ddf["sum_df"] or 0))],
-            "field string, doc_count long, sum_ttf long, sum_df long",
-        )
-        # keyword-field rows: recompute exactly from the just-merged term
-        # stats (same derivation as _write_stats — single-valued DOCS-only
-        # fields have doc_count = Σdf); the merged dictionary is already
-        # persisted, so this adds no extra scan of the postings
-        kw_rows = (
-            merged.filter(F.col("field") != FIELD)
-            .groupBy("field")
-            .agg(F.sum("df").cast("long").alias("doc_count"),
-                 F.sum("ttf").cast("long").alias("sum_ttf"),
-                 F.sum("df").cast("long").alias("sum_df"))
-            .select("field", "doc_count", "sum_ttf", "sum_df")
-        )
-        main_row.unionByName(kw_rows).coalesce(1).write.mode(
-            "overwrite").parquet(f"{self.index_dir}/{out['field_stats']}")
-        merged.unpersist()
-        delta.unpersist()
+        # merged terms <= old terms + new postings rows
+        bound = tableio.num_rows(tableio.parquet_files(old_path)
+                                 + files, stop_at=TERMS_PER_FILE)
+        self._write_term_stats(merged, bound,
+                               f"{self.index_dir}/{out['term_stats']}")
+        self._write_field_stats(out, doc_count)
         return out
 
-    def _write_stats(self, suffix: str = "", segs: list | None = None):
+    def _write_stats(self, doc_count: int, suffix: str = "",
+                     segs: list | None = None):
         """Full stats recompute into ``term_stats{suffix}`` /
-        ``field_stats{suffix}``; ``segs`` restricts the scan to the given
-        segment ids (compaction recomputes over survivors only)."""
+        ``field_stats{suffix}``: one aggregation of the postings and one
+        write, then ``field_stats`` from the dictionary just written.
+        ``segs`` restricts the scan to the given segment ids (compaction
+        recomputes over survivors only); ``doc_count`` is those segments'
+        Σ ``rows_in`` — the text field's docCount, held by every caller, so
+        the docs table is never scanned."""
         from pyspark.sql import functions as F
 
-        spark = self.spark
-        ts_path = f"{self.index_dir}/term_stats{suffix}"
-        fs_path = f"{self.index_dir}/field_stats{suffix}"
-        if not os.path.isdir(f"{self.index_dir}/postings"):
-            # empty corpus → empty index: materialize zero-row stats tables
-            spark.createDataFrame(
-                [], "field string, term string, df long, ttf long, max_tf int"
-            ).write.mode("overwrite").parquet(ts_path)
-            spark.createDataFrame(
-                [(FIELD, 0, 0, 0)],
-                "field string, doc_count long, sum_ttf long, sum_df long",
-            ).write.mode("overwrite").parquet(fs_path)
-            return
-        postings = spark.read.parquet(f"{self.index_dir}/postings")
-        docs = spark.read.parquet(f"{self.index_dir}/docs")
+        out = {"term_stats": f"term_stats{suffix}",
+               "field_stats": f"field_stats{suffix}"}
+        ts_path = f"{self.index_dir}/{out['term_stats']}"
+        files = tableio.parquet_files(f"{self.index_dir}/postings")
         if segs is not None:
-            seg_ids = [int(s) for s in segs]
-            postings = postings.filter(F.col("seg").isin(seg_ids))
-            docs = docs.filter(F.col("seg").isin(seg_ids))
-        term_stats = (
-            postings.groupBy("field", "term")
-            .agg(
-                F.sum("count").cast("long").alias("df"),
-                F.sum("ttf").cast("long").alias("ttf"),
-                F.max("max_tf").cast("int").alias("max_tf"),
-            )
-            .persist()  # sized by count() then written — one aggregation
-        )
-        # file count follows dictionary size (~500k terms/file): tiny dicts →
-        # one footer to read per lookup; huge dicts keep range pruning
-        n_terms = term_stats.count()
+            keep = {int(s) for s in segs}
+            files = [f for f in files if tableio.segment_of(f) in keep]
+        if not files:
+            # empty corpus → empty index: materialize a zero-row dictionary
+            tableio.write_table([], tableio.TERM_STATS_SCHEMA, ts_path)
+        else:
+            postings = tableio.read_df(self.spark,
+                                       f"{self.index_dir}/postings", "seg")
+            if segs is not None:
+                postings = postings.filter(F.col("seg").isin(sorted(keep)))
+            # distinct terms <= postings rows (every term has >= 1 block)
+            self._write_term_stats(
+                _term_stats_agg(postings),
+                tableio.num_rows(files, stop_at=TERMS_PER_FILE), ts_path)
+        self._write_field_stats(out, doc_count)
+
+    def _write_term_stats(self, term_stats, bound: int, path: str):
+        """Write the dictionary ``term_stats`` sorted by (field, term), one
+        file per ~``TERMS_PER_FILE`` terms (tiny dicts → one footer to read
+        per lookup; huge dicts keep range pruning). ``bound`` >= its row
+        count: below ``TERMS_PER_FILE`` the file count is 1 — no count job
+        and no range exchange; above it the exact count sizes the range
+        partitioning."""
+        if bound < TERMS_PER_FILE:
+            parts = term_stats.coalesce(1)
+        else:
+            term_stats = term_stats.persist()  # counted, then written
+            parts = term_stats.repartitionByRange(
+                max(1, term_stats.count() // TERMS_PER_FILE), "field", "term")
         (
-            term_stats.repartitionByRange(
-                max(1, n_terms // 500_000), "field", "term"
-            )
-            .sortWithinPartitions("field", "term")
+            parts.sortWithinPartitions("field", "term")
             .write.mode("overwrite")
-            .parquet(ts_path)
+            .parquet(path)
         )
-        term_stats.unpersist()
-        ts = spark.read.parquet(ts_path)
-        field_stats = (
-            docs.agg(
-                F.count(F.lit(1)).cast("long").alias("doc_count"),
-                F.sum("dl").cast("long").alias("sum_ttf"),
-            )
-            .withColumn("field", F.lit(FIELD))
-            .crossJoin(
-                ts.filter(F.col("field") == FIELD)
-                .agg(F.sum("df").cast("long").alias("sum_df"))
-            )
-            .select("field", "doc_count", "sum_ttf", "sum_df")
-        )
-        # keyword (StringField) fields: single-valued, tf=1 per doc, so
-        # docCount(field) = Σdf and sumTotalTermFreq(field) = Σttf — the
-        # per-field CollectionStatistics Lucene resolves for DOCS-only
-        # fields (IndexSearcher.java:943-958); enables true BM25 scoring
-        # of keyword clauses instead of a constant approximation
-        kw_stats = (
-            ts.filter(F.col("field") != FIELD)
+        if bound >= TERMS_PER_FILE:
+            term_stats.unpersist()
+
+    def _write_field_stats(self, dirs: dict, doc_count: int):
+        """``field_stats`` from the dictionary in ``dirs["term_stats"]``:
+        one tiny per-field aggregation of Σdf and Σttf, written on the
+        driver.
+
+        Text field: docCount = ``doc_count``; sumTotalTermFreq = Σttf, the
+        reference's definition (``BM25Similarity.java:109-111``), equal to
+        Σdl by construction (every token is one term code and one tf unit
+        in ``_invert_segment``). Keyword (StringField) fields are
+        single-valued with tf=1 per doc, so docCount(field) = Σdf and
+        sumTotalTermFreq(field) = Σttf — the per-field CollectionStatistics
+        Lucene resolves for DOCS-only fields (IndexSearcher.java:943-958)."""
+        from pyspark.sql import functions as F
+
+        sums = {
+            r["field"]: (int(r["sum_df"]), int(r["sum_ttf"]))
+            for r in tableio.read_df(
+                self.spark, f"{self.index_dir}/{dirs['term_stats']}")
             .groupBy("field")
-            .agg(F.sum("df").cast("long").alias("doc_count"),
-                 F.sum("ttf").cast("long").alias("sum_ttf"),
-                 F.sum("df").cast("long").alias("sum_df"))
-            .select("field", "doc_count", "sum_ttf", "sum_df")
-        )
-        field_stats = field_stats.unionByName(kw_stats)
-        field_stats.coalesce(1).write.mode("overwrite").parquet(fs_path)
+            .agg(F.sum("df").cast("long").alias("sum_df"),
+                 F.sum("ttf").cast("long").alias("sum_ttf"))
+            .collect()
+        }
+        sum_df, sum_ttf = sums.pop(FIELD, (0, 0))
+        rows = [{"field": FIELD, "doc_count": int(doc_count),
+                 "sum_ttf": sum_ttf, "sum_df": sum_df}]
+        rows += [{"field": f, "doc_count": d, "sum_ttf": t, "sum_df": d}
+                 for f, (d, t) in sorted(sums.items())]
+        tableio.write_table(rows, tableio.FIELD_STATS_SCHEMA,
+                            f"{self.index_dir}/{dirs['field_stats']}")

@@ -38,6 +38,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from lucene_spark.indexing import tableio
 from lucene_spark.indexing.blocks import (
     codec_id,
     encode_segment_blocks,
@@ -309,12 +310,10 @@ class IndexMaintenance:
         m = self._manifest()
         segs = [int(s) for s, _off in
                 sorted(m["offsets"].items(), key=lambda kv: int(kv[1]))]
-        rows = {
-            int(r["segment"]): int(r["rows_in"])
-            for r in self.spark.read.parquet(
-                IndexBuilder.recover_build_manifest(self.index_dir)
-            ).collect()
-        }
+        bm = tableio.read_table(
+            IndexBuilder.recover_build_manifest(self.index_dir),
+            columns=["segment", "rows_in"]).to_pydict()
+        rows = dict(zip(bm["segment"], bm["rows_in"]))
         ld = live_dir_of(m)
         # one deleted-docs read per segment, reused by the singleton filter
         n_del = {s: deleted_for_segment(self.index_dir, s, ld).size
@@ -357,8 +356,8 @@ class IndexMaintenance:
         codec = codec_id(self._manifest().get("postings_codec", "varint"))
         manifest = self._manifest()
         live_dir = live_dir_of(manifest)
-        bm_rows = [r.asDict() for r in spark.read.parquet(
-            IndexBuilder.recover_build_manifest(index_dir)).collect()]
+        bm_rows = tableio.read_table(
+            IndexBuilder.recover_build_manifest(index_dir)).to_pylist()
         rows_in = {int(r["segment"]): int(r["rows_in"]) for r in bm_rows}
         old_order = [int(x) for x, _ in
                      sorted(manifest["offsets"].items(),
@@ -539,7 +538,7 @@ class IndexMaintenance:
         gen = _commits.next_generation(
             index_dir, manifest, ("term_stats", "field_stats"), "stats_gen")
         survivor_ids = [s for s, _n, _fp in survivors]
-        self._builder._write_stats(suffix=f".g{gen}", segs=survivor_ids)
+        self._builder._write_stats(acc, suffix=f".g{gen}", segs=survivor_ids)
         sdirs = {"term_stats": f"term_stats.g{gen}",
                  "field_stats": f"field_stats.g{gen}"}
 
@@ -547,14 +546,11 @@ class IndexMaintenance:
         # the merged rows: a crash between this swap and the manifest commit
         # leaves every old segment fully described; extra rows are inert and
         # self-healed by the next compact (filtered to manifest segments)
-        cols_bm = ["segment", "fingerprint", "rows_in", "doc_offset", "terms",
-                   "blocks", "wall_ms", "status"]
         live_old = {int(x) for x in manifest["offsets"]}
-        old_rows = [{c: r[c] for c in cols_bm} for r in bm_rows
-                    if int(r["segment"]) in live_old]
-        mdf = spark.createDataFrame(pd.DataFrame(old_rows + mrows)[cols_bm])
+        old_rows = [r for r in bm_rows if int(r["segment"]) in live_old]
         tmp = f"{index_dir}/build_manifest.tmp"
-        mdf.coalesce(1).write.mode("overwrite").parquet(tmp)
+        tableio.write_table(old_rows + mrows, tableio.BUILD_MANIFEST_SCHEMA,
+                            tmp)
         # crash-safe swap (rename-aside, never rmtree-the-live-dir): a crash
         # anywhere before the manifest commit below leaves the old index
         # fully readable — the .prev dir is promoted back on next open

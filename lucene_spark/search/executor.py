@@ -27,13 +27,14 @@ from __future__ import annotations
 
 import bisect
 import itertools
-import re
 import time
 from dataclasses import dataclass
 
 import numpy as np
 
 from pyspark.accumulators import AccumulatorParam
+
+from lucene_spark.indexing.tableio import segment_of
 
 
 @dataclass(frozen=True)
@@ -56,9 +57,6 @@ class _TaskStatsParam(AccumulatorParam):
     def addInPlace(self, a, b):
         a = list(a) + list(b)
         return a[-self.KEEP:]
-
-
-_SEG_DIR = re.compile(r"/seg=(\d+)/")
 
 
 def pack_segments(sizes: dict, n: int) -> list[list[int]]:
@@ -143,9 +141,9 @@ class SegmentExecutor:
         self.spark = reader.spark
         files: dict[int, list[str]] = {}
         for uri in reader._postings_df.inputFiles():
-            m = _SEG_DIR.search(uri)
-            if m and int(m.group(1)) in reader.offsets:
-                files.setdefault(int(m.group(1)), []).append(uri)
+            seg = segment_of(uri)
+            if seg in reader.offsets:
+                files.setdefault(seg, []).append(uri)
         self.files = {s: sorted(v) for s, v in sorted(files.items())}
 
         def size(uri):

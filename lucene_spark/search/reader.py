@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import json
 
+from lucene_spark.indexing import tableio
 from lucene_spark.similarity import BM25Similarity
 
 
@@ -59,9 +60,10 @@ class IndexReader:
         ts_dir = sdirs.get("term_stats", "term_stats")
         fs_dir = sdirs.get("field_stats", "field_stats")
         # field_stats is one row per field (main text field + one per
-        # keyword/StringField since the kw_stats union) — key by field name,
-        # never rely on row order
-        fs_rows = spark.read.parquet(f"{index_dir}/{fs_dir}").collect()
+        # keyword/StringField) — key by field name, never rely on row order.
+        # Opening runs no Spark job: the small table is read with pyarrow
+        # and the DataFrames below get schemas declared from file footers
+        fs_rows = tableio.read_table(f"{index_dir}/{fs_dir}").to_pylist()
         self.field_stats = {
             r["field"]: {"doc_count": int(r["doc_count"]),
                          "sum_ttf": int(r["sum_ttf"]),
@@ -89,9 +91,11 @@ class IndexReader:
         # is resolved once per reader open, not once per query — the
         # DirectoryReader-open analogy; per-query work is then only the
         # filter + scan jobs
-        self._postings_df = spark.read.parquet(f"{index_dir}/postings")
-        self._term_stats_df = spark.read.parquet(f"{index_dir}/{ts_dir}")
-        self._docs_df = spark.read.parquet(f"{index_dir}/docs")
+        self._ts_path = f"{index_dir}/{ts_dir}"
+        self._postings_df = tableio.read_df(spark, f"{index_dir}/postings",
+                                            "seg")
+        self._term_stats_df = tableio.read_df(spark, self._ts_path)
+        self._docs_df = tableio.read_df(spark, f"{index_dir}/docs", "seg")
 
     def _offsets_df(self):
         if not hasattr(self, "_offsets_df_cached"):
@@ -156,19 +160,20 @@ class IndexReader:
                 shared[key] = shared.pop(key)  # LRU touch
                 self._term_cache_map = shared[key]
                 return self._term_cache_map
-            # single job: collect capped at MAX+1 — an over-cap dictionary is
-            # detected by the extra row, without a separate count() job
-            rows = self._term_stats_df.limit(self.TERM_CACHE_MAX + 1).collect()
-            if len(rows) <= self.TERM_CACHE_MAX:
+            # no Spark job: an over-cap dictionary is detected from footer
+            # row counts before any of it is read; one under the cap is read
+            # with pyarrow
+            files = tableio.parquet_files(self._ts_path)
+            self._term_cache_map = None
+            if tableio.num_rows(files, stop_at=self.TERM_CACHE_MAX + 1) \
+                    <= self.TERM_CACHE_MAX:
+                d = tableio.read_table(self._ts_path).to_pydict()
                 self._term_cache_map = {
-                    (r["field"], r["term"]): {
-                        "df": int(r["df"]), "ttf": int(r["ttf"]),
-                        "max_tf": int(r["max_tf"]),
-                    }
-                    for r in rows
+                    (f, t): {"df": df, "ttf": ttf, "max_tf": mx}
+                    for f, t, df, ttf, mx in zip(
+                        d["field"], d["term"], d["df"], d["ttf"],
+                        d["max_tf"])
                 }
-            else:
-                self._term_cache_map = None
             shared[key] = self._term_cache_map
             while len(shared) > IndexReader._SHARED_TERM_CACHE_KEEP:
                 shared.pop(next(iter(shared)))

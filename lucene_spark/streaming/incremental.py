@@ -23,6 +23,7 @@ from __future__ import annotations
 
 import os
 
+from lucene_spark.indexing import tableio
 from lucene_spark.indexing.builder import IndexBuilder
 from lucene_spark.indexing.partitioning import (
     collision_free_skeys,
@@ -85,7 +86,6 @@ class IncrementalIndexer:
         """Append one batch as new segments. Idempotent per epoch_id.
         ``extra_manifest``: extra fields published by the same atomic
         manifest commit (the update-document path's delete flags)."""
-        import pandas as pd
         from pyspark.sql import functions as F
 
         from lucene_spark.indexing import builder as B
@@ -142,30 +142,7 @@ class IncrementalIndexer:
             acc += r["rows_in"]
             r["doc_offset"] = offsets[r["segment"]]
 
-        # extend build_manifest (lineage) with the new segments — idempotent
-        # under epoch replay: rows for re-appended segment ids replace any
-        # half-committed rows from a crashed attempt instead of duplicating
-        new_ids = [int(r["segment"]) for r in rows]
-        from lucene_spark.indexing.builder import IndexBuilder as _IB
-        _bm = _IB.recover_build_manifest(self.index_dir)
-        prev = (self.spark.read.parquet(_bm)
-                if os.path.isdir(_bm) else None)
-        mpdf = pd.DataFrame(rows)[
-            ["segment", "fingerprint", "rows_in", "doc_offset", "terms",
-             "blocks", "wall_ms", "status"]
-        ]
-        new_mdf = self.spark.createDataFrame(mpdf)
-        if prev is not None:
-            prev = prev.filter(~F.col("segment").isin(new_ids))
-            all_mdf = prev.unionByName(new_mdf)
-        else:
-            all_mdf = new_mdf
-        all_mdf.coalesce(1).write.mode("overwrite").parquet(
-            f"{self.index_dir}/build_manifest.tmp"
-        )
-        from lucene_spark.indexing.builder import IndexBuilder as _IB
-        _IB.swap_build_manifest(self.index_dir,
-                                f"{self.index_dir}/build_manifest.tmp")
+        self._extend_build_manifest(rows)
 
         # incremental stats merge: new segments only (stats are sums), not
         # an O(index-size) full rewrite per micro-batch. Written to a NEW
@@ -178,7 +155,8 @@ class IncrementalIndexer:
         gen = _commits.next_generation(
             self.index_dir, manifest, ("term_stats", "field_stats"),
             "stats_gen")
-        sdirs = b._merge_stats(new_ids, suffix=f".g{gen}")
+        sdirs = b._merge_stats([r["segment"] for r in rows],
+                               suffix=f".g{gen}", doc_count=acc)
         manifest["doc_count"] = acc
         manifest["offsets"] = {str(k): v for k, v in sorted(offsets.items())}
         manifest["num_segments"] = len(offsets)
@@ -201,6 +179,21 @@ class IncrementalIndexer:
         b._gc_stats_generations(keep=keep)
         return self._maybe_compact(
             {"doc_count": acc, "built": len(rows), "reused": 0})
+
+    def _extend_build_manifest(self, rows: list[dict]):
+        """Add ``rows`` to the build_manifest (lineage) and publish it with
+        the crash-safe swap. Idempotent under epoch replay: rows for
+        re-appended segment ids replace any half-committed rows from a
+        crashed attempt instead of duplicating."""
+        live = IndexBuilder.recover_build_manifest(self.index_dir)
+        new_ids = {int(r["segment"]) for r in rows}
+        prev = (tableio.read_table(live).to_pylist()
+                if os.path.isdir(live) else [])
+        tmp = f"{self.index_dir}/build_manifest.tmp"
+        tableio.write_table(
+            [r for r in prev if int(r["segment"]) not in new_ids] + rows,
+            tableio.BUILD_MANIFEST_SCHEMA, tmp)
+        IndexBuilder.swap_build_manifest(self.index_dir, tmp)
 
     def update(self, batch_df, delete_term: str, delete_field: str = "text",
                epoch_id: int | None = None) -> dict:
@@ -279,9 +272,6 @@ class IncrementalIndexer:
         import json
         import shutil
 
-        import pandas as pd
-        from pyspark.sql import functions as F
-
         b = self._builder
         manifest = b._load_manifest()
         if manifest is None:
@@ -329,22 +319,10 @@ class IncrementalIndexer:
         # lineage: remap the source's build_manifest rows into ours
         src_bm = IndexBuilder.recover_build_manifest(src_dir)
         if os.path.isdir(src_bm):
-            rows = self.spark.read.parquet(src_bm).toPandas()
-            rows["doc_offset"] = [seg_map[int(s)][1] for s in rows["segment"]]
-            rows["segment"] = [seg_map[int(s)][0] for s in rows["segment"]]
-            dst_bm = IndexBuilder.recover_build_manifest(self.index_dir)
-            prev = (self.spark.read.parquet(dst_bm)
-                    if os.path.isdir(dst_bm) else None)
-            new_mdf = self.spark.createDataFrame(pd.DataFrame(rows))
-            if prev is not None:
-                prev = prev.filter(~F.col("segment").isin(new_ids))
-                all_mdf = prev.unionByName(new_mdf)
-            else:
-                all_mdf = new_mdf
-            all_mdf.coalesce(1).write.mode("overwrite").parquet(
-                f"{self.index_dir}/build_manifest.tmp")
-            IndexBuilder.swap_build_manifest(
-                self.index_dir, f"{self.index_dir}/build_manifest.tmp")
+            rows = tableio.read_table(src_bm).to_pylist()
+            for r in rows:
+                r["segment"], r["doc_offset"] = seg_map[int(r["segment"])]
+            self._extend_build_manifest(rows)
 
         old_sdirs = b._stats_dirs(manifest)
         # disk-scan generation number (never reuse a post-rollback orphan's
@@ -352,8 +330,9 @@ class IncrementalIndexer:
         gen = _commits.next_generation(
             self.index_dir, manifest, ("term_stats", "field_stats"),
             "stats_gen")
-        sdirs = b._merge_stats(new_ids, suffix=f".g{gen}")
         manifest["doc_count"] = doc_count + int(src["doc_count"])
+        sdirs = b._merge_stats(new_ids, suffix=f".g{gen}",
+                               doc_count=manifest["doc_count"])
         manifest["offsets"] = {str(k): v for k, v in sorted(offsets.items())}
         manifest["num_segments"] = len(offsets)
         manifest["stats_dirs"] = sdirs
