@@ -433,9 +433,17 @@ class IndexMaintenance:
             .withColumn("run", run_map_expr[F.col("seg")])
         pcols = ["seg", "field", "term", "block_id", "first_doc", "last_doc",
                  "count", "doc_gaps", "tfs", "norms", "positions"]
+        # a delimited_payload index keeps its per-occurrence payloads (the
+        # .pay analogue) through the merge, in the builder's schema
+        has_pay = bool(manifest.get("payloads", False))
+        schema = POSTINGS_SCHEMA
+        if has_pay:
+            pcols.append("payloads")
+            schema = schema.append(pa.field("payloads", pa.binary()))
 
         def merge_postings(pdf: pd.DataFrame) -> pd.DataFrame:
             from lucene_spark.indexing.blocks import (decode_blocks_batch,
+                                                      decode_posting_bufs,
                                                       decode_positions_batch)
 
             run_id = int(pdf["run"].iloc[0])
@@ -465,26 +473,32 @@ class IndexMaintenance:
                 if not keep.any():
                     continue
                 terms_flat = np.repeat(fpdf["term"].to_numpy(object), counts)
-                pos_flat = None
+                pos_flat = pay_flat = None
                 if has_pos:
                     flat, _ = decode_positions_batch(
                         list(fpdf["positions"].to_numpy()), tf)
                     pos_flat = flat[np.repeat(keep, tf)].astype(np.int64)
+                # keyword fields carry empty payload buffers
+                if has_pay and any(len(p) for p in fpdf["payloads"]):
+                    pay = decode_posting_bufs(list(fpdf["payloads"]))
+                    pay_flat = pay[np.repeat(keep, tf)]
                 cols = encode_segment_blocks(
                     terms_flat[keep],
                     np.searchsorted(live, d[keep]).astype(np.int64),
                     tf[keep].astype(np.int64),
                     nm[keep].astype(np.int64),
                     pos_flat=pos_flat,
+                    payload_flat=pay_flat,
                     codec=codec,
                 )
+                if has_pay and pay_flat is None:
+                    cols["payloads"] = [b""] * len(cols["term"])
                 out_parts.append(cols)
                 field_cols.append(
                     np.full(len(cols["term"]), fval, dtype=object))
             if not out_parts:
                 tbl = pa.Table.from_pydict(
-                    {k: [] for k in POSTINGS_SCHEMA.names},
-                    schema=POSTINGS_SCHEMA)
+                    {k: [] for k in schema.names}, schema=schema)
                 _atomic_write_parquet(
                     tbl, f"{index_dir}/postings/seg={new_seg}/part-0.parquet")
                 return pd.DataFrame({"run": [run_id], "blocks": [0]})
@@ -495,7 +509,7 @@ class IndexMaintenance:
             n_blocks = len(merged["term"])
             tbl = pa.Table.from_pydict(
                 {"field": np.concatenate(field_cols), **merged},
-                schema=POSTINGS_SCHEMA,
+                schema=schema,
             )
             _atomic_write_parquet(
                 tbl, f"{index_dir}/postings/seg={new_seg}/part-0.parquet")

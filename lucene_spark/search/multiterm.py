@@ -17,9 +17,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from lucene_spark.indexing.blocks import (decode_block, decode_blocks_batch,
+from lucene_spark.indexing.blocks import (decode_blocks_batch,
                                            decode_doc_ids_batch)
 from lucene_spark.search import ast
+from lucene_spark.search.executor import COUNT, DOCS, SCORED, hits_frame
 
 F32 = np.float32
 
@@ -289,6 +290,8 @@ def expand_terms(reader, q: ast.MultiTermQuery, max_terms: int = 100_000) -> lis
 # constant-score kernels decode docIDs only, so neither the term strings
 # nor the tf byte buffers are read
 DOC_COLS = ["first_doc", "last_doc", "count", "doc_gaps"]
+# the synonym / dismax scorers also read terms, tfs and norms
+SCORE_COLS = ["term", *DOC_COLS, "tfs", "norms"]
 
 
 def _first_k_docs(rows, k: int, dele) -> np.ndarray:
@@ -330,122 +333,71 @@ def _first_k_docs(rows, k: int, dele) -> np.ndarray:
     return np.unique(np.concatenate(parts))[:k]
 
 
-def constant_score_topk(reader, postings, k: int, boost: float,
-                        deleted_loader=None):
-    """First k matching docIDs (docID asc) with score == boost.
-
-    ``postings``: the matched terms as ``{field: terms}`` when the
-    expansion resolved on the driver — one
-    :class:`~lucene_spark.search.executor.SegmentExecutor` run — or, the
-    10^12-scale path, the semi-join posting-block DataFrame
-    ``reader.postings_semijoin(matched_terms_df(...))`` that never
-    materializes the term set anywhere (:func:`_constant_score_topk_df`).
-    Per segment: decode leading blocks until the k smallest docIDs are
-    provably complete; driver merges.
-    """
-    from lucene_spark.search.searcher import ScoreDoc
+def _collect(reader, df):
     from lucene_spark.session import no_aqe
 
-    if postings is None:
-        return []
-    if isinstance(postings, dict):
-        def kernel(seg, rows):
-            dele = seg.deleted if deleted_loader else None
-            return pd.DataFrame({"doc_id": _first_k_docs(rows, k, dele)})
-
-        df = reader.segment_executor().run(postings, DOC_COLS, kernel,
-                                           "doc_id long")
-    else:
-        df = _constant_score_topk_df(postings, k, deleted_loader)
     with no_aqe(reader.spark):
-        out = df.collect()
+        return df.collect()
+
+
+def _union_docs(rows) -> np.ndarray:
+    """The sorted union doc set of one segment's posting blocks."""
+    d, _st = decode_doc_ids_batch(rows["first_doc"], rows["last_doc"],
+                                  rows["count"].astype(np.int64),
+                                  list(rows["doc_gaps"]))
+    return np.unique(d)
+
+
+def constant_score_topk(reader, source, k: int, boost: float):
+    """First k matching docIDs (docID asc) with score == boost.
+
+    ``source``: the matched terms as ``{field: terms}`` when the expansion
+    resolved on the driver, or — the 10^12-scale path — the semi-join
+    posting-block DataFrame ``reader.postings_semijoin(matched_terms_df(…))``
+    that never materializes the term set anywhere; either runs as one
+    :class:`~lucene_spark.search.executor.SegmentExecutor` kernel. Per
+    segment: decode leading blocks until the k smallest docIDs are provably
+    complete; driver merges.
+    """
+    from lucene_spark.search.searcher import ScoreDoc
+
+    if source is None:
+        return []
+
+    def kernel(seg, rows):
+        return hits_frame(_first_k_docs(rows, k, seg.deleted))
+
+    out = _collect(reader, reader.segment_executor().run(
+        source, DOC_COLS, kernel, DOCS))
     docs = sorted(int(r["doc_id"]) for r in out)[:k]
     b = float(F32(boost))  # float32 score contract (goldens mirror this)
     return [ScoreDoc(d, b) for d in docs]
 
 
-def _constant_score_topk_df(postings, k: int, deleted_loader=None):
-    """Per-segment first-k docIDs over a posting-block DataFrame (the
-    semi-join fallback past the driver expansion cap)."""
-    cols = DOC_COLS + ["doc_offset"]
+def matching_docs_df(reader, source):
+    """Distributed (doc_id) DataFrame of the union doc set of ``source``
+    (``{field: terms}`` or a semi-join postings DataFrame) — the
+    CONSTANT_SCORE match set with GLOBAL docIDs, never collected."""
+    if source is None:
+        return reader.spark.createDataFrame([], DOCS)
 
-    def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = {c: pdf[c].to_numpy() for c in cols}
-        off = np.int64(rows["doc_offset"][0])
-        rows["first_doc"] = rows["first_doc"].astype(np.int64) + off
-        rows["last_doc"] = rows["last_doc"].astype(np.int64) + off
-        dele = (deleted_loader(pdf["seg"].iloc[0]) + off
-                if deleted_loader else None)
-        return pd.DataFrame({"doc_id": _first_k_docs(rows, k, dele)})
+    def kernel(seg, rows):
+        return hits_frame(seg.live(_union_docs(rows)))
 
-    return (
-        postings.select("seg", *cols)
-        .groupBy("seg")
-        .applyInPandas(run_segment, "doc_id long")
-    )
+    return reader.segment_executor().run(source, DOC_COLS, kernel, DOCS)
 
 
-def matching_docs_df(reader, postings, deleted_loader=None):
-    """Distributed (doc_id) DataFrame of the union doc set of ``postings``
-    — the CONSTANT_SCORE match set with GLOBAL docIDs, never collected."""
-    if postings is None:
-        return reader.spark.createDataFrame([], "doc_id long")
-    # NOTE: no "term"/"tfs" — constant-score kernels decode docIDs only,
-    # so the tf byte buffers and term strings never enter the shuffle
-    cols = ["first_doc", "last_doc", "count", "doc_gaps", "doc_offset"]
-
-    def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = {c: pdf[c].to_numpy() for c in cols}
-        off = np.int64(rows["doc_offset"][0])
-        d, _st = decode_doc_ids_batch(
-            rows["first_doc"].astype(np.int64) + off,
-            rows["last_doc"].astype(np.int64) + off,
-            rows["count"].astype(np.int64),
-            list(rows["doc_gaps"]),
-        )
-        u = np.unique(d)
-        if deleted_loader:
-            u = u[~np.isin(u, deleted_loader(pdf["seg"].iloc[0]) + off)]
-        return pd.DataFrame({"doc_id": u})
-
-    return (
-        postings.select("seg", *cols)
-        .groupBy("seg")
-        .applyInPandas(run_segment, "doc_id long")
-    )
-
-
-def constant_score_count(reader, postings, deleted_loader=None) -> int:
+def constant_score_count(reader, source) -> int:
     """Exact matching-doc count (union of posting doc-sets), distributed:
     one count per segment returns to the driver."""
-    if postings is None:
+    if source is None:
         return 0
-    # NOTE: no "term"/"tfs" — constant-score kernels decode docIDs only,
-    # so the tf byte buffers and term strings never enter the shuffle
-    cols = ["first_doc", "last_doc", "count", "doc_gaps", "doc_offset"]
 
-    def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = {c: pdf[c].to_numpy() for c in cols}
-        d, _st = decode_doc_ids_batch(
-            rows["first_doc"].astype(np.int64),
-            rows["last_doc"].astype(np.int64),
-            rows["count"].astype(np.int64),
-            list(rows["doc_gaps"]),
-        )
-        u = np.unique(d)
-        if deleted_loader:  # docIDs are segment-local in this kernel
-            u = u[~np.isin(u, deleted_loader(pdf["seg"].iloc[0]))]
-        return pd.DataFrame({"n": [int(u.size)]})
+    def kernel(seg, rows):
+        return hits_frame(seg.live(_union_docs(rows)), count=True)
 
-    from lucene_spark.session import no_aqe
-
-    with no_aqe(reader.spark):
-        out = (
-            postings.select("seg", *cols)
-            .groupBy("seg")
-            .applyInPandas(run_segment, "n long")
-            .collect()
-        )
+    out = _collect(reader, reader.segment_executor().run(
+        source, DOC_COLS, kernel, COUNT))
     return sum(int(r["n"]) for r in out)
 
 
@@ -472,46 +424,29 @@ def synonym_scored_df(reader, similarity, q: ast.SynonymQuery, k=None):
         return None
     df_blend = max(stats[t]["df"] for t in present)
     scorer = _field_scorer(reader, similarity, q.boost, [df_blend], q.field)
-    postings = reader.postings(present, field=q.field)
-    dload = reader.deleted_loader()
-    cols = ["term", "first_doc", "last_doc", "count", "doc_gaps", "tfs",
-            "norms", "doc_offset"]
 
-    def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = {c: pdf[c].to_numpy() for c in cols}
-        off = np.int64(rows["doc_offset"][0])
-        dele = dload(pdf["seg"].iloc[0]) + off if dload else None
+    def kernel(seg, rows):
         # one batched decode for ALL blocks of every synonym term — no
         # per-block Python loop even on hot-term groups (VERDICT r4 wrong-#3)
         alld, tfv, nmv, _ = decode_blocks_batch(
             rows["first_doc"], rows["last_doc"], rows["count"],
             list(rows["doc_gaps"]), list(rows["tfs"]), list(rows["norms"]))
-        alld = alld + off
         uniq, inv = np.unique(alld, return_inverse=True)
         tfsum = np.zeros(uniq.size, dtype=np.int64)
         np.add.at(tfsum, inv, tfv)
         norm = np.zeros(uniq.size, dtype=np.int64)
         norm[inv] = nmv  # same doc → same norm
-        if dele is not None and dele.size:
-            live = ~np.isin(uniq, dele)
-            uniq, tfsum, norm = uniq[live], tfsum[live], norm[live]
-        s = scorer.score(tfsum, norm)
-        if k is None:
-            return pd.DataFrame({"doc_id": uniq, "score": s})
-        order = np.lexsort((uniq, -s.astype(np.float64)))[:k]
-        return pd.DataFrame({"doc_id": uniq[order], "score": s[order]})
+        uniq, tfsum, norm = seg.live(uniq, tfsum, norm)
+        return hits_frame(uniq, scorer.score(tfsum, norm), k=k)
 
-    return (postings.select("seg", *cols).groupBy("seg")
-            .applyInPandas(run_segment, "doc_id long, score float"))
+    return reader.segment_executor().run(
+        {q.field: present}, SCORE_COLS, kernel, SCORED)
 
 
 def synonym_topk(reader, similarity, q: ast.SynonymQuery, k: int):
     """SynonymQuery top-k via :func:`synonym_scored_df` (k rows per
     segment, driver merges k only)."""
-    df = synonym_scored_df(reader, similarity, q, k)
-    if df is None:
-        return []
-    return _topk_from_scored_df(df, k, spark=reader.spark)
+    return _topk(reader, synonym_scored_df(reader, similarity, q, k), k)
 
 
 def dismax_scored_df(reader, similarity, q: ast.DisjunctionMaxQuery,
@@ -531,15 +466,8 @@ def dismax_scored_df(reader, similarity, q: ast.DisjunctionMaxQuery,
         for t in present
     }
     tie = F32(q.tie_breaker)
-    postings = reader.postings(present, field=q.field)
-    dload = reader.deleted_loader()
-    cols = ["term", "first_doc", "last_doc", "count", "doc_gaps", "tfs",
-            "norms", "doc_offset"]
 
-    def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = {c: pdf[c].to_numpy() for c in cols}
-        off = np.int64(rows["doc_offset"][0])
-        dele = dload(pdf["seg"].iloc[0]) + off if dload else None
+    def kernel(seg, rows):
         # batched decode of every sub-term's blocks at once, then ONE
         # vectorized scorer call per query term over its posting slice
         # (posting→term mapping via repeat of the factorized block terms)
@@ -548,7 +476,6 @@ def dismax_scored_df(reader, similarity, q: ast.DisjunctionMaxQuery,
         alld, tfv, nmv, _ = decode_blocks_batch(
             rows["first_doc"], rows["last_doc"], counts,
             list(rows["doc_gaps"]), list(rows["tfs"]), list(rows["norms"]))
-        alld = alld + off
         tcodes, tuniq = pd.factorize(rows["term"])
         pterm = np.repeat(tcodes, counts)
         alls = np.empty(alld.size, dtype=F32)
@@ -564,40 +491,20 @@ def dismax_scored_df(reader, similarity, q: ast.DisjunctionMaxQuery,
         ssum = np.zeros(uniq.size, dtype=np.float64)
         np.add.at(ssum, inv, alls.astype(np.float64))
         score = (smax + (tie * (ssum.astype(F32) - smax).astype(F32)).astype(F32)).astype(F32)
-        if dele is not None and dele.size:
-            live = ~np.isin(uniq, dele)
-            uniq, score = uniq[live], score[live]
-        if k is None:
-            return pd.DataFrame({"doc_id": uniq, "score": score})
-        order = np.lexsort((uniq, -score.astype(np.float64)))[:k]
-        return pd.DataFrame({"doc_id": uniq[order], "score": score[order]})
+        return hits_frame(*seg.live(uniq, score), k=k)
 
-    return (postings.select("seg", *cols).groupBy("seg")
-            .applyInPandas(run_segment, "doc_id long, score float"))
+    return reader.segment_executor().run(
+        {q.field: present}, SCORE_COLS, kernel, SCORED)
 
 
 def dismax_topk(reader, similarity, q: ast.DisjunctionMaxQuery, k: int):
     """DisjunctionMax top-k via :func:`dismax_scored_df`."""
-    df = dismax_scored_df(reader, similarity, q, k)
-    if df is None:
-        return []
-    return _topk_from_scored_df(df, k, spark=reader.spark)
+    return _topk(reader, dismax_scored_df(reader, similarity, q, k), k)
 
 
-def _topk_from_scored_df(df, k: int, spark=None):
-    """Driver top-k merge over a per-segment (doc_id, score) DataFrame —
-    ≤ k rows per segment arrive when the builder truncated with ``k``."""
-    from lucene_spark.search.searcher import ScoreDoc
-    from lucene_spark.session import no_aqe
+def _topk(reader, df, k: int):
+    """Driver top-k merge (``searcher._topk_hits``) over per-segment scored
+    rows; None (no term present) → no hits."""
+    from lucene_spark.search.searcher import _topk_hits
 
-    if spark is not None:
-        with no_aqe(spark):
-            out = df.collect()
-    else:
-        out = df.collect()
-    if not out:
-        return []
-    d = np.array([r["doc_id"] for r in out], dtype=np.int64)
-    s = np.array([r["score"] for r in out], dtype=np.float32)
-    order = np.lexsort((d, -s.astype(np.float64)))[:k]
-    return [ScoreDoc(int(d[i]), float(s[i])) for i in order]
+    return [] if df is None else _topk_hits(_collect(reader, df), k)

@@ -57,8 +57,20 @@ def term_postings(rows, idxs):
             np.concatenate([p[2] for p in parts]))
 
 
-def _eval_boolean(rows, by_term, clauses, cache, min_should_match: int = 0):
-    """Recursive boolean evaluation over one segment's decoded postings:
+def local_rows(rows, offset: int) -> dict:
+    """``rows`` with segment-LOCAL ``first_doc``/``last_doc``: the span,
+    automaton and interval kernels key by docID·2^34, which global docIDs
+    past 2^29 would overflow."""
+    local = dict(rows)
+    local["first_doc"] = rows["first_doc"] - offset
+    local["last_doc"] = rows["last_doc"] - offset
+    return local
+
+
+def _eval_boolean(rows, by_term, clauses, cache, min_should_match: int = 0,
+                  offset: int = 0):
+    """Recursive boolean evaluation over one segment's decoded postings
+    (GLOBAL docIDs; ``offset`` = the segment's docBase):
     clauses are terms, phrases, constant-score term sets, or NESTED boolean
     clause lists. Returns (docs, scores_f32) of ALL matching docs (unsorted).
 
@@ -78,7 +90,7 @@ def _eval_boolean(rows, by_term, clauses, cache, min_should_match: int = 0):
         """(docs, contrib_f32 or None) for one clause; None docs → no match."""
         if c["kind"] == "nested":
             d, s = _eval_boolean(rows, by_term, c["clauses"], cache,
-                                 c.get("msm", 0))
+                                 c.get("msm", 0), offset)
             if d.size == 0:
                 return None, None
             if c["occur"] in (MUST, SHOULD):
@@ -101,12 +113,8 @@ def _eval_boolean(rows, by_term, clauses, cache, min_should_match: int = 0):
             # carry global ones) and re-offset the result.
             if rows["first_doc"].size == 0:
                 return None, None
-            off = np.int64(rows["doc_offset"][0])
-            local = dict(rows)
-            local["first_doc"] = rows["first_doc"] - off
-            local["last_doc"] = rows["last_doc"] - off
-            d = segment_span_near(local, list(c["slots"]), c["slop"],
-                                  c["in_order"]) + off
+            d = segment_span_near(local_rows(rows, offset), list(c["slots"]),
+                                  c["slop"], c["in_order"]) + offset
             if d.size == 0:
                 return None, None
             if c["occur"] in (MUST, SHOULD):
@@ -123,15 +131,12 @@ def _eval_boolean(rows, by_term, clauses, cache, min_should_match: int = 0):
 
             if rows["first_doc"].size == 0:
                 return None, None
-            off = np.int64(rows["doc_offset"][0])
-            local = dict(rows)
-            local["first_doc"] = rows["first_doc"] - off
-            local["last_doc"] = rows["last_doc"] - off
-            d, s = segment_interval_postings(local, c["source"],
-                                             c["pivot"], c["weight"])
+            d, s = segment_interval_postings(local_rows(rows, offset),
+                                             c["source"], c["pivot"],
+                                             c["weight"])
             if d.size == 0:
                 return None, None
-            d = d + off
+            d = d + offset
             if c["occur"] in (MUST, SHOULD):
                 return d, s
             return d, None
@@ -234,7 +239,7 @@ def _eval_boolean(rows, by_term, clauses, cache, min_should_match: int = 0):
 
 
 def segment_boolean_mixed(rows, clauses, cache, k: int, min_should_match: int = 0,
-                          deleted=None):
+                          deleted=None, offset: int = 0):
     """Exhaustive boolean evaluation where clauses are terms, phrases,
     constant-score term sets (rewritten MultiTermQuery clauses), or nested
     boolean clause lists (see :func:`_eval_boolean`).
@@ -252,7 +257,8 @@ def segment_boolean_mixed(rows, clauses, cache, k: int, min_should_match: int = 
     for i, t in enumerate(rows["term"]):
         by_term.setdefault(t, []).append(i)
 
-    d, s = _eval_boolean(rows, by_term, clauses, cache, min_should_match)
+    d, s = _eval_boolean(rows, by_term, clauses, cache, min_should_match,
+                         offset)
     if d.size and deleted is not None and len(deleted):
         m = ~np.isin(d, np.asarray(deleted, dtype=np.int64))
         d, s = d[m], s[m]

@@ -292,19 +292,6 @@ class IndexReader:
             .join(terms_df.select("term").distinct(), "term", "left_semi")
         )
 
-    def postings_multi(self, field_terms: dict):
-        """Posting blocks for {field: [terms]} (multi-field queries)."""
-        from functools import reduce
-
-        from pyspark.sql import functions as F
-
-        conds = [
-            (F.col("field") == f) & F.col("term").isin(sorted(set(ts)))
-            for f, ts in field_terms.items() if ts
-        ]
-        cond = reduce(lambda a, b: a | b, conds)
-        return self._with_offsets(self._postings_df.filter(cond))
-
     def docs(self, live_only: bool = False):
         """docs table with GLOBAL doc_id (offset applied). ``live_only``
         anti-joins the per-segment deleted sets (live-docs filtering)."""

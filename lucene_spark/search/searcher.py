@@ -20,8 +20,10 @@ import pandas as pd
 
 from lucene_spark.analysis import get_analyzer
 from lucene_spark.search import ast
+from lucene_spark.search.executor import COUNT, DOCS, SCORED, hits_frame
+from lucene_spark.search.phrase import local_rows
 from lucene_spark.search.reader import IndexReader
-from lucene_spark.search.wand import ClauseSpec, segment_topk
+from lucene_spark.search.wand import ClauseSpec, keyed_rows, segment_topk
 from lucene_spark.similarity import BM25Similarity, norm_cache
 
 F32 = np.float32
@@ -126,17 +128,17 @@ def keyword_const_score(similarity, boost: float, field_stats: dict | None,
 # postings columns the flat-boolean WAND kernel reads
 FLAT_COLS = ["field", "term", "first_doc", "last_doc", "count", "doc_gaps",
              "tfs", "norms", "max_tf", "impact_tfs", "impact_norms"]
-
+# postings columns of the positional kernels (phrase, span, automaton,
+# interval); the mixed-boolean kernel adds ``field``
+POS_COLS = ["term", "first_doc", "last_doc", "count", "doc_gaps", "tfs",
+            "norms", "positions"]
 
 def _flat_topk_kernel(items, k: int, prune: bool, sep: str):
     """Executor kernel: each query's per-segment ``segment_topk`` over the
     segment's rows; ``items`` = [(qid, (specs, msm)), ...]."""
 
     def kernel(seg, rows):
-        rows = dict(rows)
-        rows["term"] = (pd.Series(rows["field"], dtype=object) + sep
-                        + pd.Series(rows["term"], dtype=object)
-                        ).to_numpy(dtype=object)
+        rows = keyed_rows(rows, sep)
         qi, dd, ss = [], [], []
         for qid, (specs, msm) in items:
             d, s = segment_topk(rows, specs, k, msm, prune=prune,
@@ -151,6 +153,24 @@ def _flat_topk_kernel(items, k: int, prune: bool, sep: str):
         })
 
     return kernel
+
+
+# postings columns of the payload kernels
+PAYLOAD_COLS = ["first_doc", "last_doc", "count", "doc_gaps", "tfs",
+                "payloads"]
+
+
+def _payload_rows(rows):
+    """(docs, tfs, flat payloads) of a term's blocks in one batched decode
+    (payload buffers carry no cross-block state, so a per-posting reduceat
+    over the chained flat array is exact)."""
+    from lucene_spark.indexing.blocks import (decode_blocks_batch,
+                                              decode_posting_bufs)
+
+    d, tf, _ = decode_blocks_batch(
+        rows["first_doc"], rows["last_doc"], rows["count"].astype(np.int64),
+        list(rows["doc_gaps"]), list(rows["tfs"]))
+    return d, tf, decode_posting_bufs(list(rows["payloads"]))
 
 
 def _topk_hits(rows, k: int) -> list[ScoreDoc]:
@@ -585,8 +605,7 @@ class IndexSearcher:
 
             return constant_score_topk(self.reader,
                                        self._multiterm_source(query), k,
-                                       query.boost,
-                                       deleted_loader=self.reader.deleted_loader())
+                                       query.boost)
         if isinstance(query, ast.SynonymQuery):
             from lucene_spark.search.multiterm import synonym_topk
 
@@ -663,6 +682,25 @@ class IndexSearcher:
             _flat_topk_kernel(items, k, prune, self.FIELD_SEP),
             "qid long, doc_id long, score float")
 
+    def _flat_scored_df(self, specs, msm, count: bool = False,
+                        segments=None):
+        """Every hit of a flat term boolean: (doc_id, score) rows, or with
+        ``count`` one hit count per segment (billions of hits never leave
+        their segment's task) — the unpruned ``segment_topk`` with k past
+        doc_count, shared by :meth:`score_df` and :meth:`count`.
+        ``segments`` restricts the run to those segment ids."""
+        big = self.reader.doc_count + 1
+        sep = self.FIELD_SEP
+
+        def kernel(seg, rows):
+            d, s = segment_topk(keyed_rows(rows, sep), specs, big, msm,
+                                prune=False, deleted=seg.deleted)
+            return hits_frame(d, s, count)
+
+        return self.reader.segment_executor().run(
+            self._spec_field_terms(specs), FLAT_COLS, kernel,
+            COUNT if count else SCORED, segments=segments)
+
     # hybrid multiterm execution: small expansions resolve on the driver
     # (zero jobs against the resident dict) and reach the postings read as a
     # literal term set — row-group min/max pruning reads only the matched
@@ -690,25 +728,12 @@ class IndexSearcher:
             )
         return {q.field: terms} if terms else None
 
-    def _multiterm_postings(self, q: ast.MultiTermQuery):
-        """Posting-block rows for a MultiTermQuery — pushdown when the
-        expansion is small, semi-join past MULTITERM_EXPAND_CAP. Returns
-        None when the expansion is provably empty."""
-        src = self._multiterm_source(q)
-        if isinstance(src, dict):
-            ((field, terms),) = src.items()
-            return self.reader.postings(terms, field=field)
-        return src
-
     def _spec_field_terms(self, specs) -> dict[str, list[str]]:
         field_terms: dict[str, list[str]] = {}
         for c in specs:
             f, t = c.term.split(self.FIELD_SEP, 1)
             field_terms.setdefault(f, []).append(t)
         return field_terms
-
-    def _postings_for_specs(self, specs):
-        return self.reader.postings_multi(self._spec_field_terms(specs))
 
     def _mixed_clauses(self, q: ast.BooleanQuery, match_only: bool = False):
         """Resolve a mixed boolean (terms + phrases + multiterm expansions +
@@ -1026,123 +1051,37 @@ class IndexSearcher:
         clauses, cache, msm, field_terms, need_positions = mc
         if need_positions and not self.reader.manifest.get("positions", False):
             raise ValueError("index was built without positions")
-        have_terms = any(ts for ts in field_terms.values())
-        postings = (self.reader.postings_multi(field_terms)
-                    if have_terms else None)
-        cols = ["field", "term", "first_doc", "last_doc", "count", "doc_gaps",
-                "tfs", "norms", "positions", "doc_offset"]
         sep = self.FIELD_SEP
-        dload = self.reader.deleted_loader()
         # docset clauses (pre-resolved KNN) hold GLOBAL docIDs across all
         # segments — each task keeps only its own range so the driver merge
         # never sees the same doc from two segments. matchall clauses need
         # the same coverage map: they expand to the segment's docID range
         # inside each task (_slice_docsets), so hi must be the REAL segment
         # end (clamped to doc_count — the last segment's manifest bound is
-        # open-ended).
+        # open-ended). Both can match in segments holding NONE of the
+        # query's terms, so the executor then visits every segment (zero
+        # postings rows there): a whole-segment matchall complement stays
+        # executor-local, never on the driver.
         has_ma = _has_matchall(clauses)
         seg_hi = (self._segment_doc_bounds()
                   if _has_docset(clauses) or has_ma else None)
         if seg_hi is not None and has_ma:
             dc = self.reader.doc_count
             seg_hi = {s: (lo, min(hi, dc)) for s, (lo, hi) in seg_hi.items()}
+        top = None if count_only else k
 
-        # Segments holding docset/matchall matches but NONE of the query's
-        # terms get no postings task. Docset-only complements (the KNN hit
-        # in a segment where no other clause occurs) are k-bounded and
-        # evaluated on the driver with the SAME kernel over empty postings;
-        # matchall complements can be a whole segment's doc range, so they
-        # run DISTRIBUTED — one task per uncovered segment, arange stays
-        # executor-local (never on the driver). The coverage probe is one
-        # seg-column scan behind the In(term, …) pushdown, O(segments).
-        complement = None
-        comp_df = None
-        schema = "n long" if count_only else "doc_id long, score float"
-        if seg_hi is not None:
-            from lucene_spark.search.phrase import segment_boolean_mixed
-
-            covered = (
-                {int(r["seg"]) for r in
-                 postings.select("seg").distinct().collect()}
-                if postings is not None else set()
-            )
-            uncovered = sorted(set(seg_hi) - covered)
-            if uncovered and has_ma:
-                bounds = seg_hi
-
-                def run_uncovered(pdf: pd.DataFrame) -> pd.DataFrame:
-                    s0 = int(pdf["seg"].iloc[0])
-                    lo, hi = bounds[s0]
-                    er = {c: np.zeros(0, dtype=object) for c in cols}
-                    cl = _slice_docsets(clauses, lo, hi)
-                    dele = dload(s0) + lo if dload else None
-                    d, s = segment_boolean_mixed(
-                        er, cl, cache, None if count_only else k, msm,
-                        deleted=dele,
-                    )
-                    if count_only:
-                        return pd.DataFrame({"n": [int(d.size)]})
-                    return pd.DataFrame({"doc_id": d,
-                                         "score": s.astype(np.float32)})
-
-                comp_df = (
-                    self.spark.createDataFrame(
-                        [(int(s),) for s in uncovered], "seg int")
-                    .groupBy("seg")
-                    .applyInPandas(run_uncovered, schema)
-                )
-            elif uncovered:
-                empty_rows = {c: np.zeros(0, dtype=object) for c in cols}
-                comp_d, comp_s = [], []
-                for s0 in uncovered:
-                    lo, hi = seg_hi[s0]
-                    cl = _slice_docsets(clauses, lo, hi)
-                    dele = dload(s0) + lo if dload else None
-                    d, s = segment_boolean_mixed(
-                        empty_rows, cl, cache, None if count_only else k, msm,
-                        deleted=dele,
-                    )
-                    comp_d.append(d), comp_s.append(s)
-                if comp_d:
-                    d = np.concatenate(comp_d)
-                    s = np.concatenate(comp_s)
-                    if count_only:
-                        complement = [(int(d.size),)] if d.size else None
-                    elif d.size:
-                        complement = [(int(x), float(y))
-                                      for x, y in zip(d, s)]
-        if postings is None:
-            base = self.spark.createDataFrame(complement or [], schema)
-            return base.unionByName(comp_df) if comp_df is not None else base
-
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = {c: pdf[c].to_numpy() for c in cols}
-            rows["term"] = (pdf["field"] + sep + pdf["term"]).to_numpy(dtype=object)
-            off = np.int64(rows["doc_offset"][0])
-            rows["first_doc"] = rows["first_doc"].astype(np.int64) + off
-            rows["last_doc"] = rows["last_doc"].astype(np.int64) + off
-            seg = pdf["seg"].iloc[0]
-            dele = dload(seg) + off if dload else None
-            cl = (_slice_docsets(clauses, *seg_hi[int(seg)])
+        def kernel(seg, rows):
+            cl = (_slice_docsets(clauses, *seg_hi[seg.id])
                   if seg_hi is not None else clauses)
-            d, s = segment_boolean_mixed(
-                rows, cl, cache, None if count_only else k, msm,
-                deleted=dele,
-            )
-            if count_only:
-                return pd.DataFrame({"n": [int(d.size)]})
-            return pd.DataFrame({"doc_id": d, "score": s.astype(np.float32)})
+            d, s = segment_boolean_mixed(keyed_rows(rows, sep), cl, cache,
+                                         top, msm, deleted=seg.deleted,
+                                         offset=seg.offset)
+            return hits_frame(d, s, count_only)
 
-        df = (
-            postings.select("seg", *cols)
-            .groupBy("seg")
-            .applyInPandas(run_segment, schema)
-        )
-        if complement:
-            df = df.unionByName(self.spark.createDataFrame(complement, schema))
-        if comp_df is not None:
-            df = df.unionByName(comp_df)
-        return df
+        return self.reader.segment_executor().run(
+            field_terms, ["field"] + POS_COLS, kernel,
+            COUNT if count_only else SCORED,
+            every_segment=seg_hi is not None)
 
     def _search_boolean_mixed(self, q: ast.BooleanQuery, k: int) -> list[ScoreDoc]:
         """Boolean queries whose clauses mix terms with phrases and/or
@@ -1213,36 +1152,27 @@ class IndexSearcher:
         return self._run_phrase_kernel(*plan, k=k)
 
     def _phrase_scored_df(self, field_terms, scorer, kernel, k=None,
-                          segments=None):
-        """Distributed (doc_id, score float) DataFrame for a phrase-shaped
-        query: per-segment positions kernel + similarity scoring, one
-        executor run over ``field_terms``. ``k`` truncates per segment (the
-        top-k path); ``None`` keeps every matching doc (the exhaustive
-        score_df substrate — stays distributed, nothing collected here).
-        ``segments`` restricts the run to those segment ids."""
+                          segments=None, out: str = SCORED):
+        """Distributed DataFrame for a phrase-shaped query: per-segment
+        positions kernel + similarity scoring, one executor run over
+        ``field_terms``. ``out`` is the schema: SCORED (doc_id, score)
+        rows, DOCS the bare match set, COUNT one hit count per segment.
+        ``k`` truncates scored rows per segment (the top-k path); ``None``
+        keeps every matching doc (the exhaustive score_df substrate — stays
+        distributed, nothing collected here). ``segments`` restricts the
+        run to those segment ids."""
         if not self.reader.manifest.get("positions", False):
             raise ValueError("index was built without positions; "
                              "rebuild with IndexBuilder(..., positions=True)")
-        cols = ["term", "first_doc", "last_doc", "count", "doc_gaps", "tfs",
-                "norms", "positions"]
 
         def run_segment(seg, rows):
-            d, f, nm = kernel(rows)
-            if d.size and seg.deleted is not None:
-                m = ~np.isin(d, seg.deleted)
-                d, f, nm = d[m], f[m], nm[m]
-            if d.size == 0:
-                return pd.DataFrame({"doc_id": [], "score": []}).astype(
-                    {"doc_id": np.int64, "score": np.float32})
-            s = scorer.score(f, nm)
-            if k is None:
-                return pd.DataFrame({"doc_id": d, "score": s})
-            order = np.lexsort((d, -s.astype(np.float64)))[:k]
-            return pd.DataFrame({"doc_id": d[order], "score": s[order]})
+            d, f, nm = seg.live(*kernel(rows))
+            if out != SCORED or d.size == 0:
+                return hits_frame(d, count=out == COUNT)
+            return hits_frame(d, scorer.score(f, nm), k=k)
 
         return self.reader.segment_executor().run(
-            field_terms, cols, run_segment, "doc_id long, score float",
-            segments=segments)
+            field_terms, POS_COLS, run_segment, out, segments=segments)
 
     def _run_phrase_kernel(self, field_terms, scorer, kernel, k: int):
         """Top-k driver merge over :meth:`_phrase_scored_df` (k rows per
@@ -1282,32 +1212,19 @@ class IndexSearcher:
             raise ValueError("index was built without positions")
         fetch = sorted(set(flat) | ({exclude} if exclude else set())
                        | ({contain} if contain else set()))
-        postings = self.reader.postings(fetch, field=q.field)
-        cols = ["term", "first_doc", "last_doc", "count", "doc_gaps", "tfs",
-                "norms", "positions", "doc_offset"]
-        dload = self.reader.deleted_loader()
         slop, in_order = int(q.slop), bool(q.in_order)
 
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = {c: pdf[c].to_numpy() for c in cols}
-            off = np.int64(rows["doc_offset"][0])
+        def kernel(seg, rows):
             # the kernel keys by docID * 2^34 — feed SEGMENT-LOCAL docIDs
             # (bounded by segment size, never 2^29+) and offset the result,
             # so global docIDs past 537M can't overflow the int64 keys
-            rows["first_doc"] = rows["first_doc"].astype(np.int64)
-            rows["last_doc"] = rows["last_doc"].astype(np.int64)
-            d = segment_span_near(rows, terms, slop, in_order,
-                                  max_end=max_end, exclude=exclude,
-                                  pre=pre, post=post, contain=contain) + off
-            if d.size and dload:
-                d = d[~np.isin(d, dload(pdf["seg"].iloc[0]) + off)]
-            return pd.DataFrame({"doc_id": d})
+            d = segment_span_near(local_rows(rows, seg.offset), terms, slop,
+                                  in_order, max_end=max_end, exclude=exclude,
+                                  pre=pre, post=post, contain=contain)
+            return hits_frame(seg.live(d + seg.offset))
 
-        return (
-            postings.select("seg", *cols)
-            .groupBy("seg")
-            .applyInPandas(run_segment, "doc_id long")
-        )
+        return self.reader.segment_executor().run(
+            {q.field: fetch}, POS_COLS, kernel, DOCS)
 
     def _automaton_match_df(self, q: "ast.TermAutomatonQuery"):
         """(doc_id) DataFrame of TermAutomatonQuery matches — per-segment
@@ -1331,29 +1248,16 @@ class IndexSearcher:
             return None
         if not self.reader.manifest.get("positions", False):
             raise ValueError("index was built without positions")
-        postings = self.reader.postings(present, field=q.field)
-        cols = ["term", "first_doc", "last_doc", "count", "doc_gaps", "tfs",
-                "norms", "positions", "doc_offset"]
-        dload = self.reader.deleted_loader()
         n_states, accept = int(q.n_states), tuple(q.accept)
 
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = {c: pdf[c].to_numpy() for c in cols}
-            off = np.int64(rows["doc_offset"][0])
+        def kernel(seg, rows):
             # segment-LOCAL docIDs into the kernel (doc·2^34 keys), offset out
-            rows["first_doc"] = rows["first_doc"].astype(np.int64)
-            rows["last_doc"] = rows["last_doc"].astype(np.int64)
-            d = segment_term_automaton(rows, transitions, n_states,
-                                       accept) + off
-            if d.size and dload:
-                d = d[~np.isin(d, dload(pdf["seg"].iloc[0]) + off)]
-            return pd.DataFrame({"doc_id": d})
+            d = segment_term_automaton(local_rows(rows, seg.offset),
+                                       transitions, n_states, accept)
+            return hits_frame(seg.live(d + seg.offset))
 
-        return (
-            postings.select("seg", *cols)
-            .groupBy("seg")
-            .applyInPandas(run_segment, "doc_id long")
-        )
+        return self.reader.segment_executor().run(
+            {q.field: present}, POS_COLS, kernel, DOCS)
 
     def interval_scored_df(self, q: ast.IntervalQuery):
         """(doc_id, score) DataFrame of an IntervalQuery's full match set —
@@ -1375,32 +1279,17 @@ class IndexSearcher:
                 return None  # a required sub-source can never match
         if not self.reader.manifest.get("positions", False):
             raise ValueError("index was built without positions")
-        postings = self.reader.postings(terms, field=q.field)
-        cols = ["term", "first_doc", "last_doc", "count", "doc_gaps", "tfs",
-                "norms", "positions", "doc_offset"]
-        dload = self.reader.deleted_loader()
         pivot, boost = float(q.pivot), float(q.boost)
 
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = {c: pdf[c].to_numpy() for c in cols}
-            off = np.int64(rows["doc_offset"][0])
+        def kernel(seg, rows):
             # segment-LOCAL docIDs into the kernel (its doc·2^34 composite
             # keys must not see global IDs past 2^29), offset the result
-            rows["first_doc"] = rows["first_doc"].astype(np.int64)
-            rows["last_doc"] = rows["last_doc"].astype(np.int64)
-            d, s = iv.segment_interval_postings(rows, source, pivot, boost)
-            d = d + off
-            if d.size and dload:
-                keep = ~np.isin(d, dload(pdf["seg"].iloc[0]) + off)
-                d, s = d[keep], s[keep]
-            return pd.DataFrame({"doc_id": d,
-                                 "score": s.astype(np.float32)})
+            d, sc = iv.segment_interval_postings(local_rows(rows, seg.offset),
+                                                 source, pivot, boost)
+            return hits_frame(*seg.live(d + seg.offset, sc))
 
-        return (
-            postings.select("seg", *cols)
-            .groupBy("seg")
-            .applyInPandas(run_segment, "doc_id long, score float")
-        )
+        return self.reader.segment_executor().run(
+            {q.field: terms}, POS_COLS, kernel, SCORED)
 
     def _search_intervals(self, q: ast.IntervalQuery, k: int):
         """Top-k IntervalQuery hits: per-segment scored kernel, k rows per
@@ -1414,35 +1303,14 @@ class IndexSearcher:
             df.orderBy(F.col("score").desc(), F.col("doc_id")).limit(k))
         return [ScoreDoc(int(r["doc_id"]), float(r["score"])) for r in out]
 
-    def _phrase_count(self, q: ast.PhraseQuery) -> int:
-        """Distributed phrase-hit count: one count row per segment (a hot
-        phrase at 10^12 scale matches billions of docs — never collected)."""
-        from lucene_spark.search.phrase import segment_phrase_postings
-
-        terms = list(q.terms)
-        slop = int(q.slop)
-        stats = self.reader.term_stats(terms, field=q.field)
-        if any(stats.get(t, {}).get("df", 0) == 0 for t in terms):
+    def _phrase_count(self, q) -> int:
+        """Distributed phrase / multiphrase hit count: one count row per
+        segment (a hot phrase at 10^12 scale matches billions of docs —
+        never collected)."""
+        plan = self._phrase_plan(q)
+        if plan is None:
             return 0
-        if not self.reader.manifest.get("positions", False):
-            raise ValueError("index was built without positions")
-        postings = self.reader.postings(terms, field=q.field)
-        cols = ["term", "first_doc", "count", "doc_gaps", "tfs",
-                "norms", "positions"]
-        dload = self.reader.deleted_loader()
-
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = {c: pdf[c].to_numpy() for c in cols}
-            d, _f, _nm = segment_phrase_postings(rows, terms, slop)
-            if d.size and dload:  # kernel docIDs are segment-local here
-                d = d[~np.isin(d, dload(pdf["seg"].iloc[0]))]
-            return pd.DataFrame({"n": [int(d.size)]})
-
-        out = self._collect(
-            postings.select("seg", *cols)
-            .groupBy("seg")
-            .applyInPandas(run_segment, "n long")
-        )
+        out = self._collect(self._phrase_scored_df(*plan, out=COUNT))
         return sum(int(r["n"]) for r in out)
 
     def count(self, query) -> int:
@@ -1452,27 +1320,17 @@ class IndexSearcher:
             query = self.parse(query)
         query = ast.normalize(query)
         self._check_clause_limit(query)
-        big = self.reader.doc_count + 1
         if isinstance(query, ast.MultiTermQuery):
             from lucene_spark.search.multiterm import constant_score_count
 
-            return constant_score_count(
-                self.reader, self._multiterm_postings(query),
-                deleted_loader=self.reader.deleted_loader(),
-            )
+            return constant_score_count(self.reader,
+                                        self._multiterm_source(query))
         if isinstance(query, (ast.SynonymQuery, ast.DisjunctionMaxQuery)):
             # hit set = union of the terms' doc sets (scores don't affect it)
             from lucene_spark.search.multiterm import constant_score_count
 
-            terms = list(dict.fromkeys(query.terms))
-            stats = self.reader.term_stats(terms, field=query.field)
-            present = [t for t in terms if stats.get(t, {}).get("df", 0) > 0]
-            if not present:
-                return 0
-            return constant_score_count(
-                self.reader, self.reader.postings(present, field=query.field),
-                deleted_loader=self.reader.deleted_loader(),
-            )
+            return constant_score_count(self.reader,
+                                        self._present_terms(query))
         if isinstance(query, ast.ConstantScoreQuery):
             return int(self.match_df(query.query).count())
         if isinstance(query, ast.SPAN_QUERY_TYPES):
@@ -1489,40 +1347,8 @@ class IndexSearcher:
             # collapses to): hit count = size of the k-bounded rewrite set
             return len(self.knn_search(query.vector, query.k, query.filter,
                                        query.strategy))
-        if isinstance(query, ast.PhraseQuery):
+        if isinstance(query, (ast.PhraseQuery, ast.MultiPhraseQuery)):
             return self._phrase_count(query)
-        if isinstance(query, ast.MultiPhraseQuery):
-            from lucene_spark.search.phrase import segment_multiphrase_postings
-
-            all_terms = sorted({t for slot in query.slots for t in slot})
-            stats = self.reader.term_stats(all_terms, field=query.field)
-            slots = tuple(
-                tuple(t for t in slot
-                      if stats.get(t, {}).get("df", 0) > 0)
-                for slot in query.slots
-            )
-            if any(not s for s in slots):
-                return 0
-            fetch = sorted({t for slot in slots for t in slot})
-            postings = self.reader.postings(fetch, field=query.field)
-            slop = int(query.slop)
-            cols = ["term", "first_doc", "count", "doc_gaps", "tfs",
-                    "norms", "positions"]
-            dload = self.reader.deleted_loader()
-
-            def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-                rows = {c: pdf[c].to_numpy() for c in cols}
-                d, _f, _nm = segment_multiphrase_postings(rows, slots, slop)
-                if d.size and dload:  # segment-local docIDs here
-                    d = d[~np.isin(d, dload(pdf["seg"].iloc[0]))]
-                return pd.DataFrame({"n": [int(d.size)]})
-
-            out = self._collect(
-                postings.select("seg", *cols)
-                .groupBy("seg")
-                .applyInPandas(run_segment, "n long")
-            )
-            return sum(int(r["n"]) for r in out)
         if isinstance(query, ast.BooleanQuery) and any(
             not isinstance(s, ast.TermQuery) for _, s in query.clauses
         ):
@@ -1538,31 +1364,17 @@ class IndexSearcher:
             return 0
         # distributed count: per-segment hit counts summed (never ships the
         # doc list to the driver — a hot term at 10^12 scale matches billions)
-        specs, msm = wc
-        postings = self._postings_for_specs(specs)
-        cols = ["field", "term", "first_doc", "last_doc", "count", "doc_gaps",
-                "tfs", "norms", "max_tf", "impact_tfs", "impact_norms",
-                "doc_offset"]
-        sep = self.FIELD_SEP
-        dload = self.reader.deleted_loader()
-
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = {c: pdf[c].to_numpy() for c in cols}
-            rows["term"] = (pdf["field"] + sep + pdf["term"]).to_numpy(dtype=object)
-            off = np.int64(rows["doc_offset"][0])
-            rows["first_doc"] = rows["first_doc"].astype(np.int64) + off
-            rows["last_doc"] = rows["last_doc"].astype(np.int64) + off
-            dele = dload(pdf["seg"].iloc[0]) + off if dload else None
-            d, _ = segment_topk(rows, specs, big, msm, prune=False,
-                                deleted=dele)
-            return pd.DataFrame({"n": [int(d.size)]})
-
-        out = self._collect(
-            postings.select("seg", *cols)
-            .groupBy("seg")
-            .applyInPandas(run_segment, "n long")
-        )
+        out = self._collect(self._flat_scored_df(*wc, count=True))
         return sum(int(r["n"]) for r in out)
+
+    def _present_terms(self, q):
+        """``{field: terms}`` of a synonym / dismax query's corpus-present
+        terms (None when none is present) — the union-postings source of
+        its match set."""
+        terms = list(dict.fromkeys(q.terms))
+        stats = self.reader.term_stats(terms, field=q.field)
+        present = [t for t in terms if stats.get(t, {}).get("df", 0) > 0]
+        return {q.field: present} if present else None
 
     def facet_ranges(self, query, col: str, bounds):
         """Numeric-range facet counts
@@ -2152,73 +1964,49 @@ class IndexSearcher:
         positions space-joined ("" when the index stores none); deleted
         docs yield no rows (live-docs semantics, like ``document()``).
 
-        Plan shape: ONE postings scan pruned to the segments covering the
-        requested docs (``seg=N`` partition pruning), per-segment numpy
-        kernel — blocks screened by [first_doc, last_doc] overlap before
-        any decode, survivors batch-decoded (``decode_doc_ids_batch``, one
-        C pass) and intersected with the target set; positions decode only
-        for blocks that actually contain a match. Cost is O(postings of
-        touched segments) scan + O(matches) work — the same access shape
-        Lucene pays when term vectors are derived rather than stored.
+        Plan shape: ONE executor run over the segments covering the
+        requested docs, reading the field's row groups (pruned on the
+        ``field`` statistics), per-segment numpy kernel — blocks screened
+        by [first_doc, last_doc] overlap before any decode, survivors
+        batch-decoded (``decode_doc_ids_batch``, one C pass) and
+        intersected with the target set; positions decode only for blocks
+        that actually contain a match. Cost is O(postings of touched
+        segments) read + O(matches) work — the same access shape Lucene
+        pays when term vectors are derived rather than stored.
         """
-        from pyspark.sql import functions as F
-
         from lucene_spark.indexing.blocks import (
             decode_block_positions, decode_doc_ids_batch,
             decode_posting_bufs)
 
         ids = sorted({int(x) for x in doc_ids})
         schema = "doc_id long, term string, freq int, positions string"
-        if not ids:
-            return self.spark.createDataFrame([], schema)
-        bounds = self._segment_doc_bounds()
         targets = {}
-        for s, (lo, hi) in bounds.items():
-            loc = np.asarray([d - lo for d in ids if lo <= d < hi], np.int64)
-            if loc.size:
-                targets[int(s)] = loc
-        offsets = {int(s): int(lo) for s, (lo, _hi) in bounds.items()}
-        dload = self.reader.deleted_loader()
+        for s, (lo, hi) in self._segment_doc_bounds().items():
+            glob = np.asarray([d for d in ids if lo <= d < hi], np.int64)
+            if glob.size:
+                targets[int(s)] = glob
 
-        def run_segment(key, pdf):
-            import pandas as pd
-
-            seg = int(key[0])
-            empty = pd.DataFrame({
-                "doc_id": pd.Series(dtype="int64"),
-                "term": pd.Series(dtype="object"),
-                "freq": pd.Series(dtype="int32"),
-                "positions": pd.Series(dtype="object"),
-            })
-            tgt = targets.get(seg)
-            if tgt is None:
-                return empty
-            if dload is not None:
-                dele = dload(seg)
-                if len(dele):
-                    tgt = tgt[~np.isin(tgt, np.asarray(dele, np.int64))]
+        def kernel(seg, rows):
+            tgt = seg.live(targets[seg.id])
             if tgt.size == 0:
-                return empty
-            first = pdf["first_doc"].to_numpy(np.int64)
-            last = pdf["last_doc"].to_numpy(np.int64)
-            keep = (last >= tgt[0]) & (first <= tgt[-1])
-            pdf = pdf[keep]
-            if pdf.empty:
-                return empty
-            first = pdf["first_doc"].to_numpy(np.int64)
-            last = pdf["last_doc"].to_numpy(np.int64)
-            counts = pdf["count"].to_numpy(np.int64)
+                return pd.DataFrame()
+            keep = ((rows["last_doc"] >= tgt[0])
+                    & (rows["first_doc"] <= tgt[-1]))
+            if not keep.any():
+                return pd.DataFrame()
+            rows = {c: v[keep] for c, v in rows.items()}
+            counts = rows["count"].astype(np.int64)
             docs, starts = decode_doc_ids_batch(
-                first, last, counts, list(pdf["doc_gaps"]))
-            tfs = decode_posting_bufs(list(pdf["tfs"]))
+                rows["first_doc"], rows["last_doc"], counts,
+                list(rows["doc_gaps"]))
+            tfs = decode_posting_bufs(list(rows["tfs"]))
             hit = np.isin(docs, tgt)
             if not hit.any():
-                return empty
-            blk_of = np.repeat(np.arange(len(pdf)), counts)
-            terms = pdf["term"].to_numpy(object)
+                return pd.DataFrame()
+            blk_of = np.repeat(np.arange(counts.size), counts)
             hidx = np.flatnonzero(hit)
             pos_col = np.full(hidx.size, "", dtype=object)
-            pos_bufs = pdf["positions"].to_numpy(object)
+            pos_bufs = rows["positions"]
             if pos_bufs.size and pos_bufs[0] is not None:
                 # decode positions only for blocks holding a match
                 for b in np.unique(blk_of[hidx]):
@@ -2233,20 +2021,16 @@ class IndexSearcher:
                         ps = flat[p0:p0 + int(btfs[i_local])]
                         pos_col[j] = " ".join(str(int(p)) for p in ps)
             return pd.DataFrame({
-                "doc_id": docs[hidx] + offsets[seg],
-                "term": terms[blk_of[hidx]],
+                "doc_id": docs[hidx],
+                "term": rows["term"][blk_of[hidx]],
                 "freq": tfs[hidx].astype("int32"),
                 "positions": pos_col,
             })
 
-        postings = (self.reader._postings_df
-                    .filter(F.col("field") == field)
-                    .select("seg", "term", "first_doc", "last_doc", "count",
-                            "doc_gaps", "tfs", "positions"))
-        postings = self._prune_segs(postings, ids)
-        return (postings
-                .groupBy("seg")
-                .applyInPandas(run_segment, schema))
+        return self.reader.segment_executor().run(
+            {field: None}, ["term", "first_doc", "last_doc", "count",
+                            "doc_gaps", "tfs", "positions"],
+            kernel, schema, segments=sorted(targets))
 
     def combined_field_df(self, terms, fields, norm_fields=None):
         """CombinedFieldQuery — the BM25F-style cross-field scorer
@@ -2269,12 +2053,11 @@ class IndexSearcher:
 
         ``fields``: {field: weight}. Returns an exhaustive (doc_id, score)
         DataFrame (every matching doc). Plan shape: ONE multi-field
-        postings scan (In(term,…) + field pushdown) → per-segment numpy
-        kernel (batch block decode, one weighted bincount, float32 BM25)
-        → k-free distributed output; the driver touches only statistics.
+        executor run (in-task row-group pruning on field and term) →
+        per-segment numpy kernel (batch block decode, one weighted
+        bincount, float32 BM25) → k-free distributed output; the driver
+        touches only statistics.
         """
-        from pyspark.sql import functions as F
-
         from lucene_spark.indexing.blocks import (
             decode_doc_ids_batch, decode_posting_bufs)
         from lucene_spark.smallfloat import LENGTH_TABLE, int_to_byte4
@@ -2311,67 +2094,48 @@ class IndexSearcher:
         index_dir = self.reader.index_dir
         weights = {f: float(w) for f, w in fields.items()}
         nfields = {f: float(w) for f, w in norm_fields.items()}
-        offsets = {int(s): int(o) for s, o in self.reader.offsets.items()}
-        dload = self.reader.deleted_loader()
-        self_field = self.reader.field
+        main = self.reader.field
 
-        def run_segment(key, pdf):
-            import pandas as pd
+        def kernel(seg, rows):
             import pyarrow.dataset as pds
 
-            seg = int(key[0])
-            empty = pd.DataFrame({
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float32"),
-            })
-            if pdf.empty:
-                return empty
-            dt = pds.dataset(f"{index_dir}/docs/seg={seg}").to_table(
+            dt = pds.dataset(f"{index_dir}/docs/seg={seg.id}").to_table(
                 columns=["doc_id", "norm"])
             dids = dt.column("doc_id").to_numpy()
             n = int(dids.max()) + 1 if len(dids) else 0
             if n == 0:
-                return empty
+                return pd.DataFrame()
             # combined norm per local doc (MultiFieldNormValues.advanceExact:
             # Math.round == floor(x + 0.5), then intToByte4 re-encode)
             nv = np.zeros(n, dtype=np.float32)
             seg_norms = np.zeros(n, dtype=np.int64)
             seg_norms[dids] = dt.column("norm").to_numpy()
-            main = self_field
             if main in nfields:
                 nv += np.float32(nfields[main]) * LENGTH_TABLE[seg_norms]
             comb_norm = int_to_byte4(np.floor(nv + 0.5).astype(np.int64))
 
-            counts = pdf["count"].to_numpy(np.int64)
+            counts = rows["count"].astype(np.int64)
             docs, _starts = decode_doc_ids_batch(
-                pdf["first_doc"].to_numpy(np.int64),
-                pdf["last_doc"].to_numpy(np.int64),
-                counts, list(pdf["doc_gaps"]))
-            tfs = decode_posting_bufs(list(pdf["tfs"]))
-            wrow = pdf["field"].map(weights).to_numpy(np.float32)
+                rows["first_doc"], rows["last_doc"], counts,
+                list(rows["doc_gaps"]))
+            tfs = decode_posting_bufs(list(rows["tfs"]))
+            wrow = pd.Series(rows["field"]).map(weights).to_numpy(np.float32)
             wpost = np.repeat(wrow, counts)
             freq = np.zeros(n, dtype=np.float32)
-            np.add.at(freq, docs, wpost * tfs.astype(np.float32))
+            np.add.at(freq, docs - seg.offset, wpost * tfs.astype(np.float32))
             hit = freq > 0
-            if dload is not None:
-                dele = dload(seg)
-                if len(dele):
-                    hit[np.asarray(dele, np.int64)] = False
+            if seg.deleted is not None:
+                hit[seg.deleted - seg.offset] = False
             hidx = np.flatnonzero(hit)
             if hidx.size == 0:
-                return empty
+                return pd.DataFrame()
             sc = scorer.score(freq[hidx], comb_norm[hidx])
-            return pd.DataFrame({
-                "doc_id": hidx + offsets[seg],
-                "score": np.asarray(sc, dtype=np.float32),
-            })
+            return hits_frame(hidx + seg.offset, np.asarray(sc))
 
-        posts = (self.reader._postings_df
-                 .filter(F.col("field").isin(list(fields))
-                         & F.col("term").isin(terms))
-                 .select("seg", "field", "term", "first_doc", "last_doc",
-                         "count", "doc_gaps", "tfs"))
-        return posts.groupBy("seg").applyInPandas(run_segment, schema)
+        return self.reader.segment_executor().run(
+            {f: terms for f in fields},
+            ["field", "first_doc", "last_doc", "count", "doc_gaps", "tfs"],
+            kernel, schema)
 
     def combined_field(self, terms, fields, k: int = 10,
                        norm_fields=None):
@@ -2475,18 +2239,10 @@ class IndexSearcher:
                 .select(F.lit(n).alias("dim"), "value", "n"))
         return reduce(lambda a, b: a.unionAll(b), parts).orderBy("dim", "value")
 
-    def _prune_segs(self, postings, doc_ids):
-        """Restrict a postings scan to the segments whose docID range
-        intersects ``doc_ids`` — the rescore second pass touches ≤ top_n
-        docs, so on a many-segment index this turns a full postings scan
-        into a handful of partition reads (partition pruning on the
-        ``seg=N`` directory key)."""
-        from pyspark.sql import functions as F
-
-        return postings.where(F.col("seg").isin(self._segs_for_docs(doc_ids)))
-
     def _segs_for_docs(self, doc_ids) -> list[int]:
-        """Segment ids whose docID range intersects ``doc_ids``."""
+        """Segment ids whose docID range intersects ``doc_ids`` — the
+        rescore second pass touches ≤ top_n docs, so on a many-segment
+        index only a handful of segments are read."""
         ids = np.asarray(sorted(int(x) for x in doc_ids), dtype=np.int64)
         return [s for s, (lo, hi) in self._segment_doc_bounds().items()
                 if ((ids >= lo) & (ids < hi)).any()]
@@ -2506,7 +2262,7 @@ class IndexSearcher:
         booleans, KNN) raise NotImplementedError with the supported list.
 
         ``doc_ids`` (optional, bounded — the rescore second pass): restrict
-        scoring to those docs; the postings scan prunes to the segments
+        scoring to those docs; the executor reads only the segments
         covering them and the output filters to the exact set.
         """
         from pyspark.sql import functions as F
@@ -2522,15 +2278,11 @@ class IndexSearcher:
     def _score_df_impl(self, nq, doc_ids=None):
         from pyspark.sql import functions as F
 
+        segs = self._segs_for_docs(doc_ids) if doc_ids is not None else None
         if isinstance(nq, (ast.PhraseQuery, ast.MultiPhraseQuery)):
             plan = self._phrase_plan(nq)
-            if plan is None:
-                return self.spark.createDataFrame(
-                    [], "doc_id long, score float")
-            segs = (self._segs_for_docs(doc_ids)
-                    if doc_ids is not None else None)
-            return self._phrase_scored_df(*plan, segments=segs)
-        if isinstance(nq, (ast.SynonymQuery, ast.DisjunctionMaxQuery)):
+            df = plan and self._phrase_scored_df(*plan, segments=segs)
+        elif isinstance(nq, (ast.SynonymQuery, ast.DisjunctionMaxQuery)):
             from lucene_spark.search.multiterm import (
                 dismax_scored_df,
                 synonym_scored_df,
@@ -2539,54 +2291,18 @@ class IndexSearcher:
             build = (synonym_scored_df if isinstance(nq, ast.SynonymQuery)
                      else dismax_scored_df)
             df = build(self.reader, self.similarity, nq)
-            if df is None:
-                return self.spark.createDataFrame(
-                    [], "doc_id long, score float")
-            return df
-        if isinstance(nq, (ast.MultiTermQuery, ast.ConstantScoreQuery,
-                           ast.MatchAllDocsQuery) + ast.SPAN_QUERY_TYPES):
+        elif isinstance(nq, (ast.MultiTermQuery, ast.ConstantScoreQuery,
+                             ast.MatchAllDocsQuery) + ast.SPAN_QUERY_TYPES):
             # CONSTANT_SCORE shapes: match set at score = f32(boost)
             boost = float(F32(getattr(nq, "boost", 1.0)))
-            if isinstance(nq, ast.SPAN_QUERY_TYPES):
-                m = self._span_match_df(nq)
-                if m is None:
-                    return self.spark.createDataFrame(
-                        [], "doc_id long, score float")
-            else:
-                m = self.match_df(nq)
-            return m.select("doc_id",
-                            F.lit(boost).cast("float").alias("score"))
-        wc = self._weighted_clauses(nq)
-        spark = self.spark
-        if wc is None:
-            return spark.createDataFrame([], "doc_id long, score float")
-        specs, msm = wc
-        postings = self._postings_for_specs(specs)
-        if doc_ids is not None:
-            postings = self._prune_segs(postings, doc_ids)
-        cols = ["field", "term", "first_doc", "last_doc", "count", "doc_gaps",
-                "tfs", "norms", "max_tf", "impact_tfs", "impact_norms",
-                "doc_offset"]
-        big = self.reader.doc_count + 1
-        sep = self.FIELD_SEP
-        dload = self.reader.deleted_loader()
-
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = {c: pdf[c].to_numpy() for c in cols}
-            rows["term"] = (pdf["field"] + sep + pdf["term"]).to_numpy(dtype=object)
-            off = np.int64(rows["doc_offset"][0])
-            rows["first_doc"] = rows["first_doc"].astype(np.int64) + off
-            rows["last_doc"] = rows["last_doc"].astype(np.int64) + off
-            dele = dload(pdf["seg"].iloc[0]) + off if dload else None
-            d, s = segment_topk(rows, specs, big, msm, prune=False,
-                                deleted=dele)
-            return pd.DataFrame({"doc_id": d, "score": s.astype(np.float32)})
-
-        return (
-            postings.select("seg", *cols)
-            .groupBy("seg")
-            .applyInPandas(run_segment, "doc_id long, score float")
-        )
+            m = (self._span_match_df(nq)
+                 if isinstance(nq, ast.SPAN_QUERY_TYPES) else self.match_df(nq))
+            df = None if m is None else m.select(
+                "doc_id", F.lit(boost).cast("float").alias("score"))
+        else:
+            wc = self._weighted_clauses(nq)
+            df = wc and self._flat_scored_df(*wc, segments=segs)
+        return df if df is not None else self.spark.createDataFrame([], SCORED)
 
     def match_df(self, query):
         """Distributed (doc_id) DataFrame of the docs matching ANY query
@@ -2613,26 +2329,19 @@ class IndexSearcher:
     def _match_df_impl(self, q):
         if isinstance(q, ast.MatchAllDocsQuery):
             return self.reader.docs(live_only=True).select("doc_id")
-        if isinstance(q, ast.MultiTermQuery):
+        if isinstance(q, (ast.MultiTermQuery, ast.SynonymQuery,
+                          ast.DisjunctionMaxQuery)):
             from lucene_spark.search.multiterm import matching_docs_df
 
-            return matching_docs_df(self.reader, self._multiterm_postings(q),
-                                    self.reader.deleted_loader())
-        if isinstance(q, (ast.SynonymQuery, ast.DisjunctionMaxQuery)):
-            from lucene_spark.search.multiterm import matching_docs_df
-
-            terms = list(dict.fromkeys(q.terms))
-            stats = self.reader.term_stats(terms, field=q.field)
-            present = [t for t in terms
-                       if stats.get(t, {}).get("df", 0) > 0]
-            if not present:
-                return self.spark.createDataFrame([], "doc_id long")
             return matching_docs_df(
-                self.reader, self.reader.postings(present, field=q.field),
-                self.reader.deleted_loader(),
-            )
+                self.reader, self._multiterm_source(q)
+                if isinstance(q, ast.MultiTermQuery)
+                else self._present_terms(q))
         if isinstance(q, (ast.PhraseQuery, ast.MultiPhraseQuery)):
-            return self._phrase_match_df(q)
+            plan = self._phrase_plan(q)
+            if plan is None:
+                return self.spark.createDataFrame([], DOCS)
+            return self._phrase_scored_df(*plan, out=DOCS)
         if isinstance(q, ast.BooleanQuery) and any(
             not isinstance(sub, ast.TermQuery) for _, sub in q.clauses
         ):
@@ -2644,54 +2353,6 @@ class IndexSearcher:
                 return self.spark.createDataFrame([], "doc_id long")
             return df.select("doc_id")
         return self.score_df(q).select("doc_id")
-
-    def _phrase_match_df(self, q):
-        """Distributed (doc_id) match set for phrase-shaped queries."""
-        from lucene_spark.search.phrase import (
-            segment_multiphrase_postings,
-            segment_phrase_postings,
-        )
-
-        if not self.reader.manifest.get("positions", False):
-            raise ValueError("index was built without positions")
-        slop = int(q.slop)
-        if isinstance(q, ast.MultiPhraseQuery):
-            all_terms = sorted({t for slot in q.slots for t in slot})
-            stats = self.reader.term_stats(all_terms, field=q.field)
-            slots = tuple(
-                tuple(t for t in slot if stats.get(t, {}).get("df", 0) > 0)
-                for slot in q.slots
-            )
-            if any(not s for s in slots):
-                return self.spark.createDataFrame([], "doc_id long")
-            fetch = sorted({t for slot in slots for t in slot})
-            kernel = lambda rows: segment_multiphrase_postings(rows, slots, slop)  # noqa: E731
-        else:
-            terms = list(q.terms)
-            stats = self.reader.term_stats(terms, field=q.field)
-            if any(stats.get(t, {}).get("df", 0) == 0 for t in terms):
-                return self.spark.createDataFrame([], "doc_id long")
-            fetch = terms
-            kernel = lambda rows: segment_phrase_postings(rows, terms, slop)  # noqa: E731
-        postings = self.reader.postings(fetch, field=q.field)
-        cols = ["term", "first_doc", "count", "doc_gaps", "tfs",
-                "norms", "positions", "doc_offset"]
-        dload = self.reader.deleted_loader()
-
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            rows = {c: pdf[c].to_numpy() for c in cols}
-            off = np.int64(rows["doc_offset"][0])
-            d, _f, _nm = kernel(rows)
-            d = d + off
-            if d.size and dload:
-                d = d[~np.isin(d, dload(pdf["seg"].iloc[0]) + off)]
-            return pd.DataFrame({"doc_id": d})
-
-        return (
-            postings.select("seg", *cols)
-            .groupBy("seg")
-            .applyInPandas(run_segment, "doc_id long")
-        )
 
     def covering_df(self, queries, min_match: str):
         """CoveringQuery (``lucene/sandbox/src/java/org/apache/lucene/
@@ -3101,7 +2762,7 @@ class IndexSearcher:
         ``f32(boost)`` (the reference multiplies by the real SpanScorer
         score — documented divergence). Returns a distributed
         (doc_id, score float) DataFrame; per-segment numpy kernel, one
-        pushed-down postings scan, nothing collected."""
+        executor run over the term's row groups, nothing collected."""
 
         if fn not in self.PAYLOAD_FNS:
             raise ValueError(f"fn must be one of {self.PAYLOAD_FNS}")
@@ -3109,26 +2770,11 @@ class IndexSearcher:
             raise ValueError(
                 "index was built without payloads; rebuild with "
                 "IndexBuilder(..., analyzer='delimited_payload')")
-        postings = self.reader.postings([term], field=field)
-        cols = ["first_doc", "last_doc", "count", "doc_gaps", "tfs",
-                "payloads", "doc_offset"]
-        dload = self.reader.deleted_loader()
         span_mult = float(F32(boost)) if include_span_score else None
 
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            from lucene_spark.indexing.blocks import (decode_blocks_batch,
-                                                      decode_posting_bufs)
-
-            # one batched decode across ALL of the term's blocks (payload
-            # buffers carry no cross-block state, so the per-posting
-            # reduceat over the chained flat array is exact)
-            counts = pdf["count"].to_numpy().astype(np.int64)
-            d, tf, _ = decode_blocks_batch(
-                pdf["first_doc"].to_numpy(), pdf["last_doc"].to_numpy(),
-                counts, list(pdf["doc_gaps"].to_numpy()),
-                list(pdf["tfs"].to_numpy()))
-            pay = decode_posting_bufs(
-                list(pdf["payloads"].to_numpy())).astype(np.float32)
+        def kernel(seg, rows):
+            d, tf, pay = _payload_rows(rows)
+            pay = pay.astype(np.float32)
             offs = np.concatenate([[0], np.cumsum(tf)[:-1]]).astype(np.int64)
             if fn == "max":
                 s = np.maximum.reduceat(pay, offs)
@@ -3139,20 +2785,12 @@ class IndexSearcher:
                 if fn == "avg":
                     s = (s / tf.astype(np.float32)).astype(np.float32)
             s = s.astype(np.float32)
-            off = np.int64(pdf["doc_offset"].iloc[0])
-            d = d.astype(np.int64) + off
             if span_mult is not None:
                 s = (s * np.float32(span_mult)).astype(np.float32)
-            if dload:
-                dele = dload(pdf["seg"].iloc[0]) + off
-                if len(dele):
-                    m = ~np.isin(d, dele)
-                    d, s = d[m], s[m]
-            return pd.DataFrame({"doc_id": d, "score": s})
+            return hits_frame(*seg.live(d, s))
 
-        return (postings.select("seg", *cols)
-                .groupBy("seg")
-                .applyInPandas(run_segment, "doc_id long, score float"))
+        return self.reader.segment_executor().run(
+            {field: [term]}, PAYLOAD_COLS, kernel, SCORED)
 
     def payload_score(self, term: str, fn: str = "max", k: int = 10,
                       field: str = "text",
@@ -3192,38 +2830,18 @@ class IndexSearcher:
                 "IndexBuilder(..., analyzer='delimited_payload')")
         cmp = self._PAYLOAD_OPS[op]
         val = np.int64(value)
-        postings = self.reader.postings([term], field=field)
-        cols = ["first_doc", "last_doc", "count", "doc_gaps", "tfs",
-                "payloads", "doc_offset"]
-        dload = self.reader.deleted_loader()
 
-        def run_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            from lucene_spark.indexing.blocks import (decode_blocks_batch,
-                                                      decode_posting_bufs)
-
-            counts = pdf["count"].to_numpy().astype(np.int64)
-            d, tf, _ = decode_blocks_batch(
-                pdf["first_doc"].to_numpy(), pdf["last_doc"].to_numpy(),
-                counts, list(pdf["doc_gaps"].to_numpy()),
-                list(pdf["tfs"].to_numpy()))
-            flat = decode_posting_bufs(list(pdf["payloads"].to_numpy()))
+        def kernel(seg, rows):
+            d, tf, flat = _payload_rows(rows)
             offs = np.concatenate([[0], np.cumsum(tf)[:-1]]).astype(np.int64)
             ok = cmp(flat, val)
             # any-occurrence-per-posting: count of hits in each posting's
             # payload slice > 0 (one global reduceat over all blocks)
             hits = np.add.reduceat(ok.astype(np.int64), offs) > 0
-            d = d[hits].astype(np.int64)
-            off = np.int64(pdf["doc_offset"].iloc[0])
-            d = d + off
-            if dload:
-                dele = dload(pdf["seg"].iloc[0]) + off
-                if len(dele):
-                    d = d[~np.isin(d, dele)]
-            return pd.DataFrame({"doc_id": d})
+            return hits_frame(seg.live(d[hits]))
 
-        return (postings.select("seg", *cols)
-                .groupBy("seg")
-                .applyInPandas(run_segment, "doc_id long"))
+        return self.reader.segment_executor().run(
+            {field: [term]}, PAYLOAD_COLS, kernel, DOCS)
 
     def span_payload_check(self, term: str, value: int, op: str = "eq",
                            k: int = 10, field: str = "text",
@@ -3294,9 +2912,7 @@ class IndexSearcher:
                 postings.setdefault(sub.field, []).append(sub.term)
         else:
             return None  # no union-postings form → exhaustive path
-        hits = constant_score_topk(
-            self.reader, postings, k, 1.0,
-            deleted_loader=self.reader.deleted_loader())
+        hits = constant_score_topk(self.reader, postings, k, 1.0)
         ids = [h.doc_id for h in hits]
         if not ids:
             return []

@@ -55,6 +55,16 @@ class ClauseSpec:
     df: int = 0  # posting-list cost (TermScorer.cost), for mode selection
 
 
+def keyed_rows(rows, sep: str) -> dict:
+    """``rows`` with ``term`` replaced by the clause key ``field + sep +
+    term`` that :attr:`ClauseSpec.term` carries."""
+    rows = dict(rows)
+    rows["term"] = (pd.Series(rows["field"], dtype=object) + sep
+                    + pd.Series(rows["term"], dtype=object)
+                    ).to_numpy(dtype=object)
+    return rows
+
+
 def segment_topk(block_rows, clauses: list[ClauseSpec], k: int,
                  min_should_match: int = 0, prune: bool = True,
                  deleted: np.ndarray | None = None,

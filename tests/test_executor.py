@@ -9,6 +9,7 @@ groups whose term statistics can hold a query term."""
 
 import shutil
 
+import numpy as np
 import pyarrow.parquet as pq
 import pytest
 
@@ -72,7 +73,7 @@ def test_msearch_matches_golden(spark, built, golden):
 
 def test_prefix_semijoin_fallback_matches_golden(spark, built, golden):
     # past MULTITERM_EXPAND_CAP the expansion never reaches the driver:
-    # the semi-join DataFrame path (still grouped by seg) must agree
+    # the same kernel over the semi-join DataFrame source must agree
     s = IndexSearcher(spark, built)
     s.MULTITERM_EXPAND_CAP = 1
     q = f"{D[:1]}*"
@@ -263,3 +264,248 @@ def test_phrase_score_df_restricted_to_segments(spark, built, golden):
     got = {(int(r["doc_id"]), float(r["score"]))
            for r in s.score_df(q, doc_ids=ids).collect()}
     assert got == {h for h in hits if h[0] in ids}
+
+
+# ---- every per-segment kernel, on a multi-segment index with deletes -------
+
+@pytest.fixture(scope="module")
+def deleted(spark, built, golden, tmp_path_factory):
+    """(index dir, dead docIDs): the 4-segment index with every doc of C
+    deleted; statistics stay stale until compaction, so surviving docs keep
+    their golden scores."""
+    from lucene_spark.indexing.maintenance import IndexMaintenance
+
+    d = str(tmp_path_factory.mktemp("exec_del") / "index")
+    shutil.copytree(built, d)
+    dead = set(golden.postings[C][0].tolist())
+    assert IndexMaintenance(spark, d).delete_by_term(C) == len(dead)
+    return d, dead
+
+
+def _segment_of(searcher):
+    bounds = searcher._segment_doc_bounds()
+    return lambda doc: next(s for s, (lo, hi) in bounds.items()
+                            if lo <= doc < hi)
+
+
+def _live(hits, dead):
+    return [h for h in hits if h[0] not in dead]
+
+
+def _docs(df):
+    return sorted(int(r["doc_id"]) for r in df.collect())
+
+
+def test_local_docid_kernels_match_golden(spark, deleted, golden):
+    """The span, automaton and interval kernels key on segment-local
+    docIDs: their hits, like the phrase count's and match set's, come back
+    from every segment with its docBase added and its deletes masked."""
+    from lucene_spark.search import intervals as iv
+
+    d, dead = deleted
+    s = IndexSearcher(spark, d)
+    seg_of = _segment_of(s)
+    phrase = _live(golden.search(f'"{A} {B}"', BIG), dead)
+    # the phrase's hits span several segments, so docBases matter
+    assert len({seg_of(h[0]) for h in phrase}) > 1
+    phrase_docs = sorted(h[0] for h in phrase)
+
+    span = ast.SpanNearQuery((A, B), slop=0, in_order=True)
+    want = _live(golden.search(span, BIG), dead)
+    assert [h[0] for h in want] == phrase_docs
+    assert _hits(s.search(span, BIG)) == want
+    assert s.count(span) == len(want)
+
+    # A -> B and (A|C) -> B automata are the phrase and the multiphrase
+    automata = [
+        (((0, 1, A), (1, 2, B)), f'"{A} {B}"'),
+        (((0, 1, (A, C)), (1, 2, B)),
+         ast.MultiPhraseQuery(((A, C), (B,)))),
+    ]
+    for transitions, same in automata:
+        q = ast.TermAutomatonQuery(transitions=transitions, n_states=3,
+                                   accept=(2,))
+        want = [h[0] for h in _live(golden.search(same, BIG), dead)]
+        assert _docs(s._automaton_match_df(q)) == sorted(want)
+        assert s.count(q) == len(want)
+
+    # phrase intervals (max_gaps=0): freq = the phrase frequency
+    src = iv.Ordered((A, B), max_gaps=0)
+    freqs = golden.phrase_postings([A, B])
+    docs = np.array(phrase_docs, dtype=np.int64)
+    sc = iv.saturation_scores(
+        np.array([freqs[x] for x in phrase_docs], dtype=np.float32))
+    got = {(int(r["doc_id"]), float(r["score"]))
+           for r in s.interval_scored_df(ast.IntervalQuery(src)).collect()}
+    assert got == {(int(x), float(y)) for x, y in zip(docs, sc)}
+    assert s.count(ast.IntervalQuery(src)) == len(phrase_docs)
+
+    for q in (f'"{A} {B}"', f'"{B} {C}"~3',
+              ast.MultiPhraseQuery(((A, C), (B,)))):
+        want = _live(golden.search(q, BIG), dead)
+        assert s.count(q) == len(want), q
+        assert _docs(s.match_df(s.parse(q) if isinstance(q, str) else q)
+                     ) == sorted(h[0] for h in want), q
+
+
+def test_mixed_complement_visits_uncovered_segments(spark, deleted, golden):
+    """Docset (KNN) and match-all clauses match in segments that hold none
+    of the query's terms: the executor visits those segments too."""
+    from lucene_spark.search.knn import knn_similarity_f32
+    from lucene_spark.search.simpleqp import parse_simple
+
+    d, dead = deleted
+    s = IndexSearcher(spark, d)
+    seg_of = _segment_of(s)
+    n = golden.n
+    everyone = [x for x in range(n) if x not in dead]
+
+    # '-absent': no segment holds a postings row of the query
+    q = ast.normalize(parse_simple("-zzqqabsentterm", s.analyzer))
+    want = _live(golden.search(q, BIG), dead)
+    assert [h[0] for h in want] == everyone
+    assert _hits(s.search(q, BIG)) == want
+    assert _hits(s.search(q, 7)) == want[:7]
+    assert s.count(q) == len(everyone)
+    assert _docs(s.match_df(q)) == everyone
+
+    # '-rare' with a term living in one segment: that segment runs with
+    # its postings, every other one with zero rows
+    rare = next(t for t, (docs, _tfs) in sorted(golden.postings.items())
+                if len({seg_of(int(x)) for x in docs}) == 1
+                and not set(docs.tolist()) & dead)
+    q = ast.normalize(parse_simple(f"-{rare}", s.analyzer))
+    want = _live(golden.search(q, BIG), dead)
+    assert len(want) == len(everyone) - golden.postings[rare][0].size
+    assert _hits(s.search(q, BIG)) == want
+    assert s.count(q) == len(want)
+
+    # a KNN docset beside that rare term: its docs in the other segments
+    rng = np.random.RandomState(3)
+    vecs = rng.uniform(-0.5, 0.5, size=(n, 8)).astype(np.float32)
+    s.set_vectors(spark.createDataFrame(
+        [(i, [float(x) for x in vecs[i]]) for i in range(n)],
+        "doc_id long, embedding array<float>"))
+    rare_seg = seg_of(int(golden.postings[rare][0][0]))
+    far = next(i for i in range(n) if seg_of(i) != rare_seg)
+    knn = s.knn_search(vecs[far].tolist(), k=12)
+    assert {seg_of(x) for x, _dot in knn} - {rare_seg}
+    q = ast.BooleanQuery(((ast.SHOULD, ast.KnnQuery(tuple(vecs[far].tolist()),
+                                                    k=12)),
+                          (ast.SHOULD, ast.TermQuery(rare))))
+    score = {x: np.float64(knn_similarity_f32(dot, 1.0)) for x, dot in knn}
+    for x, sc in golden.search(rare, BIG):
+        score[x] = score.get(x, np.float64(0.0)) + np.float64(np.float32(sc))
+    want = sorted(((x, float(np.float32(v))) for x, v in score.items()
+                   if x not in dead), key=lambda h: (-h[1], h[0]))
+    assert _hits(s.search(q, BIG)) == want
+    assert s.count(q) == len(want)
+
+
+def test_term_vectors_match_golden(spark, deleted, golden):
+    d, dead = deleted
+    s = IndexSearcher(spark, d)
+    seg_of = _segment_of(s)
+    n = golden.n
+    ids = [0, 1, n // 3, n // 2, n // 2 + 1, n - 1, min(dead), max(dead)]
+    assert len({seg_of(x) for x in ids}) > 2
+    want = {(x, t, len(by_doc[x]), " ".join(str(p) for p in by_doc[x]))
+            for t, by_doc in golden.positions.items()
+            for x in ids if x in by_doc and x not in dead}
+    got = {(int(r["doc_id"]), r["term"], int(r["freq"]), r["positions"])
+           for r in s.term_vectors(ids).collect()}
+    assert got == want
+    # only the covering segments are read, whole-field row groups
+    ex = s.reader.segment_executor()
+    s.term_vectors([n - 1]).collect()
+    assert {x for t in ex.task_stats() for x in t["segments"]} == {
+        seg_of(n - 1)}
+
+
+def test_combined_field_matches_golden(spark, deleted, golden):
+    from lucene_spark.similarity import BM25Similarity
+    from lucene_spark.smallfloat import LENGTH_TABLE, int_to_byte4
+
+    d, dead = deleted
+    s = IndexSearcher(spark, d)
+    terms = [A, "assistant"]
+    fields = {"text": 1.0, "role": 2.0}
+    n = golden.n
+    pseudo_df, pseudo_ttf = 0, 0.0
+    freq = np.zeros(n, dtype=np.float32)
+    for t in terms:
+        for f, w in fields.items():
+            if f == "text":
+                docs, tfs = golden.postings.get(
+                    t, (np.zeros(0, np.int64), np.zeros(0, np.int64)))
+            else:
+                docs = golden.keyword[f].get(t, np.zeros(0, np.int64))
+                tfs = np.ones(docs.size, np.int64)
+            if docs.size:
+                pseudo_df = max(pseudo_df, int(docs.size))
+                pseudo_ttf += w * int(tfs.sum())
+                freq[docs] += np.float32(w) * tfs.astype(np.float32)
+    sum_ttf = golden.sum_ttf + 2.0 * golden.kw_field_stats["role"]["sum_ttf"]
+    scorer = BM25Similarity().scorer(1.0, n, int(sum_ttf), [pseudo_df],
+                                     ttfs=[max(1, int(pseudo_ttf))])
+    comb = int_to_byte4(np.floor(
+        np.float32(1.0) * LENGTH_TABLE[golden.norms] + 0.5).astype(np.int64))
+    hit = np.flatnonzero(freq > 0)
+    sc = scorer.score(freq[hit], comb[hit])
+    want = {(int(x), float(y)) for x, y in zip(hit, sc) if x not in dead}
+    got = {(int(r["doc_id"]), float(r["score"]))
+           for r in s.combined_field_df(terms, fields).collect()}
+    assert got == want
+
+
+def test_score_df_doc_ids_match_golden(spark, deleted, golden):
+    d, dead = deleted
+    s = IndexSearcher(spark, d)
+    seg_of = _segment_of(s)
+    for q in (f"{A} {B}", f'"{A} {B}"'):
+        hits = _live(golden.search(q, BIG), dead)
+        ids = [h[0] for h in hits[::3]] + sorted(dead)[:2]
+        assert len({seg_of(x) for x in ids}) > 1
+        got = {(int(r["doc_id"]), float(r["score"]))
+               for r in s.score_df(q, doc_ids=ids).collect()}
+        assert got == {h for h in hits if h[0] in ids}, q
+
+
+def test_prefix_semijoin_source_equals_term_set(spark, deleted, golden):
+    """With no driver expansion allowed, top-k, count and match_df of a
+    prefix query run the same kernels over the semi-join DataFrame and
+    answer exactly like the driver-resolved term set."""
+    d, dead = deleted
+    by_terms = IndexSearcher(spark, d)
+    semi = IndexSearcher(spark, d)
+    semi.MULTITERM_EXPAND_CAP = 0
+    for prefix in (D[:3], C[:2]):
+        q = semi.parse(f"{prefix}*")
+        assert isinstance(by_terms._multiterm_source(q), dict)
+        assert not isinstance(semi._multiterm_source(q), dict)
+        want = _live(golden.search(q, BIG), dead)
+        assert want
+        for k in (5, BIG):
+            assert _hits(semi.search(q, k)) == _hits(by_terms.search(q, k)) \
+                == want[:k], (prefix, k)
+        assert semi.count(q) == by_terms.count(q) == len(want)
+        assert _docs(semi.match_df(q)) == _docs(by_terms.match_df(q)) \
+            == sorted(h[0] for h in want)
+
+
+def test_counts_run_one_exchange_free_job(spark, built):
+    s = IndexSearcher(spark, built)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    for shape, q in {"flat": f"{A} {B}", "phrase": f'"{A} {B}"'}.items():
+        s.count(q)  # warm: term dictionary resident on the driver
+        group = f"count-{shape}"
+        sc.setJobGroup(group, shape)
+        try:
+            assert s.count(q) > 0
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = [st for j in jobs for st in tracker.getJobInfo(j).stageIds]
+        # one stage = no Exchange (a shuffle boundary) before the kernel
+        assert len(jobs) == 1 and len(stages) == 1, (shape, jobs, stages)

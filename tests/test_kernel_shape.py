@@ -80,15 +80,24 @@ def test_decode_blocks_batch_roundtrip():
         np.testing.assert_array_equal(nm[s:s + r["count"]], n1)
 
 
-# serving paths routed through the exchange-free SegmentExecutor: no
-# per-segment regrouping (Exchange hashpartitioning(seg)) may creep back in
+# every per-segment postings kernel of the searcher runs through the
+# exchange-free SegmentExecutor: no per-segment regrouping (Exchange
+# hashpartitioning(seg)) may creep back in
 def _migrated_functions():
     from lucene_spark.search import multiterm, searcher
 
     S = searcher.IndexSearcher
-    return [S.search, S.msearch, S._flat_topk_df, S._phrase_scored_df,
-            S._run_phrase_kernel, S._search_sorted_early,
-            searcher._flat_topk_kernel, multiterm.constant_score_topk]
+    return [S.search, S.msearch, S.count, S.score_df, S.match_df,
+            S._flat_topk_df, S._flat_scored_df, S._phrase_scored_df,
+            S._run_phrase_kernel, S._phrase_count, S._search_sorted_early,
+            S._mixed_segment_df, S._span_match_df, S._automaton_match_df,
+            S.interval_scored_df, S.term_vectors, S.combined_field_df,
+            S._score_df_impl, S._match_df_impl, S.payload_score_df,
+            S.span_payload_check_df, searcher._flat_topk_kernel,
+            multiterm.constant_score_topk, multiterm.matching_docs_df,
+            multiterm.constant_score_count, multiterm.synonym_scored_df,
+            multiterm.dismax_scored_df, multiterm.synonym_topk,
+            multiterm.dismax_topk]
 
 
 def test_migrated_serving_paths_have_no_seg_exchange():
@@ -99,6 +108,43 @@ def test_migrated_serving_paths_have_no_seg_exchange():
         assert 'groupBy("seg")' not in src and "applyInPandas" not in src, (
             f"{fn.__qualname__} regroups by segment; route it through "
             "reader.segment_executor()")
+
+
+def _grouping_sites(path):
+    """Qualified names of the functions in ``path`` that call
+    ``applyInPandas`` or ``groupBy("seg")``."""
+    import ast
+
+    sites = []
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            name = getattr(child, "name", None)
+            inner = (scope + [name] if isinstance(
+                child, (ast.FunctionDef, ast.ClassDef)) else scope)
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and (child.func.attr == "applyInPandas"
+                         or (child.func.attr == "groupBy"
+                             and [getattr(a, "value", None)
+                                  for a in child.args] == ["seg"]))):
+                sites.append(".".join(scope))
+            visit(child, inner)
+
+    visit(ast.parse(open(path).read()), [])
+    return sites
+
+
+def test_only_the_executor_adapter_groups_by_segment():
+    import glob
+
+    sites = {}
+    for path in sorted(glob.glob(f"{REPO}/lucene_spark/search/*.py")):
+        for site in _grouping_sites(path):
+            key = (os.path.basename(path), site)
+            sites[key] = sites.get(key, 0) + 1
+    # one plan: groupBy("seg").applyInPandas in the DataFrame-source adapter
+    assert sites == {("executor.py", "SegmentExecutor.run_df"): 2}, sites
 
 
 def test_traced_search_runs_one_stage(spark, index_dir):

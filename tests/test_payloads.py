@@ -142,3 +142,36 @@ def test_span_payload_check_topk(payload_searcher):
     ids = [h.doc_id for h in hits]
     assert ids == sorted(ids)
     assert all(h.score == 1.5 for h in hits)
+
+
+def test_compaction_keeps_payloads(spark, payload_searcher, tmp_path):
+    """Merging every segment of a payload index re-encodes the payloads
+    with the postings: the merged file keeps the ``payloads`` column and
+    the payload queries answer as before."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from lucene_spark.indexing.maintenance import IndexMaintenance
+
+    d = str(tmp_path / "paycompact")
+    shutil.copytree(payload_searcher.reader.index_dir, d)
+    before = IndexSearcher(spark, d)
+    assert len(before.reader.offsets) == 3
+    queries = [lambda s, fn=fn: s.payload_score(A, fn, k=10 ** 5)
+               for fn in ("max", "min", "sum", "avg")]
+    queries += [lambda s: s.payload_score(B, "sum", k=7,
+                                          include_span_score=True,
+                                          boost=2.0),
+                lambda s: s.span_payload_check(A, 20, "gte", k=10 ** 5),
+                lambda s: s.span_payload_check(B, 5, "lt", k=10 ** 5)]
+    want = [[(h.doc_id, h.score) for h in q(before)] for q in queries]
+    assert all(want)
+    assert IndexMaintenance(spark, d).compact(
+        target_rows=10 ** 9)["merged_runs"] == 1
+    after = IndexSearcher(spark, d)
+    (seg,) = after.reader.offsets
+    (path,) = glob.glob(f"{d}/postings/seg={seg}/*.parquet")
+    assert "payloads" in pq.read_schema(path).names
+    assert [[(h.doc_id, h.score) for h in q(after)]
+            for q in queries] == want

@@ -28,12 +28,22 @@ def capture(df) -> str:
     return buf.getvalue()
 
 
-def reads_only_overlapping(searcher, run, field_terms) -> bool:
+def executor_only(plan: str) -> bool:
+    """The plan is one SegmentExecutor stage: Range -> MapInPandas, with no
+    Exchange and no Spark postings scan in front of the kernel."""
+    return ("Range" in plan and "MapInPandas" in plan
+            and "Exchange" not in plan and "Scan parquet" not in plan)
+
+
+def reads_only_overlapping(searcher, run, field_terms,
+                           segments=None) -> bool:
     """Run ``run()`` and check the executor's per-task counters of that
     run: the row groups read are exactly the ones whose field and
     [min(term), max(term)] footer statistics can hold a term of
-    ``field_terms`` — the in-task equivalent of the scan's pushed-down
-    ``In(term, ...)`` plus row-group pruning."""
+    ``field_terms`` (``None`` terms: the field statistics alone) — the
+    in-task equivalent of the scan's pushed-down ``In(term, ...)`` plus
+    row-group pruning. ``segments``: only those segments' row groups may
+    be read (the covering segments of a bounded doc set)."""
     import pyarrow.parquet as pq
     from pyarrow import fs
 
@@ -42,6 +52,8 @@ def reads_only_overlapping(searcher, run, field_terms) -> bool:
     read = {tuple(x) for t in ex.task_stats() for x in t["read"]}
     want = set()
     for seg, uris in ex.files.items():
+        if segments is not None and seg not in segments:
+            continue
         for fi, uri in enumerate(uris):
             filesystem, path = fs.FileSystem.from_uri(uri)
             md = pq.ParquetFile(path, filesystem=filesystem).metadata
@@ -51,10 +63,28 @@ def reads_only_overlapping(searcher, run, field_terms) -> bool:
                 fst = md.row_group(rg).column(fc).statistics
                 tst = md.row_group(rg).column(tc).statistics
                 if any(fst.min <= f <= fst.max
-                       and any(tst.min <= t <= tst.max for t in ts)
+                       and (ts is None
+                            or any(tst.min <= t <= tst.max for t in ts))
                        for f, ts in field_terms.items()):
                     want.add((seg, fi, rg))
     return bool(read) and read == want
+
+
+def every_segment_answers(searcher, plan) -> bool:
+    """Collect ``plan()`` (per-segment rows of a query holding no postings
+    term) and check that its executor run read no postings row, yet every
+    segment's kernel returned docs of its own docID range: the uncovered
+    segments were visited by executor tasks, not filled in by the
+    driver."""
+    ex = searcher.reader.segment_executor()
+    docs = [int(r["doc_id"]) for r in searcher._collect(plan())]
+    answered = {s for s, (lo, hi) in searcher._segment_doc_bounds().items()
+                if any(lo <= d < hi for d in docs)}
+    stats = ex.task_stats()
+    return (answered == set(ex.files)
+            and sorted(x for t in stats for x in t["segments"])
+            == sorted(ex.files)
+            and all(t["postings_rows"] == 0 for t in stats))
 
 
 def main(sf_dir: str):
@@ -91,13 +121,19 @@ def main(sf_dir: str):
     # expansion resolves on the driver dictionary and reaches the scan as a
     # literal predicate, not a semi-join behind a full-field scan
     from lucene_spark.search import ast as _ast
+    from lucene_spark.search.multiterm import matching_docs_df
     from lucene_spark.search.searcher import IndexSearcher
 
     srch = IndexSearcher(spark, d)
-    pq = _ast.MultiTermQuery("prefix", "v")  # >1 matching term → In(…)
-    sections.append(("prefix TOP-K postings plan via hybrid expansion "
-                     "(expect PushedFilters In(term,...))",
-                     capture(srch._multiterm_postings(pq))))
+    pq = _ast.MultiTermQuery("prefix", "v")  # >1 matching term
+
+    def prefix_df():
+        return matching_docs_df(srch.reader, srch._multiterm_source(pq))
+
+    sections.append(("prefix match set via hybrid expansion (expect Range "
+                     "-> MapInPandas, NO Exchange, NO Scan parquet: the "
+                     "driver-expanded terms reach the in-task read)",
+                     capture(prefix_df())))
 
     sections.append(("block-join conversations plan (expect partial_ "
                      "HashAggregate on conv_id before the exchange — "
@@ -120,16 +156,15 @@ def main(sf_dir: str):
                      "BroadcastExchange on the tiny query side + window)",
                      capture(brute_topk(emb))))
 
-    # batched multi-query execution (msearch): ONE postings scan whose
-    # In(term, …) pushdown carries the UNION of every batched query's terms
-    mspecs = []
-    for q in getattr(e, "MSEARCH_QS", ()):
-        wc = srch._weighted_clauses(_ast.normalize(e._parse(q)))
-        if wc:
-            mspecs.extend(wc[0])
-    sections.append(("msearch batched postings scan (expect ONE scan with "
-                     "In(term,...) = union of all batched queries' terms)",
-                     capture(srch._postings_for_specs(mspecs))))
+    # batched multi-query execution (msearch): ONE executor run whose
+    # in-task read covers the UNION of every batched query's terms
+    items = [(i, wc) for i, wc in enumerate(
+        srch._weighted_clauses(_ast.normalize(e._parse(q)))
+        for q in getattr(e, "MSEARCH_QS", ())) if wc]
+    mspecs = [c for _i, (specs, _msm) in items for c in specs]
+    sections.append(("msearch batched plan via the SegmentExecutor (expect "
+                     "Range -> MapInPandas, NO Exchange, NO Scan parquet)",
+                     capture(srch._flat_topk_df(items, 20, True))))
 
     # round-4 operators: all three must stay pure-JVM codegen plans
     from lucene_spark.search.expressions import compile_expression
@@ -175,15 +210,26 @@ def main(sf_dir: str):
                      capture(s.covering_df(
                          [e._parse(t) for t in e.COV_TERMS],
                          e.COV_MIN_MATCH))))
-    sections.append(("rescore second pass (expect PartitionFilters seg "
-                     "pruning + doc_id filter on a k-bounded doc set)",
+    sections.append(("rescore second pass (expect Range -> MapInPandas "
+                     "over the covering segments + doc_id filter on a "
+                     "k-bounded doc set)",
                      capture(s.score_df(e._parse("key"),
                                         doc_ids=[1, 2, 3]))))
 
-    sections.append(("term vectors for a bounded doc set (expect seg "
-                     "PartitionFilters pruning + field EqualTo pushdown — "
-                     "only covering segments are read)",
+    sections.append(("term vectors for a bounded doc set (expect Range -> "
+                     "MapInPandas; only the covering segments' row groups "
+                     "of the field are read)",
                      capture(s.term_vectors([1, 2, 3]))))
+    covering = s._segs_for_docs([1, 2, 3])
+    pruned_reads = [
+        reads_only_overlapping(
+            s, lambda: s._collect(s.score_df(e._parse("key"),
+                                             doc_ids=[1, 2, 3])),
+            {"text": ["key"]}, segments=covering),
+        reads_only_overlapping(
+            s, lambda: s._collect(s.term_vectors([1, 2, 3])),
+            {"text": None}, segments=covering),
+    ]
 
     from lucene_spark.pipeline.curation import (
         contamination_check, stratified_sample)
@@ -249,17 +295,17 @@ def main(sf_dir: str):
     from lucene_spark.search.simpleqp import parse_simple
 
     # '-absent' → every segment lacks the term's postings → the matchall
-    # complement must run DISTRIBUTED (one applyInPandas task per
-    # uncovered segment), never materialized on the driver
-    sections.append(("matchall complement for '-absentterm' (expect a "
-                     "UNION of the postings kernel with a SECOND "
-                     "applyInPandas over the uncovered segment ids — the "
+    # complement must run DISTRIBUTED (executor tasks visit the uncovered
+    # segments), never materialized on the driver
+    def complement():
+        return s._mixed_segment_df(
+            _ast.normalize(parse_simple("-zzqqabsentterm", s.analyzer)), 40)
+
+    sections.append(("matchall complement for '-absentterm' (expect Range "
+                     "-> MapInPandas visiting every segment — the "
                      "whole-corpus complement never lands on the driver)",
-                     capture(s._mixed_segment_df(
-                         __import__("lucene_spark.search.ast",
-                                    fromlist=["normalize"]).normalize(
-                             parse_simple("-zzqqabsentterm", s.analyzer)),
-                         40))))
+                     capture(complement())))
+    complement_visits = every_segment_answers(s, complement)
 
     from lucene_spark.pipeline.contracts import augmented_docs
     from lucene_spark.pipeline.curation import exact_substring_stats
@@ -274,10 +320,12 @@ def main(sf_dir: str):
     from lucene_spark.search.searcher import IndexSearcher as _IS
 
     pay_s = _IS(spark, e._ensure_payload_index(spark, sf_dir))
-    sections.append(("payload score kernel (expect ONE pushed-down "
-                     "postings scan — In(term,…) — and exactly one "
-                     "applyInPandas fold, no join, no extra shuffle)",
+    sections.append(("payload score kernel (expect Range -> MapInPandas: "
+                     "exactly one Python fold, no join, no shuffle)",
                      capture(pay_s.payload_score_df("table", "max"))))
+    payload_reads = reads_only_overlapping(
+        pay_s, lambda: pay_s._collect(pay_s.payload_score_df("table", "max")),
+        {"text": ["table"]})
 
     from lucene_spark.search import intervals as _iv
 
@@ -285,9 +333,12 @@ def main(sf_dir: str):
         _iv.not_containing(_iv.Ordered((("table", "key"), "value"),
                                        max_gaps=10), "query"))
     sections.append(("interval query (filtered minimal-interval kernel) — "
-                     "expect ONE pushed-down postings scan In(term,…) and "
-                     "exactly one applyInPandas kernel, no join",
+                     "expect Range -> MapInPandas: exactly one Python "
+                     "kernel, no join, no shuffle",
                      capture(srch.interval_scored_df(iv_q))))
+    interval_reads = reads_only_overlapping(
+        srch, lambda: srch._collect(srch.interval_scored_df(iv_q)),
+        {"text": _iv.source_terms(iv_q.source)})
 
     geo_s = e._geo_searcher(spark, sf_dir)
     sections.append(("polygon geo query (PNPOLY crossing parity) — expect "
@@ -325,23 +376,22 @@ def main(sf_dir: str):
     # runs through the SegmentExecutor: one Range -> MapInPandas stage, the
     # postings read happens inside the tasks (pyarrow row-group pruning), so
     # the pushdown properties are checked on its per-task counters below
-    items = [(i, wc) for i, wc in enumerate(
-        srch._weighted_clauses(_ast.normalize(e._parse(q)))
-        for q in getattr(e, "MSEARCH_QS", ())) if wc]
+    one = srch._weighted_clauses(_ast.normalize(e._parse("table value")))
     sections.append(("serving top-k plan via the SegmentExecutor (expect "
                      "Range -> MapInPandas, NO Exchange, NO Scan parquet)",
-                     capture(srch._flat_topk_df(items, 20, True))))
+                     capture(srch._flat_topk_df([(0, one)], 10, True))))
     vocab = srch.reader.sorted_terms("text") or []
+    expanded = {"text": [t for t in vocab if t.startswith("v")]}
     serving_reads = [
         reads_only_overlapping(srch, lambda: srch.search("table value", 10),
                                {"text": ["table", "value"]}),
-        reads_only_overlapping(srch, lambda: srch.search(pq, 10),
-                               {"text": [t for t in vocab
-                                         if t.startswith("v")]}),
+        reads_only_overlapping(srch, lambda: srch.search(pq, 10), expanded),
         reads_only_overlapping(
             srch,
             lambda: srch.msearch([e._parse(q) for q in e.MSEARCH_QS], 20),
             srch._spec_field_terms(mspecs)),
+        reads_only_overlapping(srch, lambda: srch._collect(prefix_df()),
+                               expanded),
     ]
 
     import re
@@ -358,10 +408,11 @@ def main(sf_dir: str):
                    "positions" not in txt0.split("ReadSchema")[1][:400]
                    if "ReadSchema" in txt0 else False))
     checks.append(("prefix pushdown", "StartsWith" in sections[1][1]))
-    checks.append(("prefix TOP-K uses In/EqualTo(term,...) pushdown (hybrid)",
-                   bool(re.search(
-                       r"PushedFilters: \[[^\]]*(In|EqualTo)\(`?term`?,",
-                       sections[2][1]))))
+    checks.append(("prefix expansion runs in the executor and reads only "
+                   "the expanded terms' row groups (Range -> MapInPandas, "
+                   "no exchange, no Spark postings scan; counters vs "
+                   "parquet footers)",
+                   executor_only(sections[2][1]) and serving_reads[3]))
     checks.append(("block-join does map-side combine (partial agg on conv)",
                    "partial_max" in sections[3][1]
                    or "partial_" in sections[3][1]))
@@ -370,9 +421,10 @@ def main(sf_dir: str):
                    and "ArrowEval" not in sections[4][1]))
     checks.append(("ANN broadcasts query side",
                    "Broadcast" in sections[5][1]))
-    checks.append(("msearch single scan pushes the term UNION",
-                   bool(re.search(r"In\(`?term`?,[^\]]*spark", sections[6][1]))
-                   and "customer" in sections[6][1]))
+    checks.append(("msearch is one executor run reading only the row "
+                   "groups of the term UNION (Range -> MapInPandas, no "
+                   "exchange; counters vs parquet footers)",
+                   executor_only(sections[6][1]) and serving_reads[2]))
     checks.append(("passage highlighter stays JVM (no Python eval)",
                    "Python" not in sections[7][1]
                    and "partial_" in sections[7][1]))
@@ -398,15 +450,14 @@ def main(sf_dir: str):
                    "(partial count+sum before the doc_id shuffle)",
                    "partial_count" in sections[12][1]
                    and "partial_sum" in sections[12][1]))
-    checks.append(("rescore second pass prunes segments "
-                   "(seg partition filter reaches the postings scan)",
-                   bool(re.search(r"PartitionFilters: \[[^\]]*seg",
-                                  sections[13][1]))))
-    checks.append(("term vectors prune segments + push the field filter",
-                   bool(re.search(r"PartitionFilters: \[[^\]]*seg",
-                                  sections[14][1]))
-                   and bool(re.search(r"EqualTo\(`?field`?,",
-                                      sections[14][1]))))
+    checks.append(("rescore second pass reads only the covering segments' "
+                   "row groups of its terms (Range -> MapInPandas, no "
+                   "exchange; counters vs parquet footers)",
+                   executor_only(sections[13][1]) and pruned_reads[0]))
+    checks.append(("term vectors read only the covering segments' row "
+                   "groups of the field (Range -> MapInPandas, no "
+                   "exchange; counters vs parquet footers)",
+                   executor_only(sections[14][1]) and pruned_reads[1]))
     checks.append(("decontamination broadcasts the eval shingles and "
                    "combines map-side (pure JVM)",
                    "BroadcastHashJoin" in sections[15][1]
@@ -443,35 +494,34 @@ def main(sf_dir: str):
                    and "EvalPython" not in sections[22][1]
                    # one Python node = tree line + detail line
                    and sections[22][1].count("InPandas") <= 2))
-    checks.append(("matchall complement runs distributed (Union of the "
-                   "postings kernel with a per-uncovered-segment "
-                   "applyInPandas — at least two Python kernels, no "
-                   "whole-corpus driver relation)",
-                   "Union" in sections[23][1]
-                   # the complement kernel is grouped-applyInPandas over
-                   # the uncovered segment ids — run_uncovered in the plan
-                   # proves the whole-corpus complement is executor-side
-                   and "run_uncovered" in sections[23][1]
-                   and "FlatMapGroupsInPandas" in sections[23][1]))
+    checks.append(("matchall complement runs distributed (executor tasks "
+                   "visit every uncovered segment and each returns its own "
+                   "docs; Range -> MapInPandas, no whole-corpus driver "
+                   "relation)",
+                   executor_only(sections[23][1])
+                   and "LocalTableScan" not in sections[23][1]
+                   and complement_visits))
     checks.append(("exact-substring dedup: two-stage window-hash agg "
                    "(partial_count+partial_min) + Window sweep, no Python",
                    "partial_count" in sections[24][1]
                    and "partial_min" in sections[24][1]
                    and "Window" in sections[24][1]
                    and "Python" not in sections[24][1]))
-    checks.append(("payload fold is one pushed-down scan + one Python "
-                   "kernel (no join)",
-                   bool(re.search(r"PushedFilters: \[[^\]]*(In|EqualTo)"
-                                  r"\(`?term`?,", sections[25][1]))
-                   and sections[25][1].count("FlatMapGroupsInPandas") == 2
-                   and "Join" not in sections[25][1]))
+    checks.append(("payload fold is one executor kernel reading only the "
+                   "term's row groups (Range -> MapInPandas, no join, no "
+                   "exchange; counters vs parquet footers)",
+                   executor_only(sections[25][1])
+                   and sections[25][1].count("MapInPandas") == 2
+                   and "Join" not in sections[25][1]
+                   and payload_reads))
 
-    checks.append(("interval kernel: one pushed-down scan + one "
-                   "applyInPandas, no join",
-                   bool(re.search(r"PushedFilters: \[[^\]]*In\(`?term`?,",
-                                  sections[26][1]))
-                   and sections[26][1].count("FlatMapGroupsInPandas") == 2
-                   and "Join" not in sections[26][1]))
+    checks.append(("interval kernel is one executor kernel reading only "
+                   "its terms' row groups (Range -> MapInPandas, no join, "
+                   "no exchange; counters vs parquet footers)",
+                   executor_only(sections[26][1])
+                   and sections[26][1].count("MapInPandas") == 2
+                   and "Join" not in sections[26][1]
+                   and interval_reads))
     checks.append(("polygon predicate is pure codegen (no Python, no "
                    "pre-projection exchange)",
                    "Python" not in sections[27][1]
@@ -496,10 +546,7 @@ def main(sf_dir: str):
 
     checks.append(("serving top-k is one stage: Range -> MapInPandas, no "
                    "exchange, no Spark postings scan",
-                   "MapInPandas" in sections[30][1]
-                   and "Range" in sections[30][1]
-                   and "Exchange" not in sections[30][1]
-                   and "Scan parquet" not in sections[30][1]))
+                   executor_only(sections[30][1])))
     checks.append(("serving term top-k reads only the query terms' row "
                    "groups (executor counters vs parquet footers)",
                    serving_reads[0]))

@@ -108,7 +108,7 @@ def main(reps: int = 7):
             searcher.reader,
             searcher.reader.postings_semijoin(
                 matched_terms_df(searcher.reader, pq), pq.field),
-            10, pq.boost, deleted_loader=searcher.reader.deleted_loader())
+            10, pq.boost)
 
     semi()
     ts = []
