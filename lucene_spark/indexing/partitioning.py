@@ -111,23 +111,33 @@ def plan_boundaries(df, num_segments: int, sample_mod: int = 101,
        distributed, and the driver still sees only ~200 × num_segments.
 
     Falls back to the full key set when the corpus is too small for the
-    requested segment count. ``_stats`` (tests): records how many keys were
-    actually collected to the driver.
+    requested segment count: one collect capped below ``2 × budget`` keys
+    (the count the thinning would keep whole anyway), no count over every
+    key. ``_stats`` (tests): records how many keys were actually collected
+    to the driver.
     """
     from pyspark.sql import functions as F
 
     if num_segments <= 1:
         return []
+    budget = max(target_per_segment * num_segments, 4 * num_segments)
     keys_df = df.select(sort_key_expr(index_sort).alias("k"))
     sampled = keys_df.filter(F.pmod(F.xxhash64("k"), F.lit(sample_mod)) == 0)
     n_sample = sampled.count()
+    sample = None
     if n_sample < 4 * num_segments and sample_mod > 1:
-        sampled, n_sample = keys_df, keys_df.count()
+        # past the cap (duplicate-heavy keys the pre-sample missed) thin
+        # every key as below
+        cap = 2 * budget - 1
+        small = keys_df.limit(cap + 1).toPandas()["k"]
+        if len(small) <= cap:
+            sample, n_sample = small.sort_values().to_numpy(), len(small)
+        else:
+            sampled, n_sample = keys_df, keys_df.count()
     if n_sample == 0:
         return []
-    budget = max(target_per_segment * num_segments, 4 * num_segments)
     thin_mod = max(1, n_sample // budget)
-    while True:
+    while sample is None:
         if thin_mod > 1:
             thin = sampled.filter(
                 F.pmod(F.xxhash64(F.concat(F.col("k"), F.lit("\x02b"))),
@@ -136,12 +146,11 @@ def plan_boundaries(df, num_segments: int, sample_mod: int = 101,
         else:
             thin = sampled
         sample = thin.toPandas()["k"].sort_values().to_numpy()
-        if sample.size >= num_segments or thin_mod == 1:
-            break
-        # degenerate thinning (heavily duplicated keys hash together):
-        # deterministically relax the filter and retry — O(log) scans worst
-        # case, driver collection still bounded by the filter itself
-        thin_mod = max(1, thin_mod // 8)
+        if sample.size < num_segments and thin_mod > 1:
+            # degenerate thinning (heavily duplicated keys hash together):
+            # deterministically relax the filter and retry — O(log) scans
+            # worst case, driver collection still bounded by the filter
+            sample, thin_mod = None, max(1, thin_mod // 8)
     if _stats is not None:
         _stats["collected"] = int(sample.size)
         _stats["pre_sample"] = int(n_sample)

@@ -714,7 +714,7 @@ def count_leaf_clauses(q) -> int:
     if isinstance(q, MultiPhraseQuery):
         return sum(len(s) for s in q.slots)
     if isinstance(q, (SpanNearQuery, SpanFirstQuery)):
-        # tuple OR list slots — _span_match_df accepts both spellings
+        # tuple OR list slots — _span_match accepts both spellings
         return sum(len(t) if isinstance(t, (tuple, list)) else 1
                    for t in q.terms)
     if isinstance(q, (SpanNotQuery, SpanContainingQuery, SpanWithinQuery)):

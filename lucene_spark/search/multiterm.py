@@ -333,13 +333,6 @@ def _first_k_docs(rows, k: int, dele) -> np.ndarray:
     return np.unique(np.concatenate(parts))[:k]
 
 
-def _collect(reader, df):
-    from lucene_spark.session import no_aqe
-
-    with no_aqe(reader.spark):
-        return df.collect()
-
-
 def _union_docs(rows) -> np.ndarray:
     """The sorted union doc set of one segment's posting blocks."""
     d, _st = decode_doc_ids_batch(rows["first_doc"], rows["last_doc"],
@@ -367,9 +360,9 @@ def constant_score_topk(reader, source, k: int, boost: float):
     def kernel(seg, rows):
         return hits_frame(_first_k_docs(rows, k, seg.deleted))
 
-    out = _collect(reader, reader.segment_executor().run(
-        source, DOC_COLS, kernel, DOCS))
-    docs = sorted(int(r["doc_id"]) for r in out)[:k]
+    out = reader.segment_executor().prepare(
+        source, DOC_COLS, kernel, DOCS).collect()
+    docs = np.sort(out["doc_id"].to_numpy())[:k].tolist()
     b = float(F32(boost))  # float32 score contract (goldens mirror this)
     return [ScoreDoc(d, b) for d in docs]
 
@@ -396,9 +389,9 @@ def constant_score_count(reader, source) -> int:
     def kernel(seg, rows):
         return hits_frame(seg.live(_union_docs(rows)), count=True)
 
-    out = _collect(reader, reader.segment_executor().run(
-        source, DOC_COLS, kernel, COUNT))
-    return sum(int(r["n"]) for r in out)
+    out = reader.segment_executor().prepare(
+        source, DOC_COLS, kernel, COUNT).collect()
+    return int(out["n"].sum())
 
 
 def _field_scorer(reader, similarity, boost, dfs, field):
@@ -411,8 +404,8 @@ def _field_scorer(reader, similarity, boost, dfs, field):
     return reader.similarity_scorer(similarity, boost, dfs)
 
 
-def synonym_scored_df(reader, similarity, q: ast.SynonymQuery, k=None):
-    """SynonymQuery scored DataFrame: per-doc tf summed across terms, one
+def synonym_scored(reader, similarity, q: ast.SynonymQuery, k=None):
+    """SynonymQuery scored executor run: per-doc tf summed across terms, one
     BM25 score with blended df = max over the terms' docFreqs
     (``core/search/SynonymQuery.java:205-222``). ``k`` truncates per
     segment (top-k path); ``None`` keeps every matching doc — the
@@ -439,19 +432,18 @@ def synonym_scored_df(reader, similarity, q: ast.SynonymQuery, k=None):
         uniq, tfsum, norm = seg.live(uniq, tfsum, norm)
         return hits_frame(uniq, scorer.score(tfsum, norm), k=k)
 
-    return reader.segment_executor().run(
+    return reader.segment_executor().prepare(
         {q.field: present}, SCORE_COLS, kernel, SCORED)
 
 
 def synonym_topk(reader, similarity, q: ast.SynonymQuery, k: int):
-    """SynonymQuery top-k via :func:`synonym_scored_df` (k rows per
+    """SynonymQuery top-k via :func:`synonym_scored` (k rows per
     segment, driver merges k only)."""
-    return _topk(reader, synonym_scored_df(reader, similarity, q, k), k)
+    return _topk(synonym_scored(reader, similarity, q, k), k)
 
 
-def dismax_scored_df(reader, similarity, q: ast.DisjunctionMaxQuery,
-                     k=None):
-    """DisjunctionMaxQuery scored DataFrame: score = max(sub) +
+def dismax_scored(reader, similarity, q: ast.DisjunctionMaxQuery, k=None):
+    """DisjunctionMaxQuery scored executor run: score = max(sub) +
     tie_breaker × Σ(others) (``core/search/DisjunctionMaxQuery.java``).
     ``k`` truncates per segment; ``None`` keeps every matching doc.
     Returns None when no term is present."""
@@ -493,18 +485,18 @@ def dismax_scored_df(reader, similarity, q: ast.DisjunctionMaxQuery,
         score = (smax + (tie * (ssum.astype(F32) - smax).astype(F32)).astype(F32)).astype(F32)
         return hits_frame(*seg.live(uniq, score), k=k)
 
-    return reader.segment_executor().run(
+    return reader.segment_executor().prepare(
         {q.field: present}, SCORE_COLS, kernel, SCORED)
 
 
 def dismax_topk(reader, similarity, q: ast.DisjunctionMaxQuery, k: int):
-    """DisjunctionMax top-k via :func:`dismax_scored_df`."""
-    return _topk(reader, dismax_scored_df(reader, similarity, q, k), k)
+    """DisjunctionMax top-k via :func:`dismax_scored`."""
+    return _topk(dismax_scored(reader, similarity, q, k), k)
 
 
-def _topk(reader, df, k: int):
-    """Driver top-k merge (``searcher._topk_hits``) over per-segment scored
-    rows; None (no term present) → no hits."""
+def _topk(run, k: int):
+    """Driver top-k merge (``searcher._topk_hits``) over a run's
+    per-segment scored rows; None (no term present) → no hits."""
     from lucene_spark.search.searcher import _topk_hits
 
-    return [] if df is None else _topk_hits(_collect(reader, df), k)
+    return [] if run is None else _topk_hits(run.collect(), k)

@@ -18,6 +18,7 @@ offset map as a literal projection (broadcast join past 4096 segments).
 from __future__ import annotations
 
 import json
+import threading
 
 from lucene_spark.indexing import tableio
 from lucene_spark.similarity import BM25Similarity
@@ -269,13 +270,18 @@ class IndexReader:
                     & F.col("term").isin(list(set(terms))))
         )
 
+    _EXECUTOR_LOCK = threading.Lock()
+
     def segment_executor(self):
         """The reader's :class:`~lucene_spark.search.executor.SegmentExecutor`
-        (built on first use from the postings listing resolved at open)."""
+        (built once, on first use, from the postings listing resolved at
+        open and its footers; concurrent first callers share one)."""
         if not hasattr(self, "_segment_executor"):
-            from lucene_spark.search.executor import SegmentExecutor
+            with IndexReader._EXECUTOR_LOCK:
+                if not hasattr(self, "_segment_executor"):
+                    from lucene_spark.search.executor import SegmentExecutor
 
-            self._segment_executor = SegmentExecutor(self)
+                    self._segment_executor = SegmentExecutor(self)
         return self._segment_executor
 
     def postings_semijoin(self, terms_df, field: str = "text"):

@@ -20,7 +20,8 @@ import pandas as pd
 
 from lucene_spark.analysis import get_analyzer
 from lucene_spark.search import ast
-from lucene_spark.search.executor import COUNT, DOCS, SCORED, hits_frame
+from lucene_spark.search.executor import (COUNT, DOCS, SCORED, SegmentRun,
+                                          hits_frame)
 from lucene_spark.search.phrase import local_rows
 from lucene_spark.search.reader import IndexReader
 from lucene_spark.search.wand import ClauseSpec, keyed_rows, segment_topk
@@ -173,13 +174,23 @@ def _payload_rows(rows):
     return d, tf, decode_posting_bufs(list(rows["payloads"]))
 
 
-def _topk_hits(rows, k: int) -> list[ScoreDoc]:
+def _run_counters(stats: list[dict]) -> dict | None:
+    """One executor run's per-pack counters (``task_stats``) summed."""
+    if not stats:
+        return None
+    out = {"where": stats[0]["where"], "packs": len(stats),
+           "segments": sum(len(e["segments"]) for e in stats)}
+    for key in ("row_groups", "row_groups_read", "postings_rows",
+                "postings_bytes", "kernel_ms"):
+        out[key] = sum(e[key] for e in stats)
+    return out
+
+
+def _topk_hits(hits: pd.DataFrame, k: int) -> list[ScoreDoc]:
     """TopDocs.merge over collected (doc_id, score) rows: the exact global
     tie-break (score DESC, doc_id ASC), first k."""
-    if not rows:
-        return []
-    d = np.array([r["doc_id"] for r in rows], dtype=np.int64)
-    s = np.array([r["score"] for r in rows], dtype=np.float32)
+    d = hits["doc_id"].to_numpy(np.int64)
+    s = hits["score"].to_numpy(np.float32)
     order = np.lexsort((d, -s.astype(np.float64)))[:k]
     return [ScoreDoc(int(d[i]), float(s[i])) for i in order]
 
@@ -424,12 +435,17 @@ class IndexSearcher:
         )
         return out.limit(int(k)) if k is not None else out
 
-    def _collect(self, df):
-        """Execute a serving-path plan without AQE (see session.no_aqe)."""
+    def _collect(self, plan):
+        """Execute a serving-path plan: a prepared executor run
+        (:class:`SegmentRun` — in the driver or as one Spark stage by its
+        planned read, a pandas frame back), else a DataFrame without AQE
+        (see session.no_aqe)."""
         from lucene_spark.session import no_aqe
 
+        if isinstance(plan, SegmentRun):
+            return plan.collect()
         with no_aqe(self.spark):
-            return df.collect()
+            return plan.collect()
 
     def parse(self, query_str: str):
         kw = tuple(self.reader.manifest.get("keyword_fields", []))
@@ -569,18 +585,18 @@ class IndexSearcher:
         if isinstance(query, ast.SPAN_QUERY_TYPES):
             # constant-score span queries: k smallest matching docIDs (ties
             # → docID asc), match set distributed per segment
-            df = self._span_match_df(query)
-            if df is None:
+            run = self._span_match(query)
+            if run is None:
                 return []
-            rows = self._collect(df.orderBy("doc_id").limit(k))
+            rows = self._collect(run.df().orderBy("doc_id").limit(k))
             b = float(F32(query.boost))
             return [ScoreDoc(int(r["doc_id"]), b) for r in rows]
         if isinstance(query, ast.TermAutomatonQuery):
             # same constant-score contract as the span family
-            df = self._automaton_match_df(query)
-            if df is None:
+            run = self._automaton_match(query)
+            if run is None:
                 return []
-            rows = self._collect(df.orderBy("doc_id").limit(k))
+            rows = self._collect(run.df().orderBy("doc_id").limit(k))
             b = float(F32(query.boost))
             return [ScoreDoc(int(r["doc_id"]), b) for r in rows]
         if isinstance(query, ast.IntervalQuery):
@@ -624,7 +640,7 @@ class IndexSearcher:
         if mode == "auto":
             mode = self._pick_mode(wc[0], k)
         return _topk_hits(self._collect(
-            self._flat_topk_df([(0, wc)], k, prune=mode == "wand")), k)
+            self._flat_topk([(0, wc)], k, prune=mode == "wand")), k)
 
     def msearch(self, queries, k: int = 10, mode: str = "wand"):
         """Batched multi-query top-k: N queries, ONE postings read, ONE
@@ -662,28 +678,25 @@ class IndexSearcher:
                 batched[i] = wc
         if not batched:
             return results
-        out = self._collect(self._flat_topk_df(sorted(batched.items()), k,
-                                               prune=mode == "wand"))
-        per_q: dict[int, list] = {qid: [] for qid in batched}
-        for r in out:
-            per_q[int(r["qid"])].append(r)
-        for qid, rows in per_q.items():
-            results[qid] = _topk_hits(rows, k)
+        out = self._collect(self._flat_topk(sorted(batched.items()), k,
+                                            prune=mode == "wand"))
+        for qid in batched:
+            results[qid] = _topk_hits(out[out["qid"] == qid], k)
         return results
 
-    def _flat_topk_df(self, items, k: int, prune: bool):
+    def _flat_topk(self, items, k: int, prune: bool) -> SegmentRun:
         """(qid, doc_id, score) per-segment top-k rows of the flat term
         booleans ``items`` = [(qid, (specs, msm)), ...] — ONE executor run
-        whose in-task read covers the union of every query's terms, the
-        kernel shared by :meth:`search` (one item) and :meth:`msearch`."""
+        whose read covers the union of every query's terms, the kernel
+        shared by :meth:`search` (one item) and :meth:`msearch`."""
         specs = [c for _qid, (sp, _msm) in items for c in sp]
-        return self.reader.segment_executor().run(
+        return self.reader.segment_executor().prepare(
             self._spec_field_terms(specs), FLAT_COLS,
             _flat_topk_kernel(items, k, prune, self.FIELD_SEP),
             "qid long, doc_id long, score float")
 
-    def _flat_scored_df(self, specs, msm, count: bool = False,
-                        segments=None):
+    def _flat_scored(self, specs, msm, count: bool = False,
+                     segments=None) -> SegmentRun:
         """Every hit of a flat term boolean: (doc_id, score) rows, or with
         ``count`` one hit count per segment (billions of hits never leave
         their segment's task) — the unpruned ``segment_topk`` with k past
@@ -697,7 +710,7 @@ class IndexSearcher:
                                 prune=False, deleted=seg.deleted)
             return hits_frame(d, s, count)
 
-        return self.reader.segment_executor().run(
+        return self.reader.segment_executor().prepare(
             self._spec_field_terms(specs), FLAT_COLS, kernel,
             COUNT if count else SCORED, segments=segments)
 
@@ -1036,9 +1049,9 @@ class IndexSearcher:
         )
         return clauses, cache, q.min_should_match, field_terms, need_positions
 
-    def _mixed_segment_df(self, q: ast.BooleanQuery, k,
-                          count_only: bool = False,
-                          match_only: bool = False):
+    def _mixed_segment(self, q: ast.BooleanQuery, k,
+                       count_only: bool = False,
+                       match_only: bool = False) -> SegmentRun | None:
         """Per-segment rows for a mixed boolean: (doc_id, score) top-k rows,
         or — with ``count_only`` — one hit-count row per segment (the
         distributed TotalHitCount path: billions of hits never leave their
@@ -1078,7 +1091,7 @@ class IndexSearcher:
                                          offset=seg.offset)
             return hits_frame(d, s, count_only)
 
-        return self.reader.segment_executor().run(
+        return self.reader.segment_executor().prepare(
             field_terms, ["field"] + POS_COLS, kernel,
             COUNT if count_only else SCORED,
             every_segment=seg_hi is not None)
@@ -1087,10 +1100,10 @@ class IndexSearcher:
         """Boolean queries whose clauses mix terms with phrases and/or
         multi-term expansions (exhaustive; phrase clauses have no block-max
         bound yet, so no pruning)."""
-        df = self._mixed_segment_df(q, k)
-        if df is None:
+        run = self._mixed_segment(q, k)
+        if run is None:
             return []
-        return _topk_hits(self._collect(df), k)
+        return _topk_hits(self._collect(run), k)
 
     def _phrase_plan(self, q):
         """Shared setup for phrase-shaped queries: stats-check the terms and
@@ -1151,15 +1164,14 @@ class IndexSearcher:
             return []
         return self._run_phrase_kernel(*plan, k=k)
 
-    def _phrase_scored_df(self, field_terms, scorer, kernel, k=None,
-                          segments=None, out: str = SCORED):
-        """Distributed DataFrame for a phrase-shaped query: per-segment
-        positions kernel + similarity scoring, one executor run over
-        ``field_terms``. ``out`` is the schema: SCORED (doc_id, score)
-        rows, DOCS the bare match set, COUNT one hit count per segment.
-        ``k`` truncates scored rows per segment (the top-k path); ``None``
-        keeps every matching doc (the exhaustive score_df substrate — stays
-        distributed, nothing collected here). ``segments`` restricts the
+    def _phrase_scored(self, field_terms, scorer, kernel, k=None,
+                       segments=None, out: str = SCORED) -> SegmentRun:
+        """The executor run of a phrase-shaped query: per-segment
+        positions kernel + similarity scoring over ``field_terms``. ``out``
+        is the schema: SCORED (doc_id, score) rows, DOCS the bare match
+        set, COUNT one hit count per segment. ``k`` truncates scored rows
+        per segment (the top-k path); ``None`` keeps every matching doc
+        (the exhaustive score_df substrate). ``segments`` restricts the
         run to those segment ids."""
         if not self.reader.manifest.get("positions", False):
             raise ValueError("index was built without positions; "
@@ -1171,20 +1183,21 @@ class IndexSearcher:
                 return hits_frame(d, count=out == COUNT)
             return hits_frame(d, scorer.score(f, nm), k=k)
 
-        return self.reader.segment_executor().run(
+        return self.reader.segment_executor().prepare(
             field_terms, POS_COLS, run_segment, out, segments=segments)
 
     def _run_phrase_kernel(self, field_terms, scorer, kernel, k: int):
-        """Top-k driver merge over :meth:`_phrase_scored_df` (k rows per
+        """Top-k driver merge over :meth:`_phrase_scored` (k rows per
         segment collected, never the full match set)."""
         return _topk_hits(self._collect(
-            self._phrase_scored_df(field_terms, scorer, kernel, k=k)), k)
+            self._phrase_scored(field_terms, scorer, kernel, k=k)), k)
 
-    def _span_match_df(self, q):
-        """(doc_id) DataFrame of span matches (SpanNear / SpanFirst /
-        SpanNot / SpanContaining / SpanWithin) — per-segment kernel fan-out
-        (``phrase.segment_span_near``), None when a required term is absent
-        from the corpus (a required sub-span can never match)."""
+    def _span_match(self, q, count: bool = False) -> SegmentRun | None:
+        """The executor run of span matches (SpanNear / SpanFirst /
+        SpanNot / SpanContaining / SpanWithin): the (doc_id) match set, or
+        with ``count`` one hit count per segment — per-segment kernel
+        fan-out (``phrase.segment_span_near``), None when a required term
+        is absent from the corpus (a required sub-span can never match)."""
         from lucene_spark.search.phrase import segment_span_near
 
         terms = [tuple(t) if isinstance(t, (tuple, list)) else t
@@ -1221,14 +1234,16 @@ class IndexSearcher:
             d = segment_span_near(local_rows(rows, seg.offset), terms, slop,
                                   in_order, max_end=max_end, exclude=exclude,
                                   pre=pre, post=post, contain=contain)
-            return hits_frame(seg.live(d + seg.offset))
+            return hits_frame(seg.live(d + seg.offset), count=count)
 
-        return self.reader.segment_executor().run(
-            {q.field: fetch}, POS_COLS, kernel, DOCS)
+        return self.reader.segment_executor().prepare(
+            {q.field: fetch}, POS_COLS, kernel, COUNT if count else DOCS)
 
-    def _automaton_match_df(self, q: "ast.TermAutomatonQuery"):
-        """(doc_id) DataFrame of TermAutomatonQuery matches — per-segment
-        DAG kernel fan-out (``automaton.segment_term_automaton``). None when
+    def _automaton_match(self, q: "ast.TermAutomatonQuery",
+                         count: bool = False) -> SegmentRun | None:
+        """The executor run of TermAutomatonQuery matches (the match set,
+        or with ``count`` one hit count per segment) — per-segment DAG
+        kernel fan-out (``automaton.segment_term_automaton``). None when
         NO query term exists in the corpus (every path needs at least one
         term arc, so nothing can accept)."""
         from lucene_spark.search.automaton import (
@@ -1254,14 +1269,23 @@ class IndexSearcher:
             # segment-LOCAL docIDs into the kernel (doc·2^34 keys), offset out
             d = segment_term_automaton(local_rows(rows, seg.offset),
                                        transitions, n_states, accept)
-            return hits_frame(seg.live(d + seg.offset))
+            return hits_frame(seg.live(d + seg.offset), count=count)
 
-        return self.reader.segment_executor().run(
-            {q.field: present}, POS_COLS, kernel, DOCS)
+        return self.reader.segment_executor().prepare(
+            {q.field: present}, POS_COLS, kernel, COUNT if count else DOCS)
 
     def interval_scored_df(self, q: ast.IntervalQuery):
-        """(doc_id, score) DataFrame of an IntervalQuery's full match set —
-        per-segment minimal-interval kernel fan-out
+        """(doc_id, score) DataFrame of an IntervalQuery's full match set
+        (None when a required sub-source is corpus-absent)."""
+        run = self._interval_scored(q)
+        return None if run is None else run.df()
+
+    def _interval_scored(self, q: ast.IntervalQuery, k=None,
+                         out: str = SCORED) -> SegmentRun | None:
+        """The executor run of an IntervalQuery: (doc_id, score) rows — a
+        segment's top ``k`` when set, else its full match set — or with
+        ``out=COUNT`` one hit count per segment. Per-segment
+        minimal-interval kernel fan-out
         (``intervals.segment_interval_postings``,
         ``queries/intervals/IntervalScorer.java:69-75`` sloppy-freq +
         ``IntervalScoreFunction.java:56-72`` saturation). None when a
@@ -1286,22 +1310,18 @@ class IndexSearcher:
             # keys must not see global IDs past 2^29), offset the result
             d, sc = iv.segment_interval_postings(local_rows(rows, seg.offset),
                                                  source, pivot, boost)
-            return hits_frame(*seg.live(d + seg.offset, sc))
+            d, sc = seg.live(d + seg.offset, sc)
+            return (hits_frame(d, count=True) if out == COUNT
+                    else hits_frame(d, sc, k=k))
 
-        return self.reader.segment_executor().run(
-            {q.field: terms}, POS_COLS, kernel, SCORED)
+        return self.reader.segment_executor().prepare(
+            {q.field: terms}, POS_COLS, kernel, out)
 
     def _search_intervals(self, q: ast.IntervalQuery, k: int):
         """Top-k IntervalQuery hits: per-segment scored kernel, k rows per
         segment collected, driver merge (score DESC, docID ASC)."""
-        from pyspark.sql import functions as F
-
-        df = self.interval_scored_df(q)
-        if df is None:
-            return []
-        out = self._collect(
-            df.orderBy(F.col("score").desc(), F.col("doc_id")).limit(k))
-        return [ScoreDoc(int(r["doc_id"]), float(r["score"])) for r in out]
+        run = self._interval_scored(q, k=k)
+        return [] if run is None else _topk_hits(self._collect(run), k)
 
     def _phrase_count(self, q) -> int:
         """Distributed phrase / multiphrase hit count: one count row per
@@ -1310,8 +1330,11 @@ class IndexSearcher:
         plan = self._phrase_plan(q)
         if plan is None:
             return 0
-        out = self._collect(self._phrase_scored_df(*plan, out=COUNT))
-        return sum(int(r["n"]) for r in out)
+        return self._count_rows(self._phrase_scored(*plan, out=COUNT))
+
+    def _count_rows(self, run: SegmentRun | None) -> int:
+        """The sum of a COUNT run's per-segment hit counts (0 for None)."""
+        return 0 if run is None else int(self._collect(run)["n"].sum())
 
     def count(self, query) -> int:
         """TotalHitCountCollector analogy — exact hit count, distributed on
@@ -1332,16 +1355,16 @@ class IndexSearcher:
             return constant_score_count(self.reader,
                                         self._present_terms(query))
         if isinstance(query, ast.ConstantScoreQuery):
-            return int(self.match_df(query.query).count())
+            # the wrapper keeps its inner query's match set
+            if isinstance(query.query, ast.MatchAllDocsQuery):
+                return int(self.match_df(query.query).count())
+            return self.count(query.query)
         if isinstance(query, ast.SPAN_QUERY_TYPES):
-            df = self._span_match_df(query)
-            return 0 if df is None else int(df.count())
+            return self._count_rows(self._span_match(query, count=True))
         if isinstance(query, ast.TermAutomatonQuery):
-            df = self._automaton_match_df(query)
-            return 0 if df is None else int(df.count())
+            return self._count_rows(self._automaton_match(query, count=True))
         if isinstance(query, ast.IntervalQuery):
-            df = self.interval_scored_df(query)
-            return 0 if df is None else int(df.count())
+            return self._count_rows(self._interval_scored(query, out=COUNT))
         if isinstance(query, ast.KnnQuery):
             # standalone KNN (also: a single-MUST boolean normalize
             # collapses to): hit count = size of the k-bounded rewrite set
@@ -1354,18 +1377,14 @@ class IndexSearcher:
         ):
             # counts are similarity-independent → match_only lets non-BM25
             # searchers count mixed booleans too
-            df = self._mixed_segment_df(query, None, count_only=True,
-                                        match_only=True)
-            if df is None:
-                return 0
-            return sum(int(r["n"]) for r in self._collect(df))
+            return self._count_rows(self._mixed_segment(
+                query, None, count_only=True, match_only=True))
         wc = self._weighted_clauses(query)
         if wc is None:
             return 0
         # distributed count: per-segment hit counts summed (never ships the
         # doc list to the driver — a hot term at 10^12 scale matches billions)
-        out = self._collect(self._flat_scored_df(*wc, count=True))
-        return sum(int(r["n"]) for r in out)
+        return self._count_rows(self._flat_scored(*wc, count=True))
 
     def _present_terms(self, q):
         """``{field: terms}`` of a synonym / dismax query's corpus-present
@@ -1515,8 +1534,11 @@ class IndexSearcher:
         merge (one number — per-segment kernels run inside Spark tasks).
 
         Returns {"hits", "mode", "leaf_clauses", "breakdown": {phase:
-        seconds}, "total_sec"} — a diagnostic wrapper; results are
-        identical to :meth:`search` (pytest-pinned)."""
+        seconds}, "total_sec", "executor"} — a diagnostic wrapper; results
+        are identical to :meth:`search` (pytest-pinned). ``executor`` sums
+        the per-pack counters of the query's last executor run (None when
+        it ran none): where it ran, packs, segments, row groups in the
+        files and read, postings rows and bytes, kernel ms."""
         import time
 
         t0 = time.perf_counter()
@@ -1532,9 +1554,12 @@ class IndexSearcher:
             wc = self._weighted_clauses(q)
             if wc is not None:
                 mode = self._pick_mode(wc[0], k)
+        ex = self.reader.segment_executor()
+        before = ex.last_run
         t_weight = time.perf_counter()
         hits = self.search(q, k=k)
         t_exec = time.perf_counter()
+        stats = ex.task_stats() if ex.last_run != before else []
         return {
             "hits": hits,
             "mode": mode,
@@ -1545,6 +1570,7 @@ class IndexSearcher:
                 "execute_merge_sec": t_exec - t_weight,
             },
             "total_sec": t_exec - t0,
+            "executor": _run_counters(stats),
         }
 
     def group_facets(self, query, group_df, group_col: str,
@@ -2281,27 +2307,31 @@ class IndexSearcher:
         segs = self._segs_for_docs(doc_ids) if doc_ids is not None else None
         if isinstance(nq, (ast.PhraseQuery, ast.MultiPhraseQuery)):
             plan = self._phrase_plan(nq)
-            df = plan and self._phrase_scored_df(*plan, segments=segs)
+            df = plan and self._phrase_scored(*plan, segments=segs).df()
         elif isinstance(nq, (ast.SynonymQuery, ast.DisjunctionMaxQuery)):
             from lucene_spark.search.multiterm import (
-                dismax_scored_df,
-                synonym_scored_df,
+                dismax_scored,
+                synonym_scored,
             )
 
-            build = (synonym_scored_df if isinstance(nq, ast.SynonymQuery)
-                     else dismax_scored_df)
-            df = build(self.reader, self.similarity, nq)
+            build = (synonym_scored if isinstance(nq, ast.SynonymQuery)
+                     else dismax_scored)
+            run = build(self.reader, self.similarity, nq)
+            df = run and run.df()
         elif isinstance(nq, (ast.MultiTermQuery, ast.ConstantScoreQuery,
                              ast.MatchAllDocsQuery) + ast.SPAN_QUERY_TYPES):
             # CONSTANT_SCORE shapes: match set at score = f32(boost)
             boost = float(F32(getattr(nq, "boost", 1.0)))
-            m = (self._span_match_df(nq)
-                 if isinstance(nq, ast.SPAN_QUERY_TYPES) else self.match_df(nq))
+            if isinstance(nq, ast.SPAN_QUERY_TYPES):
+                run = self._span_match(nq)
+                m = run and run.df()
+            else:
+                m = self.match_df(nq)
             df = None if m is None else m.select(
                 "doc_id", F.lit(boost).cast("float").alias("score"))
         else:
             wc = self._weighted_clauses(nq)
-            df = wc and self._flat_scored_df(*wc, segments=segs)
+            df = wc and self._flat_scored(*wc, segments=segs).df()
         return df if df is not None else self.spark.createDataFrame([], SCORED)
 
     def match_df(self, query):
@@ -2341,17 +2371,17 @@ class IndexSearcher:
             plan = self._phrase_plan(q)
             if plan is None:
                 return self.spark.createDataFrame([], DOCS)
-            return self._phrase_scored_df(*plan, out=DOCS)
+            return self._phrase_scored(*plan, out=DOCS).df()
         if isinstance(q, ast.BooleanQuery) and any(
             not isinstance(sub, ast.TermQuery) for _, sub in q.clauses
         ):
             # match sets are similarity-independent: score mixed clauses
             # with BM25 regardless of the searcher's similarity (the
             # weights are discarded)
-            df = self._mixed_segment_df(q, None, match_only=True)
-            if df is None:
+            run = self._mixed_segment(q, None, match_only=True)
+            if run is None:
                 return self.spark.createDataFrame([], "doc_id long")
-            return df.select("doc_id")
+            return run.df().select("doc_id")
         return self.score_df(q).select("doc_id")
 
     def covering_df(self, queries, min_match: str):

@@ -9,11 +9,13 @@ builds size their own partitioning explicitly (one partition per segment).
 from __future__ import annotations
 
 import os
+import threading
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
-
-from contextlib import contextmanager
+_AQE_LOCK = threading.Lock()
+_AQE_OFF: dict = {}  # id(spark) -> (callers inside no_aqe, saved setting)
 
 
 @contextmanager
@@ -24,18 +26,28 @@ def no_aqe(spark):
     reduce), so AQE's stage-by-stage materialization only adds scheduler
     rounds — measured: 2 jobs → 1 job and ~-30% latency per query at sf0.1.
     Build/maintenance paths keep AQE (runtime coalescing + skew handling of
-    the stats/merge shuffles matters at 10^12 rows). Session-scoped config —
-    callers must not interleave planning of other queries concurrently."""
-    conf = spark.conf
-    try:
-        prev = conf.get("spark.sql.adaptive.enabled")
-    except Exception:
-        prev = "true"
-    conf.set("spark.sql.adaptive.enabled", "false")
+    the stats/merge shuffles matters at 10^12 rows). Session-scoped config:
+    concurrent callers share one flip — the first one in saves the setting,
+    the last one out restores it."""
+    conf, key = spark.conf, id(spark)
+    with _AQE_LOCK:
+        n, prev = _AQE_OFF.get(key, (0, None))
+        if n == 0:
+            try:
+                prev = conf.get("spark.sql.adaptive.enabled")
+            except Exception:
+                prev = "true"
+            conf.set("spark.sql.adaptive.enabled", "false")
+        _AQE_OFF[key] = (n + 1, prev)
     try:
         yield
     finally:
-        conf.set("spark.sql.adaptive.enabled", prev)
+        with _AQE_LOCK:
+            n, prev = _AQE_OFF.pop(key)
+            if n > 1:
+                _AQE_OFF[key] = (n - 1, prev)
+            else:
+                conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def get_spark(cores: int | str = "*", app: str = "lucene_spark",

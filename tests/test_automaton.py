@@ -87,8 +87,9 @@ def test_engine_matches_brute(searcher, golden, transitions, n_states,
                               accept):
     q = ast.TermAutomatonQuery(transitions=transitions, n_states=n_states,
                                accept=accept)
-    df = searcher._automaton_match_df(q)
-    got = sorted(r["doc_id"] for r in df.collect()) if df is not None else []
+    run = searcher._automaton_match(q)
+    got = sorted(r["doc_id"] for r in run.df().collect()) \
+        if run is not None else []
     want = brute_automaton_docs(golden, transitions, n_states, accept)
     assert got == want
     assert searcher.count(q) == len(want)
@@ -117,9 +118,9 @@ def test_randomized_vs_brute(searcher, golden):
             transitions.append((0, n, str(rng.choice(words))))
         q = ast.TermAutomatonQuery(transitions=tuple(transitions),
                                    n_states=n + 1, accept=(n,))
-        df = searcher._automaton_match_df(q)
-        got = sorted(r["doc_id"] for r in df.collect()) if df is not None \
-            else []
+        run = searcher._automaton_match(q)
+        got = sorted(r["doc_id"] for r in run.df().collect()) \
+            if run is not None else []
         want = brute_automaton_docs(golden, tuple(transitions), n + 1, (n,))
         assert got == want, f"transitions={transitions}"
 

@@ -4,8 +4,9 @@ Every query shape routed through the executor (flat booleans, msearch,
 phrase / multiphrase, driver-resolved prefix expansions) must match the
 brute-force golden bit for bit, including deletes, keyword-field clauses,
 orphan segment dirs, readers opened before an append, and composite
-(multi-index) statistics. The in-task read must read exactly the row
-groups whose term statistics can hold a query term."""
+(multi-index) statistics. A run's read, in the driver or in a Spark task,
+must read exactly the row groups whose term statistics can hold a query
+term."""
 
 import shutil
 
@@ -17,7 +18,7 @@ from lucene_spark.corpus import VOCAB, synthetic_transcripts_pdf
 from lucene_spark.goldens import BruteForceIndex
 from lucene_spark.indexing.builder import IndexBuilder
 from lucene_spark.search import ast
-from lucene_spark.search.executor import pack_segments
+from lucene_spark.search.executor import SegmentExecutor, pack_segments
 from lucene_spark.search.searcher import IndexSearcher
 
 A, B, C, D = VOCAB[0], VOCAB[3], VOCAB[7], VOCAB[11]
@@ -182,30 +183,6 @@ def _small_row_groups(src, dst, rows_per_group=8):
     return dst
 
 
-def _overlapping(index_dir, segs, field_terms):
-    """(seg, file index, row group) of every row group whose field and
-    [min(term), max(term)] statistics can hold a query term, and the
-    total row-group count — straight from the parquet footers."""
-    import glob
-
-    want, total = set(), 0
-    for s in segs:
-        for fi, p in enumerate(sorted(
-                glob.glob(f"{index_dir}/postings/seg={s}/*.parquet"))):
-            md = pq.ParquetFile(p).metadata
-            names = [md.schema.column(i).name for i in range(md.num_columns)]
-            fc, tc = names.index("field"), names.index("term")
-            total += md.num_row_groups
-            for rg in range(md.num_row_groups):
-                fst = md.row_group(rg).column(fc).statistics
-                tst = md.row_group(rg).column(tc).statistics
-                if any(fst.min <= f <= fst.max
-                       and any(tst.min <= t <= tst.max for t in ts)
-                       for f, ts in field_terms.items()):
-                    want.add((s, fi, rg))
-    return want, total
-
-
 def _matching_rows(index_dir, segs, field_terms):
     n = 0
     for s in segs:
@@ -216,8 +193,12 @@ def _matching_rows(index_dir, segs, field_terms):
     return n
 
 
-def test_only_overlapping_row_groups_are_read(spark, built, tmp_path):
-    d = _small_row_groups(built, str(tmp_path / "rg"))
+def _overlapping_reads(spark, d, bound, monkeypatch, footer_overlap):
+    """On the driver path (``bound`` = the default) and the Spark path
+    (``bound`` = 0), every run reads exactly the footer-overlap set and
+    counts it consistently."""
+    monkeypatch.setattr(SegmentExecutor, "DRIVER_RUN_BYTES", bound)
+    where = "driver" if bound else "spark"
     s = IndexSearcher(spark, d)
     ex = s.reader.segment_executor()
     vocab = s.reader.sorted_terms("text")
@@ -234,9 +215,10 @@ def test_only_overlapping_row_groups_are_read(spark, built, tmp_path):
     for run, field_terms in cases:
         run()
         stats = ex.task_stats()
-        assert stats
+        assert stats and {e["where"] for e in stats} == {where}
+        assert all(e["row_groups_read"] <= e["row_groups"] for e in stats)
         read = {tuple(x) for e in stats for x in e["read"]}
-        want, total = _overlapping(d, ex.files, field_terms)
+        want, total = footer_overlap(d, ex.files, field_terms)
         assert read == want, field_terms
         assert sum(e["row_groups_read"] for e in stats) == len(want)
         assert sum(e["row_groups"] for e in stats) == total
@@ -246,6 +228,14 @@ def test_only_overlapping_row_groups_are_read(spark, built, tmp_path):
             d, ex.files, field_terms)
         assert all(e["postings_bytes"] > 0 for e in stats
                    if e["postings_rows"])
+
+
+def test_only_overlapping_row_groups_are_read(spark, built, tmp_path,
+                                              monkeypatch, footer_overlap):
+    d = _small_row_groups(built, str(tmp_path / "rg"))
+    for bound in (SegmentExecutor.DRIVER_RUN_BYTES, 0):
+        with monkeypatch.context() as m:
+            _overlapping_reads(spark, d, bound, m, footer_overlap)
 
 
 def test_small_row_groups_do_not_change_answers(spark, built, golden,
@@ -326,7 +316,7 @@ def test_local_docid_kernels_match_golden(spark, deleted, golden):
         q = ast.TermAutomatonQuery(transitions=transitions, n_states=3,
                                    accept=(2,))
         want = [h[0] for h in _live(golden.search(same, BIG), dead)]
-        assert _docs(s._automaton_match_df(q)) == sorted(want)
+        assert _docs(s._automaton_match(q).df()) == sorted(want)
         assert s.count(q) == len(want)
 
     # phrase intervals (max_gaps=0): freq = the phrase frequency
@@ -493,19 +483,115 @@ def test_prefix_semijoin_source_equals_term_set(spark, deleted, golden):
             == sorted(h[0] for h in want)
 
 
-def test_counts_run_one_exchange_free_job(spark, built):
+def _count_shapes(golden):
+    """shape -> (query, {field: terms} it reads, golden hit count); every
+    count shape that sums per-segment COUNT kernel rows."""
+    from lucene_spark.search import intervals as iv
+
+    phrase = len(golden.search(f'"{A} {B}"', BIG))
+    span = ast.SpanNearQuery((A, B), slop=0, in_order=True)
+    return {
+        "flat": (f"{A} {B}", {"text": [A, B]},
+                 len(golden.search(f"{A} {B}", BIG))),
+        "phrase": (f'"{A} {B}"', {"text": [A, B]}, phrase),
+        "span": (span, {"text": [A, B]}, phrase),
+        "constant": (ast.ConstantScoreQuery(span), {"text": [A, B]}, phrase),
+        "automaton": (ast.TermAutomatonQuery(
+            transitions=((0, 1, A), (1, 2, B)), n_states=3, accept=(2,)),
+            {"text": [A, B]}, phrase),
+        "interval": (ast.IntervalQuery(iv.Ordered((A, B), max_gaps=0)),
+                     {"text": [A, B]}, phrase),
+        "mixed": (f'{C} "{A} {B}"', {"text": [A, B, C]},
+                  len(golden.search(f'{C} "{A} {B}"', BIG))),
+    }
+
+
+def test_counts_run_no_job_below_bound(spark, built, golden, job_shape,
+                                       footer_overlap):
+    """A warm count of every shape runs in the driver: no Spark job, the
+    golden hit count, and exactly the footer-overlap row groups read."""
+    s = IndexSearcher(spark, built)
+    ex = s.reader.segment_executor()
+    sc = spark.sparkContext
+    for shape, (q, field_terms, want) in _count_shapes(golden).items():
+        s.count(q)  # warm: term dictionary resident on the driver
+        jobs, _stages, _tasks, n = job_shape(sc, f"count-driver-{shape}",
+                                             lambda: s.count(q))
+        assert n == want > 0, (shape, n, want)
+        assert jobs == 0, (shape, jobs)
+        stats = ex.task_stats()
+        assert {e["where"] for e in stats} == {"driver"}, shape
+        assert {tuple(x) for e in stats for x in e["read"]} == \
+            footer_overlap(built, ex.files, field_terms)[0], shape
+
+
+def test_counts_run_one_exchange_free_job(spark, built, golden, job_shape,
+                                          monkeypatch):
+    """Past the driver bound (forced by a bound of 0) a count of every
+    shape is one Spark job of one stage (no Exchange, a shuffle boundary,
+    before the kernel) of at most nproc tasks."""
+    monkeypatch.setattr(SegmentExecutor, "DRIVER_RUN_BYTES", 0)
     s = IndexSearcher(spark, built)
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    for shape, q in {"flat": f"{A} {B}", "phrase": f'"{A} {B}"'}.items():
-        s.count(q)  # warm: term dictionary resident on the driver
-        group = f"count-{shape}"
-        sc.setJobGroup(group, shape)
+    for shape, (q, _ft, want) in _count_shapes(golden).items():
+        s.count(q)
+        jobs, stages, tasks, n = job_shape(sc, f"count-{shape}",
+                                           lambda: s.count(q))
+        assert n == want > 0, (shape, n, want)
+        assert jobs == 1 and stages == 1, (shape, jobs, stages)
+        assert tasks <= sc.defaultParallelism, (shape, tasks)
+
+
+def test_profile_reports_executor_counters(spark, built, monkeypatch):
+    s = IndexSearcher(spark, built)
+    for bound, where in ((SegmentExecutor.DRIVER_RUN_BYTES, "driver"),
+                         (0, "spark")):
+        monkeypatch.setattr(SegmentExecutor, "DRIVER_RUN_BYTES", bound)
+        prof = s.profile(f"{A} {B}", k=10)
+        stats = s.reader.segment_executor().task_stats()
+        c = prof["executor"]
+        assert prof["hits"] == s.search(f"{A} {B}", 10)
+        assert c["where"] == where and c["packs"] == len(stats)
+        assert c["segments"] == len(s.reader.offsets)
+        assert 0 < c["row_groups_read"] <= c["row_groups"]
+        assert c["postings_rows"] == sum(e["postings_rows"] for e in stats) > 0
+        assert c["postings_bytes"] > 0 and c["kernel_ms"] >= 0
+    # a query whose terms are all absent runs no executor run
+    assert s.profile("zzqqabsentterm", k=10)["executor"] is None
+
+
+def test_concurrent_callers_match_sequential(spark, built, monkeypatch):
+    """Threads running mixed shapes against one searcher get the
+    sequential answers bit for bit, on the driver path and on the Spark
+    path: more threads than cores, with a short switch interval so
+    threads interleave inside the executor's lazy build and counters."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    ops = [("search", A), ("search", f"{A} {B} {C}"),
+           ("search", f'"{A} {B}"'), ("search", f"{D[:3]}*"),
+           ("search", f'+{A} "{B} {C}"~3'), ("count", f"{A} {B}"),
+           ("count", f'"{A} {B}"'), ("count", f"{D[:3]}*"),
+           ("count", f'{C} "{A} {B}"')]
+    for bound in (SegmentExecutor.DRIVER_RUN_BYTES, 0):
+        monkeypatch.setattr(SegmentExecutor, "DRIVER_RUN_BYTES", bound)
+        # a fresh searcher: the first callers race to build the executor
+        s = IndexSearcher(spark, built)
+
+        def call(op):
+            kind, q = op
+            return (_hits(s.search(q, 10)) if kind == "search"
+                    else s.count(q))
+
+        work = ops * 3
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
         try:
-            assert s.count(q) > 0
+            with ThreadPoolExecutor(max_workers=8) as pool:
+                futures = [pool.submit(call, op) for op in work]
+                got = [f.result(timeout=300) for f in futures]
         finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = tracker.getJobIdsForGroup(group)
-        stages = [st for j in jobs for st in tracker.getJobInfo(j).stageIds]
-        # one stage = no Exchange (a shuffle boundary) before the kernel
-        assert len(jobs) == 1 and len(stages) == 1, (shape, jobs, stages)
+            sys.setswitchinterval(switch)
+        want = [call(op) for op in work]
+        assert got == want, bound
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"

@@ -88,15 +88,15 @@ def _migrated_functions():
 
     S = searcher.IndexSearcher
     return [S.search, S.msearch, S.count, S.score_df, S.match_df,
-            S._flat_topk_df, S._flat_scored_df, S._phrase_scored_df,
+            S._flat_topk, S._flat_scored, S._phrase_scored,
             S._run_phrase_kernel, S._phrase_count, S._search_sorted_early,
-            S._mixed_segment_df, S._span_match_df, S._automaton_match_df,
-            S.interval_scored_df, S.term_vectors, S.combined_field_df,
+            S._mixed_segment, S._span_match, S._automaton_match,
+            S._interval_scored, S.term_vectors, S.combined_field_df,
             S._score_df_impl, S._match_df_impl, S.payload_score_df,
             S.span_payload_check_df, searcher._flat_topk_kernel,
             multiterm.constant_score_topk, multiterm.matching_docs_df,
-            multiterm.constant_score_count, multiterm.synonym_scored_df,
-            multiterm.dismax_scored_df, multiterm.synonym_topk,
+            multiterm.constant_score_count, multiterm.synonym_scored,
+            multiterm.dismax_scored, multiterm.synonym_topk,
             multiterm.dismax_topk]
 
 
@@ -147,26 +147,58 @@ def test_only_the_executor_adapter_groups_by_segment():
     assert sites == {("executor.py", "SegmentExecutor.run_df"): 2}, sites
 
 
-def test_traced_search_runs_one_stage(spark, index_dir):
+def _serving_queries(searcher):
+    """shape -> (query, {field: terms} it reads)."""
     from lucene_spark.corpus import VOCAB
+
+    prefix = VOCAB[11][:3]
+    vocab = searcher.reader.sorted_terms("text")
+    return {
+        "flat": (f"{VOCAB[0]} {VOCAB[3]}", {"text": [VOCAB[0], VOCAB[3]]}),
+        "phrase": (f'"{VOCAB[0]} {VOCAB[3]}"',
+                   {"text": [VOCAB[0], VOCAB[3]]}),
+        "prefix": (f"{prefix}*",
+                   {"text": [t for t in vocab if t.startswith(prefix)]}),
+    }
+
+
+def test_traced_search_runs_no_job_below_bound(spark, index_dir, job_shape,
+                                               footer_overlap):
+    """A warm small top-k runs in the driver: no Spark job, and it reads
+    exactly the row groups whose footer statistics overlap its terms."""
+    from lucene_spark.search.searcher import IndexSearcher
+
+    s = IndexSearcher(spark, index_dir)
+    ex = s.reader.segment_executor()
+    sc = spark.sparkContext
+    for shape, (q, field_terms) in _serving_queries(s).items():
+        want = s.search(q, 10)  # warm: term dictionary resident
+        jobs, _stages, _tasks, hits = job_shape(
+            sc, f"driver-{shape}", lambda: s.search(q, 10))
+        stats = ex.task_stats()
+        assert hits == want and hits, shape
+        assert jobs == 0, (shape, jobs)
+        assert {e["where"] for e in stats} == {"driver"}, shape
+        assert {tuple(x) for e in stats for x in e["read"]} == \
+            footer_overlap(index_dir, ex.files, field_terms)[0], shape
+
+
+def test_traced_search_runs_one_stage(spark, index_dir, job_shape,
+                                      monkeypatch):
+    """Past the driver bound (forced here by a bound of 0) a top-k is one
+    Spark job of one stage of at most nproc tasks."""
+    from lucene_spark.search.executor import SegmentExecutor
     from lucene_spark.search.searcher import IndexSearcher
 
     s = IndexSearcher(spark, index_dir)
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    queries = {"flat": f"{VOCAB[0]} {VOCAB[3]}",
-               "phrase": f'"{VOCAB[0]} {VOCAB[3]}"',
-               "prefix": f"{VOCAB[11][:3]}*"}
-    for shape, q in queries.items():
-        s.search(q, 10)  # warm: term dictionary resident on the driver
-        group = f"one-stage-{shape}"
-        sc.setJobGroup(group, shape)
-        try:
-            assert s.search(q, 10)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = tracker.getJobIdsForGroup(group)
-        stages = [st for j in jobs for st in tracker.getJobInfo(j).stageIds]
-        tasks = sum(tracker.getStageInfo(st).numTasks for st in stages)
-        assert len(jobs) == 1 and len(stages) == 1, (shape, jobs, stages)
+    want = {shape: s.search(q, 10)
+            for shape, (q, _ft) in _serving_queries(s).items()}
+    monkeypatch.setattr(SegmentExecutor, "DRIVER_RUN_BYTES", 0)
+    for shape, (q, _ft) in _serving_queries(s).items():
+        s.search(q, 10)
+        jobs, stages, tasks, hits = job_shape(
+            sc, f"one-stage-{shape}", lambda: s.search(q, 10))
+        assert hits == want[shape] and hits, shape
+        assert jobs == 1 and stages == 1, (shape, jobs, stages)
         assert tasks <= sc.defaultParallelism, (shape, tasks)

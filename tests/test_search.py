@@ -1889,7 +1889,7 @@ def test_rescore_by_phrase_second_pass(searcher):
 
 def test_count_leaf_clauses_list_slot_counted():
     """List-form SpanOr slots count every alternative (the tuple/list
-    spellings are interchangeable in _span_match_df)."""
+    spellings are interchangeable in _span_match)."""
     q_t = ast.SpanNearQuery((("a", "b", "c"), "d"), slop=1)
     q_l = ast.SpanNearQuery((["a", "b", "c"], "d"), slop=1)
     assert ast.count_leaf_clauses(q_t) == ast.count_leaf_clauses(q_l) == 4

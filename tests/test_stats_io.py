@@ -25,6 +25,7 @@ from lucene_spark.corpus import (VOCAB, synthetic_transcripts,
 from lucene_spark.indexing import tableio
 from lucene_spark.indexing.builder import IndexBuilder
 from lucene_spark.indexing.maintenance import IndexMaintenance
+from lucene_spark.search.executor import SegmentExecutor
 from lucene_spark.search.reader import IndexReader
 from lucene_spark.search.searcher import IndexSearcher
 from lucene_spark.streaming.incremental import IncrementalIndexer
@@ -237,10 +238,11 @@ def _jobs(spark, name, fn):
     return len(sc.statusTracker().getJobIdsForGroup(group)), out
 
 
-def test_job_counts_build_open_reopen(spark, tmp_path, monkeypatch):
+def test_job_counts_build_open_reopen(spark, tmp_path, monkeypatch,
+                                      footer_overlap):
     d = str(tmp_path / "jobs")
     # ~2.4k turns: enough for plan_boundaries' 1-in-101 pre-sample to hold
-    # >= 4 keys per segment (smaller corpora add its full-key fallback scan)
+    # >= 4 keys per segment (smaller corpora take their keys whole, below)
     df = synthetic_transcripts(spark, 600)
     n, res = _jobs(spark, "build", lambda: IndexBuilder(
         spark, d, num_segments=4).build(df))
@@ -255,10 +257,48 @@ def test_job_counts_build_open_reopen(spark, tmp_path, monkeypatch):
 
     n, cache = _jobs(spark, "open", open_and_load)
     assert cache and n == 0, n
+    # reopen + first search: a small read runs in the driver (no job);
+    # past the driver bound (forced by a bound of 0) it is one job
     monkeypatch.setattr(IndexReader, "_SHARED_TERM_CACHE", {})
-    n, hits = _jobs(spark, "reopen", lambda: IndexSearcher(
+
+    def reopen_and_search():
+        s = IndexSearcher(spark, d)
+        return s.reader.segment_executor(), s.search(VOCAB[0], k=10)
+
+    n, (ex, hits) = _jobs(spark, "reopen", reopen_and_search)
+    assert hits and n == 0, n
+    stats = ex.task_stats()
+    assert {e["where"] for e in stats} == {"driver"}
+    assert {tuple(x) for e in stats for x in e["read"]} == \
+        footer_overlap(d, ex.files, {"text": [VOCAB[0]]})[0]
+    monkeypatch.setattr(IndexReader, "_SHARED_TERM_CACHE", {})
+    monkeypatch.setattr(SegmentExecutor, "DRIVER_RUN_BYTES", 0)
+    n, spark_hits = _jobs(spark, "reopen-spark", lambda: IndexSearcher(
         spark, d).search(VOCAB[0], k=10))
-    assert hits and n == 1, n
+    assert spark_hits == hits and n == 1, n
+
+
+def test_small_corpus_plans_without_a_full_key_count(spark, tmp_path):
+    """A corpus whose 1-in-101 pre-sample is too small for the segment
+    count takes its keys whole in one capped collect: a ~160-turn build
+    runs no more jobs than the 2.4k-turn build above, and its boundaries
+    equal the full key set's (``sample_mod=1`` skips the pre-sample)."""
+    from lucene_spark.indexing.partitioning import plan_boundaries
+
+    df = synthetic_transcripts(spark, 40)
+    big = synthetic_transcripts(spark, 600)
+    stats = {}
+    n, bounds = _jobs(spark, "plan-small",
+                      lambda: plan_boundaries(df, 4, _stats=stats))
+    assert stats["pre_sample"] == stats["collected"] == df.count()
+    assert len(bounds) == 3 and bounds == plan_boundaries(df, 4,
+                                                           sample_mod=1)
+    n_big, _ = _jobs(spark, "plan-big", lambda: plan_boundaries(big, 4))
+    assert n == n_big, (n, n_big)
+    n, res = _jobs(spark, "build-small", lambda: IndexBuilder(
+        spark, str(tmp_path / "small"), num_segments=4).build(df))
+    assert res["built"] == 4
+    assert n <= 9, n
 
 
 # -- term-dictionary fallback --------------------------------------------------

@@ -70,6 +70,22 @@ def reads_only_overlapping(searcher, run, field_terms,
     return bool(read) and read == want
 
 
+def runs_in_driver(searcher, run, field_terms) -> bool:
+    """Run ``run()`` under the default driver bound and check that it ran
+    no Spark job, executed in the driver, and read exactly the footer
+    overlap set of ``field_terms`` (:func:`reads_only_overlapping`)."""
+    sc = searcher.spark.sparkContext
+    group = "explain_audit_driver_run"
+    sc.setJobGroup(group, group)
+    try:
+        reads = reads_only_overlapping(searcher, run, field_terms)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    stats = searcher.reader.segment_executor().task_stats()
+    return (reads and not sc.statusTracker().getJobIdsForGroup(group)
+            and {t["where"] for t in stats} == {"driver"})
+
+
 def every_segment_answers(searcher, plan) -> bool:
     """Collect ``plan()`` (per-segment rows of a query holding no postings
     term) and check that its executor run read no postings row, yet every
@@ -93,6 +109,13 @@ def main(sf_dir: str):
 
     spark = get_spark(8, app="explain_audit")
     spark.sparkContext.setLogLevel("ERROR")
+    # every plan and counter check below audits the Spark path of the
+    # SegmentExecutor (a bound of 0 sends every run there); the driver
+    # path for small reads is checked last, under the default bound
+    from lucene_spark.search.executor import SegmentExecutor
+
+    driver_bound = SegmentExecutor.DRIVER_RUN_BYTES
+    SegmentExecutor.DRIVER_RUN_BYTES = 0
 
     sections = []
 
@@ -164,7 +187,7 @@ def main(sf_dir: str):
     mspecs = [c for _i, (specs, _msm) in items for c in specs]
     sections.append(("msearch batched plan via the SegmentExecutor (expect "
                      "Range -> MapInPandas, NO Exchange, NO Scan parquet)",
-                     capture(srch._flat_topk_df(items, 20, True))))
+                     capture(srch._flat_topk(items, 20, True).df())))
 
     # round-4 operators: all three must stay pure-JVM codegen plans
     from lucene_spark.search.expressions import compile_expression
@@ -298,8 +321,9 @@ def main(sf_dir: str):
     # complement must run DISTRIBUTED (executor tasks visit the uncovered
     # segments), never materialized on the driver
     def complement():
-        return s._mixed_segment_df(
-            _ast.normalize(parse_simple("-zzqqabsentterm", s.analyzer)), 40)
+        return s._mixed_segment(
+            _ast.normalize(parse_simple("-zzqqabsentterm", s.analyzer)),
+            40).df()
 
     sections.append(("matchall complement for '-absentterm' (expect Range "
                      "-> MapInPandas visiting every segment — the "
@@ -379,7 +403,7 @@ def main(sf_dir: str):
     one = srch._weighted_clauses(_ast.normalize(e._parse("table value")))
     sections.append(("serving top-k plan via the SegmentExecutor (expect "
                      "Range -> MapInPandas, NO Exchange, NO Scan parquet)",
-                     capture(srch._flat_topk_df([(0, one)], 10, True))))
+                     capture(srch._flat_topk([(0, one)], 10, True).df())))
     vocab = srch.reader.sorted_terms("text") or []
     expanded = {"text": [t for t in vocab if t.startswith("v")]}
     serving_reads = [
@@ -392,6 +416,13 @@ def main(sf_dir: str):
             srch._spec_field_terms(mspecs)),
         reads_only_overlapping(srch, lambda: srch._collect(prefix_df()),
                                expanded),
+    ]
+
+    SegmentExecutor.DRIVER_RUN_BYTES = driver_bound
+    driver_runs = [
+        runs_in_driver(srch, lambda: srch.search("table value", 10),
+                       {"text": ["table", "value"]}),
+        runs_in_driver(srch, lambda: srch.search(pq, 10), expanded),
     ]
 
     import re
@@ -556,6 +587,11 @@ def main(sf_dir: str):
     checks.append(("msearch reads only the row groups of the term UNION "
                    "in one executor run (counters vs parquet footers)",
                    serving_reads[2]))
+    checks.append(("a small top-k (term and prefix) runs in the driver under "
+                   "the default bound: no Spark job, and it reads exactly "
+                   "the footer-overlap row groups (status tracker; counters "
+                   "vs parquet footers)",
+                   all(driver_runs)))
 
     out = ["# BENCH/PLANS.md — physical-plan audit (auto-generated)\n"]
     out.append("## Checks\n")
