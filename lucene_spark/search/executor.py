@@ -55,7 +55,8 @@ the one execution entry that returns the collected rows (a pandas frame of
 the kernel schema), and :meth:`SegmentRun.df` the Spark DataFrame for
 callers that compose one (:meth:`SegmentExecutor.run`). Every pack reports
 its counters (where it ran, row groups in the files, row groups read and
-which, postings rows and bytes, kernel ms); :meth:`SegmentExecutor.
+which, postings rows and bytes, kernel ms, and the WAND block counters a
+kernel adds through :meth:`Segment.add_counts`); :meth:`SegmentExecutor.
 task_stats` returns them per run on both paths.
 """
 
@@ -66,7 +67,7 @@ import itertools
 import threading
 import time
 from collections import deque
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from typing import NamedTuple
 
 import numpy as np
@@ -84,6 +85,14 @@ class Segment:
     id: int
     offset: int  # docBase: global docID = offset + segment-local docID
     deleted: np.ndarray | None  # GLOBAL deleted docIDs; None = no deletes
+    # the pack's counters: kernel counts added here reach ``task_stats``
+    counters: dict = field(compare=False, repr=False)
+
+    def add_counts(self, counts: dict) -> None:
+        """Add a kernel's counts (e.g. the WAND block counters) to the
+        pack's counters."""
+        for key, n in counts.items():
+            self.counters[key] = self.counters.get(key, 0) + n
 
     def live(self, docs, *aligned):
         """``docs`` (GLOBAL ids) without the segment's deleted docs — or,
@@ -102,6 +111,11 @@ COUNT = "n long"
 
 _DTYPES = {"long": np.int64, "float": np.float32}  # of the schemas above
 
+# the WAND kernel's block counters (``wand.segment_topk(stats=)``), summed
+# per pack: blocks of the query terms kept past MUST_NOT, blocks whose exact
+# impact bounds were scored, blocks decoded
+BLOCK_COUNTERS = ("blocks_kept", "blocks_exact", "blocks_decoded")
+
 
 def _schema_dtypes(schema: str) -> dict:
     """``{column: numpy dtype}`` of a kernel schema string."""
@@ -111,12 +125,14 @@ def _schema_dtypes(schema: str) -> dict:
 
 def hits_frame(docs, scores=None, count: bool = False, k=None):
     """A kernel's output frame: one hit-count row (``count``), else the
-    (doc_id) match set, or (doc_id, score) rows when ``scores`` are given
-    — the segment's top ``k`` (score DESC, doc_id ASC) when ``k`` is set."""
+    (doc_id) match set — its ``k`` smallest docIDs when ``k`` is set — or
+    (doc_id, score) rows when ``scores`` are given — the segment's top
+    ``k`` (score DESC, doc_id ASC) when ``k`` is set."""
     if count:
         return pd.DataFrame({"n": [int(docs.size)]})
     if scores is None:
-        return pd.DataFrame({"doc_id": docs})
+        return pd.DataFrame({"doc_id": docs if k is None
+                             else np.sort(docs)[:k]})
     if k is not None:
         order = np.lexsort((docs, -scores.astype(np.float64)))[:k]
         docs, scores = docs[order], scores[order]
@@ -247,8 +263,8 @@ def _read_segment_postings(seg: int, parts, field_terms: dict,
     return tbl if tbl.num_rows else None
 
 
-def _segment(s: int, off: int, dload) -> Segment:
-    return Segment(s, off, dload(s) + off if dload else None)
+def _segment(s: int, off: int, dload, counters: dict) -> Segment:
+    return Segment(s, off, dload(s) + off if dload else None, counters)
 
 
 def _empty_rows(columns: list[str]) -> dict:
@@ -275,7 +291,7 @@ def _pack_body(run_id: int, packs, parts, field_terms: dict,
         c = {"run": run_id, "task": t, "where": where,
              "segments": packs[t], "row_groups": 0, "row_groups_read": 0,
              "read": [], "postings_rows": 0, "postings_bytes": 0,
-             "kernel_ms": 0.0}
+             "kernel_ms": 0.0, **dict.fromkeys(BLOCK_COUNTERS, 0)}
         for s in packs[t]:
             tbl = (_read_segment_postings(s, parts[s], field_terms,
                                           columns, c)
@@ -286,7 +302,7 @@ def _pack_body(run_id: int, packs, parts, field_terms: dict,
             rows = (_empty_rows(columns) if tbl is None else
                     {col: tbl.column(col).to_numpy(zero_copy_only=False)
                      for col in columns})
-            seg = _segment(s, off, dload)
+            seg = _segment(s, off, dload, c)
             t0 = time.perf_counter()
             out = kernel(seg, _globalize(rows, off))
             c["kernel_ms"] += (time.perf_counter() - t0) * 1e3
@@ -405,10 +421,11 @@ class SegmentExecutor:
     # a hot term at scale never lands in the driver. The value is the
     # measured crossover of driver-run and Spark-run latency against
     # planned bytes (local[4] on a 4-core Xeon VM, 4-segment indexes of
-    # 12k and 96k turns; least-squares fit over 217 queries: driver
-    # -16.9 ms + 42.4 ms/MB, Spark 159 ms + 7.4 ms/MB, equal at 5.0 MB —
-    # README, tools/executor_crossover.py).
-    DRIVER_RUN_BYTES = 5_000_000
+    # 12k and 96k turns; least-squares fits over 240 queries, two runs:
+    # driver 8.6 / 18.7 ms + 14.9 / 14.7 ms/MB, Spark 125.5 / 152.0 ms +
+    # 0.6 / -1.2 ms/MB, equal at 8.2 / 8.4 MB — README,
+    # tools/executor_crossover.py).
+    DRIVER_RUN_BYTES = 8_000_000
 
     def __init__(self, reader):
         from pyarrow import fs
@@ -482,7 +499,7 @@ class SegmentExecutor:
 
         def group(pdf):
             off = int(pdf["doc_offset"].iloc[0])
-            seg = _segment(int(pdf["seg"].iloc[0]), off, dload)
+            seg = _segment(int(pdf["seg"].iloc[0]), off, dload, {})
             return kernel(seg, _globalize(
                 {c: pdf[c].to_numpy() for c in columns}, off))
 

@@ -17,44 +17,44 @@ from __future__ import annotations
 
 import numpy as np
 
-from lucene_spark.indexing.blocks import decode_block, decode_block_positions
+from lucene_spark.indexing.blocks import (decode_blocks_batch,
+                                          decode_doc_ids_batch,
+                                          decode_positions_batch)
 
 F32 = np.float32
+
+# the block columns a docs + tfs + norms decode reads
+_BLOCK_COLS = ["first_doc", "last_doc", "count", "doc_gaps", "tfs", "norms"]
+
+
+def _blocks(rows, idxs, cols):
+    """Columns ``cols`` of the blocks ``idxs``, in first_doc order."""
+    idxs = np.asarray(idxs, dtype=np.int64)
+    order = idxs[np.argsort(np.asarray(rows["first_doc"])[idxs],
+                            kind="stable")]
+    return {c: np.asarray(rows[c])[order] for c in cols}
+
+
+def _decode_term(b):
+    """(docs, tfs, norms) of one term's blocks ``b`` (see :func:`_blocks`),
+    one batched decode."""
+    d, tf, nm, _ = decode_blocks_batch(
+        b["first_doc"], b["last_doc"], b["count"], list(b["doc_gaps"]),
+        list(b["tfs"]), list(b["norms"]))
+    return d, tf, nm
 
 
 def _term_postings_with_positions(rows, idxs):
     """Concatenate a term's blocks → (docs, tfs, norms, flat_pos, offsets)."""
-    docs_p, tf_p, nm_p, pos_p = [], [], [], []
-    order = sorted(idxs, key=lambda i: int(rows["first_doc"][i]))
-    for i in order:
-        d, tf, nm = decode_block(
-            rows["first_doc"][i], rows["count"][i],
-            rows["doc_gaps"][i], rows["tfs"][i], rows["norms"][i],
-        )
-        flat, _ = decode_block_positions(rows["positions"][i], tf)
-        docs_p.append(d)
-        tf_p.append(tf)
-        nm_p.append(nm)
-        pos_p.append(flat)
-    docs = np.concatenate(docs_p)
-    tfs = np.concatenate(tf_p)
-    norms = np.concatenate(nm_p)
-    flat_pos = np.concatenate(pos_p)
-    offsets = np.concatenate([[0], np.cumsum(tfs)[:-1]]).astype(np.int64)
+    b = _blocks(rows, idxs, _BLOCK_COLS + ["positions"])
+    docs, tfs, norms = _decode_term(b)
+    flat_pos, offsets = decode_positions_batch(b["positions"], tfs)
     return docs, tfs, norms, flat_pos, offsets
 
 
 def term_postings(rows, idxs):
     """Concatenate a term's blocks → (docs, tfs, norms)."""
-    order = sorted(idxs, key=lambda i: int(rows["first_doc"][i]))
-    parts = [
-        decode_block(rows["first_doc"][i], rows["count"][i],
-                     rows["doc_gaps"][i], rows["tfs"][i], rows["norms"][i])
-        for i in order
-    ]
-    return (np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]),
-            np.concatenate([p[2] for p in parts]))
+    return _decode_term(_blocks(rows, idxs, _BLOCK_COLS))
 
 
 def local_rows(rows, offset: int) -> dict:
@@ -144,12 +144,10 @@ def _eval_boolean(rows, by_term, clauses, cache, min_should_match: int = 0,
             idxs = [i for t in c["terms"] if t in by_term for i in by_term[t]]
             if not idxs:
                 return None, None
-            parts = [
-                decode_block(rows["first_doc"][i], rows["count"][i],
-                             rows["doc_gaps"][i], rows["tfs"][i])[0]
-                for i in idxs
-            ]
-            d = np.unique(np.concatenate(parts))
+            b = _blocks(rows, idxs, _BLOCK_COLS[:4])
+            d = np.unique(decode_doc_ids_batch(
+                b["first_doc"], b["last_doc"], b["count"],
+                list(b["doc_gaps"]))[0])
             if c["occur"] in (MUST, SHOULD):
                 return d, np.full(d.size, np.float32(c["weight"]), dtype=F32)
             return d, None

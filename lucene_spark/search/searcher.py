@@ -20,8 +20,8 @@ import pandas as pd
 
 from lucene_spark.analysis import get_analyzer
 from lucene_spark.search import ast
-from lucene_spark.search.executor import (COUNT, DOCS, SCORED, SegmentRun,
-                                          hits_frame)
+from lucene_spark.search.executor import (BLOCK_COUNTERS, COUNT, DOCS,
+                                          SCORED, SegmentRun, hits_frame)
 from lucene_spark.search.phrase import local_rows
 from lucene_spark.search.reader import IndexReader
 from lucene_spark.search.wand import ClauseSpec, keyed_rows, segment_topk
@@ -142,8 +142,10 @@ def _flat_topk_kernel(items, k: int, prune: bool, sep: str):
         rows = keyed_rows(rows, sep)
         qi, dd, ss = [], [], []
         for qid, (specs, msm) in items:
+            st: dict = {}
             d, s = segment_topk(rows, specs, k, msm, prune=prune,
-                                deleted=seg.deleted)
+                                deleted=seg.deleted, stats=st)
+            seg.add_counts(st)
             qi.append(np.full(d.size, qid, np.int64))
             dd.append(d)
             ss.append(s)
@@ -181,7 +183,7 @@ def _run_counters(stats: list[dict]) -> dict | None:
     out = {"where": stats[0]["where"], "packs": len(stats),
            "segments": sum(len(e["segments"]) for e in stats)}
     for key in ("row_groups", "row_groups_read", "postings_rows",
-                "postings_bytes", "kernel_ms"):
+                "postings_bytes", "kernel_ms", *BLOCK_COUNTERS):
         out[key] = sum(e[key] for e in stats)
     return out
 
@@ -582,23 +584,18 @@ class IndexSearcher:
             )
             b = float(F32(getattr(query, "boost", 1.0)))
             return [ScoreDoc(int(r["doc_id"]), b) for r in rows]
-        if isinstance(query, ast.SPAN_QUERY_TYPES):
-            # constant-score span queries: k smallest matching docIDs (ties
-            # → docID asc), match set distributed per segment
-            run = self._span_match(query)
+        if isinstance(query, (*ast.SPAN_QUERY_TYPES, ast.TermAutomatonQuery)):
+            # constant-score span / automaton queries: the k smallest
+            # matching docIDs (ties → docID asc), each segment's k smallest
+            # collected, score == boost
+            run = (self._automaton_match(query, k=k)
+                   if isinstance(query, ast.TermAutomatonQuery)
+                   else self._span_match(query, k=k))
             if run is None:
                 return []
-            rows = self._collect(run.df().orderBy("doc_id").limit(k))
+            docs = np.sort(self._collect(run)["doc_id"].to_numpy())[:k]
             b = float(F32(query.boost))
-            return [ScoreDoc(int(r["doc_id"]), b) for r in rows]
-        if isinstance(query, ast.TermAutomatonQuery):
-            # same constant-score contract as the span family
-            run = self._automaton_match(query)
-            if run is None:
-                return []
-            rows = self._collect(run.df().orderBy("doc_id").limit(k))
-            b = float(F32(query.boost))
-            return [ScoreDoc(int(r["doc_id"]), b) for r in rows]
+            return [ScoreDoc(int(d), b) for d in docs]
         if isinstance(query, ast.IntervalQuery):
             return self._search_intervals(query, k)
         if isinstance(query, ast.KnnQuery):
@@ -1192,10 +1189,12 @@ class IndexSearcher:
         return _topk_hits(self._collect(
             self._phrase_scored(field_terms, scorer, kernel, k=k)), k)
 
-    def _span_match(self, q, count: bool = False) -> SegmentRun | None:
+    def _span_match(self, q, count: bool = False,
+                    k: int | None = None) -> SegmentRun | None:
         """The executor run of span matches (SpanNear / SpanFirst /
-        SpanNot / SpanContaining / SpanWithin): the (doc_id) match set, or
-        with ``count`` one hit count per segment — per-segment kernel
+        SpanNot / SpanContaining / SpanWithin): the (doc_id) match set (a
+        segment's ``k`` smallest docIDs when ``k`` is set), or with
+        ``count`` one hit count per segment — per-segment kernel
         fan-out (``phrase.segment_span_near``), None when a required term
         is absent from the corpus (a required sub-span can never match)."""
         from lucene_spark.search.phrase import segment_span_near
@@ -1234,15 +1233,17 @@ class IndexSearcher:
             d = segment_span_near(local_rows(rows, seg.offset), terms, slop,
                                   in_order, max_end=max_end, exclude=exclude,
                                   pre=pre, post=post, contain=contain)
-            return hits_frame(seg.live(d + seg.offset), count=count)
+            return hits_frame(seg.live(d + seg.offset), count=count, k=k)
 
         return self.reader.segment_executor().prepare(
             {q.field: fetch}, POS_COLS, kernel, COUNT if count else DOCS)
 
     def _automaton_match(self, q: "ast.TermAutomatonQuery",
-                         count: bool = False) -> SegmentRun | None:
-        """The executor run of TermAutomatonQuery matches (the match set,
-        or with ``count`` one hit count per segment) — per-segment DAG
+                         count: bool = False,
+                         k: int | None = None) -> SegmentRun | None:
+        """The executor run of TermAutomatonQuery matches (the match set —
+        a segment's ``k`` smallest docIDs when ``k`` is set — or with
+        ``count`` one hit count per segment) — per-segment DAG
         kernel fan-out (``automaton.segment_term_automaton``). None when
         NO query term exists in the corpus (every path needs at least one
         term arc, so nothing can accept)."""
@@ -1269,7 +1270,7 @@ class IndexSearcher:
             # segment-LOCAL docIDs into the kernel (doc·2^34 keys), offset out
             d = segment_term_automaton(local_rows(rows, seg.offset),
                                        transitions, n_states, accept)
-            return hits_frame(seg.live(d + seg.offset), count=count)
+            return hits_frame(seg.live(d + seg.offset), count=count, k=k)
 
         return self.reader.segment_executor().prepare(
             {q.field: present}, POS_COLS, kernel, COUNT if count else DOCS)
@@ -1538,7 +1539,9 @@ class IndexSearcher:
         are identical to :meth:`search` (pytest-pinned). ``executor`` sums
         the per-pack counters of the query's last executor run (None when
         it ran none): where it ran, packs, segments, row groups in the
-        files and read, postings rows and bytes, kernel ms."""
+        files and read, postings rows and bytes, kernel ms, and for flat
+        term booleans the WAND block counters (blocks kept, exactly
+        bounded, decoded)."""
         import time
 
         t0 = time.perf_counter()
@@ -2001,7 +2004,7 @@ class IndexSearcher:
         pays when term vectors are derived rather than stored.
         """
         from lucene_spark.indexing.blocks import (
-            decode_block_positions, decode_doc_ids_batch,
+            decode_doc_ids_batch, decode_positions_batch,
             decode_posting_bufs)
 
         ids = sorted({int(x) for x in doc_ids})
@@ -2034,18 +2037,18 @@ class IndexSearcher:
             pos_col = np.full(hidx.size, "", dtype=object)
             pos_bufs = rows["positions"]
             if pos_bufs.size and pos_bufs[0] is not None:
-                # decode positions only for blocks holding a match
-                for b in np.unique(blk_of[hidx]):
-                    s, c = int(starts[b]), int(counts[b])
-                    btfs = tfs[s:s + c]
-                    flat, toff = decode_block_positions(pos_bufs[b], btfs)
-                    # hidx is sorted → this block's hits are one slice
-                    jlo, jhi = np.searchsorted(hidx, [s, s + c])
-                    for j in range(int(jlo), int(jhi)):
-                        i_local = int(hidx[j] - s)
-                        p0 = int(toff[i_local])
-                        ps = flat[p0:p0 + int(btfs[i_local])]
-                        pos_col[j] = " ".join(str(int(p)) for p in ps)
+                # decode positions only for blocks holding a match, in one
+                # batched pass; ``post`` lists those blocks' postings
+                hb = np.unique(blk_of[hidx])
+                cnt = counts[hb]
+                post = (np.repeat(starts[hb] - (np.cumsum(cnt) - cnt), cnt)
+                        + np.arange(int(cnt.sum())))
+                flat, toff = decode_positions_batch(list(pos_bufs[hb]),
+                                                    tfs[post])
+                p0 = toff[np.searchsorted(post, hidx)]
+                pos_col[:] = [" ".join(map(str, flat[a:a + n].tolist()))
+                              for a, n in zip(p0.tolist(),
+                                              tfs[hidx].tolist())]
             return pd.DataFrame({
                 "doc_id": docs[hidx],
                 "term": rows["term"][blk_of[hidx]],

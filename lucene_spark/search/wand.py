@@ -17,12 +17,16 @@ Algorithm (impact-ordered, batch-vectorized):
 2. Chunks are processed in upper-bound-descending order in batches; after each
    batch the k-th best valid score θ rises; processing stops at the first
    chunk whose UB < θ — everything after is pruned without ever being decoded.
-3. Chunk evaluation is exhaustive and vectorized: decode active blocks, mask
-   to selected chunks, combine per-doc contributions with ``np.add.at`` into a
-   float64 accumulator (clause float32 scores summed in double, cast to
-   float32 at the end — ``DisjunctionSumScorer`` semantics), apply
-   MUST/FILTER/MUST_NOT/minShouldMatch constraints, offer to the candidate
-   pool.
+3. Chunk evaluation is exhaustive and vectorized, a fixed number of numpy
+   calls per batch whatever its block count: decode the batch's newly
+   active blocks in one ``decode_blocks_batch`` call and score them with
+   one scorer call per clause, into a flat per-call cache (each block
+   decoded and scored at most once), gather the active blocks' postings
+   with one index, mask to selected chunks, combine per-doc contributions
+   with ``np.add.at`` into a float64 accumulator (clause float32 scores
+   summed in double, cast to float32 at the end — ``DisjunctionSumScorer``
+   semantics), apply MUST/FILTER/MUST_NOT/minShouldMatch constraints, offer
+   to the candidate pool.
 
 Tie-break: (score DESC, doc_id ASC), the single-segment Lucene rule
 (``core/search/HitQueue.java:78-84``).
@@ -59,9 +63,8 @@ def keyed_rows(rows, sep: str) -> dict:
     """``rows`` with ``term`` replaced by the clause key ``field + sep +
     term`` that :attr:`ClauseSpec.term` carries."""
     rows = dict(rows)
-    rows["term"] = (pd.Series(rows["field"], dtype=object) + sep
-                    + pd.Series(rows["term"], dtype=object)
-                    ).to_numpy(dtype=object)
+    rows["term"] = (np.asarray(rows["field"], dtype=object) + sep
+                    + np.asarray(rows["term"], dtype=object))
     return rows
 
 
@@ -76,7 +79,8 @@ def segment_topk(block_rows, clauses: list[ClauseSpec], k: int,
     masked out (live-docs filtering) — folded into the exclusion set so the
     θ-pruning bound never counts a deleted doc.
     """
-    from lucene_spark.indexing.blocks import decode_block, decode_doc_ids_batch
+    from lucene_spark.indexing.blocks import (decode_blocks_batch,
+                                              decode_doc_ids_batch)
 
     # a similarity whose score is NOT monotone ↓decoded-length (e.g.
     # SweetSpotSimilarity's plateau lengthNorm penalizes SHORT docs) breaks
@@ -217,10 +221,8 @@ def segment_topk(block_rows, clauses: list[ClauseSpec], k: int,
             sel_t = np.flatnonzero(block_mask & term_mask[t])
             if sel_t.size == 0:
                 continue
-            ft = np.concatenate(
-                [np.asarray(imp_tfs[kb[j]], dtype=np.int64) for j in sel_t])
-            fn = np.concatenate(
-                [np.asarray(imp_norms[kb[j]], dtype=np.int64) for j in sel_t])
+            ft = np.concatenate(list(imp_tfs[kb[sel_t]])).astype(np.int64)
+            fn = np.concatenate(list(imp_norms[kb[sel_t]])).astype(np.int64)
             st = np.concatenate(
                 [[0], np.cumsum(ilens[sel_t])[:-1]]).astype(np.int64)
             acc = np.zeros(sel_t.size, dtype=np.float64)
@@ -258,12 +260,35 @@ def segment_topk(block_rows, clauses: list[ClauseSpec], k: int,
     order = np.argsort(-ub, kind="stable")
     order = order[np.isfinite(ub[order])]
 
+    # ---- flat per-call postings cache: kept block j's postings sit at
+    # [b_off[j], b_off[j] + b_cnt[j]) of the cache arrays (docID, summed
+    # clause score), written the first time a processed batch touches the
+    # block (one batched decode and scoring of the batch's new blocks)
+    b_cnt = block_rows["count"][kb].astype(np.int64)
+    b_off = np.cumsum(b_cnt) - b_cnt
+    n_post = int(b_cnt.sum())
+    d_cache = np.empty(n_post, np.int64)
+    s_cache = np.empty(n_post, np.float64)
+    is_decoded = np.zeros(kb.size, dtype=bool)
+    # required / SHOULD clause counts and scoring clauses per term code
+    code_req = np.array([req_per_term.get(u, 0) for u in uniq], np.int64)
+    code_should = np.array([should_per_term.get(u, 0) for u in uniq],
+                           np.int64)
+    code_scoring = [(code_of[t], cs) for t, cs in term_scoring.items()
+                    if cs and t in code_of]
+
+    def slots_of(blocks):
+        """Cache slots of ``blocks``' postings, block by block: one
+        repeat + arange, no per-block loop."""
+        cnt = b_cnt[blocks]
+        return (np.repeat(b_off[blocks] - (np.cumsum(cnt) - cnt), cnt)
+                + np.arange(int(cnt.sum())))
+
     # ---- impact-ordered batched evaluation
     cand_docs: list[np.ndarray] = []
     cand_scores: list[np.ndarray] = []
     theta = -np.inf
     total_kept = 0
-    decoded: dict[int, tuple] = {}
     n_exact = 0
     refined_all = not prune  # exhaustive mode never uses bounds
     BATCH = max(16, 4 * k // 128 + 8)
@@ -299,56 +324,58 @@ def segment_topk(block_rows, clauses: list[ClauseSpec], k: int,
         pos += BATCH
         sel = np.zeros(n_iv, dtype=bool)
         sel[batch] = True
-        # blocks overlapping any selected chunk, via prefix sums — the
-        # remaining Python loop touches only blocks that must be decoded
+        # blocks overlapping any selected chunk, via prefix sums (ascending
+        # kept-block order)
         csel = np.concatenate([[0], np.cumsum(sel)])
         active = np.flatnonzero(csel[e_idx] - csel[s_idx] > 0)
-
-        docs_parts, score_parts, must_parts, should_parts = [], [], [], []
-        for j in active:
-            i = kb[j]
-            if j not in decoded:
-                decoded[j] = decode_block(
-                    block_rows["first_doc"][i], block_rows["count"][i],
-                    block_rows["doc_gaps"][i], block_rows["tfs"][i],
-                    block_rows["norms"][i],
-                )
-            d, tf, nm = decoded[j]
-            iv = np.searchsorted(starts, d, side="right") - 1
-            m = sel[iv]
-            if not m.any():
-                continue
-            d, tf, nm = d[m], tf[m], nm[m]
-            t = b_term[j]
-            # per-clause float32 scores summed in double (Disjunction semantics)
+        new = active[~is_decoded[active]]
+        if new.size:
+            i = kb[new]
+            d, tf, nm, _ = decode_blocks_batch(
+                block_rows["first_doc"][i], block_rows["last_doc"][i],
+                b_cnt[new], list(block_rows["doc_gaps"][i]),
+                list(block_rows["tfs"][i]), list(block_rows["norms"][i]))
+            # per-clause float32 scores summed in double, in clause order
+            # (Disjunction semantics): one scorer call per clause per batch
+            code = np.repeat(kept_codes[new], b_cnt[new])
             sc = np.zeros(d.size, dtype=np.float64)
-            for c in by_term[t]:
-                if c.occur in (MUST, SHOULD) and c.scorer is not None:
-                    sc += c.scorer.score(tf, nm).astype(np.float64)
-            docs_parts.append(d)
-            score_parts.append(sc)
-            must_parts.append(np.full(d.size, req_per_term.get(t, 0), np.int64))
-            should_parts.append(np.full(d.size, should_per_term.get(t, 0), np.int64))
+            for u, scoring in code_scoring:
+                p = np.flatnonzero(code == u)
+                if not p.size:
+                    continue
+                tf_u, nm_u = tf[p], nm[p]
+                for c in scoring:
+                    sc[p] += c.scorer.score(tf_u, nm_u).astype(np.float64)
+            dst = slots_of(new)
+            d_cache[dst], s_cache[dst] = d, sc
+            is_decoded[new] = True
 
-        if not docs_parts:
+        # the active blocks' postings in kept-block order, then doc order
+        # within a block, masked to the selected chunks
+        slot = slots_of(active)
+        d = d_cache[slot]
+        m = sel[np.searchsorted(starts, d, side="right") - 1]
+        if not m.any():
             continue
-        alld = np.concatenate(docs_parts)
-        uniq, inv = np.unique(alld, return_inverse=True)
-        acc = np.zeros(uniq.size, dtype=np.float64)
-        np.add.at(acc, inv, np.concatenate(score_parts))
-        mcnt = np.zeros(uniq.size, dtype=np.int64)
-        np.add.at(mcnt, inv, np.concatenate(must_parts))
-        scnt = np.zeros(uniq.size, dtype=np.int64)
-        np.add.at(scnt, inv, np.concatenate(should_parts))
+        d, sc = d[m], s_cache[slot[m]]
+        code = np.repeat(kept_codes[active], b_cnt[active])[m]
+
+        hit, inv = np.unique(d, return_inverse=True)
+        acc = np.zeros(hit.size, dtype=np.float64)
+        np.add.at(acc, inv, sc)
+        mcnt = np.zeros(hit.size, dtype=np.int64)
+        np.add.at(mcnt, inv, code_req[code])
+        scnt = np.zeros(hit.size, dtype=np.int64)
+        np.add.at(scnt, inv, code_should[code])
 
         ok = mcnt >= n_req if n_req else scnt >= max(1, min_should_match)
         if n_req and min_should_match:
             ok &= scnt >= min_should_match
         if excl.size:
-            ok &= ~np.isin(uniq, excl)
+            ok &= ~np.isin(hit, excl)
         if not ok.any():
             continue
-        cand_docs.append(uniq[ok])
+        cand_docs.append(hit[ok])
         cand_scores.append(acc[ok].astype(F32))
         total_kept += int(ok.sum())
 
@@ -364,7 +391,7 @@ def segment_topk(block_rows, clauses: list[ClauseSpec], k: int,
     if stats is not None:
         stats["blocks_kept"] = int(kb.size)
         stats["blocks_exact"] = n_exact  # level-0 impact arrays touched
-        stats["blocks_decoded"] = len(decoded)
+        stats["blocks_decoded"] = int(is_decoded.sum())
     if not cand_docs:
         return np.zeros(0, np.int64), np.zeros(0, F32)
     d = np.concatenate(cand_docs)

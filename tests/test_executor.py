@@ -595,3 +595,92 @@ def test_concurrent_callers_match_sequential(spark, built, monkeypatch):
         want = [call(op) for op in work]
         assert got == want, bound
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
+def test_span_and_automaton_topk_run_no_job_below_bound(
+        spark, built, golden, job_shape, monkeypatch):
+    """Span and TermAutomaton top-k collect each segment's k smallest
+    docIDs through the executor: no Spark job below the driver bound, one
+    job of one stage past it (forced by a bound of 0), the golden hits
+    both ways."""
+    k = 5
+    phrase_docs = sorted(h[0] for h in golden.search(f'"{A} {B}"', BIG))
+    assert len(phrase_docs) > k  # the per-segment k-smallest cut matters
+    span = ast.SpanNearQuery((A, B), slop=0, in_order=True, boost=2.5)
+    automaton = ast.TermAutomatonQuery(
+        transitions=((0, 1, A), (1, 2, B)), n_states=3, accept=(2,))
+    want = {"span": golden.search(span, k),
+            "automaton": [(d, 1.0) for d in phrase_docs[:k]]}
+    assert [h[0] for h in want["span"]] == phrase_docs[:k]
+    sc = spark.sparkContext
+    for bound, n_jobs in ((SegmentExecutor.DRIVER_RUN_BYTES, 0), (0, 1)):
+        monkeypatch.setattr(SegmentExecutor, "DRIVER_RUN_BYTES", bound)
+        s = IndexSearcher(spark, built)
+        for shape, q in (("span", span), ("automaton", automaton)):
+            s.search(q, k)  # warm: term dictionary resident on the driver
+            jobs, stages, _tasks, hits = job_shape(
+                sc, f"topk-{shape}-{bound}", lambda: s.search(q, k))
+            assert _hits(hits) == want[shape], (shape, bound)
+            assert jobs == n_jobs and stages == n_jobs, (shape, bound, jobs)
+
+
+@pytest.fixture(scope="module")
+def hot(spark, tmp_path_factory):
+    """A 2-segment index where the hot term A spans ~17 blocks per
+    segment, enough chunks for block-max pruning to skip some."""
+    d = str(tmp_path_factory.mktemp("exec_hot") / "index")
+    IndexBuilder(spark, d, num_segments=2).build(
+        spark.createDataFrame(synthetic_transcripts_pdf(1000)))
+    return d
+
+
+def _direct_block_counts(s, q, k, prune):
+    """The WAND block counters of ``segment_topk(stats=)`` called directly
+    on every segment's postings rows of ``q``, summed."""
+    from lucene_spark.search.wand import keyed_rows, segment_topk
+
+    specs, msm = s._weighted_clauses(s.parse(q))
+    terms = sorted({c.term.split(s.FIELD_SEP, 1)[1] for c in specs})
+    pdf = s.reader.postings(terms, field="text").toPandas()
+    total = dict.fromkeys(("blocks_kept", "blocks_exact", "blocks_decoded"),
+                          0)
+    for _seg, g in pdf.groupby("seg"):
+        rows = {c: g[c].to_numpy() for c in g.columns}
+        for c in ("first_doc", "last_doc"):
+            rows[c] = rows[c].astype(np.int64) + rows["doc_offset"]
+        st = {}
+        segment_topk(keyed_rows(rows, s.FIELD_SEP), specs, k, msm,
+                     prune=prune, stats=st)
+        for key in total:
+            total[key] += st[key]
+    return total
+
+
+def test_profile_reports_wand_block_counters(spark, hot, monkeypatch):
+    """The flat top-k kernel's WAND block counters reach ``task_stats()``
+    and ``profile()["executor"]`` on both paths: they sum over segments to
+    the direct per-segment kernel calls' counts, decoded <= kept, and WAND
+    decodes fewer blocks of the hot term than the exhaustive mode."""
+    keys = ("blocks_kept", "blocks_exact", "blocks_decoded")
+    q = A
+    want = {mode: _direct_block_counts(IndexSearcher(spark, hot), q, 10,
+                                       mode == "wand")
+            for mode in ("wand", "exhaustive")}
+    assert want["wand"]["blocks_decoded"] < \
+        want["exhaustive"]["blocks_decoded"] == \
+        want["exhaustive"]["blocks_kept"]
+    for bound, where in ((SegmentExecutor.DRIVER_RUN_BYTES, "driver"),
+                         (0, "spark")):
+        monkeypatch.setattr(SegmentExecutor, "DRIVER_RUN_BYTES", bound)
+        s = IndexSearcher(spark, hot)
+        ex = s.reader.segment_executor()
+        for mode in ("wand", "exhaustive"):
+            s.search(q, 10, mode=mode)
+            stats = ex.task_stats()
+            assert {e["where"] for e in stats} == {where}
+            got = {key: sum(e[key] for e in stats) for key in keys}
+            assert got == want[mode], (where, mode)
+            assert got["blocks_decoded"] <= got["blocks_kept"]
+        c = s.profile(q, k=10)["executor"]
+        assert c["where"] == where
+        assert {key: c[key] for key in keys} == want["wand"], where

@@ -4,10 +4,14 @@ The round-3/4 performance regressions were all the same anti-pattern: an
 interpreted Python loop over posting BLOCKS inside a per-segment kernel
 (O(n_blocks) per query per segment — thousands of iterations on a hot term).
 These tests pin the fix structurally: no kernel-path module may contain a
-``for ... in range(n_blocks)`` / ``range(len(pdf))`` block-decode loop; all
-multi-block decodes must route through the batched decoders.
+``for ... in range(n_blocks)`` / ``range(len(pdf))`` block-decode loop, nor
+(checked on the syntax tree, whatever the loop's spelling) a one-block
+``decode_block`` / ``decode_block_positions`` call inside a loop body or a
+comprehension; all multi-block decodes must route through the batched
+decoders.
 """
 
+import ast
 import os
 import re
 import sys
@@ -42,6 +46,62 @@ def test_no_per_block_python_loops_on_kernel_paths():
     assert not offenders, (
         "per-block Python loop on a kernel path (use decode_doc_ids_batch /"
         f" decode_blocks_batch): {offenders}")
+
+
+# the one-block decoders: a call of one inside a loop is a per-block decode
+_PER_BLOCK_DECODERS = {"decode_block", "decode_block_positions"}
+# driver-side single-doc explain lookups: they decode the few blocks that
+# hold one doc, never a segment's postings
+_PER_BLOCK_DECODE_ALLOWED = {
+    ("lucene_spark/search/searcher.py", "IndexSearcher.explain"),
+    ("lucene_spark/search/searcher.py", "IndexSearcher._explain_mixed.tf_of"),
+}
+_COMPREHENSIONS = (ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
+
+
+def _looped_decode_calls(path):
+    """Qualified names of the functions in ``path`` that call a one-block
+    decoder inside a ``for`` / ``while`` body or a comprehension."""
+    sites = []
+
+    def visit(node, scope, in_loop):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef,
+                                  ast.ClassDef)):
+                # a nested function body runs when it is called
+                visit(child, scope + [child.name], False)
+                continue
+            looped = in_loop or isinstance(node, (ast.While,
+                                                  *_COMPREHENSIONS)) or (
+                # a for loop's iterable is evaluated once
+                isinstance(node, (ast.For, ast.AsyncFor))
+                and child is not node.iter)
+            if isinstance(child, ast.Call) and looped:
+                f = child.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None)
+                if name in _PER_BLOCK_DECODERS:
+                    sites.append(".".join(scope))
+            visit(child, scope, looped)
+
+    visit(ast.parse(open(path).read()), [], False)
+    return sites
+
+
+def test_no_per_block_decode_in_loops():
+    """Every multi-block decode of a kernel module goes through the batched
+    decoders (``decode_blocks_batch`` / ``decode_doc_ids_batch`` /
+    ``decode_positions_batch``): no one-block decode call sits in a loop
+    body or a comprehension (the regex guard above only knows two loop
+    spellings)."""
+    offenders = []
+    for mod in KERNEL_MODULES + ["lucene_spark/search/phrase.py"]:
+        for site in _looped_decode_calls(os.path.join(REPO, mod)):
+            if (mod, site) not in _PER_BLOCK_DECODE_ALLOWED:
+                offenders.append(f"{mod}:{site}")
+    assert not offenders, (
+        "one-block decode in a loop on a kernel path (decode the blocks in "
+        f"one batched call): {offenders}")
 
 
 def test_batched_decoders_are_used_where_loops_were():
@@ -113,8 +173,6 @@ def test_migrated_serving_paths_have_no_seg_exchange():
 def _grouping_sites(path):
     """Qualified names of the functions in ``path`` that call
     ``applyInPandas`` or ``groupBy("seg")``."""
-    import ast
-
     sites = []
 
     def visit(node, scope):
