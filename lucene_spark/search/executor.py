@@ -26,6 +26,15 @@ the manifest's segments, so orphan ``seg=N`` dirs and segments appended
 after the reader opened stay invisible), filtered to the exact
 ``(field == f) & term ∈ terms`` set and handed to the kernel.
 
+Postings stay resident on the driver path: the executor keeps a
+byte-bounded LRU of decoded postings columns keyed by ``(file uri, row
+group, column)`` (:attr:`SegmentExecutor.ROW_GROUP_CACHE_BYTES`). A read
+serves each planned row group's columns from it and opens the file only
+for the missing ones. The cache belongs to the reader's snapshot, whose
+files never change, so it cannot serve a rewritten segment; a Spark task
+reads through a fresh cache that keeps nothing. Routing does not look at
+the cache: ``planned_bytes`` counts every planned row group.
+
 The kernel contract: every per-segment postings kernel of the searcher is
 written once, as ``kernel(seg, rows) -> pandas.DataFrame``.
 
@@ -55,7 +64,8 @@ the one execution entry that returns the collected rows (a pandas frame of
 the kernel schema), and :meth:`SegmentRun.df` the Spark DataFrame for
 callers that compose one (:meth:`SegmentExecutor.run`). Every pack reports
 its counters (where it ran, row groups in the files, row groups read and
-which, postings rows and bytes, kernel ms, and the WAND block counters a
+which, how many of those and their bytes came from the cache, postings
+rows and bytes, kernel ms, and the WAND block counters a
 kernel adds through :meth:`Segment.add_counts`); :meth:`SegmentExecutor.
 task_stats` returns them per run on both paths.
 """
@@ -66,7 +76,7 @@ import bisect
 import itertools
 import threading
 import time
-from collections import deque
+from collections import OrderedDict, deque
 from dataclasses import dataclass, field
 from typing import NamedTuple
 
@@ -222,34 +232,125 @@ def _planned_row_groups(f: _Footer, field_terms: dict) -> list[int]:
                          for fl, ts in field_terms.items())]
 
 
+class _RowGroupCache:
+    """Byte-bounded LRU of decoded postings columns, keyed by ``(file uri,
+    row group, column)``. The driver path shares the executor's (its
+    snapshot's files are immutable, so an entry can never go stale; it
+    dies with the reader); a Spark task uses a fresh one of bound 0, which
+    keeps nothing. ``lock`` guards the bookkeeping only; the parquet reads
+    that fill it run outside it. ``nbytes`` counts the held arrays' bytes
+    (each owns its buffers, see :func:`_read_row_groups`) and never
+    exceeds ``cap``."""
+
+    def __init__(self, cap: int, lock=None):
+        self.cap, self.nbytes = cap, 0
+        self._lock = lock if lock is not None else threading.Lock()
+        self._items: OrderedDict = OrderedDict()
+
+    def get(self, keys) -> dict:
+        """``{key: (array, nbytes)}`` of the held ``keys``, each touched."""
+        out = {}
+        with self._lock:
+            for k in keys:
+                e = self._items.get(k)
+                if e is not None:
+                    self._items.move_to_end(k)
+                    out[k] = e
+        return out
+
+    def put(self, items: dict) -> None:
+        """Hold ``items`` (``{key: (array, nbytes)}``), evicting least
+        recently used entries past ``cap``; an array larger than ``cap`` is
+        not held."""
+        with self._lock:
+            for k, e in items.items():
+                if e[1] > self.cap:
+                    continue
+                old = self._items.pop(k, None)
+                if old is not None:
+                    self.nbytes -= old[1]
+                self._items[k] = e
+                self.nbytes += e[1]
+            while self.nbytes > self.cap:
+                self.nbytes -= self._items.popitem(last=False)[1][1]
+
+
+def _read_row_groups(uri: str, md, missing: dict, own: bool) -> dict:
+    """``{(uri, row group, column): (array, nbytes)}`` of the ``missing``
+    columns
+    (``{row group: columns}``) of file ``uri``, opened once with its
+    footer ``md``: one read per distinct column set. A read of several row
+    groups returns one buffer per column; with ``own`` each row group's
+    slice is copied out, so a held array never pins the rest of its read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyarrow import fs
+
+    groups: dict[tuple, list[int]] = {}
+    for rg, cols in missing.items():
+        groups.setdefault(cols, []).append(rg)
+    out = {}
+    filesystem, path = fs.FileSystem.from_uri(uri)
+    with pq.ParquetFile(path, filesystem=filesystem, metadata=md) as pf:
+        for cols, rgs in groups.items():
+            tbl = pf.read_row_groups(rgs, columns=list(cols))
+            copy = own and len(rgs) > 1
+            off = 0
+            for rg in rgs:
+                n = md.row_group(rg).num_rows
+                for c in cols:
+                    a = tbl.column(c).slice(off, n)
+                    a = (a.chunk(0) if a.num_chunks == 1 and not copy
+                         else pa.concat_arrays(a.chunks))
+                    out[(uri, rg, c)] = (a, a.nbytes)
+                off += n
+    return out
+
+
 def _read_segment_postings(seg: int, parts, field_terms: dict,
-                           columns: list[str], counters: dict):
+                           columns: list[str], counters: dict,
+                           cache: _RowGroupCache):
     """The rows of segment ``seg`` whose (field, term) is in
     ``field_terms`` (``{field: sorted terms}``, ``None`` = every term of
     the field), as a pyarrow Table of ``columns`` (None when no row
     matches). ``parts`` lists the segment's files as ``(file index, uri,
     FileMetaData, planned row groups, row groups in the file)``; only the
-    planned row groups are read. Adds what it read to ``counters``
-    (``read`` lists ``[seg, file index, row group]``)."""
+    planned row groups are used, each column served from ``cache`` or, for
+    the misses alone, read from the file (and offered to ``cache``). Adds
+    what it used to ``counters``: ``read`` lists every planned ``[seg,
+    file index, row group]`` (cached or not); ``row_groups_cached`` and
+    ``bytes_cached`` count those served without touching the file."""
     import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-    from pyarrow import fs
 
     read_cols = list(dict.fromkeys(["field", "term", *columns]))
-    tables = []
+    chunks: dict[str, list] = {c: [] for c in read_cols}
     for fi, uri, md, keep, n_groups in parts:
         counters["row_groups"] += n_groups
         counters["row_groups_read"] += len(keep)
         counters["read"].extend([seg, fi, rg] for rg in keep)
-        if keep:
-            filesystem, path = fs.FileSystem.from_uri(uri)
-            with pq.ParquetFile(path, filesystem=filesystem,
-                                metadata=md) as pf:
-                tables.append(pf.read_row_groups(keep, columns=read_cols))
-    if not tables:
+        if not keep:
+            continue
+        got = cache.get([(uri, rg, c) for rg in keep for c in read_cols])
+        missing = {}
+        for rg in keep:
+            miss = tuple(c for c in read_cols if (uri, rg, c) not in got)
+            if miss:
+                missing[rg] = miss
+            else:
+                counters["row_groups_cached"] += 1
+                counters["bytes_cached"] += sum(got[(uri, rg, c)][1]
+                                                for c in read_cols)
+        if missing:
+            new = _read_row_groups(uri, md, missing, own=cache.cap > 0)
+            cache.put(new)
+            got.update(new)
+        for rg in keep:
+            for c in read_cols:
+                chunks[c].append(got[(uri, rg, c)][0])
+    if not chunks["field"]:
         return None
-    tbl = pa.concat_tables(tables) if len(tables) > 1 else tables[0]
+    tbl = pa.table({c: pa.chunked_array(v) for c, v in chunks.items()})
     mask = None
     for f in sorted(field_terms):
         m = pc.equal(tbl["field"], f)
@@ -282,19 +383,23 @@ def _globalize(rows: dict, off: int) -> dict:
 
 def _pack_body(run_id: int, packs, parts, field_terms: dict,
                columns: list[str], kernel, offsets: dict, dload,
-               every_segment: bool):
+               every_segment: bool, cache: _RowGroupCache | None = None):
     """The task body of a run, shared by both paths: ``body(t, where)``
     yields the kernel frames of pack ``t`` and, last, its counters dict.
-    Holds only picklable data (it is shipped to Spark tasks)."""
+    Reads go through ``cache`` (the executor's on the driver path); with
+    none each call uses a fresh one of bound 0. Without ``cache`` the body
+    holds only picklable data (it is shipped to Spark tasks)."""
 
     def body(t: int, where: str):
         c = {"run": run_id, "task": t, "where": where,
              "segments": packs[t], "row_groups": 0, "row_groups_read": 0,
+             "row_groups_cached": 0, "bytes_cached": 0,
              "read": [], "postings_rows": 0, "postings_bytes": 0,
              "kernel_ms": 0.0, **dict.fromkeys(BLOCK_COUNTERS, 0)}
+        rg_cache = cache if cache is not None else _RowGroupCache(0)
         for s in packs[t]:
             tbl = (_read_segment_postings(s, parts[s], field_terms,
-                                          columns, c)
+                                          columns, c, rg_cache)
                    if field_terms else None)
             if tbl is None and not every_segment:
                 continue
@@ -357,11 +462,11 @@ class SegmentRun:
         self.planned_bytes = nbytes
         self.where = ("driver" if nbytes < ex.DRIVER_RUN_BYTES else "spark")
 
-    def _body(self, run_id: int):
+    def _body(self, run_id: int, cache: _RowGroupCache | None = None):
         reader = self.ex.reader
         return _pack_body(run_id, self.packs, self.parts, self.field_terms,
                           self.columns, self.kernel, reader.offsets,
-                          reader.deleted_loader(), self.every_segment)
+                          reader.deleted_loader(), self.every_segment, cache)
 
     def df(self):
         """The run as a Spark DataFrame of ``schema`` (one
@@ -394,20 +499,21 @@ class SegmentRun:
         the Spark stage of :meth:`df` without AQE."""
         dtypes = _schema_dtypes(self.schema)
         if self.where == "driver":
-            body = self._body(self.ex._next_run())
+            body = self._body(self.ex._next_run(), self.ex._cache)
             frames, stats = [], []
             for t in range(len(self.packs)):
                 for out in body(t, "driver"):
                     (stats if isinstance(out, dict) else frames).append(out)
             self.ex._record(stats)
-            out = (pd.concat(frames, ignore_index=True)[list(dtypes)]
-                   if frames else pd.DataFrame(columns=list(dtypes)))
-        else:
-            from lucene_spark.session import no_aqe
+            return pd.DataFrame({
+                c: np.concatenate([f[c].to_numpy() for f in frames]
+                                  ).astype(dt, copy=False)
+                if frames else np.zeros(0, dt) for c, dt in dtypes.items()})
+        from lucene_spark.session import no_aqe
 
-            with no_aqe(self.ex.spark):
-                rows = self.df().collect()
-            out = pd.DataFrame.from_records(rows, columns=list(dtypes))
+        with no_aqe(self.ex.spark):
+            rows = self.df().collect()
+        out = pd.DataFrame.from_records(rows, columns=list(dtypes))
         return out.astype(dtypes)
 
 
@@ -424,8 +530,14 @@ class SegmentExecutor:
     # 12k and 96k turns; least-squares fits over 240 queries, two runs:
     # driver 8.6 / 18.7 ms + 14.9 / 14.7 ms/MB, Spark 125.5 / 152.0 ms +
     # 0.6 / -1.2 ms/MB, equal at 8.2 / 8.4 MB — README,
-    # tools/executor_crossover.py).
+    # tools/executor_crossover.py). Re-measured with the row-group cache
+    # warm: driver 0.5 / -7.4 ms + 16.1 / 12.3 ms/MB, Spark 151.2 / 113.4
+    # ms - 8.0 / + 2.9 ms/MB, equal at 6.3 / 12.9 MB; the two fits fall
+    # on either side of the bound, so it stays.
     DRIVER_RUN_BYTES = 8_000_000
+    # bytes of decoded postings columns the driver path keeps resident
+    # across runs (:class:`_RowGroupCache`)
+    ROW_GROUP_CACHE_BYTES = 64_000_000
 
     def __init__(self, reader):
         from pyarrow import fs
@@ -455,6 +567,7 @@ class SegmentExecutor:
         self._acc = self.spark.sparkContext.accumulator([], _TaskStatsParam())
         self._driver_stats: deque = deque(maxlen=_TaskStatsParam.KEEP)
         self._lock = threading.Lock()
+        self._cache = _RowGroupCache(self.ROW_GROUP_CACHE_BYTES, self._lock)
         self._runs = itertools.count()
         self.last_run = None
 

@@ -182,8 +182,9 @@ def _run_counters(stats: list[dict]) -> dict | None:
         return None
     out = {"where": stats[0]["where"], "packs": len(stats),
            "segments": sum(len(e["segments"]) for e in stats)}
-    for key in ("row_groups", "row_groups_read", "postings_rows",
-                "postings_bytes", "kernel_ms", *BLOCK_COUNTERS):
+    for key in ("row_groups", "row_groups_read", "row_groups_cached",
+                "bytes_cached", "postings_rows", "postings_bytes",
+                "kernel_ms", *BLOCK_COUNTERS):
         out[key] = sum(e[key] for e in stats)
     return out
 

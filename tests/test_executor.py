@@ -8,7 +8,9 @@ orphan segment dirs, readers opened before an append, and composite
 must read exactly the row groups whose term statistics can hold a query
 term."""
 
+import os
 import shutil
+from urllib.parse import urlparse
 
 import numpy as np
 import pyarrow.parquet as pq
@@ -560,26 +562,174 @@ def test_profile_reports_executor_counters(spark, built, monkeypatch):
     assert s.profile("zzqqabsentterm", k=10)["executor"] is None
 
 
+def _run_sums(ex):
+    stats = ex.task_stats()
+    return {key: sum(e[key] for e in stats)
+            for key in ("row_groups_read", "row_groups_cached",
+                        "bytes_cached")}
+
+
+def test_row_group_cache_serves_repeats(spark, built, golden, monkeypatch,
+                                        footer_overlap):
+    """On the driver path a cold run reads every planned row group from the
+    files, and a repeat serves every one from the executor's cache; the
+    counters reach ``task_stats()`` and ``profile()["executor"]``, the read
+    set stays the footer overlap, and the hits stay the golden's. The
+    Spark path keeps nothing between runs."""
+    q = f"{A} {B}"
+    s = IndexSearcher(spark, built)
+    ex = s.reader.segment_executor()
+    want = golden.search(q, 10)
+    assert _hits(s.search(q, 10)) == want
+    cold = _run_sums(ex)
+    assert cold["row_groups_read"] > 0
+    assert cold["row_groups_cached"] == cold["bytes_cached"] == 0
+    assert ex._cache.nbytes > 0
+    assert _hits(s.search(q, 10)) == want
+    warm = _run_sums(ex)
+    assert warm["row_groups_cached"] == warm["row_groups_read"] == \
+        cold["row_groups_read"]
+    assert warm["bytes_cached"] > 0
+    assert {tuple(x) for e in ex.task_stats() for x in e["read"]} == \
+        footer_overlap(built, ex.files, {"text": [A, B]})[0]
+    c = s.profile(q, k=10)["executor"]
+    assert c["where"] == "driver"
+    assert c["row_groups_cached"] == c["row_groups_read"]
+    assert c["bytes_cached"] == warm["bytes_cached"]
+
+    monkeypatch.setattr(SegmentExecutor, "DRIVER_RUN_BYTES", 0)
+    for _ in range(2):
+        assert _hits(s.search(q, 10)) == want
+        spark_run = _run_sums(ex)
+        assert spark_run["row_groups_read"] == cold["row_groups_read"]
+        assert spark_run["row_groups_cached"] == 0
+    c = s.profile(q, k=10)["executor"]
+    assert c["where"] == "spark" and c["row_groups_cached"] == 0
+
+
+def test_row_group_cache_stays_under_its_cap(spark, built, golden,
+                                             monkeypatch):
+    """With the cap below one row group's read the cache holds at most the
+    cap (entries larger than it are never held) and answers still match."""
+    probe = IndexSearcher(spark, built).reader.segment_executor()
+    f = probe.footers[min(probe.footers)][0]
+    cols = ("field", "term", "first_doc", "last_doc", "count", "doc_gaps",
+            "tfs")
+    cap = min(sum(f.sizes[c][rg] for c in cols)
+              for rg in range(len(f.rows)) if f.rows[rg]) // 2
+    monkeypatch.setattr(SegmentExecutor, "ROW_GROUP_CACHE_BYTES", cap)
+    s = IndexSearcher(spark, built)
+    ex = s.reader.segment_executor()
+    for _ in range(2):
+        for q in QUERIES:
+            assert _hits(s.search(q, 10)) == golden.search(q, 10), q
+            assert ex._cache.nbytes <= cap
+            assert ex._cache.nbytes == sum(
+                e[1] for e in ex._cache._items.values())
+    assert ex._cache._items  # small columns are still held
+
+
+def test_warm_cache_keeps_snapshot_across_append_and_compact(spark, corpus,
+                                                             tmp_path):
+    """A reader keeps answering from its own snapshot, out of its warm
+    cache, after an ``IncrementalIndexer.append`` and after a delete and
+    ``compact()`` (which removes the old segment files); a reader opened
+    after either answers from the new index. Each is checked against the
+    golden scorer of its snapshot."""
+    from lucene_spark.indexing.maintenance import IndexMaintenance
+    from lucene_spark.streaming.incremental import IncrementalIndexer
+
+    d = str(tmp_path / "snap")
+    half = len(corpus) // 2
+    qs = QUERIES[:6]
+    inc = IncrementalIndexer(spark, d, rows_per_segment=40)
+    inc.append(spark.createDataFrame(corpus.iloc[:half]), epoch_id=0)
+    golden_half = BruteForceIndex(corpus.iloc[:half])
+    golden_full = BruteForceIndex(corpus)
+    victim = C
+    dead = set(golden_full.postings[victim][0].tolist())
+    golden_compacted = BruteForceIndex(
+        corpus[~corpus.index.isin(dead)].reset_index(drop=True))
+
+    def check(s, golden, warm):
+        ex = s.reader.segment_executor()
+        for q in qs:
+            assert _hits(s.search(q, BIG)) == golden.search(q, BIG), q
+            if warm:
+                c = _run_sums(ex)
+                assert c["row_groups_cached"] == c["row_groups_read"], q
+
+    old = IndexSearcher(spark, d)
+    check(old, golden_half, warm=False)
+    check(old, golden_half, warm=True)
+    inc.append(spark.createDataFrame(corpus.iloc[half:]), epoch_id=1)
+    check(old, golden_half, warm=True)
+    mid = IndexSearcher(spark, d)
+    assert set(mid.reader.segment_executor().files) > \
+        set(old.reader.segment_executor().files)
+    check(mid, golden_full, warm=False)
+    check(mid, golden_full, warm=True)
+    old_files = [urlparse(u).path for v in
+                 old.reader.segment_executor().files.values() for u in v]
+    assert old_files and all(os.path.exists(p) for p in old_files)
+    m = IndexMaintenance(spark, d)
+    assert m.delete_by_term(victim) == len(dead)
+    assert m.compact(target_rows=10 ** 6)["merged_runs"] >= 1
+    # the old snapshot's segment files are gone: its answers come from
+    # the cache
+    assert not any(os.path.exists(p) for p in old_files)
+    check(old, golden_half, warm=True)
+    check(mid, golden_full, warm=True)
+    new = IndexSearcher(spark, d)
+    assert not set(new.reader.segment_executor().files) & \
+        set(mid.reader.segment_executor().files)
+    check(new, golden_compacted, warm=False)
+
+
 def test_concurrent_callers_match_sequential(spark, built, monkeypatch):
     """Threads running mixed shapes against one searcher get the
-    sequential answers bit for bit, on the driver path and on the Spark
-    path: more threads than cores, with a short switch interval so
-    threads interleave inside the executor's lazy build and counters."""
+    sequential answers bit for bit: on the driver path, on the driver
+    path with a row-group cache cap so small that evictions interleave,
+    and on the Spark path. More threads than cores, with a short switch
+    interval so threads interleave inside the executor's lazy build, its
+    counters and cache, the cold reader's shared term-dictionary fill
+    (read once) and the query cache's ``match_df`` reuse."""
     import sys
     from concurrent.futures import ThreadPoolExecutor
+
+    from lucene_spark.indexing import tableio
+    from lucene_spark.search.reader import IndexReader
 
     ops = [("search", A), ("search", f"{A} {B} {C}"),
            ("search", f'"{A} {B}"'), ("search", f"{D[:3]}*"),
            ("search", f'+{A} "{B} {C}"~3'), ("count", f"{A} {B}"),
            ("count", f'"{A} {B}"'), ("count", f"{D[:3]}*"),
-           ("count", f'{C} "{A} {B}"')]
-    for bound in (SegmentExecutor.DRIVER_RUN_BYTES, 0):
+           ("count", f'{C} "{A} {B}"'),
+           ("match", ast.MultiTermQuery("prefix", D[:3]))]
+    reads = []
+    read_table = tableio.read_table
+
+    def counted_read(path, *a, **kw):
+        reads.append(path)
+        return read_table(path, *a, **kw)
+
+    monkeypatch.setattr(tableio, "read_table", counted_read)
+    for bound, cap in ((SegmentExecutor.DRIVER_RUN_BYTES,
+                        SegmentExecutor.ROW_GROUP_CACHE_BYTES),
+                       (SegmentExecutor.DRIVER_RUN_BYTES, 4096),
+                       (0, SegmentExecutor.ROW_GROUP_CACHE_BYTES)):
         monkeypatch.setattr(SegmentExecutor, "DRIVER_RUN_BYTES", bound)
-        # a fresh searcher: the first callers race to build the executor
+        monkeypatch.setattr(SegmentExecutor, "ROW_GROUP_CACHE_BYTES", cap)
+        # a cold reader: its term dictionary is not resident yet, and the
+        # first callers race to fill it and to build the executor
+        monkeypatch.setattr(IndexReader, "_SHARED_TERM_CACHE", {})
         s = IndexSearcher(spark, built)
+        reads.clear()
 
         def call(op):
             kind, q = op
+            if kind == "match":
+                return s.match_df(q).count()
             return (_hits(s.search(q, 10)) if kind == "search"
                     else s.count(q))
 
@@ -593,8 +743,18 @@ def test_concurrent_callers_match_sequential(spark, built, monkeypatch):
         finally:
             sys.setswitchinterval(switch)
         want = [call(op) for op in work]
-        assert got == want, bound
+        assert got == want, (bound, cap)
         assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+        # the shared term dictionary was read once, by one caller
+        assert len([p for p in reads if "term_stats" in p]) == 1, reads
+        # every match_df use was counted; racing first uses may each miss,
+        # but one persisted match set is kept and later uses hit it
+        qc = s.query_cache
+        assert qc.hits + qc.misses == 6, (qc.hits, qc.misses)
+        assert 2 <= qc.misses <= 3 and len(qc._cache) == 1
+        cache = s.reader.segment_executor()._cache
+        assert cache.nbytes <= cap
+        assert cache.nbytes == sum(e[1] for e in cache._items.values())
 
 
 def test_span_and_automaton_topk_run_no_job_below_bound(

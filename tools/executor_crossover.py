@@ -7,7 +7,9 @@ runs short (1-2 term, phrase, prefix), mid (3-6 term) and long (8-16 term)
 queries of that corpus through ``IndexSearcher.search`` with the bound
 forced to each path, 3 times each (median), and prints one JSON line per
 query (planned bytes, driver s, spark s) and a least-squares fit of both
-paths with the byte count where they cross.
+paths with the byte count where they cross. Each query first runs once in
+the driver, so the driver timings are with its postings resident in the
+executor's row-group cache (the serving steady state).
 
 Usage: python tools/executor_crossover.py --index DIR [--seed 11]
            [--turns 12000] [--queries 40]
@@ -74,6 +76,8 @@ def main(argv=None):
     rows = []
     for kind, q in queries:
         times = {"driver": [], "spark": []}
+        executor.SegmentExecutor.DRIVER_RUN_BYTES = 1 << 62
+        s.search(q, 10)  # warm the row-group cache
         for _ in range(3):
             for where, bound in (("driver", 1 << 62), ("spark", 0)):
                 executor.SegmentExecutor.DRIVER_RUN_BYTES = bound
