@@ -30,6 +30,11 @@ reference's compiled IPADIC binaries:
   TestJapaneseTokenizer.testNormalMode), while unknown KANJI emit per-char
   candidates (TestJapaneseTokenizer.java:409: 𩬅艱鍟䇹愯瀛 → six tokens);
   both are priced far above dictionary words so lexicon coverage always wins.
+  As in the reference, unknown candidates enter the lattice at a position
+  only where no dictionary word starts there or the character class
+  invokes unknown-word processing (IPADIC ``char.def``: katakana does,
+  hiragana and kanji do not) — otherwise a grouped hiragana run such as
+  しししし (19100) would undercut the dictionary path し|し|し|し (20000).
 * **Mixed scripts** — Latin/digit runs tokenize as plain lowercase words,
   punctuation is discarded (``discardPunctuation=true`` default), and each
   contiguous Japanese run (kana + kanji + prolonged-sound mark) goes through
@@ -127,6 +132,13 @@ class JapaneseTokenizer:
     # into one candidate token (kana for ja, Hangul for ko); anything else
     # unknown emits per-char candidates (kanji/hanja)
     group_classes: tuple = None  # None → (_KATA_RE, _HIRA_RE)
+    # regexes anchored with $: character classes whose unknown-word
+    # candidates enter the lattice even at a position where a dictionary
+    # word starts (IPADIC char.def's INVOKE flag: katakana invokes,
+    # hiragana and kanji do not); elsewhere unknown candidates enter only
+    # where no dictionary word starts (JapaneseTokenizer's ``!anyMatches ||
+    # isInvoke(firstChar)``). None = every class invokes.
+    invoke_classes: tuple | None = (_KATA_RE,)
 
     def __init__(self, entries: dict[str, int] | None = None):
         if entries is None:
@@ -176,7 +188,9 @@ class JapaneseTokenizer:
                 continue
             cands = [(w, c) for (w, c) in self.by_first.get(run[i], ())
                      if run.startswith(w, i)]
-            cands.extend(self._unknown_candidates(run, i))
+            if not cands or self.invoke_classes is None or any(
+                    cls.match(run[i]) for cls in self.invoke_classes):
+                cands.extend(self._unknown_candidates(run, i))
             for w, c in cands:
                 cls = 1 if w in self.particles else 0
                 j = i + len(w)

@@ -58,6 +58,7 @@ class KoreanTokenizer(JapaneseTokenizer):
     default_dict = KO_DICT
     particles = KO_PARTICLES
     group_classes = (_HANGUL_RE,)  # unknown Hangul groups; hanja per-char
+    invoke_classes = None  # unknown candidates at every position
 
 
 class KoreanAnalyzer(JapaneseAnalyzer):

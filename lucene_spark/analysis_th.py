@@ -66,6 +66,7 @@ class ThaiTokenizer(JapaneseTokenizer):
     default_dict = TH_DICT
     particles = frozenset()  # no 2-class split: Thai costs carry it alone
     group_classes = (_THAI_RE,)  # unknown Thai runs group whole
+    invoke_classes = None  # unknown candidates at every position
 
 
 class ThaiAnalyzer(JapaneseAnalyzer):

@@ -47,6 +47,7 @@ class ChineseTokenizer(JapaneseTokenizer):
     default_dict = ZH_DICT
     particles = ZH_PARTICLES
     group_classes = ()  # no grouping class: unknown hanzi emit per char
+    invoke_classes = None  # unknown candidates at every position
 
 
 class ChineseAnalyzer(JapaneseAnalyzer):

@@ -23,20 +23,32 @@ uncompressed bytes of the columns it reads there.
 Both paths run the same task body: the same read of exactly the planned row
 groups of the files the reader's DataFrame resolved at open (restricted to
 the manifest's segments, so orphan ``seg=N`` dirs and segments appended
-after the reader opened stay invisible), filtered to the exact
-``(field == f) & term ∈ terms`` set and handed to the kernel.
+after the reader opened stay invisible), cut to the exact ``(field == f) &
+term ∈ terms`` rows and handed to the kernel.
+
+The cut is a binary search, not a scan. Within a postings file each
+field's rows are contiguous and sorted by term (the builder writes
+``text`` and then the keyword fields; compaction writes fields in sorted
+order), so every row group gets a directory of its fields' row runs when
+it is read, and a query's rows are ``searchsorted`` ranges of those runs,
+kept in file order. A row group that breaks this layout raises
+``ValueError`` naming the file and row group (``tools/check_index.py``
+reports such files).
 
 Postings stay resident on the driver path: the executor keeps a
-byte-bounded LRU of decoded postings columns keyed by ``(file uri, row
-group, column)`` (:attr:`SegmentExecutor.ROW_GROUP_CACHE_BYTES`). A read
-serves each planned row group's columns from it and opens the file only
-for the missing ones. The cache belongs to the reader's snapshot, whose
-files never change, so it cannot serve a rewritten segment; a Spark task
-reads through a fresh cache that keeps nothing. Routing does not look at
-the cache: ``planned_bytes`` counts every planned row group.
+byte-bounded LRU of postings columns keyed by ``(file uri, row group,
+column)`` (:attr:`SegmentExecutor.ROW_GROUP_CACHE_BYTES`), each held in the
+numpy form the kernels consume (converted once, when read, and read-only,
+so a kernel that writes to its input fails instead of corrupting the
+cache), with the row group's directory. A read serves each planned row
+group's columns from it and opens the file only for the missing ones. The
+cache belongs to the reader's snapshot, whose files never change, so it
+cannot serve a rewritten segment; a Spark task reads through a fresh cache
+that keeps nothing and converts only the rows it selects. Routing does not
+look at the cache: ``planned_bytes`` counts every planned row group.
 
 The kernel contract: every per-segment postings kernel of the searcher is
-written once, as ``kernel(seg, rows) -> pandas.DataFrame``.
+written once, as ``kernel(seg, rows) -> {column: ndarray}``.
 
 - ``rows`` maps each requested column to a numpy array of the segment's
   matching postings rows, with GLOBAL ``first_doc``/``last_doc`` (int64,
@@ -46,8 +58,13 @@ written once, as ``kernel(seg, rows) -> pandas.DataFrame``.
   (doc·2^34 composite keys in the span, automaton and interval kernels)
   subtract ``seg.offset`` to work on segment-local docIDs and add it back
   to their result; :meth:`Segment.live` drops deleted docs.
-- The kernel returns one of three shapes (:func:`hits_frame`): the match
-  set (``DOCS``), scored hits (``SCORED``), or one hit count (``COUNT``).
+- The kernel returns numpy columns of its run's schema (``{}`` for no
+  rows), usually one of three shapes (:func:`hits_frame`): the match set
+  (``DOCS``), scored hits (``SCORED``), or one hit count (``COUNT``). No
+  pandas frame is built per segment: :meth:`SegmentRun.collect`
+  concatenates the columns once, and a frame is built only at the Spark
+  boundary (the ``mapInPandas`` task, the ``applyInPandas`` group) and
+  once per collected result.
 - ``every_segment=True`` also visits the segments that hold none of the
   query's terms, with zero-row ``rows`` — docset (pre-resolved KNN) and
   match-all clauses of a boolean match there too.
@@ -65,7 +82,7 @@ the kernel schema), and :meth:`SegmentRun.df` the Spark DataFrame for
 callers that compose one (:meth:`SegmentExecutor.run`). Every pack reports
 its counters (where it ran, row groups in the files, row groups read and
 which, how many of those and their bytes came from the cache, postings
-rows and bytes, kernel ms, and the WAND block counters a
+rows and bytes, read ms and kernel ms, and the WAND block counters a
 kernel adds through :meth:`Segment.add_counts`); :meth:`SegmentExecutor.
 task_stats` returns them per run on both paths.
 """
@@ -74,6 +91,7 @@ from __future__ import annotations
 
 import bisect
 import itertools
+import sys
 import threading
 import time
 from collections import OrderedDict, deque
@@ -133,20 +151,24 @@ def _schema_dtypes(schema: str) -> dict:
             for name, typ in (part.split() for part in schema.split(","))}
 
 
-def hits_frame(docs, scores=None, count: bool = False, k=None):
-    """A kernel's output frame: one hit-count row (``count``), else the
+def hits_frame(docs, scores=None, count: bool = False, k=None) -> dict:
+    """A kernel's output columns: one hit-count row (``count``), else the
     (doc_id) match set — its ``k`` smallest docIDs when ``k`` is set — or
     (doc_id, score) rows when ``scores`` are given — the segment's top
     ``k`` (score DESC, doc_id ASC) when ``k`` is set."""
     if count:
-        return pd.DataFrame({"n": [int(docs.size)]})
+        return {"n": np.array([docs.size], np.int64)}
     if scores is None:
-        return pd.DataFrame({"doc_id": docs if k is None
-                             else np.sort(docs)[:k]})
+        return {"doc_id": docs if k is None else np.sort(docs)[:k]}
     if k is not None:
         order = np.lexsort((docs, -scores.astype(np.float64)))[:k]
         docs, scores = docs[order], scores[order]
-    return pd.DataFrame({"doc_id": docs, "score": scores.astype(np.float32)})
+    return {"doc_id": docs, "score": scores.astype(np.float32)}
+
+
+def _n_rows(out: dict) -> int:
+    """Rows of a kernel's output columns (``{}`` = none)."""
+    return len(next(iter(out.values()))) if out else 0
 
 
 class _TaskStatsParam(AccumulatorParam):
@@ -232,15 +254,26 @@ def _planned_row_groups(f: _Footer, field_terms: dict) -> list[int]:
                          for fl, ts in field_terms.items())]
 
 
+class _Column(NamedTuple):
+    """One cached postings column of one row group."""
+
+    values: object  # read-only numpy array; a pyarrow Array when not held
+    nbytes: int  # bytes held: see :func:`_numpy_form`
+    # Arrow bytes per row: the type width (int) of a fixed-width column, or
+    # prefix sums of value bytes + a 4-byte offset per row (variable width)
+    row_bytes: object
+    # ``field`` only: the row group's directory {field: (lo, hi) row run}
+    runs: dict | None = None
+
+
 class _RowGroupCache:
-    """Byte-bounded LRU of decoded postings columns, keyed by ``(file uri,
-    row group, column)``. The driver path shares the executor's (its
-    snapshot's files are immutable, so an entry can never go stale; it
-    dies with the reader); a Spark task uses a fresh one of bound 0, which
-    keeps nothing. ``lock`` guards the bookkeeping only; the parquet reads
-    that fill it run outside it. ``nbytes`` counts the held arrays' bytes
-    (each owns its buffers, see :func:`_read_row_groups`) and never
-    exceeds ``cap``."""
+    """Byte-bounded LRU of decoded postings columns (:class:`_Column`),
+    keyed by ``(file uri, row group, column)``. The driver path shares the
+    executor's (its snapshot's files are immutable, so an entry can never
+    go stale; it dies with the reader); a Spark task uses a fresh one of
+    bound 0, which keeps nothing. ``lock`` guards the bookkeeping only; the
+    parquet reads that fill it run outside it. ``nbytes`` is the sum of the
+    held columns' ``nbytes`` and never exceeds ``cap``."""
 
     def __init__(self, cap: int, lock=None):
         self.cap, self.nbytes = cap, 0
@@ -248,7 +281,7 @@ class _RowGroupCache:
         self._items: OrderedDict = OrderedDict()
 
     def get(self, keys) -> dict:
-        """``{key: (array, nbytes)}`` of the held ``keys``, each touched."""
+        """``{key: _Column}`` of the held ``keys``, each touched."""
         out = {}
         with self._lock:
             for k in keys:
@@ -259,29 +292,127 @@ class _RowGroupCache:
         return out
 
     def put(self, items: dict) -> None:
-        """Hold ``items`` (``{key: (array, nbytes)}``), evicting least
-        recently used entries past ``cap``; an array larger than ``cap`` is
-        not held."""
+        """Hold ``items`` (``{key: _Column}``), evicting least recently
+        used entries past ``cap``; a column larger than ``cap`` is not
+        held."""
         with self._lock:
             for k, e in items.items():
-                if e[1] > self.cap:
+                if e.nbytes > self.cap:
                     continue
                 old = self._items.pop(k, None)
                 if old is not None:
-                    self.nbytes -= old[1]
+                    self.nbytes -= old.nbytes
                 self._items[k] = e
-                self.nbytes += e[1]
+                self.nbytes += e.nbytes
             while self.nbytes > self.cap:
-                self.nbytes -= self._items.popitem(last=False)[1][1]
+                self.nbytes -= self._items.popitem(last=False)[1].nbytes
 
 
-def _read_row_groups(uri: str, md, missing: dict, own: bool) -> dict:
-    """``{(uri, row group, column): (array, nbytes)}`` of the ``missing``
-    columns
-    (``{row group: columns}``) of file ``uri``, opened once with its
-    footer ``md``: one read per distinct column set. A read of several row
-    groups returns one buffer per column; with ``own`` each row group's
-    slice is copied out, so a held array never pins the rest of its read."""
+# CPython object sizes: a bytes object past its data, a 1-d view (no data)
+_BYTES_HEAD = sys.getsizeof(b"")
+_VIEW_HEAD = sys.getsizeof(np.zeros(2)[1:])
+
+
+def _numpy_form(a):
+    """``(values, held bytes)`` of pyarrow Array ``a`` in the numpy form
+    the kernels consume. The held bytes are the array plus, for an object
+    column, each distinct element object, counted without a Python pass
+    over every row:
+
+    - string: equal values share one object (fields repeat, and so do the
+      terms of multi-block postings), so the objects are the dictionary's;
+    - binary: CPython shares the empty and one-byte objects; every longer
+      one is its own object of header plus data;
+    - list: every element is a view of one flat array of the values."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = a.type
+    if pa.types.is_string(t) and not a.null_count:
+        d = a.dictionary_encode()
+        uniq = d.dictionary.to_numpy(zero_copy_only=False)
+        v = uniq[d.indices.to_numpy()]
+        return v, v.nbytes + sum(map(sys.getsizeof, uniq))
+    v = a.to_numpy(zero_copy_only=False)
+    if pa.types.is_binary(t):
+        lens = pc.binary_length(a).fill_null(0).to_numpy()
+        small = lens <= 1  # and nulls (None)
+        return v, (v.nbytes + int((lens[~small] + _BYTES_HEAD).sum())
+                   + sum(map(sys.getsizeof, {id(x): x for x in v[small]}
+                             .values())))
+    if pa.types.is_list(t) and v.size and not a.null_count:
+        base = v[0].base
+        if base is not None and v[-1].base is base:
+            return v, v.nbytes + v.size * _VIEW_HEAD + base.nbytes
+    n = v.nbytes
+    if v.dtype == object:
+        for x in {id(x): x for x in v}.values():
+            n += sys.getsizeof(x)
+            if isinstance(x, np.ndarray) and x.base is not None:
+                n += x.nbytes
+    return v, n
+
+
+def _row_bytes(a):
+    """:attr:`_Column.row_bytes` of the pyarrow Array ``a``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    t = a.type
+    if pa.types.is_list(t):
+        lens = pc.multiply(pc.list_value_length(a),
+                           t.value_type.bit_width // 8)
+    elif pa.types.is_binary(t) or pa.types.is_string(t):
+        lens = pc.binary_length(a)
+    else:
+        return t.bit_width // 8
+    out = np.zeros(len(a) + 1, np.int64)
+    np.cumsum(lens.fill_null(0).to_numpy(zero_copy_only=False) + 4,
+              out=out[1:])
+    return out
+
+
+def _column(a, to_numpy: bool) -> _Column:
+    """The :class:`_Column` of pyarrow Array ``a``: its numpy form,
+    read-only (``to_numpy``), else ``a`` itself."""
+    rb = _row_bytes(a)
+    extra = rb.nbytes if isinstance(rb, np.ndarray) else 0
+    if not to_numpy:
+        return _Column(a, a.nbytes + extra, rb)
+    v, held = _numpy_form(a)
+    v.flags.writeable = False
+    return _Column(v, held + extra, rb)
+
+
+def _field_runs(fields: np.ndarray, terms: np.ndarray, uri: str,
+                rg: int) -> dict:
+    """``{field: (lo, hi)}``: the row run of each field of one row group.
+    Raises ``ValueError`` naming the file and row group unless each field's
+    rows are contiguous and its terms ascending (non-decreasing: a term's
+    blocks are consecutive rows) — the layout term slices rely on."""
+    cut = np.flatnonzero(fields[1:] != fields[:-1]) + 1
+    lo = np.concatenate([[0], cut]).astype(np.int64)
+    hi = np.concatenate([cut, [fields.size]]).astype(np.int64)
+    names = fields[lo].tolist() if fields.size else []
+    down = np.asarray(terms[1:] < terms[:-1], dtype=bool)
+    down[cut - 1] = False
+    if len(set(names)) != len(names) or down.any():
+        raise ValueError(
+            f"postings file {uri} row group {rg}: a field's rows are not "
+            "contiguous or its terms are not ascending (see "
+            "tools/check_index.py)")
+    return dict(zip(names, zip(lo.tolist(), hi.tolist())))
+
+
+def _read_row_groups(uri: str, md, missing: dict, resident: bool) -> dict:
+    """``{(uri, row group, column): _Column}`` of the ``missing`` columns
+    (``{row group: columns}``) of file ``uri``, opened once with its footer
+    ``md``: one read per distinct column set. With ``resident`` (the
+    driver's cache) every column takes its numpy form here, once, and a
+    multi-row-group read's slices are copied, so a held column never pins
+    the rest of its read; otherwise only ``field`` and ``term`` do (the
+    directory is built from them) and the rest stay Arrow, of which a read
+    converts only the rows it selects."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyarrow import fs
@@ -294,7 +425,7 @@ def _read_row_groups(uri: str, md, missing: dict, own: bool) -> dict:
     with pq.ParquetFile(path, filesystem=filesystem, metadata=md) as pf:
         for cols, rgs in groups.items():
             tbl = pf.read_row_groups(rgs, columns=list(cols))
-            copy = own and len(rgs) > 1
+            copy = resident and len(rgs) > 1
             off = 0
             for rg in rgs:
                 n = md.row_group(rg).num_rows
@@ -302,29 +433,88 @@ def _read_row_groups(uri: str, md, missing: dict, own: bool) -> dict:
                     a = tbl.column(c).slice(off, n)
                     a = (a.chunk(0) if a.num_chunks == 1 and not copy
                          else pa.concat_arrays(a.chunks))
-                    out[(uri, rg, c)] = (a, a.nbytes)
+                    out[(uri, rg, c)] = _column(
+                        a, resident or c in ("field", "term"))
                 off += n
     return out
 
 
+def _row_ranges(runs: dict, terms: np.ndarray, wanted: dict):
+    """``(lo, hi)`` int64 arrays of the row ranges of one row group whose
+    (field, term) is in ``wanted`` (``{field: sorted object array of
+    terms}``, ``None`` = the field's whole run): binary search in each
+    field's term run, ascending, adjacent ranges merged."""
+    los, his = [], []
+    for f, ts in wanted.items():
+        run = runs.get(f)
+        if run is None:
+            continue
+        lo, hi = run
+        if ts is None:
+            los.append(np.array([lo]))
+            his.append(np.array([hi]))
+            continue
+        a = np.searchsorted(terms[lo:hi], ts, "left")
+        b = np.searchsorted(terms[lo:hi], ts, "right")
+        hit = b > a
+        los.append(a[hit] + lo)
+        his.append(b[hit] + lo)
+    lo = np.concatenate(los) if los else np.zeros(0, np.int64)
+    hi = np.concatenate(his) if his else np.zeros(0, np.int64)
+    if lo.size < 2:
+        return lo, hi
+    order = np.argsort(lo, kind="stable")
+    lo, hi = lo[order], hi[order]
+    head = np.concatenate([[True], lo[1:] != hi[:-1]])
+    return lo[head], hi[np.concatenate([head[1:], [True]])]
+
+
+def _take_rows(values, lo: np.ndarray, hi: np.ndarray) -> np.ndarray:
+    """The rows ``[lo, hi)`` of a column as numpy: one slice for a single
+    range (a read-only view of a cached column), one index otherwise."""
+    if lo.size == 1:
+        part = values[int(lo[0]):int(hi[0])]
+    else:
+        n = hi - lo
+        idx = np.arange(int(n.sum())) + np.repeat(lo - np.cumsum(n) + n, n)
+        part = values[idx] if isinstance(values, np.ndarray) else \
+            values.take(idx)
+    return part if isinstance(part, np.ndarray) else \
+        part.to_numpy(zero_copy_only=False)
+
+
+def _range_bytes(row_bytes, lo: np.ndarray, hi: np.ndarray) -> int:
+    if isinstance(row_bytes, np.ndarray):
+        return int((row_bytes[hi] - row_bytes[lo]).sum())
+    return row_bytes * int((hi - lo).sum())
+
+
 def _read_segment_postings(seg: int, parts, field_terms: dict,
                            columns: list[str], counters: dict,
-                           cache: _RowGroupCache):
+                           cache: _RowGroupCache) -> dict | None:
     """The rows of segment ``seg`` whose (field, term) is in
     ``field_terms`` (``{field: sorted terms}``, ``None`` = every term of
-    the field), as a pyarrow Table of ``columns`` (None when no row
-    matches). ``parts`` lists the segment's files as ``(file index, uri,
-    FileMetaData, planned row groups, row groups in the file)``; only the
-    planned row groups are used, each column served from ``cache`` or, for
-    the misses alone, read from the file (and offered to ``cache``). Adds
-    what it used to ``counters``: ``read`` lists every planned ``[seg,
-    file index, row group]`` (cached or not); ``row_groups_cached`` and
-    ``bytes_cached`` count those served without touching the file."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    the field), in file order, as ``{column: numpy array}`` of ``columns``
+    (None when no row matches). ``parts`` lists the segment's files as
+    ``(file index, uri, FileMetaData, planned row groups, row groups in the
+    file)``; only the planned row groups are used, each column served from
+    ``cache`` or, for the misses alone, read from the file (and offered to
+    ``cache``). Rows are selected by binary search in each row group's
+    directory (:func:`_field_runs`), never by a scan.
 
+    Adds what it used to ``counters``: ``read`` lists every planned ``[seg,
+    file index, row group]`` (cached or not); ``row_groups_cached`` and
+    ``bytes_cached`` count those served without touching the file (and the
+    held bytes of their columns); ``postings_rows`` counts the selected
+    rows and ``postings_bytes`` their Arrow size over ``columns`` (type
+    width per row, or value bytes plus a 4-byte offset per row for binary,
+    string and list columns: the ``nbytes`` of those rows as a pyarrow
+    table, without validity bitmaps)."""
     read_cols = list(dict.fromkeys(["field", "term", *columns]))
-    chunks: dict[str, list] = {c: [] for c in read_cols}
+    wanted = {f: None if ts is None else np.asarray(ts, dtype=object)
+              for f, ts in field_terms.items()}
+    pieces: dict[str, list] = {c: [] for c in columns}
+    n_rows = 0
     for fi, uri, md, keep, n_groups in parts:
         counters["row_groups"] += n_groups
         counters["row_groups_read"] += len(keep)
@@ -339,29 +529,35 @@ def _read_segment_postings(seg: int, parts, field_terms: dict,
                 missing[rg] = miss
             else:
                 counters["row_groups_cached"] += 1
-                counters["bytes_cached"] += sum(got[(uri, rg, c)][1]
+                counters["bytes_cached"] += sum(got[(uri, rg, c)].nbytes
                                                 for c in read_cols)
         if missing:
-            new = _read_row_groups(uri, md, missing, own=cache.cap > 0)
+            new = _read_row_groups(uri, md, missing, resident=cache.cap > 0)
+            for rg, cols in missing.items():
+                if "field" in cols:
+                    k = (uri, rg, "field")
+                    terms = new.get((uri, rg, "term"), got.get(
+                        (uri, rg, "term")))
+                    new[k] = new[k]._replace(runs=_field_runs(
+                        new[k].values, terms.values, uri, rg))
             cache.put(new)
             got.update(new)
         for rg in keep:
-            for c in read_cols:
-                chunks[c].append(got[(uri, rg, c)][0])
-    if not chunks["field"]:
+            lo, hi = _row_ranges(got[(uri, rg, "field")].runs,
+                                 got[(uri, rg, "term")].values, wanted)
+            if not lo.size:
+                continue
+            n_rows += int((hi - lo).sum())
+            for c in columns:
+                col = got[(uri, rg, c)]
+                pieces[c].append(_take_rows(col.values, lo, hi))
+                counters["postings_bytes"] += _range_bytes(col.row_bytes,
+                                                           lo, hi)
+    counters["postings_rows"] += n_rows
+    if not n_rows:
         return None
-    tbl = pa.table({c: pa.chunked_array(v) for c, v in chunks.items()})
-    mask = None
-    for f in sorted(field_terms):
-        m = pc.equal(tbl["field"], f)
-        if field_terms[f] is not None:
-            m = pc.and_(m, pc.is_in(tbl["term"],
-                                    value_set=pa.array(field_terms[f])))
-        mask = m if mask is None else pc.or_(mask, m)
-    tbl = tbl.filter(mask).select(columns)
-    counters["postings_rows"] += tbl.num_rows
-    counters["postings_bytes"] += tbl.nbytes
-    return tbl if tbl.num_rows else None
+    return {c: v[0] if len(v) == 1 else np.concatenate(v)
+            for c, v in pieces.items()}
 
 
 def _segment(s: int, off: int, dload, counters: dict) -> Segment:
@@ -384,36 +580,39 @@ def _globalize(rows: dict, off: int) -> dict:
 def _pack_body(run_id: int, packs, parts, field_terms: dict,
                columns: list[str], kernel, offsets: dict, dload,
                every_segment: bool, cache: _RowGroupCache | None = None):
-    """The task body of a run, shared by both paths: ``body(t, where)``
-    yields the kernel frames of pack ``t`` and, last, its counters dict.
-    Reads go through ``cache`` (the executor's on the driver path); with
-    none each call uses a fresh one of bound 0. Without ``cache`` the body
-    holds only picklable data (it is shipped to Spark tasks)."""
+    """The task body of a run, shared by both paths: ``body(t, where,
+    stats)`` yields the non-empty kernel outputs (``{column: ndarray}``) of
+    pack ``t`` and, once they are exhausted, appends its counters dict to
+    ``stats``. Reads go through ``cache`` (the executor's on the driver
+    path); with none each call uses a fresh one of bound 0. Without
+    ``cache`` the body holds only picklable data (it is shipped to Spark
+    tasks)."""
 
-    def body(t: int, where: str):
+    def body(t: int, where: str, stats: list):
         c = {"run": run_id, "task": t, "where": where,
              "segments": packs[t], "row_groups": 0, "row_groups_read": 0,
              "row_groups_cached": 0, "bytes_cached": 0,
              "read": [], "postings_rows": 0, "postings_bytes": 0,
-             "kernel_ms": 0.0, **dict.fromkeys(BLOCK_COUNTERS, 0)}
+             "read_ms": 0.0, "kernel_ms": 0.0,
+             **dict.fromkeys(BLOCK_COUNTERS, 0)}
         rg_cache = cache if cache is not None else _RowGroupCache(0)
         for s in packs[t]:
-            tbl = (_read_segment_postings(s, parts[s], field_terms,
-                                          columns, c, rg_cache)
-                   if field_terms else None)
-            if tbl is None and not every_segment:
+            t0 = time.perf_counter()
+            rows = (_read_segment_postings(s, parts[s], field_terms,
+                                           columns, c, rg_cache)
+                    if field_terms else None)
+            c["read_ms"] += (time.perf_counter() - t0) * 1e3
+            if rows is None and not every_segment:
                 continue
             off = int(offsets[s])
-            rows = (_empty_rows(columns) if tbl is None else
-                    {col: tbl.column(col).to_numpy(zero_copy_only=False)
-                     for col in columns})
             seg = _segment(s, off, dload, c)
             t0 = time.perf_counter()
-            out = kernel(seg, _globalize(rows, off))
+            out = kernel(seg, _globalize(
+                _empty_rows(columns) if rows is None else rows, off))
             c["kernel_ms"] += (time.perf_counter() - t0) * 1e3
-            if len(out):
+            if _n_rows(out):
                 yield out
-        yield c
+        stats.append(c)
 
     return body
 
@@ -483,11 +682,10 @@ class SegmentRun:
         def task(batches):
             for pdf in batches:
                 for t in pdf["id"].tolist():
-                    for out in body(int(t), "spark"):
-                        if isinstance(out, dict):
-                            acc.add([out])
-                        else:
-                            yield out
+                    stats: list = []
+                    for out in body(int(t), "spark", stats):
+                        yield pd.DataFrame(out)
+                    acc.add(stats)
 
         n = len(self.packs)
         return ex.spark.range(n, numPartitions=n).mapInPandas(task,
@@ -500,15 +698,13 @@ class SegmentRun:
         dtypes = _schema_dtypes(self.schema)
         if self.where == "driver":
             body = self._body(self.ex._next_run(), self.ex._cache)
-            frames, stats = [], []
-            for t in range(len(self.packs)):
-                for out in body(t, "driver"):
-                    (stats if isinstance(out, dict) else frames).append(out)
+            stats: list = []
+            outs = [out for t in range(len(self.packs))
+                    for out in body(t, "driver", stats)]
             self.ex._record(stats)
             return pd.DataFrame({
-                c: np.concatenate([f[c].to_numpy() for f in frames]
-                                  ).astype(dt, copy=False)
-                if frames else np.zeros(0, dt) for c, dt in dtypes.items()})
+                c: np.concatenate([o[c] for o in outs]).astype(dt, copy=False)
+                if outs else np.zeros(0, dt) for c, dt in dtypes.items()})
         from lucene_spark.session import no_aqe
 
         with no_aqe(self.ex.spark):
@@ -533,7 +729,10 @@ class SegmentExecutor:
     # tools/executor_crossover.py). Re-measured with the row-group cache
     # warm: driver 0.5 / -7.4 ms + 16.1 / 12.3 ms/MB, Spark 151.2 / 113.4
     # ms - 8.0 / + 2.9 ms/MB, equal at 6.3 / 12.9 MB; the two fits fall
-    # on either side of the bound, so it stays.
+    # on either side of the bound, so it stays. Re-measured with term
+    # slices and numpy kernel outputs: driver -4.9 / -59.7 ms + 11.9 /
+    # 24.1 ms/MB, Spark 139.4 / 89.8 ms - 6.5 / + 6.3 ms/MB, equal at 7.8
+    # / 8.4 MB; it stays.
     DRIVER_RUN_BYTES = 8_000_000
     # bytes of decoded postings columns the driver path keeps resident
     # across runs (:class:`_RowGroupCache`)
@@ -585,7 +784,7 @@ class SegmentExecutor:
         """Plan ``kernel(segment, rows)`` over every segment holding
         postings of ``field_terms`` (``{field: terms}``; ``None`` terms =
         the whole field; a postings DataFrame runs through
-        :meth:`run_df`). The kernel returns a pandas DataFrame matching
+        :meth:`run_df`). The kernel returns ``{column: ndarray}`` of
         ``schema`` (see the module doc for the contract). Segments without
         matching rows reach the kernel only with ``every_segment``
         (zero-row ``rows``). ``segments`` restricts the run to those
@@ -613,8 +812,8 @@ class SegmentExecutor:
         def group(pdf):
             off = int(pdf["doc_offset"].iloc[0])
             seg = _segment(int(pdf["seg"].iloc[0]), off, dload, {})
-            return kernel(seg, _globalize(
-                {c: pdf[c].to_numpy() for c in columns}, off))
+            return pd.DataFrame(kernel(seg, _globalize(
+                {c: pdf[c].to_numpy() for c in columns}, off)))
 
         return (postings.select("seg", "doc_offset", *columns)
                 .groupBy("seg").applyInPandas(group, schema))

@@ -149,11 +149,8 @@ def _flat_topk_kernel(items, k: int, prune: bool, sep: str):
             qi.append(np.full(d.size, qid, np.int64))
             dd.append(d)
             ss.append(s)
-        return pd.DataFrame({
-            "qid": np.concatenate(qi),
-            "doc_id": np.concatenate(dd),
-            "score": np.concatenate(ss).astype(np.float32),
-        })
+        return {"qid": np.concatenate(qi), "doc_id": np.concatenate(dd),
+                "score": np.concatenate(ss).astype(np.float32)}
 
     return kernel
 
@@ -184,7 +181,7 @@ def _run_counters(stats: list[dict]) -> dict | None:
            "segments": sum(len(e["segments"]) for e in stats)}
     for key in ("row_groups", "row_groups_read", "row_groups_cached",
                 "bytes_cached", "postings_rows", "postings_bytes",
-                "kernel_ms", *BLOCK_COUNTERS):
+                "read_ms", "kernel_ms", *BLOCK_COUNTERS):
         out[key] = sum(e[key] for e in stats)
     return out
 
@@ -2019,11 +2016,11 @@ class IndexSearcher:
         def kernel(seg, rows):
             tgt = seg.live(targets[seg.id])
             if tgt.size == 0:
-                return pd.DataFrame()
+                return {}
             keep = ((rows["last_doc"] >= tgt[0])
                     & (rows["first_doc"] <= tgt[-1]))
             if not keep.any():
-                return pd.DataFrame()
+                return {}
             rows = {c: v[keep] for c, v in rows.items()}
             counts = rows["count"].astype(np.int64)
             docs, starts = decode_doc_ids_batch(
@@ -2032,7 +2029,7 @@ class IndexSearcher:
             tfs = decode_posting_bufs(list(rows["tfs"]))
             hit = np.isin(docs, tgt)
             if not hit.any():
-                return pd.DataFrame()
+                return {}
             blk_of = np.repeat(np.arange(counts.size), counts)
             hidx = np.flatnonzero(hit)
             pos_col = np.full(hidx.size, "", dtype=object)
@@ -2050,12 +2047,8 @@ class IndexSearcher:
                 pos_col[:] = [" ".join(map(str, flat[a:a + n].tolist()))
                               for a, n in zip(p0.tolist(),
                                               tfs[hidx].tolist())]
-            return pd.DataFrame({
-                "doc_id": docs[hidx],
-                "term": rows["term"][blk_of[hidx]],
-                "freq": tfs[hidx].astype("int32"),
-                "positions": pos_col,
-            })
+            return {"doc_id": docs[hidx], "term": rows["term"][blk_of[hidx]],
+                    "freq": tfs[hidx].astype("int32"), "positions": pos_col}
 
         return self.reader.segment_executor().run(
             {field: None}, ["term", "first_doc", "last_doc", "count",
@@ -2134,7 +2127,7 @@ class IndexSearcher:
             dids = dt.column("doc_id").to_numpy()
             n = int(dids.max()) + 1 if len(dids) else 0
             if n == 0:
-                return pd.DataFrame()
+                return {}
             # combined norm per local doc (MultiFieldNormValues.advanceExact:
             # Math.round == floor(x + 0.5), then intToByte4 re-encode)
             nv = np.zeros(n, dtype=np.float32)
@@ -2158,7 +2151,7 @@ class IndexSearcher:
                 hit[seg.deleted - seg.offset] = False
             hidx = np.flatnonzero(hit)
             if hidx.size == 0:
-                return pd.DataFrame()
+                return {}
             sc = scorer.score(freq[hidx], comb_norm[hidx])
             return hits_frame(hidx + seg.offset, np.asarray(sc))
 

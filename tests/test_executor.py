@@ -20,7 +20,8 @@ from lucene_spark.corpus import VOCAB, synthetic_transcripts_pdf
 from lucene_spark.goldens import BruteForceIndex
 from lucene_spark.indexing.builder import IndexBuilder
 from lucene_spark.search import ast
-from lucene_spark.search.executor import SegmentExecutor, pack_segments
+from lucene_spark.search.executor import (DOCS, SegmentExecutor,
+                                          pack_segments)
 from lucene_spark.search.searcher import IndexSearcher
 
 A, B, C, D = VOCAB[0], VOCAB[3], VOCAB[7], VOCAB[11]
@@ -625,7 +626,10 @@ def test_row_group_cache_stays_under_its_cap(spark, built, golden,
             assert _hits(s.search(q, 10)) == golden.search(q, 10), q
             assert ex._cache.nbytes <= cap
             assert ex._cache.nbytes == sum(
-                e[1] for e in ex._cache._items.values())
+                e.nbytes for e in ex._cache._items.values())
+            # and that is what the held columns really take
+            assert ex._cache.nbytes == sum(
+                _deep_size(e) for e in ex._cache._items.values())
     assert ex._cache._items  # small columns are still held
 
 
@@ -754,7 +758,7 @@ def test_concurrent_callers_match_sequential(spark, built, monkeypatch):
         assert 2 <= qc.misses <= 3 and len(qc._cache) == 1
         cache = s.reader.segment_executor()._cache
         assert cache.nbytes <= cap
-        assert cache.nbytes == sum(e[1] for e in cache._items.values())
+        assert cache.nbytes == sum(e.nbytes for e in cache._items.values())
 
 
 def test_span_and_automaton_topk_run_no_job_below_bound(
@@ -844,3 +848,280 @@ def test_profile_reports_wand_block_counters(spark, hot, monkeypatch):
         c = s.profile(q, k=10)["executor"]
         assert c["where"] == where
         assert {key: c[key] for key in keys} == want["wand"], where
+
+
+# ---- term slices: the read equals an independent filter ---------------------
+
+def _filter_reference(paths, field_terms, columns):
+    """The rows of the postings files ``paths`` (in file order) whose
+    (field, term) is in ``field_terms`` (``None`` = the whole field), by a
+    ``pc.equal``/``pc.is_in`` scan of every row, and their byte count:
+    the type width per row, or value bytes plus a 4-byte offset for
+    binary, string and list columns."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tables = []
+    for p in paths:
+        t = pq.read_table(p)
+        mask = pa.array(np.zeros(t.num_rows, bool))
+        for f, ts in field_terms.items():
+            m = pc.equal(t["field"], f)
+            if ts is not None:
+                m = pc.and_(m, pc.is_in(t["term"], value_set=pa.array(
+                    list(ts), pa.string())))
+            mask = pc.or_(mask, m)
+        tables.append(t.filter(mask).select(columns))
+    rows = {c: [x for t in tables for x in t[c].to_pylist()]
+            for c in columns}
+    nbytes = 0
+    for t in tables:
+        for c in columns:
+            typ = t.schema.field(c).type
+            for x in t[c].to_pylist():
+                if isinstance(x, (bytes, str)):
+                    nbytes += 4 + len(x.encode() if isinstance(x, str) else x)
+                elif isinstance(x, list):
+                    nbytes += 4 + 4 * len(x)
+                else:
+                    nbytes += typ.bit_width // 8
+    return rows, nbytes
+
+
+def _as_lists(rows: dict) -> dict:
+    return {c: [x.tolist() if isinstance(x, np.ndarray) else x
+                for x in v.tolist()] for c, v in rows.items()}
+
+
+def _random_field_terms(rng, vocab: dict):
+    """1-3 fields, each ``None`` (the whole field) or a mix of present
+    terms (a run of neighbours, so ranges merge, plus scattered ones) and
+    absent ones."""
+    absent = ["", "0000absent", "zzzzabsent", "m\x00between"]
+    out = {}
+    fields = sorted(vocab) + ["nosuchfield"]
+    for f in rng.choice(fields, size=int(rng.integers(1, len(fields) + 1)),
+                        replace=False):
+        terms = vocab.get(f, ["user"])
+        if rng.random() < 0.2:
+            out[f] = None
+            continue
+        i = int(rng.integers(0, len(terms)))
+        picked = set(terms[i:i + int(rng.integers(1, 6))])
+        picked |= set(rng.choice(terms, size=min(len(terms), int(
+            rng.integers(0, 8))), replace=False).tolist())
+        picked |= set(rng.choice(absent, size=int(rng.integers(0, 3)),
+                                 replace=False).tolist())
+        out[f] = sorted(picked)
+    return out
+
+
+def _check_slices_match_filter(spark, d, seed, n_cases=40, n_fields=2):
+    """Seeded random ``field_terms`` over every segment of index ``d``:
+    ``_read_segment_postings`` (through the resident cache, cold and warm,
+    and through a bound-0 cache like a Spark task) returns exactly the rows
+    of an independent filter, in file order, and counts them and their
+    bytes."""
+    from lucene_spark.search.executor import (_read_segment_postings,
+                                              _RowGroupCache)
+    from lucene_spark.search.searcher import FLAT_COLS, POS_COLS
+
+    ex = IndexSearcher(spark, d).reader.segment_executor()
+    paths = {s: [urlparse(u).path for u in v] for s, v in ex.files.items()}
+    vocab: dict = {}
+    for v in paths.values():
+        for p in v:
+            t = pq.read_table(p, columns=["field", "term"]).to_pandas()
+            for f, g in t.groupby("field"):
+                vocab.setdefault(f, set()).update(g["term"])
+    vocab = {f: sorted(ts) for f, ts in vocab.items()}
+    assert len(vocab) == n_fields  # text and, by default, a keyword field
+    rng = np.random.default_rng(seed)
+    resident = _RowGroupCache(10 ** 9)
+    seen_rows = 0
+    for case in range(n_cases):
+        field_terms = _random_field_terms(rng, vocab)
+        columns = (POS_COLS, FLAT_COLS)[case % 2]
+        run = ex.prepare(field_terms, columns, lambda seg, rows: {}, DOCS)
+        for s, parts in run.parts.items():
+            want, want_bytes = _filter_reference(paths[s], field_terms,
+                                                 columns)
+            for cache in (resident, resident, _RowGroupCache(0)):
+                c = {"row_groups": 0, "row_groups_read": 0, "read": [],
+                     "row_groups_cached": 0, "bytes_cached": 0,
+                     "postings_rows": 0, "postings_bytes": 0}
+                got = _read_segment_postings(s, parts, run.field_terms,
+                                             columns, c, cache)
+                n = len(want[columns[0]])
+                assert c["postings_rows"] == n, (field_terms, s)
+                assert c["postings_bytes"] == want_bytes, (field_terms, s)
+                if not n:
+                    assert got is None, (field_terms, s)
+                    continue
+                assert _as_lists(got) == want, (field_terms, s)
+                seen_rows += n
+    assert seen_rows > 0
+
+
+def test_term_slices_match_filter_small_row_groups(spark, built, tmp_path):
+    """Tiny row groups: terms (and fields) span row-group boundaries."""
+    d = _small_row_groups(built, str(tmp_path / "rg_slices"))
+    _check_slices_match_filter(spark, d, seed=13)
+
+
+def test_term_slices_match_filter(spark, built):
+    _check_slices_match_filter(spark, built, seed=7)
+
+
+def test_term_slices_match_filter_appended_and_compacted(spark, built,
+                                                         corpus, tmp_path):
+    """Segments written by ``IncrementalIndexer.append`` (text only: the
+    append path writes no keyword fields) and by ``compact()`` of the
+    keyword-field index (the merge writes fields in sorted order, ``role``
+    before ``text``) slice the same rows as the filter."""
+    from lucene_spark.indexing.maintenance import IndexMaintenance
+    from lucene_spark.streaming.incremental import IncrementalIndexer
+
+    d = str(tmp_path / "appended")
+    half = len(corpus) // 2
+    inc = IncrementalIndexer(spark, d, rows_per_segment=40)
+    inc.append(spark.createDataFrame(corpus.iloc[:half]), epoch_id=0)
+    inc.append(spark.createDataFrame(corpus.iloc[half:]), epoch_id=1)
+    _check_slices_match_filter(spark, d, seed=3, n_cases=20, n_fields=1)
+    assert _layout_problems(d) == []
+    d = str(tmp_path / "compacted")
+    shutil.copytree(built, d)
+    m = IndexMaintenance(spark, d)
+    assert m.delete_by_term(C) > 0
+    assert m.compact(target_rows=10 ** 6)["merged_runs"] >= 1
+    _check_slices_match_filter(spark, d, seed=5, n_cases=20)
+    assert _layout_problems(d) == []
+
+
+def _layout_problems(d):
+    """``tools/check_index.py``'s postings-layout check over the live
+    segments of index ``d``."""
+    import importlib.util
+    import json
+
+    tool = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "tools", "check_index.py")
+    spec = importlib.util.spec_from_file_location("check_index", tool)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    with open(f"{d}/manifest.json") as f:
+        segs = sorted(int(x) for x in json.load(f)["offsets"])
+    return mod.check_postings_layout(d, segs)
+
+
+def _shuffled_copy(src, dst):
+    """Copy an index with one postings file's rows shuffled (fields and
+    terms out of order) — the file the segment reads from."""
+    import glob
+
+    shutil.copytree(src, dst)
+    p = sorted(glob.glob(f"{dst}/postings/seg=*/*.parquet"))[0]
+    t = pq.read_table(p)
+    perm = np.random.default_rng(0).permutation(t.num_rows)
+    pq.write_table(t.take(perm), p)
+    return p
+
+
+def test_layout_break_raises_naming_file_and_row_group(spark, built,
+                                                       tmp_path):
+    """A postings file whose fields are not contiguous or whose terms are
+    not ascending cannot be sliced: the read raises, naming the file and
+    the row group, instead of returning wrong rows; CheckIndex reports the
+    file and passes the built one (appended and compacted ones: above)."""
+    import re
+
+    p = _shuffled_copy(built, str(tmp_path / "shuffled"))
+    s = IndexSearcher(spark, str(tmp_path / "shuffled"))
+    name = re.escape(p.split("/postings/")[1])
+    with pytest.raises(ValueError, match=f"{name} row group 0"):
+        s.search(A, 10)
+    # CheckIndex passes the built index and reports the shuffled file
+    assert _layout_problems(built) == []
+    problems = _layout_problems(str(tmp_path / "shuffled"))
+    assert problems and all(x.startswith(p) for x in problems), problems
+
+
+# ---- the read-time counter and the cache's held form -------------------------
+
+def test_read_ms_within_collect_wall_time(spark, built, monkeypatch):
+    """Every pack reports ``read_ms`` (time in the postings read) beside
+    ``kernel_ms``; on either path neither is negative and a pack's read
+    plus kernel time fits in the wall time of the ``collect()`` that ran
+    it (on the driver path, so does their sum over packs). ``profile()``
+    sums them."""
+    import time
+
+    s = IndexSearcher(spark, built)
+    ex = s.reader.segment_executor()
+    wc = s._weighted_clauses(s.parse(f"{A} {B} role:user"))
+    for bound, where in ((SegmentExecutor.DRIVER_RUN_BYTES, "driver"),
+                         (0, "spark")):
+        monkeypatch.setattr(SegmentExecutor, "DRIVER_RUN_BYTES", bound)
+        for _ in range(2):  # cold, then warm
+            run = s._flat_topk([(0, wc)], 10, prune=True)
+            assert run.where == where
+            t0 = time.perf_counter()
+            run.collect()
+            wall_ms = (time.perf_counter() - t0) * 1e3
+            stats = ex.task_stats()
+            assert stats and {e["where"] for e in stats} == {where}
+            for e in stats:
+                assert e["read_ms"] >= 0 and e["kernel_ms"] >= 0
+                assert e["read_ms"] + e["kernel_ms"] <= wall_ms
+            if where == "driver":
+                assert sum(e["read_ms"] + e["kernel_ms"]
+                           for e in stats) <= wall_ms
+        c = s.profile(f"{A} {B}", k=10)["executor"]
+        stats = ex.task_stats()
+        assert c["read_ms"] == sum(e["read_ms"] for e in stats) >= 0
+
+
+def _deep_size(col) -> int:
+    """Bytes held by a cached column, counted from its parts: the numpy
+    buffer, each distinct element object (with a view element's data) and
+    the row-byte prefix sums."""
+    import sys
+
+    v = col.values
+    n = v.nbytes
+    if isinstance(col.row_bytes, np.ndarray):
+        n += col.row_bytes.nbytes
+    if v.dtype == object:
+        seen = set()
+        for x in v:
+            if id(x) in seen:
+                continue
+            seen.add(id(x))
+            n += sys.getsizeof(x)
+            if isinstance(x, np.ndarray) and not x.flags.owndata:
+                n += x.nbytes
+    return n
+
+
+def test_cache_holds_read_only_numpy_at_its_true_size(spark, built, golden):
+    """The driver cache holds every column in numpy form, read-only, and
+    its ``nbytes`` is the deep size of what it holds; a kernel that writes
+    to its input fails and leaves the cache (and later answers) intact."""
+    s = IndexSearcher(spark, built)
+    ex = s.reader.segment_executor()
+    for q in QUERIES:
+        assert _hits(s.search(q, 10)) == golden.search(q, 10), q
+    items = list(ex._cache._items.values())
+    assert items
+    assert all(isinstance(e.values, np.ndarray) and not e.values.flags.
+               writeable for e in items)
+    assert ex._cache.nbytes == sum(_deep_size(e) for e in items)
+
+    def clobber(seg, rows):
+        rows["count"][:] = 0
+        return {}
+
+    with pytest.raises(ValueError, match="read-only"):
+        ex.prepare({"text": [A]}, ["count"], clobber, DOCS).collect()
+    for q in QUERIES:
+        assert _hits(s.search(q, 10)) == golden.search(q, 10), q

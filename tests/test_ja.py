@@ -120,6 +120,21 @@ def test_viterbi_minimality_brute_force():
             assert t.segment(run) == expect, run
 
 
+def test_dictionary_path_beats_grouped_unknown_kana():
+    """Hiragana does not invoke unknown-word processing (IPADIC char.def),
+    so a run that dictionary words cover segments into them: a grouped
+    unknown run like しししし (19100) must not undercut し|し|し|し (20000)."""
+    t = JapaneseTokenizer()
+    for run in ["しししし", "ししだもの"]:
+        got = t.segment(run)
+        expect = brute_force_best_path(t, run)
+        assert dict_path_cost(t, got) == dict_path_cost(t, expect), (run, got)
+    assert t.segment("しししし") == ["し"] * 4
+    # katakana still invokes: an unknown compound stays one token
+    assert t.segment("シニアソフトウェアエンジニア") == [
+        "シニアソフトウェアエンジニア"]
+
+
 def test_viterbi_minimality_all_language_instantiations():
     from lucene_spark.analysis_ko import KoreanTokenizer
     from lucene_spark.analysis_th import ThaiTokenizer

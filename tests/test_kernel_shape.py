@@ -260,3 +260,83 @@ def test_traced_search_runs_one_stage(spark, index_dir, job_shape,
         assert hits == want[shape] and hits, shape
         assert jobs == 1 and stages == 1, (shape, jobs, stages)
         assert tasks <= sc.defaultParallelism, (shape, tasks)
+
+
+_EXECUTOR_ENTRIES = {"prepare", "run", "run_df"}
+
+
+def _kernel_defs(path):
+    """``(site, kernel function node)`` of every kernel handed to an
+    executor entry (``.prepare``/``.run``/``.run_df``, the kernel is the
+    third argument) in ``path``: a name resolves to the nested or
+    module-level function of that name; a call (a kernel factory such as
+    ``_flat_topk_kernel(...)``) to the module-level factory. Unresolved
+    names are reported as ``(site, None)``."""
+    tree = ast.parse(open(path).read())
+    top = {n.name: n for n in tree.body
+           if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))}
+    found = []
+
+    def visit(node, scope, local):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                inner = dict(local)
+                inner.update({n.name: n for n in ast.walk(child)
+                              if isinstance(n, (ast.FunctionDef,
+                                                ast.AsyncFunctionDef))
+                              and n is not child})
+                visit(child, scope + [child.name], inner)
+                continue
+            if isinstance(child, ast.ClassDef):
+                visit(child, scope + [child.name], local)
+                continue
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr in _EXECUTOR_ENTRIES):
+                arg = (child.args[2] if len(child.args) > 2 else next(
+                    (k.value for k in child.keywords if k.arg == "kernel"),
+                    None))
+                site = ".".join(scope)
+                if isinstance(arg, ast.Name):
+                    found.append((site, local.get(arg.id, top.get(arg.id))))
+                elif isinstance(arg, ast.Call) and isinstance(arg.func,
+                                                               ast.Name):
+                    found.append((site, top.get(arg.func.id)))
+            visit(child, scope, local)
+
+    visit(tree, [], {})
+    return found
+
+
+def _builds_frame(fn) -> bool:
+    return any(isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute)
+               and n.func.attr == "DataFrame" for n in ast.walk(fn))
+
+
+def test_executor_kernels_return_numpy_columns():
+    """The kernel contract is ``kernel(seg, rows) -> {column: ndarray}``:
+    no kernel handed to the executor (nor ``hits_frame``, which most of
+    them return through) builds a pandas DataFrame; frames are built once
+    per run at the executor's Spark boundary and ``collect()``."""
+    import glob
+
+    from lucene_spark.search import executor
+
+    offenders, kernels = [], 0
+    for path in sorted(glob.glob(f"{REPO}/lucene_spark/search/*.py")):
+        if path.endswith("executor.py"):
+            continue  # its entries pass the caller's kernel through
+        for site, fn in _kernel_defs(path):
+            mod = os.path.relpath(path, REPO)
+            if fn is None:
+                offenders.append(f"{mod}:{site}: kernel not resolved")
+            elif _builds_frame(fn):
+                offenders.append(f"{mod}:{site}:{fn.name}")
+            else:
+                kernels += 1
+    assert not offenders, offenders
+    assert kernels >= 16, kernels  # the 16 kernels of searcher and multiterm
+    src = open(executor.__file__).read()
+    hits = next(n for n in ast.parse(src).body
+                if isinstance(n, ast.FunctionDef) and n.name == "hits_frame")
+    assert not _builds_frame(hits)

@@ -5,7 +5,9 @@ analogy, SURVEY.md §5 row 7). Re-reads every structure and validates:
    (conv_id, turn_idx) - 1; norm == SmallFloat(int_to_byte4(dl)).
 2. postings: per (term, segment) blocks doc-ordered and disjoint; block
    metadata (first/last/count/ttf/max_tf) consistent with decoded content;
-   impacts are a Pareto frontier covering the block's (tf, norm) pairs.
+   impacts are a Pareto frontier covering the block's (tf, norm) pairs;
+   in file order, each field's rows are contiguous and its terms ascending
+   (the layout the serving path's binary-search term slices rely on).
 3. stats: term_stats df/ttf == recount from postings; field_stats sums match.
 4. manifest: offsets cumulative in segment order; doc_count == Σ rows.
 
@@ -52,6 +54,38 @@ def check_segment_postings(pdf: pd.DataFrame) -> list[str]:
             it, inm = pareto_impacts(tf, nm)
             if list(it) != list(r.impact_tfs) or list(inm) != list(r.impact_norms):
                 errs.append(f"{term!r} blk{r.block_id}: impacts not the Pareto frontier")
+    return errs
+
+
+def check_postings_layout(index_dir: str, segs) -> list[str]:
+    """Problems with the row layout of segments ``segs``' postings files,
+    read in file order: a field whose rows are not one contiguous run, or a
+    field run whose terms are not ascending (non-decreasing, since a term's
+    blocks are consecutive rows)."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    errs = []
+    for s in segs:
+        for path in sorted(glob.glob(f"{index_dir}/postings/seg={s}/*.parquet")):
+            t = pq.read_table(path, columns=["field", "term"])
+            fields = t.column("field").to_pylist()
+            terms = t.column("term").to_pylist()
+            done: set = set()
+            for i, f in enumerate(fields):
+                if i and f == fields[i - 1]:
+                    if terms[i] < terms[i - 1]:
+                        errs.append(f"{path}: field {f!r} terms not ascending "
+                                    f"at row {i} ({terms[i - 1]!r} > "
+                                    f"{terms[i]!r})")
+                        break
+                    continue
+                if f in done:
+                    errs.append(f"{path}: field {f!r} rows not contiguous "
+                                f"(run resumes at row {i})")
+                    break
+                done.add(f)
     return errs
 
 
@@ -128,6 +162,7 @@ def main():
         post.groupBy("seg").applyInPandas(run, "err string").collect()
     )
     problems.extend(r["err"] for r in errs)
+    problems.extend(check_postings_layout(index_dir, live_segs))
 
     # stats consistency (resolved through the manifest generation pointer)
     sdirs = manifest.get("stats_dirs", {})
