@@ -104,6 +104,7 @@ import pandas as pd
 from pyspark.accumulators import AccumulatorParam
 
 from lucene_spark.indexing.tableio import segment_of
+from lucene_spark.search.wand import topk_order
 
 
 @dataclass(frozen=True)
@@ -161,7 +162,7 @@ def hits_frame(docs, scores=None, count: bool = False, k=None) -> dict:
     if scores is None:
         return {"doc_id": docs if k is None else np.sort(docs)[:k]}
     if k is not None:
-        order = np.lexsort((docs, -scores.astype(np.float64)))[:k]
+        order = topk_order(docs, scores, k)
         docs, scores = docs[order], scores[order]
     return {"doc_id": docs, "score": scores.astype(np.float32)}
 

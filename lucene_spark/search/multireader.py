@@ -32,7 +32,7 @@ from __future__ import annotations
 import numpy as np
 
 from lucene_spark.search import ast
-from lucene_spark.search.searcher import IndexSearcher, ScoreDoc
+from lucene_spark.search.searcher import IndexSearcher, ScoreDoc, _topk_hits
 
 
 def _collect_terms(q, out: dict):
@@ -127,17 +127,8 @@ class MultiIndexSearcher:
             query = self.parse(query)
         query = ast.normalize(query)
         parts = self._run("search", query, k, mode=mode)
-        docs, scores = [], []
-        for hits, base in parts:
-            for h in hits:
-                docs.append(h.doc_id + base)
-                scores.append(h.score)
-        if not docs:
-            return []
-        d = np.asarray(docs, dtype=np.int64)
-        sc = np.asarray(scores, dtype=np.float32)
-        order = np.lexsort((d, -sc.astype(np.float64)))[:k]
-        return [ScoreDoc(int(d[i]), float(sc[i])) for i in order]
+        hits = [(h.doc_id + base, h.score) for sub, base in parts for h in sub]
+        return _topk_hits([d for d, _ in hits], [s for _, s in hits], k)
 
     def count(self, query) -> int:
         """TotalHitCount over the composite — per-sub-index counts summed

@@ -272,7 +272,7 @@ def expand_terms(reader, q: ast.MultiTermQuery, max_terms: int = 100_000) -> lis
     Raises :class:`TooManyClauses` past ``max_terms`` (never silently
     truncates — a wildcard like ``a*`` over a 10^8-term dictionary must fail
     loudly, not return wrong results). Use the semi-join path
-    (:func:`matched_terms_df` + :func:`constant_score_topk`) when the term
+    (:func:`matched_terms_df` + :func:`constant_score`) when the term
     list itself is not needed on the driver.
     """
     from lucene_spark.session import no_aqe
@@ -341,57 +341,48 @@ def _union_docs(rows) -> np.ndarray:
     return np.unique(d)
 
 
-def constant_score_topk(reader, source, k: int, boost: float):
-    """First k matching docIDs (docID asc) with score == boost.
+def constant_score(reader, source, out, k=None, segments=None):
+    """The CONSTANT_SCORE executor run of a union-postings ``source``: the
+    (doc_id) match set — with ``k``, each segment's k smallest docIDs,
+    decoding leading blocks only until they are provably complete — or
+    with ``out=COUNT`` one hit count per segment. Every match scores the
+    query's boost, which the caller applies. ``segments`` restricts the
+    run to those segment ids. None when ``source`` is None (provably
+    empty).
 
     ``source``: the matched terms as ``{field: terms}`` when the expansion
     resolved on the driver, or — the 10^12-scale path — the semi-join
     posting-block DataFrame ``reader.postings_semijoin(matched_terms_df(…))``
     that never materializes the term set anywhere; either runs as one
-    :class:`~lucene_spark.search.executor.SegmentExecutor` kernel. Per
-    segment: decode leading blocks until the k smallest docIDs are provably
-    complete; driver merges.
+    :class:`~lucene_spark.search.executor.SegmentExecutor` kernel.
     """
-    from lucene_spark.search.searcher import ScoreDoc
-
     if source is None:
-        return []
+        return None
 
-    def kernel(seg, rows):
+    def first_k(seg, rows):
         return hits_frame(_first_k_docs(rows, k, seg.deleted))
 
-    out = reader.segment_executor().prepare(
-        source, DOC_COLS, kernel, DOCS).collect()
-    docs = np.sort(out["doc_id"].to_numpy())[:k].tolist()
-    b = float(F32(boost))  # float32 score contract (goldens mirror this)
-    return [ScoreDoc(d, b) for d in docs]
-
-
-def matching_docs_df(reader, source):
-    """Distributed (doc_id) DataFrame of the union doc set of ``source``
-    (``{field: terms}`` or a semi-join postings DataFrame) — the
-    CONSTANT_SCORE match set with GLOBAL docIDs, never collected."""
-    if source is None:
-        return reader.spark.createDataFrame([], DOCS)
-
-    def kernel(seg, rows):
+    def match_set(seg, rows):
         return hits_frame(seg.live(_union_docs(rows)))
 
-    return reader.segment_executor().run(source, DOC_COLS, kernel, DOCS)
-
-
-def constant_score_count(reader, source) -> int:
-    """Exact matching-doc count (union of posting doc-sets), distributed:
-    one count per segment returns to the driver."""
-    if source is None:
-        return 0
-
-    def kernel(seg, rows):
+    def hit_count(seg, rows):
         return hits_frame(seg.live(_union_docs(rows)), count=True)
 
-    out = reader.segment_executor().prepare(
-        source, DOC_COLS, kernel, COUNT).collect()
-    return int(out["n"].sum())
+    ex = reader.segment_executor()
+    if out == COUNT:
+        return ex.prepare(source, DOC_COLS, hit_count, COUNT,
+                          segments=segments)
+    if k is not None:
+        return ex.prepare(source, DOC_COLS, first_k, DOCS, segments=segments)
+    return ex.prepare(source, DOC_COLS, match_set, DOCS, segments=segments)
+
+
+def _present_terms(reader, q):
+    """(present terms, their stats) of a synonym / dismax query: the
+    deduplicated terms the corpus holds."""
+    terms = list(dict.fromkeys(q.terms))
+    stats = reader.term_stats(terms, field=q.field)
+    return [t for t in terms if stats.get(t, {}).get("df", 0) > 0], stats
 
 
 def _field_scorer(reader, similarity, boost, dfs, field):
@@ -404,15 +395,19 @@ def _field_scorer(reader, similarity, boost, dfs, field):
     return reader.similarity_scorer(similarity, boost, dfs)
 
 
-def synonym_scored(reader, similarity, q: ast.SynonymQuery, k=None):
-    """SynonymQuery scored executor run: per-doc tf summed across terms, one
-    BM25 score with blended df = max over the terms' docFreqs
+def synonym_scored(reader, similarity, q: ast.SynonymQuery, out, k=None,
+                   segments=None):
+    """SynonymQuery executor run: per-doc tf summed across terms, one BM25
+    score with blended df = max over the terms' docFreqs
     (``core/search/SynonymQuery.java:205-222``). ``k`` truncates per
     segment (top-k path); ``None`` keeps every matching doc — the
-    exhaustive score_df substrate. Returns None when no term is present."""
-    terms = [t for t in dict.fromkeys(q.terms)]
-    stats = reader.term_stats(terms, field=q.field)
-    present = [t for t in terms if t in stats and stats[t]["df"] > 0]
+    exhaustive score_df substrate. ``out`` DOCS / COUNT: the union of the
+    present terms' doc sets (scores do not change the match set). Returns
+    None when no term is present."""
+    present, stats = _present_terms(reader, q)
+    if out != SCORED:
+        return constant_score(reader, {q.field: present} if present else None,
+                              out, k, segments)
     if not present:
         return None
     df_blend = max(stats[t]["df"] for t in present)
@@ -433,23 +428,20 @@ def synonym_scored(reader, similarity, q: ast.SynonymQuery, k=None):
         return hits_frame(uniq, scorer.score(tfsum, norm), k=k)
 
     return reader.segment_executor().prepare(
-        {q.field: present}, SCORE_COLS, kernel, SCORED)
+        {q.field: present}, SCORE_COLS, kernel, SCORED, segments=segments)
 
 
-def synonym_topk(reader, similarity, q: ast.SynonymQuery, k: int):
-    """SynonymQuery top-k via :func:`synonym_scored` (k rows per
-    segment, driver merges k only)."""
-    return _topk(synonym_scored(reader, similarity, q, k), k)
-
-
-def dismax_scored(reader, similarity, q: ast.DisjunctionMaxQuery, k=None):
-    """DisjunctionMaxQuery scored executor run: score = max(sub) +
-    tie_breaker × Σ(others) (``core/search/DisjunctionMaxQuery.java``).
-    ``k`` truncates per segment; ``None`` keeps every matching doc.
-    Returns None when no term is present."""
-    terms = [t for t in dict.fromkeys(q.terms)]
-    stats = reader.term_stats(terms, field=q.field)
-    present = [t for t in terms if t in stats and stats[t]["df"] > 0]
+def dismax_scored(reader, similarity, q: ast.DisjunctionMaxQuery, out,
+                  k=None, segments=None):
+    """DisjunctionMaxQuery executor run: score = max(sub) + tie_breaker ×
+    Σ(others) (``core/search/DisjunctionMaxQuery.java``). ``k`` truncates
+    per segment; ``None`` keeps every matching doc. ``out`` DOCS / COUNT:
+    the union of the present terms' doc sets. Returns None when no term is
+    present."""
+    present, stats = _present_terms(reader, q)
+    if out != SCORED:
+        return constant_score(reader, {q.field: present} if present else None,
+                              out, k, segments)
     if not present:
         return None
     scorers = {
@@ -486,17 +478,4 @@ def dismax_scored(reader, similarity, q: ast.DisjunctionMaxQuery, k=None):
         return hits_frame(*seg.live(uniq, score), k=k)
 
     return reader.segment_executor().prepare(
-        {q.field: present}, SCORE_COLS, kernel, SCORED)
-
-
-def dismax_topk(reader, similarity, q: ast.DisjunctionMaxQuery, k: int):
-    """DisjunctionMax top-k via :func:`dismax_scored`."""
-    return _topk(dismax_scored(reader, similarity, q, k), k)
-
-
-def _topk(run, k: int):
-    """Driver top-k merge (``searcher._topk_hits``) over a run's
-    per-segment scored rows; None (no term present) → no hits."""
-    from lucene_spark.search.searcher import _topk_hits
-
-    return [] if run is None else _topk_hits(run.collect(), k)
+        {q.field: present}, SCORE_COLS, kernel, SCORED, segments=segments)

@@ -20,6 +20,7 @@ import numpy as np
 from lucene_spark.indexing.blocks import (decode_blocks_batch,
                                           decode_doc_ids_batch,
                                           decode_positions_batch)
+from lucene_spark.search.wand import topk_order
 
 F32 = np.float32
 
@@ -264,7 +265,7 @@ def segment_boolean_mixed(rows, clauses, cache, k: int, min_should_match: int = 
         return np.zeros(0, np.int64), np.zeros(0, F32)
     if k is None:  # count-only callers: skip the top-k sort
         return d, s
-    order = np.lexsort((d, -s.astype(np.float64)))[:k]
+    order = topk_order(d, s, k)
     return d[order], s[order]
 
 

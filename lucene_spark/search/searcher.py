@@ -8,12 +8,27 @@ rewrite/normalize on the driver, global statistics bound once
 block-max WAND kernel (mode="wand", TOP_SCORES analogy) or the same kernel
 unpruned (mode="exhaustive", the CheckHits-style oracle — TestWANDScorer
 checks WAND == naive disjunction; our pytest does the same).
+
+Query shapes are decided in one place. :meth:`IndexSearcher._shape` maps a
+normalized query to its postings builder: flat term booleans
+(:func:`_is_flat`) to the WAND builder, every other postings shape through
+the table :attr:`IndexSearcher._SHAPES`. Every builder has the signature
+``builder(q, out, k=None, segments=None) -> SegmentRun | None``, where
+``out`` asks for ``SCORED`` rows, the ``DOCS`` match set or ``COUNT`` rows
+(one schema constant of the executor). ``search``,
+``count``, ``score_df`` and ``match_df`` are thin finishers over that table
+(:meth:`IndexSearcher._run`): a top-k, a summed count, a scored frame, a
+match set. Every top-k list is built by one finisher, :func:`_topk_hits`,
+which holds the tie rule (``wand.topk_order``) and is the only place a
+:class:`ScoreDoc` is made; DataFrame-scored shapes reach it through
+:meth:`IndexSearcher._topk_df`.
 """
 
 from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -24,7 +39,8 @@ from lucene_spark.search.executor import (BLOCK_COUNTERS, COUNT, DOCS,
                                           SCORED, SegmentRun, hits_frame)
 from lucene_spark.search.phrase import local_rows
 from lucene_spark.search.reader import IndexReader
-from lucene_spark.search.wand import ClauseSpec, keyed_rows, segment_topk
+from lucene_spark.search.wand import (ClauseSpec, keyed_rows, segment_topk,
+                                      topk_order)
 from lucene_spark.similarity import BM25Similarity, norm_cache
 
 F32 = np.float32
@@ -186,13 +202,25 @@ def _run_counters(stats: list[dict]) -> dict | None:
     return out
 
 
-def _topk_hits(hits: pd.DataFrame, k: int) -> list[ScoreDoc]:
-    """TopDocs.merge over collected (doc_id, score) rows: the exact global
-    tie-break (score DESC, doc_id ASC), first k."""
-    d = hits["doc_id"].to_numpy(np.int64)
-    s = hits["score"].to_numpy(np.float32)
-    order = np.lexsort((d, -s.astype(np.float64)))[:k]
-    return [ScoreDoc(int(d[i]), float(s[i])) for i in order]
+def _topk_hits(doc_ids, scores, k: int) -> list[ScoreDoc]:
+    """The top-k finisher (``TopDocs.merge``): the first ``k`` hits under
+    the exact global tie rule (score DESC, doc_id ASC — ``topk_order``),
+    as float32 scores. ``scores`` may be one constant (a constant-score
+    shape's f32 boost: equal scores leave the k smallest docIDs). The one
+    place a :class:`ScoreDoc` is built."""
+    d = np.asarray(doc_ids, dtype=np.int64)
+    s = np.asarray(scores, dtype=np.float32)
+    if s.ndim == 0:
+        s = np.full(d.shape, s)
+    return [ScoreDoc(int(d[i]), float(s[i])) for i in topk_order(d, s, k)]
+
+
+def _is_flat(q) -> bool:
+    """A term query, or a boolean whose clauses are all term queries: the
+    shapes the flat WAND kernel scores (any other boolean is mixed)."""
+    return isinstance(q, ast.TermQuery) or (
+        isinstance(q, ast.BooleanQuery)
+        and all(isinstance(sub, ast.TermQuery) for _, sub in q.clauses))
 
 
 class IndexSearcher:
@@ -482,7 +510,7 @@ class IndexSearcher:
         if any(not isinstance(tq, ast.TermQuery) for _, tq in occ_clauses):
             raise NotImplementedError(
                 "phrase/multiterm clauses inside boolean queries are handled "
-                "by the mixed path (_search_boolean_mixed)"
+                "by the mixed path (_mixed_run)"
             )
         by_field: dict[str, list[str]] = {}
         for _, tq in occ_clauses:
@@ -560,82 +588,108 @@ class IndexSearcher:
                 f"{self.max_clause_count} (IndexSearcher.setMaxClauseCount "
                 f"analogue: set IndexSearcher.max_clause_count to raise)")
 
+    # -- the query-shape table ---------------------------------------------
+    #: normalized query type -> (postings builder, constant-score?). Every
+    #: builder is ``builder(q, out, k=None, segments=None) -> SegmentRun |
+    #: None``: ``out`` asks for SCORED rows, the DOCS match set or one
+    #: COUNT row per segment (a scored builder may answer DOCS with
+    #: (doc_id, score) rows; callers keep ``doc_id``), ``k`` is the
+    #: per-segment cut of a top-k (a SCORED run's top k, a constant-score
+    #: shape's k smallest docIDs), ``segments`` restricts the run to those
+    #: segment ids, and None means provably no match. A constant-score
+    #: builder returns the match set; its score is the query's f32 boost,
+    #: applied by the finisher. Flat term booleans (:func:`_is_flat`) take
+    #: ``_flat_run`` before the table is consulted.
+    _SHAPES = {
+        ast.BooleanQuery: ("_mixed_run", False),
+        ast.PhraseQuery: ("_phrase_run", False),
+        ast.MultiPhraseQuery: ("_phrase_run", False),
+        ast.IntervalQuery: ("_interval_run", False),
+        ast.SynonymQuery: ("_synonym_run", False),
+        ast.DisjunctionMaxQuery: ("_dismax_run", False),
+        ast.MultiTermQuery: ("_multiterm_run", True),
+        ast.TermAutomatonQuery: ("_automaton_run", True),
+        **dict.fromkeys(ast.SPAN_QUERY_TYPES, ("_span_run", True)),
+        ast.MatchNoDocsQuery: ("_no_match", False),
+    }
+
+    def _shape(self, q, mode: str = "wand"):
+        """(builder, constant-score?) of a normalized query — the one place
+        a postings shape is decided. ``mode`` reaches the flat WAND builder
+        (the only one with a pruned top-k)."""
+        if _is_flat(q):
+            return partial(self._flat_run, mode=mode), False
+        if type(q) not in self._SHAPES:
+            raise NotImplementedError(
+                f"exhaustive scoring of {type(q).__name__} is not supported "
+                "here — supported: flat term booleans (WAND kernel), mixed "
+                "booleans, phrase/multiphrase/interval (positions kernels), "
+                "synonym/dismax, constant-score shapes (multiterm/span/"
+                "automaton/const-wrapped); use search() for top-k on every "
+                "shape")
+        name, const = self._SHAPES[type(q)]
+        return getattr(self, name), const
+
+    def _run(self, q, out: str, k=None, segments=None) -> SegmentRun | None:
+        """The executor run of a normalized query (see :attr:`_SHAPES`)."""
+        return self._shape(q)[0](q, out, k, segments)
+
+    def _normalized(self, query):
+        """A query string or AST, parsed and normalized, within
+        :attr:`max_clause_count`."""
+        if isinstance(query, str):
+            query = self.parse(query)
+        query = ast.normalize(query)
+        self._check_clause_limit(query)
+        return query
+
+    def _finish(self, run: SegmentRun | None, k: int,
+                boost=None) -> list[ScoreDoc]:
+        """Top-k hits of a run's per-segment rows; ``boost`` scores the
+        match set of a constant-score shape."""
+        if run is None:
+            return []
+        hits = self._collect(run)
+        scores = hits["score"].to_numpy() if boost is None else F32(boost)
+        return _topk_hits(hits["doc_id"].to_numpy(), scores, k)
+
+    def _topk_df(self, df, k: int) -> list[ScoreDoc]:
+        """Top-k hits of a (doc_id, score) DataFrame: one TakeOrdered at k
+        under the tie rule, then the finisher."""
+        from pyspark.sql import functions as F
+
+        rows = self._collect(
+            df.orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k)))
+        return _topk_hits([r["doc_id"] for r in rows],
+                          [r["score"] for r in rows], k)
+
     # -- search -------------------------------------------------------------
     def search(self, query, k: int = 10, mode: str = "wand") -> list[ScoreDoc]:
         """Top-k hits. ``query``: AST node or classic-syntax string;
         ``mode``: "wand" (block-max pruned), "exhaustive", or "auto"
         (cost-based pick — see :meth:`_pick_mode`)."""
-        if isinstance(query, str):
-            query = self.parse(query)
-        query = ast.normalize(query)
-        self._check_clause_limit(query)
-        if isinstance(query, (ast.ConstantScoreQuery,
-                              ast.MatchAllDocsQuery)):
+        q = self._normalized(query)
+        if isinstance(q, (ast.ConstantScoreQuery, ast.MatchAllDocsQuery)):
             # k smallest matching docIDs, score == boost (ties → docID asc);
             # match set stays distributed for ANY inner query shape,
             # TakeOrdered reduces to k. MatchAllDocsQuery scores every live
             # doc at f32(boost) (MatchAllDocsQuery.java constant weight).
-            inner = (query.query if isinstance(query, ast.ConstantScoreQuery)
-                     else query)
+            inner = q.query if isinstance(q, ast.ConstantScoreQuery) else q
             rows = self._collect(
-                self.match_df(inner).orderBy("doc_id").limit(k)
-            )
-            b = float(F32(getattr(query, "boost", 1.0)))
-            return [ScoreDoc(int(r["doc_id"]), b) for r in rows]
-        if isinstance(query, (*ast.SPAN_QUERY_TYPES, ast.TermAutomatonQuery)):
-            # constant-score span / automaton queries: the k smallest
-            # matching docIDs (ties → docID asc), each segment's k smallest
-            # collected, score == boost
-            run = (self._automaton_match(query, k=k)
-                   if isinstance(query, ast.TermAutomatonQuery)
-                   else self._span_match(query, k=k))
-            if run is None:
-                return []
-            docs = np.sort(self._collect(run)["doc_id"].to_numpy())[:k]
-            b = float(F32(query.boost))
-            return [ScoreDoc(int(d), b) for d in docs]
-        if isinstance(query, ast.IntervalQuery):
-            return self._search_intervals(query, k)
-        if isinstance(query, ast.KnnQuery):
+                self.match_df(inner).orderBy("doc_id").limit(k))
+            return _topk_hits([r["doc_id"] for r in rows], F32(q.boost), k)
+        if isinstance(q, ast.KnnQuery):
             # standalone KNN: k nearest docs, scored with the DOT_PRODUCT
             # similarity scaling (KnnFloatVectorQuery top-level semantics)
             from lucene_spark.search.knn import knn_similarity_f32
 
-            pairs = self.knn_search(query.vector, query.k, query.filter,
-                                    query.strategy)
-            hits = [ScoreDoc(d, float(knn_similarity_f32(dot, query.boost)))
-                    for d, dot in pairs]
-            hits.sort(key=lambda h: (-h.score, h.doc_id))
-            return hits[:k]
-        if isinstance(query, ast.PhraseQuery):
-            return self._search_phrase(query, k)
-        if isinstance(query, ast.MultiPhraseQuery):
-            return self._search_multiphrase(query, k)
-        if isinstance(query, ast.MultiTermQuery):
-            from lucene_spark.search.multiterm import constant_score_topk
-
-            return constant_score_topk(self.reader,
-                                       self._multiterm_source(query), k,
-                                       query.boost)
-        if isinstance(query, ast.SynonymQuery):
-            from lucene_spark.search.multiterm import synonym_topk
-
-            return synonym_topk(self.reader, self.similarity, query, k)
-        if isinstance(query, ast.DisjunctionMaxQuery):
-            from lucene_spark.search.multiterm import dismax_topk
-
-            return dismax_topk(self.reader, self.similarity, query, k)
-        if isinstance(query, ast.BooleanQuery) and any(
-            not isinstance(sub, ast.TermQuery) for _, sub in query.clauses
-        ):
-            return self._search_boolean_mixed(query, k)
-        wc = self._weighted_clauses(query)
-        if wc is None:
-            return []
-        if mode == "auto":
-            mode = self._pick_mode(wc[0], k)
-        return _topk_hits(self._collect(
-            self._flat_topk([(0, wc)], k, prune=mode == "wand")), k)
+            pairs = self.knn_search(q.vector, q.k, q.filter, q.strategy)
+            return _topk_hits(
+                [d for d, _ in pairs],
+                [knn_similarity_f32(dot, q.boost) for _, dot in pairs], k)
+        build, const = self._shape(q, mode)
+        return self._finish(build(q, DOCS if const else SCORED, k), k,
+                            q.boost if const else None)
 
     def msearch(self, queries, k: int = 10, mode: str = "wand"):
         """Batched multi-query top-k: N queries, ONE postings read, ONE
@@ -650,20 +704,11 @@ class IndexSearcher:
         back to its regular ``search()`` path and still fills its slot.
         Returns ``[[ScoreDoc, ...], ...]`` aligned with ``queries``.
         """
-        parsed = []
-        for q in queries:
-            q = self.parse(q) if isinstance(q, str) else q
-            q = ast.normalize(q)
-            self._check_clause_limit(q)  # same cap as search()/count()
-            parsed.append(q)
+        parsed = [self._normalized(q) for q in queries]
         results: list = [None] * len(parsed)
         batched: dict[int, tuple] = {}
         for i, q in enumerate(parsed):
-            flat = (isinstance(q, ast.TermQuery)
-                    or (isinstance(q, ast.BooleanQuery)
-                        and all(isinstance(s, ast.TermQuery)
-                                for _, s in q.clauses)))
-            if not flat:
+            if not _is_flat(q):
                 results[i] = self.search(q, k, mode=mode)
                 continue
             wc = self._weighted_clauses(q)
@@ -676,7 +721,9 @@ class IndexSearcher:
         out = self._collect(self._flat_topk(sorted(batched.items()), k,
                                             prune=mode == "wand"))
         for qid in batched:
-            results[qid] = _topk_hits(out[out["qid"] == qid], k)
+            hits = out[out["qid"] == qid]
+            results[qid] = _topk_hits(hits["doc_id"].to_numpy(),
+                                      hits["score"].to_numpy(), k)
         return results
 
     def _flat_topk(self, items, k: int, prune: bool) -> SegmentRun:
@@ -690,15 +737,25 @@ class IndexSearcher:
             _flat_topk_kernel(items, k, prune, self.FIELD_SEP),
             "qid long, doc_id long, score float")
 
-    def _flat_scored(self, specs, msm, count: bool = False,
-                     segments=None) -> SegmentRun:
-        """Every hit of a flat term boolean: (doc_id, score) rows, or with
-        ``count`` one hit count per segment (billions of hits never leave
-        their segment's task) — the unpruned ``segment_topk`` with k past
-        doc_count, shared by :meth:`score_df` and :meth:`count`.
-        ``segments`` restricts the run to those segment ids."""
+    def _flat_run(self, q, out: str, k=None, segments=None,
+                  mode: str = "wand") -> SegmentRun | None:
+        """A flat term boolean: with ``k``, the WAND top-k run
+        (:meth:`_flat_topk`, pruned unless ``mode`` says otherwise);
+        else every hit as (doc_id, score) rows — also the match set of a
+        DOCS run, whose caller keeps ``doc_id`` — or one hit count per
+        segment (billions of hits never leave their segment's task): the
+        unpruned ``segment_topk`` with k past doc_count."""
+        wc = self._weighted_clauses(q)
+        if wc is None:
+            return None
+        if out == SCORED and k is not None:
+            if mode == "auto":
+                mode = self._pick_mode(wc[0], k)
+            return self._flat_topk([(0, wc)], k, prune=mode == "wand")
+        specs, msm = wc
         big = self.reader.doc_count + 1
         sep = self.FIELD_SEP
+        count = out == COUNT
 
         def kernel(seg, rows):
             d, s = segment_topk(keyed_rows(rows, sep), specs, big, msm,
@@ -708,6 +765,10 @@ class IndexSearcher:
         return self.reader.segment_executor().prepare(
             self._spec_field_terms(specs), FLAT_COLS, kernel,
             COUNT if count else SCORED, segments=segments)
+
+    def _no_match(self, q, out: str, k=None, segments=None) -> None:
+        """MatchNoDocsQuery: provably no match."""
+        return None
 
     # hybrid multiterm execution: small expansions resolve on the driver
     # (zero jobs against the resident dict) and reach the postings read as a
@@ -1044,16 +1105,19 @@ class IndexSearcher:
         )
         return clauses, cache, q.min_should_match, field_terms, need_positions
 
-    def _mixed_segment(self, q: ast.BooleanQuery, k,
-                       count_only: bool = False,
-                       match_only: bool = False) -> SegmentRun | None:
-        """Per-segment rows for a mixed boolean: (doc_id, score) top-k rows,
-        or — with ``count_only`` — one hit-count row per segment (the
-        distributed TotalHitCount path: billions of hits never leave their
-        segment's task)."""
+    def _mixed_run(self, q: ast.BooleanQuery, out: str, k=None,
+                   segments=None) -> SegmentRun | None:
+        """A mixed boolean (terms + phrases + multi-term expansions + nested
+        booleans, …; exhaustive — phrase clauses have no block-max bound):
+        (doc_id, score) rows, a segment's top ``k`` when set — also the
+        match set of a DOCS run, whose caller keeps ``doc_id`` — or one
+        hit-count row per segment (the distributed TotalHitCount path:
+        billions of hits never leave their segment's task). Match sets and
+        counts are similarity-independent, so a DOCS or COUNT run accepts
+        any similarity."""
         from lucene_spark.search.phrase import segment_boolean_mixed
 
-        mc = self._mixed_clauses(q, match_only=match_only)
+        mc = self._mixed_clauses(q, match_only=out != SCORED)
         if mc is None:
             return None
         clauses, cache, msm, field_terms, need_positions = mc
@@ -1076,7 +1140,8 @@ class IndexSearcher:
         if seg_hi is not None and has_ma:
             dc = self.reader.doc_count
             seg_hi = {s: (lo, min(hi, dc)) for s, (lo, hi) in seg_hi.items()}
-        top = None if count_only else k
+        count = out == COUNT
+        top = None if count else k
 
         def kernel(seg, rows):
             cl = (_slice_docsets(clauses, *seg_hi[seg.id])
@@ -1084,21 +1149,12 @@ class IndexSearcher:
             d, s = segment_boolean_mixed(keyed_rows(rows, sep), cl, cache,
                                          top, msm, deleted=seg.deleted,
                                          offset=seg.offset)
-            return hits_frame(d, s, count_only)
+            return hits_frame(d, s, count)
 
         return self.reader.segment_executor().prepare(
             field_terms, ["field"] + POS_COLS, kernel,
-            COUNT if count_only else SCORED,
+            COUNT if count else SCORED, segments=segments,
             every_segment=seg_hi is not None)
-
-    def _search_boolean_mixed(self, q: ast.BooleanQuery, k: int) -> list[ScoreDoc]:
-        """Boolean queries whose clauses mix terms with phrases and/or
-        multi-term expansions (exhaustive; phrase clauses have no block-max
-        bound yet, so no pruning)."""
-        run = self._mixed_segment(q, k)
-        if run is None:
-            return []
-        return _topk_hits(self._collect(run), k)
 
     def _phrase_plan(self, q):
         """Shared setup for phrase-shaped queries: stats-check the terms and
@@ -1144,33 +1200,21 @@ class IndexSearcher:
                 rows, present_slots, slop),
         )
 
-    def _search_phrase(self, q: ast.PhraseQuery, k: int) -> list[ScoreDoc]:
-        """Phrase top-k (exact or sloppy): docID leapfrog + positions verify
-        per segment. Sloppy freq = float32 Σ 1/(1+matchLength)."""
+    def _phrase_run(self, q, out: str, k=None,
+                    segments=None) -> SegmentRun | None:
+        """PhraseQuery / MultiPhraseQuery (exact or sloppy): docID leapfrog
+        + positions verify per segment, similarity-scored (sloppy freq =
+        float32 Σ 1/(1+matchLength)). ``out`` is the schema: SCORED
+        (doc_id, score) rows — a segment's top ``k`` when set, else every
+        matching doc — DOCS the bare match set, COUNT one hit count per
+        segment."""
         plan = self._phrase_plan(q)
         if plan is None:
-            return []
-        return self._run_phrase_kernel(*plan, k=k)
-
-    def _search_multiphrase(self, q: ast.MultiPhraseQuery, k: int):
-        """MultiPhraseQuery top-k: union postings per slot."""
-        plan = self._phrase_plan(q)
-        if plan is None:
-            return []
-        return self._run_phrase_kernel(*plan, k=k)
-
-    def _phrase_scored(self, field_terms, scorer, kernel, k=None,
-                       segments=None, out: str = SCORED) -> SegmentRun:
-        """The executor run of a phrase-shaped query: per-segment
-        positions kernel + similarity scoring over ``field_terms``. ``out``
-        is the schema: SCORED (doc_id, score) rows, DOCS the bare match
-        set, COUNT one hit count per segment. ``k`` truncates scored rows
-        per segment (the top-k path); ``None`` keeps every matching doc
-        (the exhaustive score_df substrate). ``segments`` restricts the
-        run to those segment ids."""
+            return None
         if not self.reader.manifest.get("positions", False):
             raise ValueError("index was built without positions; "
                              "rebuild with IndexBuilder(..., positions=True)")
+        field_terms, scorer, kernel = plan
 
         def run_segment(seg, rows):
             d, f, nm = seg.live(*kernel(rows))
@@ -1181,20 +1225,14 @@ class IndexSearcher:
         return self.reader.segment_executor().prepare(
             field_terms, POS_COLS, run_segment, out, segments=segments)
 
-    def _run_phrase_kernel(self, field_terms, scorer, kernel, k: int):
-        """Top-k driver merge over :meth:`_phrase_scored` (k rows per
-        segment collected, never the full match set)."""
-        return _topk_hits(self._collect(
-            self._phrase_scored(field_terms, scorer, kernel, k=k)), k)
-
-    def _span_match(self, q, count: bool = False,
-                    k: int | None = None) -> SegmentRun | None:
-        """The executor run of span matches (SpanNear / SpanFirst /
-        SpanNot / SpanContaining / SpanWithin): the (doc_id) match set (a
-        segment's ``k`` smallest docIDs when ``k`` is set), or with
-        ``count`` one hit count per segment — per-segment kernel
-        fan-out (``phrase.segment_span_near``), None when a required term
-        is absent from the corpus (a required sub-span can never match)."""
+    def _span_run(self, q, out: str, k=None,
+                  segments=None) -> SegmentRun | None:
+        """Span matches (SpanNear / SpanFirst / SpanNot / SpanContaining /
+        SpanWithin), constant-score: the (doc_id) match set (a segment's
+        ``k`` smallest docIDs when ``k`` is set), or with ``out=COUNT`` one
+        hit count per segment — per-segment kernel fan-out
+        (``phrase.segment_span_near``), None when a required term is absent
+        from the corpus (a required sub-span can never match)."""
         from lucene_spark.search.phrase import segment_span_near
 
         terms = [tuple(t) if isinstance(t, (tuple, list)) else t
@@ -1223,6 +1261,7 @@ class IndexSearcher:
         fetch = sorted(set(flat) | ({exclude} if exclude else set())
                        | ({contain} if contain else set()))
         slop, in_order = int(q.slop), bool(q.in_order)
+        count = out == COUNT
 
         def kernel(seg, rows):
             # the kernel keys by docID * 2^34 — feed SEGMENT-LOCAL docIDs
@@ -1234,17 +1273,17 @@ class IndexSearcher:
             return hits_frame(seg.live(d + seg.offset), count=count, k=k)
 
         return self.reader.segment_executor().prepare(
-            {q.field: fetch}, POS_COLS, kernel, COUNT if count else DOCS)
+            {q.field: fetch}, POS_COLS, kernel, COUNT if count else DOCS,
+            segments=segments)
 
-    def _automaton_match(self, q: "ast.TermAutomatonQuery",
-                         count: bool = False,
-                         k: int | None = None) -> SegmentRun | None:
-        """The executor run of TermAutomatonQuery matches (the match set —
-        a segment's ``k`` smallest docIDs when ``k`` is set — or with
-        ``count`` one hit count per segment) — per-segment DAG
-        kernel fan-out (``automaton.segment_term_automaton``). None when
-        NO query term exists in the corpus (every path needs at least one
-        term arc, so nothing can accept)."""
+    def _automaton_run(self, q: "ast.TermAutomatonQuery", out: str, k=None,
+                       segments=None) -> SegmentRun | None:
+        """TermAutomatonQuery matches, constant-score (the match set — a
+        segment's ``k`` smallest docIDs when ``k`` is set — or with
+        ``out=COUNT`` one hit count per segment) — per-segment DAG kernel
+        fan-out (``automaton.segment_term_automaton``). None when NO query
+        term exists in the corpus (every path needs at least one term arc,
+        so nothing can accept)."""
         from lucene_spark.search.automaton import (
             segment_term_automaton,
             validate_automaton,
@@ -1263,6 +1302,7 @@ class IndexSearcher:
         if not self.reader.manifest.get("positions", False):
             raise ValueError("index was built without positions")
         n_states, accept = int(q.n_states), tuple(q.accept)
+        count = out == COUNT
 
         def kernel(seg, rows):
             # segment-LOCAL docIDs into the kernel (doc·2^34 keys), offset out
@@ -1271,19 +1311,21 @@ class IndexSearcher:
             return hits_frame(seg.live(d + seg.offset), count=count, k=k)
 
         return self.reader.segment_executor().prepare(
-            {q.field: present}, POS_COLS, kernel, COUNT if count else DOCS)
+            {q.field: present}, POS_COLS, kernel, COUNT if count else DOCS,
+            segments=segments)
 
     def interval_scored_df(self, q: ast.IntervalQuery):
         """(doc_id, score) DataFrame of an IntervalQuery's full match set
         (None when a required sub-source is corpus-absent)."""
-        run = self._interval_scored(q)
+        run = self._interval_run(q, SCORED)
         return None if run is None else run.df()
 
-    def _interval_scored(self, q: ast.IntervalQuery, k=None,
-                         out: str = SCORED) -> SegmentRun | None:
-        """The executor run of an IntervalQuery: (doc_id, score) rows — a
-        segment's top ``k`` when set, else its full match set — or with
-        ``out=COUNT`` one hit count per segment. Per-segment
+    def _interval_run(self, q: ast.IntervalQuery, out: str, k=None,
+                      segments=None) -> SegmentRun | None:
+        """An IntervalQuery: (doc_id, score) rows — a segment's top ``k``
+        when set, else its full match set — the bare match set
+        (``out=DOCS``) or one hit count per segment (``out=COUNT``).
+        Per-segment
         minimal-interval kernel fan-out
         (``intervals.segment_interval_postings``,
         ``queries/intervals/IntervalScorer.java:69-75`` sloppy-freq +
@@ -1310,89 +1352,53 @@ class IndexSearcher:
             d, sc = iv.segment_interval_postings(local_rows(rows, seg.offset),
                                                  source, pivot, boost)
             d, sc = seg.live(d + seg.offset, sc)
-            return (hits_frame(d, count=True) if out == COUNT
-                    else hits_frame(d, sc, k=k))
+            return hits_frame(d, sc if out == SCORED else None,
+                              count=out == COUNT, k=k)
 
         return self.reader.segment_executor().prepare(
-            {q.field: terms}, POS_COLS, kernel, out)
+            {q.field: terms}, POS_COLS, kernel, out, segments=segments)
 
-    def _search_intervals(self, q: ast.IntervalQuery, k: int):
-        """Top-k IntervalQuery hits: per-segment scored kernel, k rows per
-        segment collected, driver merge (score DESC, docID ASC)."""
-        run = self._interval_scored(q, k=k)
-        return [] if run is None else _topk_hits(self._collect(run), k)
+    def _multiterm_run(self, q: ast.MultiTermQuery, out: str, k=None,
+                       segments=None) -> SegmentRun | None:
+        """A MultiTermQuery under the CONSTANT_SCORE rewrite: the union of
+        its expanded terms' doc sets (``multiterm.constant_score`` over
+        :meth:`_multiterm_source`)."""
+        from lucene_spark.search.multiterm import constant_score
 
-    def _phrase_count(self, q) -> int:
-        """Distributed phrase / multiphrase hit count: one count row per
-        segment (a hot phrase at 10^12 scale matches billions of docs —
-        never collected)."""
-        plan = self._phrase_plan(q)
-        if plan is None:
-            return 0
-        return self._count_rows(self._phrase_scored(*plan, out=COUNT))
+        return constant_score(self.reader, self._multiterm_source(q), out, k,
+                              segments)
 
-    def _count_rows(self, run: SegmentRun | None) -> int:
-        """The sum of a COUNT run's per-segment hit counts (0 for None)."""
-        return 0 if run is None else int(self._collect(run)["n"].sum())
+    def _synonym_run(self, q: ast.SynonymQuery, out: str, k=None,
+                     segments=None) -> SegmentRun | None:
+        """A SynonymQuery (``multiterm.synonym_scored``)."""
+        from lucene_spark.search.multiterm import synonym_scored
+
+        return synonym_scored(self.reader, self.similarity, q, out, k,
+                              segments)
+
+    def _dismax_run(self, q: ast.DisjunctionMaxQuery, out: str, k=None,
+                    segments=None) -> SegmentRun | None:
+        """A DisjunctionMaxQuery (``multiterm.dismax_scored``)."""
+        from lucene_spark.search.multiterm import dismax_scored
+
+        return dismax_scored(self.reader, self.similarity, q, out, k,
+                             segments)
 
     def count(self, query) -> int:
         """TotalHitCountCollector analogy — exact hit count, distributed on
         every query shape: per-segment counts summed, never the doc lists."""
-        if isinstance(query, str):
-            query = self.parse(query)
-        query = ast.normalize(query)
-        self._check_clause_limit(query)
-        if isinstance(query, ast.MultiTermQuery):
-            from lucene_spark.search.multiterm import constant_score_count
-
-            return constant_score_count(self.reader,
-                                        self._multiterm_source(query))
-        if isinstance(query, (ast.SynonymQuery, ast.DisjunctionMaxQuery)):
-            # hit set = union of the terms' doc sets (scores don't affect it)
-            from lucene_spark.search.multiterm import constant_score_count
-
-            return constant_score_count(self.reader,
-                                        self._present_terms(query))
-        if isinstance(query, ast.ConstantScoreQuery):
+        q = self._normalized(query)
+        if isinstance(q, ast.ConstantScoreQuery):
             # the wrapper keeps its inner query's match set
-            if isinstance(query.query, ast.MatchAllDocsQuery):
-                return int(self.match_df(query.query).count())
-            return self.count(query.query)
-        if isinstance(query, ast.SPAN_QUERY_TYPES):
-            return self._count_rows(self._span_match(query, count=True))
-        if isinstance(query, ast.TermAutomatonQuery):
-            return self._count_rows(self._automaton_match(query, count=True))
-        if isinstance(query, ast.IntervalQuery):
-            return self._count_rows(self._interval_scored(query, out=COUNT))
-        if isinstance(query, ast.KnnQuery):
+            return self.count(q.query)
+        if isinstance(q, ast.MatchAllDocsQuery):
+            return int(self.match_df(q).count())
+        if isinstance(q, ast.KnnQuery):
             # standalone KNN (also: a single-MUST boolean normalize
             # collapses to): hit count = size of the k-bounded rewrite set
-            return len(self.knn_search(query.vector, query.k, query.filter,
-                                       query.strategy))
-        if isinstance(query, (ast.PhraseQuery, ast.MultiPhraseQuery)):
-            return self._phrase_count(query)
-        if isinstance(query, ast.BooleanQuery) and any(
-            not isinstance(s, ast.TermQuery) for _, s in query.clauses
-        ):
-            # counts are similarity-independent → match_only lets non-BM25
-            # searchers count mixed booleans too
-            return self._count_rows(self._mixed_segment(
-                query, None, count_only=True, match_only=True))
-        wc = self._weighted_clauses(query)
-        if wc is None:
-            return 0
-        # distributed count: per-segment hit counts summed (never ships the
-        # doc list to the driver — a hot term at 10^12 scale matches billions)
-        return self._count_rows(self._flat_scored(*wc, count=True))
-
-    def _present_terms(self, q):
-        """``{field: terms}`` of a synonym / dismax query's corpus-present
-        terms (None when none is present) — the union-postings source of
-        its match set."""
-        terms = list(dict.fromkeys(q.terms))
-        stats = self.reader.term_stats(terms, field=q.field)
-        present = [t for t in terms if stats.get(t, {}).get("df", 0) > 0]
-        return {q.field: present} if present else None
+            return len(self.knn_search(q.vector, q.k, q.filter, q.strategy))
+        run = self._run(q, COUNT)
+        return 0 if run is None else int(self._collect(run)["n"].sum())
 
     def facet_ranges(self, query, col: str, bounds):
         """Numeric-range facet counts
@@ -1549,9 +1555,7 @@ class IndexSearcher:
         t_parse = time.perf_counter()
         mode = "other"
         wc = None
-        if isinstance(q, ast.BooleanQuery) and not any(
-            not isinstance(sub, ast.TermQuery) for _, sub in q.clauses
-        ) or isinstance(q, ast.TermQuery):
+        if _is_flat(q):
             wc = self._weighted_clauses(q)
             if wc is not None:
                 mode = self._pick_mode(wc[0], k)
@@ -2163,12 +2167,8 @@ class IndexSearcher:
     def combined_field(self, terms, fields, k: int = 10,
                        norm_fields=None):
         """Top-k CombinedFieldQuery hits: (score DESC, doc_id ASC)."""
-        from pyspark.sql import functions as F
-
-        rows = (self.combined_field_df(terms, fields, norm_fields)
-                .orderBy(F.col("score").desc(), F.col("doc_id").asc())
-                .limit(k).collect())
-        return [ScoreDoc(int(r["doc_id"]), float(r["score"])) for r in rows]
+        return self._topk_df(
+            self.combined_field_df(terms, fields, norm_fields), k)
 
     def facet_paths(self, query, path_df, topn: int | None = None):
         """Hierarchical (taxonomy) facet counts
@@ -2277,12 +2277,11 @@ class IndexSearcher:
         driver collect) so downstream groupBy / window / join run as plain
         Spark plans.
 
-        Shape dispatch: flat term booleans score through the WAND kernel
-        (exhaustive mode); phrase / multiphrase through the positions
-        kernel; constant-score shapes (multiterm / const-wrapped / span)
-        through their match set at score = f32(boost). Shapes whose
-        exhaustive scoring would need the mixed top-k path (nested mixed
-        booleans, KNN) raise NotImplementedError with the supported list.
+        Every postings shape of the table (:attr:`_SHAPES`) scores through
+        its SCORED run; constant-score shapes (multiterm / span / automaton
+        and the const-wrapped / match-all wrappers) through their match set
+        (:meth:`match_df`) at score = f32(boost). Shapes without a postings
+        plan (KNN) raise NotImplementedError.
 
         ``doc_ids`` (optional, bounded — the rescore second pass): restrict
         scoring to those docs; the executor reads only the segments
@@ -2292,44 +2291,23 @@ class IndexSearcher:
 
         if isinstance(query, str):
             query = self.parse(query)
-        nq = ast.normalize(query)
-        df = self._score_df_impl(nq, doc_ids)
+        q = ast.normalize(query)
+        segs = self._segs_for_docs(doc_ids) if doc_ids is not None else None
+        if isinstance(q, (ast.ConstantScoreQuery, ast.MatchAllDocsQuery)):
+            build, const = None, True
+        else:
+            build, const = self._shape(q)
+        if const:
+            df = self.match_df(q).select(
+                "doc_id", F.lit(float(F32(q.boost))).cast("float")
+                .alias("score"))
+        else:
+            run = build(q, SCORED, segments=segs)
+            df = (self.spark.createDataFrame([], SCORED) if run is None
+                  else run.df())
         if doc_ids is not None:
             df = df.where(F.col("doc_id").isin([int(x) for x in doc_ids]))
         return df
-
-    def _score_df_impl(self, nq, doc_ids=None):
-        from pyspark.sql import functions as F
-
-        segs = self._segs_for_docs(doc_ids) if doc_ids is not None else None
-        if isinstance(nq, (ast.PhraseQuery, ast.MultiPhraseQuery)):
-            plan = self._phrase_plan(nq)
-            df = plan and self._phrase_scored(*plan, segments=segs).df()
-        elif isinstance(nq, (ast.SynonymQuery, ast.DisjunctionMaxQuery)):
-            from lucene_spark.search.multiterm import (
-                dismax_scored,
-                synonym_scored,
-            )
-
-            build = (synonym_scored if isinstance(nq, ast.SynonymQuery)
-                     else dismax_scored)
-            run = build(self.reader, self.similarity, nq)
-            df = run and run.df()
-        elif isinstance(nq, (ast.MultiTermQuery, ast.ConstantScoreQuery,
-                             ast.MatchAllDocsQuery) + ast.SPAN_QUERY_TYPES):
-            # CONSTANT_SCORE shapes: match set at score = f32(boost)
-            boost = float(F32(getattr(nq, "boost", 1.0)))
-            if isinstance(nq, ast.SPAN_QUERY_TYPES):
-                run = self._span_match(nq)
-                m = run and run.df()
-            else:
-                m = self.match_df(nq)
-            df = None if m is None else m.select(
-                "doc_id", F.lit(boost).cast("float").alias("score"))
-        else:
-            wc = self._weighted_clauses(nq)
-            df = wc and self._flat_scored(*wc, segments=segs).df()
-        return df if df is not None else self.spark.createDataFrame([], SCORED)
 
     def match_df(self, query):
         """Distributed (doc_id) DataFrame of the docs matching ANY query
@@ -2343,7 +2321,7 @@ class IndexSearcher:
         UsageTrackingQueryCachingPolicy)."""
         q = ast.normalize(query)
         if isinstance(q, ast.MatchNoDocsQuery) or self.reader.doc_count == 0:
-            return self.spark.createDataFrame([], "doc_id long")
+            return self.spark.createDataFrame([], DOCS)
         if isinstance(q, ast.ConstantScoreQuery):
             return self.match_df(q.query)
         try:
@@ -2354,32 +2332,15 @@ class IndexSearcher:
             q, lambda: self._match_df_impl(q))
 
     def _match_df_impl(self, q):
+        """The uncached match set: every live doc, else the DOCS run of the
+        query's shape. Match sets are similarity-independent (a scored
+        run's weights are discarded)."""
         if isinstance(q, ast.MatchAllDocsQuery):
             return self.reader.docs(live_only=True).select("doc_id")
-        if isinstance(q, (ast.MultiTermQuery, ast.SynonymQuery,
-                          ast.DisjunctionMaxQuery)):
-            from lucene_spark.search.multiterm import matching_docs_df
-
-            return matching_docs_df(
-                self.reader, self._multiterm_source(q)
-                if isinstance(q, ast.MultiTermQuery)
-                else self._present_terms(q))
-        if isinstance(q, (ast.PhraseQuery, ast.MultiPhraseQuery)):
-            plan = self._phrase_plan(q)
-            if plan is None:
-                return self.spark.createDataFrame([], DOCS)
-            return self._phrase_scored(*plan, out=DOCS).df()
-        if isinstance(q, ast.BooleanQuery) and any(
-            not isinstance(sub, ast.TermQuery) for _, sub in q.clauses
-        ):
-            # match sets are similarity-independent: score mixed clauses
-            # with BM25 regardless of the searcher's similarity (the
-            # weights are discarded)
-            run = self._mixed_segment(q, None, match_only=True)
-            if run is None:
-                return self.spark.createDataFrame([], "doc_id long")
-            return run.df().select("doc_id")
-        return self.score_df(q).select("doc_id")
+        run = self._run(q, DOCS)
+        if run is None:
+            return self.spark.createDataFrame([], DOCS)
+        return run.df().select("doc_id")
 
     def covering_df(self, queries, min_match: str):
         """CoveringQuery (``lucene/sandbox/src/java/org/apache/lucene/
@@ -2424,12 +2385,7 @@ class IndexSearcher:
     def covering(self, queries, min_match: str, k: int = 10):
         """Top-k of :meth:`covering_df` with the standard
         (score DESC, docID ASC) tie-break."""
-        from pyspark.sql import functions as F
-
-        rows = self._collect(
-            self.covering_df(queries, min_match)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-        return [ScoreDoc(int(r["doc_id"]), float(r["score"])) for r in rows]
+        return self._topk_df(self.covering_df(queries, min_match), k)
 
     def function_score_df(self, query, value_col, combine: str = "multiply"):
         """FunctionScoreQuery analogue (``lucene/queries`` FunctionScoreQuery
@@ -2459,13 +2415,8 @@ class IndexSearcher:
                        combine: str = "multiply") -> list[ScoreDoc]:
         """Top-k of :meth:`function_score_df` with the standard
         (score DESC, docID ASC) tie-break."""
-        from pyspark.sql import functions as F
-
-        rows = self._collect(
-            self.function_score_df(query, value_col, combine)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        )
-        return [ScoreDoc(int(r["doc_id"]), float(r["score"])) for r in rows]
+        return self._topk_df(
+            self.function_score_df(query, value_col, combine), k)
 
     def _bound_expression(self, query, expression: str):
         """Shared compile-and-bind step for expression scoring/sorting:
@@ -2527,13 +2478,7 @@ class IndexSearcher:
                          k: int = 10) -> list[ScoreDoc]:
         """Top-k of :meth:`expression_score_df` with the standard
         (score DESC, docID ASC) tie-break."""
-        from pyspark.sql import functions as F
-
-        rows = self._collect(
-            self.expression_score_df(query, expression)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-        )
-        return [ScoreDoc(int(r["doc_id"]), float(r["score"])) for r in rows]
+        return self._topk_df(self.expression_score_df(query, expression), k)
 
     def rescore_df(self, first_query, second_query, top_n: int = 100,
                    weight: float = 1.0):
@@ -2592,8 +2537,7 @@ class IndexSearcher:
         if isinstance(second_query, str):
             second_query = self.parse(second_query)
         rows = self._rescore_rows(first_query, second_query, top_n, weight)
-        rows.sort(key=lambda t: (-t[1], t[0]))
-        return [ScoreDoc(d, s) for d, s in rows[:k]]
+        return _topk_hits([d for d, _ in rows], [s for _, s in rows], k)
 
     def _expand_prefix_sorted(self, field: str, prefix: str,
                               n: int) -> list[str]:
@@ -2721,12 +2665,8 @@ class IndexSearcher:
     def boost_by_query(self, query, boost_query, boost: float,
                        k: int = 10) -> list[ScoreDoc]:
         """Top-k of :meth:`boost_by_query_df`, (score DESC, docID ASC)."""
-        from pyspark.sql import functions as F
-
-        rows = self._collect(
-            self.boost_by_query_df(query, boost_query, boost)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-        return [ScoreDoc(int(r["doc_id"]), float(r["score"])) for r in rows]
+        return self._topk_df(
+            self.boost_by_query_df(query, boost_query, boost), k)
 
     # FeatureField score functions (core/document/FeatureField.java):
     # value computed in double, narrowed to float per the SimScorer
@@ -2824,14 +2764,9 @@ class IndexSearcher:
                       include_span_score: bool = False,
                       boost: float = 1.0) -> list[ScoreDoc]:
         """Top-k of :meth:`payload_score_df`, (score DESC, docID ASC)."""
-        from pyspark.sql import functions as F
-
-        rows = self._collect(
+        return self._topk_df(
             self.payload_score_df(term, fn, field, include_span_score,
-                                  boost)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-        return [ScoreDoc(int(r["doc_id"]), float(r["score"]))
-                for r in rows]
+                                  boost), k)
 
     _PAYLOAD_OPS = {"eq": np.equal, "gt": np.greater,
                     "gte": np.greater_equal, "lt": np.less,
@@ -2878,8 +2813,7 @@ class IndexSearcher:
         rows = self._collect(
             self.span_payload_check_df(term, value, op, field)
             .orderBy("doc_id").limit(k))
-        b = float(F32(boost))
-        return [ScoreDoc(int(r["doc_id"]), b) for r in rows]
+        return _topk_hits([r["doc_id"] for r in rows], F32(boost), k)
 
     def feature_score(self, query, feature_col: str = "dl",
                       fn: str = "saturation", k: int = 10,
@@ -2887,13 +2821,9 @@ class IndexSearcher:
                       exp_a: float = 1.0,
                       scaling: float = 1.0) -> list[ScoreDoc]:
         """Top-k of :meth:`feature_score_df`, (score DESC, docID ASC)."""
-        from pyspark.sql import functions as F
-
-        rows = self._collect(
+        return self._topk_df(
             self.feature_score_df(query, feature_col, fn, weight, pivot,
-                                  exp_a, scaling)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
-        return [ScoreDoc(int(r["doc_id"]), float(r["score"])) for r in rows]
+                                  exp_a, scaling), k)
 
     @property
     def _INDEX_SORT_PREFIXES(self):
@@ -2918,12 +2848,12 @@ class IndexSearcher:
         prefix of the index sort, the k first matching docIDs ARE the
         top-k, so per-segment execution decodes leading posting blocks only
         until the k smallest docIDs are provably complete (the
-        ``constant_score_topk`` early exit) instead of materializing the
+        ``multiterm.constant_score`` early exit) instead of materializing the
         full match set. Returns None when the query shape has no union
         postings form (callers fall back to the exhaustive path)."""
         from pyspark.sql import functions as F
 
-        from lucene_spark.search.multiterm import constant_score_topk
+        from lucene_spark.search.multiterm import constant_score
 
         q = ast.normalize(query)
         if isinstance(q, ast.TermQuery):
@@ -2939,8 +2869,8 @@ class IndexSearcher:
                 postings.setdefault(sub.field, []).append(sub.term)
         else:
             return None  # no union-postings form → exhaustive path
-        hits = constant_score_topk(self.reader, postings, k, 1.0)
-        ids = [h.doc_id for h in hits]
+        ids = [h.doc_id for h in self._finish(
+            constant_score(self.reader, postings, DOCS, k), k, 1.0)]
         if not ids:
             return []
         rows = self._collect(
@@ -3098,13 +3028,8 @@ class IndexSearcher:
                         key_field: str = "conv_id") -> list[ScoreDoc]:
         """Top-k children of :meth:`parent_children_df`, tie-break
         (score DESC, docID ASC)."""
-        from pyspark.sql import functions as F
-
-        rows = self._collect(
-            self.parent_children_df(parent_key, child_query, key_field)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
-        )
-        return [ScoreDoc(int(r["doc_id"]), float(r["score"])) for r in rows]
+        return self._topk_df(
+            self.parent_children_df(parent_key, child_query, key_field), k)
 
     def join_by_field_df(self, from_query, from_field: str, to_field: str,
                          score_mode: str = "max"):
@@ -3159,14 +3084,9 @@ class IndexSearcher:
                       k: int = 10, score_mode: str = "max") -> list[ScoreDoc]:
         """Top-k docs of :meth:`join_by_field_df`, tie-break
         (score DESC, docID ASC) like every other collector."""
-        from pyspark.sql import functions as F
-
-        rows = self._collect(
+        return self._topk_df(
             self.join_by_field_df(from_query, from_field, to_field,
-                                  score_mode)
-            .orderBy(F.desc("score"), F.asc("doc_id")).limit(int(k))
-        )
-        return [ScoreDoc(int(r["doc_id"]), float(r["score"])) for r in rows]
+                                  score_mode), k)
 
     def diversified_topk_df(self, query, key_field: str,
                             max_per_key: int, k: int):
@@ -3201,10 +3121,12 @@ class IndexSearcher:
 
     def diversified_search(self, query, key_field: str, max_per_key: int,
                            k: int = 10) -> list[ScoreDoc]:
-        """Collected form of :meth:`diversified_topk_df`."""
+        """Collected form of :meth:`diversified_topk_df` (its rows are
+        ordered and limited already)."""
         rows = self._collect(
             self.diversified_topk_df(query, key_field, max_per_key, k))
-        return [ScoreDoc(int(r["doc_id"]), float(r["score"])) for r in rows]
+        return _topk_hits([r["doc_id"] for r in rows],
+                          [r["score"] for r in rows], k)
 
     def search_after(self, query, after_count: int, k: int = 10,
                      mode: str = "wand") -> list[ScoreDoc]:
@@ -3377,9 +3299,7 @@ class IndexSearcher:
                     "clauses": [{"kind": type(query).__name__,
                                  "occur": ast.MUST,
                                  "score": b if hit else None}]}
-        if isinstance(query, ast.BooleanQuery) and any(
-            not isinstance(sub, ast.TermQuery) for _, sub in query.clauses
-        ):
+        if isinstance(query, ast.BooleanQuery) and not _is_flat(query):
             return self._explain_mixed(query, doc_id)
         wc = self._weighted_clauses(query)
         base = {"doc_id": int(doc_id), "match": False,

@@ -59,6 +59,13 @@ class ClauseSpec:
     df: int = 0  # posting-list cost (TermScorer.cost), for mode selection
 
 
+def topk_order(docs, scores, k):
+    """Indices of the first ``k`` hits under the top-k tie rule: score
+    DESC, doc_id ASC (``HitQueue.lessThan``) — the one cut every
+    per-segment kernel and the driver merge apply."""
+    return np.lexsort((docs, -np.asarray(scores).astype(np.float64)))[:k]
+
+
 def keyed_rows(rows, sep: str) -> dict:
     """``rows`` with ``term`` replaced by the clause key ``field + sep +
     term`` that :attr:`ClauseSpec.term` carries."""
@@ -396,5 +403,5 @@ def segment_topk(block_rows, clauses: list[ClauseSpec], k: int,
         return np.zeros(0, np.int64), np.zeros(0, F32)
     d = np.concatenate(cand_docs)
     s = np.concatenate(cand_scores)
-    order = np.lexsort((d, -s.astype(np.float64)))[:k]
+    order = topk_order(d, s, k)
     return d[order], s[order]

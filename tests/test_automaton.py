@@ -10,6 +10,7 @@ from lucene_spark.corpus import VOCAB
 from lucene_spark.goldens import BruteForceIndex
 from lucene_spark.search import ast
 from lucene_spark.search.automaton import validate_automaton
+from lucene_spark.search.executor import DOCS
 from lucene_spark.search.searcher import IndexSearcher
 
 
@@ -87,7 +88,7 @@ def test_engine_matches_brute(searcher, golden, transitions, n_states,
                               accept):
     q = ast.TermAutomatonQuery(transitions=transitions, n_states=n_states,
                                accept=accept)
-    run = searcher._automaton_match(q)
+    run = searcher._automaton_run(q, DOCS)
     got = sorted(r["doc_id"] for r in run.df().collect()) \
         if run is not None else []
     want = brute_automaton_docs(golden, transitions, n_states, accept)
@@ -118,7 +119,7 @@ def test_randomized_vs_brute(searcher, golden):
             transitions.append((0, n, str(rng.choice(words))))
         q = ast.TermAutomatonQuery(transitions=tuple(transitions),
                                    n_states=n + 1, accept=(n,))
-        run = searcher._automaton_match(q)
+        run = searcher._automaton_run(q, DOCS)
         got = sorted(r["doc_id"] for r in run.df().collect()) \
             if run is not None else []
         want = brute_automaton_docs(golden, tuple(transitions), n + 1, (n,))

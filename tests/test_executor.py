@@ -319,7 +319,7 @@ def test_local_docid_kernels_match_golden(spark, deleted, golden):
         q = ast.TermAutomatonQuery(transitions=transitions, n_states=3,
                                    accept=(2,))
         want = [h[0] for h in _live(golden.search(same, BIG), dead)]
-        assert _docs(s._automaton_match(q).df()) == sorted(want)
+        assert _docs(s._automaton_run(q, DOCS).df()) == sorted(want)
         assert s.count(q) == len(want)
 
     # phrase intervals (max_gaps=0): freq = the phrase frequency

@@ -148,16 +148,14 @@ def _migrated_functions():
 
     S = searcher.IndexSearcher
     return [S.search, S.msearch, S.count, S.score_df, S.match_df,
-            S._flat_topk, S._flat_scored, S._phrase_scored,
-            S._run_phrase_kernel, S._phrase_count, S._search_sorted_early,
-            S._mixed_segment, S._span_match, S._automaton_match,
-            S._interval_scored, S.term_vectors, S.combined_field_df,
-            S._score_df_impl, S._match_df_impl, S.payload_score_df,
-            S.span_payload_check_df, searcher._flat_topk_kernel,
-            multiterm.constant_score_topk, multiterm.matching_docs_df,
-            multiterm.constant_score_count, multiterm.synonym_scored,
-            multiterm.dismax_scored, multiterm.synonym_topk,
-            multiterm.dismax_topk]
+            S._shape, S._run, S._finish, S._topk_df, searcher._topk_hits,
+            S._flat_topk, S._flat_run, S._mixed_run, S._phrase_run,
+            S._span_run, S._automaton_run, S._interval_run,
+            S._multiterm_run, S._synonym_run, S._dismax_run,
+            S._search_sorted_early, S.term_vectors, S.combined_field_df,
+            S._match_df_impl, S.payload_score_df, S.span_payload_check_df,
+            searcher._flat_topk_kernel, multiterm.constant_score,
+            multiterm.synonym_scored, multiterm.dismax_scored]
 
 
 def test_migrated_serving_paths_have_no_seg_exchange():

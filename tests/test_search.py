@@ -260,8 +260,7 @@ def test_dismax_negative_scores(spark, index_dir, golden):
     models like IndriDirichlet): per-doc max must be the true max of the
     sub-scores, not floored at 0."""
     from lucene_spark.search.ast import DisjunctionMaxQuery
-    from lucene_spark.search.multiterm import dismax_topk
-    from lucene_spark.search.reader import IndexReader
+    from lucene_spark.search.searcher import IndexSearcher
 
     # defined in-function so cloudpickle ships them by VALUE to executors
     def neg_score(tf, norm_code):
@@ -278,9 +277,9 @@ def test_dismax_negative_scores(spark, index_dir, golden):
         def scorer(self, boost, doc_count, sum_ttf, dfs, ttfs=None):
             return _NegScorer()
 
-    reader = IndexReader(spark, index_dir)
     terms = (VOCAB[0], VOCAB[5])
-    hits = dismax_topk(reader, _NegSim(), DisjunctionMaxQuery(terms), 60)
+    hits = IndexSearcher(spark, index_dir, similarity=_NegSim()).search(
+        DisjunctionMaxQuery(terms), 60)
     got = [(h.doc_id, h.score) for h in hits]
     best = {}
     for t in terms:
@@ -1889,7 +1888,7 @@ def test_rescore_by_phrase_second_pass(searcher):
 
 def test_count_leaf_clauses_list_slot_counted():
     """List-form SpanOr slots count every alternative (the tuple/list
-    spellings are interchangeable in _span_match)."""
+    spellings are interchangeable in _span_run)."""
     q_t = ast.SpanNearQuery((("a", "b", "c"), "d"), slop=1)
     q_l = ast.SpanNearQuery((["a", "b", "c"], "d"), slop=1)
     assert ast.count_leaf_clauses(q_t) == ast.count_leaf_clauses(q_l) == 4

@@ -303,12 +303,39 @@ def test_small_corpus_plans_without_a_full_key_count(spark, tmp_path):
 
 # -- term-dictionary fallback --------------------------------------------------
 
+def _match_answers(s, queries):
+    """count, match set and term suggestions of ``s`` — the answers besides
+    the top-k that read the term dictionary (or its fallback scan)."""
+    from lucene_spark.search.suggest import (spell_suggest, suggest_infix,
+                                             suggest_terms)
+
+    parsed = [s.parse(q) if isinstance(q, str) else q for q in queries]
+    a = VOCAB[0]
+    return ([s.count(q) for q in parsed],
+            [sorted(r["doc_id"] for r in s.match_df(q).collect())
+             for q in parsed],
+            suggest_terms(s.reader, a[:2], k=5),
+            spell_suggest(s.reader, a[:-1] + "x", k=5),
+            suggest_infix(s.reader, a[1:3], k=5))
+
+
 def test_term_cache_fallback_matches_cached(spark, index_dir, monkeypatch):
+    from lucene_spark.search import ast
+
+    a, b, c = VOCAB[0], VOCAB[3], VOCAB[7]
     queries = [f"{VOCAB[0]} {VOCAB[3]}", f'"{VOCAB[0]} {VOCAB[3]}"',
-               f"{VOCAB[11][:3]}*"]
+               f"{VOCAB[11][:3]}*",
+               ast.MultiTermQuery("prefix", a[:2]),
+               ast.MultiTermQuery("wildcard", f"{a[0]}*{a[-1]}"),
+               ast.MultiTermQuery("regexp", f"{a[:2]}.*"),
+               ast.MultiTermQuery("fuzzy", a[:-1] + "x", max_edits=1),
+               ast.MultiTermQuery("range", lower=a, upper=b),
+               ast.MultiTermQuery("set", terms=(a, c, "zzz-not-a-term"))]
     cached = IndexSearcher(spark, index_dir)
     want = [[(h.doc_id, h.score) for h in cached.search(q, 10)]
             for q in queries]
+    want_match = _match_answers(cached, queries)
+    assert all(want_match[2:])
     terms = cached.reader.sorted_terms("text")
     assert terms and all(want)
     prefix = cached._expand_prefix_sorted("text", VOCAB[11][:3], 50)
@@ -327,6 +354,7 @@ def test_term_cache_fallback_matches_cached(spark, index_dir, monkeypatch):
     assert s.reader.sorted_terms("text") is None
     got = [[(h.doc_id, h.score) for h in s.search(q, 10)] for q in queries]
     assert got == want
+    assert _match_answers(s, queries) == want_match
     assert s._expand_prefix_sorted("text", VOCAB[11][:3], 50) == prefix
     for t in (VOCAB[0], terms[-1], "zzz-not-a-term"):
         assert s.reader.has_term("text", t) == \

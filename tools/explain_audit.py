@@ -144,14 +144,14 @@ def main(sf_dir: str):
     # expansion resolves on the driver dictionary and reaches the scan as a
     # literal predicate, not a semi-join behind a full-field scan
     from lucene_spark.search import ast as _ast
-    from lucene_spark.search.multiterm import matching_docs_df
+    from lucene_spark.search.executor import DOCS, SCORED
     from lucene_spark.search.searcher import IndexSearcher
 
     srch = IndexSearcher(spark, d)
     pq = _ast.MultiTermQuery("prefix", "v")  # >1 matching term
 
     def prefix_df():
-        return matching_docs_df(srch.reader, srch._multiterm_source(pq))
+        return srch._multiterm_run(pq, DOCS).df()
 
     sections.append(("prefix match set via hybrid expansion (expect Range "
                      "-> MapInPandas, NO Exchange, NO Scan parquet: the "
@@ -321,9 +321,9 @@ def main(sf_dir: str):
     # complement must run DISTRIBUTED (executor tasks visit the uncovered
     # segments), never materialized on the driver
     def complement():
-        return s._mixed_segment(
+        return s._mixed_run(
             _ast.normalize(parse_simple("-zzqqabsentterm", s.analyzer)),
-            40).df()
+            SCORED, 40).df()
 
     sections.append(("matchall complement for '-absentterm' (expect Range "
                      "-> MapInPandas visiting every segment — the "

@@ -97,18 +97,18 @@ def main(reps: int = 7):
 
     # A/B: prefix via forced semi-join (the r2-only path)
     from lucene_spark.search import ast
-    from lucene_spark.search.multiterm import (constant_score_topk,
-                                               matched_terms_df)
+    from lucene_spark.search.executor import DOCS
+    from lucene_spark.search.multiterm import constant_score, matched_terms_df
 
     pq = searcher.parse(qset["topk_prefix"])
     assert isinstance(pq, ast.MultiTermQuery)
 
     def semi():
-        return constant_score_topk(
+        return searcher._finish(constant_score(
             searcher.reader,
             searcher.reader.postings_semijoin(
                 matched_terms_df(searcher.reader, pq), pq.field),
-            10, pq.boost)
+            DOCS, 10), 10, pq.boost)
 
     semi()
     ts = []
